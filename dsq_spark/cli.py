@@ -9,7 +9,9 @@ Usage parity:
 
 Lifecycle (Spark mapping of SURVEY §3): argv → stdin spooling → per-file
 read via dsq_spark.sources → flatten → temp views t_N → query rewrite
-(dsq_spark.rewrite) → spark.sql → sink (dsq_spark.io_out).
+(dsq_spark.rewrite) → registration of the function library if the
+rewritten statement calls it (dsq_spark.functions) → spark.sql → sink
+(dsq_spark.io_out).
 """
 
 from __future__ import annotations
@@ -43,7 +45,8 @@ Flags (reference-compatible, main.go:341-432):
       --no-sqlite-writer  accepted for compatibility (no-op)
       --strict-json       SQLite-loud JSON1: malformed JSON raises
       --json-fast         Python-free plan for simple JSON1 mutator shapes
-      --verbose           verbose logging
+      --verbose           print the rewritten SQL and the functions
+                          registered for it to stderr
   -v, --version           print version
   -h, --help              this help
 
@@ -110,8 +113,9 @@ def parse_args(argv: list[str]) -> Args | None:
             # SQLite-loud JSON1: malformed JSON / bad paths raise (the
             # reference surfaces SQLite's error) instead of the engine's
             # default NULL/zero-rows.  Env, not an Args field: the flag
-            # must reach register_all AND the rewrite-time json_each
-            # lowering decision, both of which read DSQ_STRICT_JSON.
+            # must reach register_all AND the rewrite-time lowering and
+            # inlining decisions, all of which read DSQ_STRICT_JSON
+            # through functions.strict_json_mode.
             os.environ["DSQ_STRICT_JSON"] = "1"
         elif arg == "--json-fast":
             # compile SIMPLE json_set/insert/replace shapes to the
@@ -210,9 +214,6 @@ def run(argv: list[str], spark=None) -> int:
         from dsq_spark.session import get_spark
 
         spark = get_spark("dsq-spark-cli")
-    from dsq_spark.functions import register_all
-
-    register_all(spark)
 
     if a.schema:
         # Schema dump describes the RAW input shape (pre-flatten), like the
@@ -234,10 +235,24 @@ def run(argv: list[str], spark=None) -> int:
 
     refs = extract_table_refs(a.query)
     _, kinds = _ingest(spark, a, refs)
-    rewritten, dquoted = rewrite_query_tracked(a.query, kinds)
-    df = _sql(spark, rewritten, dquoted)
+    df = _sql(spark, *_prepare(spark, a, a.query, kinds))
     (pretty_table if a.pretty else dump_json)(df)
     return 0
+
+
+def _prepare(spark, a: Args, query: str, kinds) -> tuple[str, frozenset[str]]:
+    """Rewrite one statement and register the function library if it
+    calls any of it (functions.register_all); --verbose reports the
+    rewrite and what was registered on stderr."""
+    rewritten, dquoted = rewrite_query_tracked(query, kinds)
+    from dsq_spark.functions import register_all
+
+    registered = register_all(spark, sql=rewritten)
+    if a.verbose:
+        print(f"dsq-spark: rewritten SQL: {rewritten}", file=sys.stderr)
+        print("dsq-spark: functions registered: "
+              + (", ".join(registered) or "(none)"), file=sys.stderr)
+    return rewritten, dquoted
 
 
 def _sql(spark, sql: str, dquoted: frozenset[str] = frozenset()):
@@ -342,8 +357,7 @@ def _repl(spark, a: Args) -> int:
             if line in ("exit", "quit"):
                 return 0
             try:
-                rewritten, dquoted = rewrite_query_tracked(line, kinds)
-                pretty_table(_sql(spark, rewritten, dquoted))
+                pretty_table(_sql(spark, *_prepare(spark, a, line, kinds)))
             except Exception as e:  # show error, keep looping (main.go:301-306)
                 print(f"Error: {e}", file=sys.stderr)
     finally:

@@ -21,7 +21,9 @@ pure JVM, no Python UDF in the hot path.
 
 from __future__ import annotations
 
+import functools
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -444,46 +446,84 @@ def _sql_udfs() -> list[str]:
     return stmts
 
 
-_STRICT_ACTIVE = False
+
+# The pandas/Python UDFs that json1.register_json1 and
+# sqlite_real.register_quote_real register (a test pins this list to
+# what register_all actually creates).
+_PYTHON_UDFS = (
+    "dsq_json_set", "dsq_json_insert", "dsq_json_replace", "dsq_json_remove",
+    "json_patch", "dsq_json_tree", "dsq_json_each", "dsq_quote_real",
+    "dsq_real_text_agg", "dsq_glob_regex_agg", "dsq_like_regex_agg",
+    "dsq_printf_float",
+)
 
 
-def strict_json_active() -> bool:
-    """Whether the LAST register_all ran in --strict-json mode — the
-    inliner (rewrite._inline_agg_safe) must not inline the soft json()/
-    json_extract() bodies over the strict re-registrations."""
-    return _STRICT_ACTIVE
+@functools.cache
+def library_names() -> tuple[str, ...]:
+    """Every function register_all registers, in registration order."""
+    return tuple(
+        re.match(r"CREATE OR REPLACE TEMPORARY FUNCTION (\w+)", s).group(1)
+        for s in _sql_udfs()) + _PYTHON_UDFS
 
 
-def register_all(spark: SparkSession, strict_json: bool | None = None,
-                 force: bool = False) -> None:
-    """Register the extended function library on this session.
+@functools.cache
+def _call_re() -> re.Pattern:
+    return re.compile(r"\b(?:%s)`?\s*\(" % "|".join(library_names()),
+                      re.IGNORECASE)
 
-    ``strict_json`` (default: the DSQ_STRICT_JSON env flag, i.e. the
-    CLI's --strict-json) reproduces SQLite's LOUDNESS on malformed JSON:
-    the reference surfaces SQLite's 'malformed JSON' error to the user,
-    while this engine's default is the softer NULL / zero rows
-    (documented PARITY delta).  Strict mode re-registers json() and
-    json_extract() with a raise_error guard (still pure Catalyst) and
-    bakes raising closures into the JSON1 Python engine.
 
-    Idempotent AND cheap on repeat: the ~70 DDL statements + pandas-UDF
-    registrations cost ~0.9 s of py4j round-trips, and query helpers
-    call this per query — a session-scoped conf marker skips the replay
-    when the same mode is already registered (this was the entire
-    r5→r6 'regression' of strftime_code_coverage: the library grew, and
-    every datetime/dialect query re-paid its registration).  ``force``
-    replays regardless (tests that monkeypatch registration)."""
-    if strict_json is None:
-        strict_json = os.environ.get("DSQ_STRICT_JSON", "").lower() in (
-            "1", "true", "yes")
-    global _STRICT_ACTIVE
-    _STRICT_ACTIVE = bool(strict_json)
+def calls_library(sql: str) -> bool:
+    """Whether ``sql`` calls any library function (``name(``, any case)."""
+    return _call_re().search(sql) is not None
+
+
+def strict_json_mode(strict_json: bool | None = None) -> bool:
+    """The JSON1 mode: ``strict_json`` when given, else the
+    DSQ_STRICT_JSON env flag (the CLI's --strict-json).  register_all and
+    the rewrite-time inliner (rewrite._inline_agg_safe, which must not
+    inline the soft json()/json_extract() bodies in strict mode) both
+    read it here, so neither depends on which ran first."""
+    if strict_json is not None:
+        return bool(strict_json)
+    return os.environ.get("DSQ_STRICT_JSON", "").lower() in (
+        "1", "true", "yes")
+
+
+def register_all(spark: SparkSession, sql: str | None = None,
+                 strict_json: bool | None = None,
+                 force: bool = False) -> list[str]:
+    """Register the extended function library on this session and return
+    the names registered.
+
+    With ``sql`` (the CLI's rewritten statement) it registers only if the
+    statement calls a library function (:func:`calls_library`), and then
+    all of it.  The library is 41 SQL-UDF DDLs (56 kB) plus 12 pandas-UDF
+    registrations: 7.0 s of a 22.7 s traced cold CLI call (4 cores,
+    1.8 % steal) whose taxi group-by calls none of them, so a statement
+    like that skips it.  With ``sql=None`` (registry queries, tests) it
+    always registers.
+
+    ``strict_json`` (default: :func:`strict_json_mode`) reproduces
+    SQLite's LOUDNESS on malformed JSON: the reference surfaces SQLite's
+    'malformed JSON' error to the user, while this engine's default is
+    the softer NULL / zero rows (documented PARITY delta).  Strict mode
+    re-registers json() and json_extract() with a raise_error guard
+    (still pure Catalyst) and bakes raising closures into the JSON1
+    Python engine.
+
+    Idempotent AND cheap on repeat: a session-scoped conf marker records
+    the registered mode, so a repeat costs one conf lookup — query
+    helpers call this per query (this was the entire r5→r6 'regression'
+    of strftime_code_coverage: every datetime/dialect query re-paid the
+    whole registration).  ``force`` replays regardless (tests that
+    monkeypatch registration)."""
+    strict_json = strict_json_mode(strict_json)
     mode = "strict" if strict_json else "soft"
     marker = "spark.dsq.registeredFunctions"
     if not force:
         try:
             if spark.conf.get(marker, "") == mode:
-                return
+                return []
         except Exception:
             pass
     # Spark 4.1's FoldablePropagation mis-rewrites a plan that combines a
@@ -505,6 +545,8 @@ def register_all(spark: SparkSession, strict_json: bool | None = None,
                            f"{cur},{_fp}")
     except Exception:
         pass  # conf not settable on this build: the shape stays rare
+    if sql is not None and not calls_library(sql):
+        return []
     for stmt in _sql_udfs():
         spark.sql(stmt)
     if strict_json:
@@ -536,6 +578,7 @@ def register_all(spark: SparkSession, strict_json: bool | None = None,
         spark.conf.set(marker, mode)
     except Exception:
         pass  # conf not settable: repeats stay correct, just not cheap
+    return list(library_names())
 
 
 import re as _re
@@ -1153,8 +1196,7 @@ def _json_mutator_alias(kind: str):
         if (len(parts) == 3
                 and os.environ.get("DSQ_JSON_FAST", "").lower()
                 in ("1", "true", "yes")
-                and not os.environ.get(
-                    "DSQ_STRICT_JSON", "").lower() in ("1", "true", "yes")):
+                and not strict_json_mode()):
             pm = _SIMPLE_JSON_PATH.match(parts[1].strip())
             vj = _fast_json_value(parts[2]) if pm else None
             if pm and vj is not None:

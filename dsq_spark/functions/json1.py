@@ -44,7 +44,7 @@ import re
 __all__ = [
     "json_set_text", "json_insert_text", "json_replace_text",
     "json_remove_text", "json_patch_text", "json_tree_rows",
-    "json_each_rows", "register_json1",
+    "json_each_rows",
 ]
 
 

@@ -639,9 +639,9 @@ WHERE event_id < 100
     ),
 )
 def json1_mutators(spark, sf_dir):
-    from dsq_spark.functions.json1 import register_json1
+    from dsq_spark.functions import register_all
 
-    register_json1(spark)
+    register_all(spark)
     e = t(spark, sf_dir, "events").filter(F.col("event_id") < 100)
     k = F.get_json_object("props", "$.k").cast("long")
     # json_set with a computed numeric value: the value rides as JSON text

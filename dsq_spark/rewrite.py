@@ -1070,6 +1070,8 @@ def _rewrite_json_each(sql: str) -> str:
     pass the path to the walker, which mirrors SQLite's start-node
     quirks). Documented deltas vs SQLite: keys surface as TEXT (SQLite
     uses integers for arrays), and values surface as TEXT."""
+    from dsq_spark.functions import strict_json_mode
+
     spans = _skip_spans(sql)
     out, i = [], 0
     while True:
@@ -1113,8 +1115,7 @@ def _rewrite_json_each(sql: str) -> str:
                 f"{alias or 'json_tree'} "
                 f"AS key, value, type, atom, id, parent, fullkey, path")
         elif (path or _wants_rich_json_each(sql, alias or "json_each")
-                or os.environ.get("DSQ_STRICT_JSON", "").lower()
-                in ("1", "true", "yes")):
+                or strict_json_mode()):
             # (strict mode routes ALL json_each through the walker so a
             # malformed document RAISES like SQLite instead of yielding
             # zero rows — the walker's closures carry the strict flag)
@@ -1352,9 +1353,9 @@ def _inline_agg_safe(sql: str) -> str:
     with no aggregate keep their exact bytes and plans."""
     if not _AGG_CALL.search(sql) and not _sort_needs_inline(sql):
         return sql
-    from dsq_spark.functions import INLINE_UDFS, strict_json_active
+    from dsq_spark.functions import INLINE_UDFS, strict_json_mode
 
-    skip = {"json", "json_extract"} if strict_json_active() else set()
+    skip = {"json", "json_extract"} if strict_json_mode() else set()
     spans = _skip_spans(sql)
     out = re.sub(
         r"(?<![\w.`$])dsq_real_text\(",

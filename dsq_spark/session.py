@@ -13,6 +13,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
@@ -72,6 +74,12 @@ def get_spark(app_name: str = "dsq-spark", master: str | None = None,
         builder = builder.master(master)
     elif "SPARK_MASTER" not in os.environ:
         builder = builder.master(f"local[{cpus}]")
+    # Python workers import dsq_spark (pandas-UDF closures pickle its
+    # functions by reference), so put the directory that holds the
+    # package on their path, or they only find it when the cwd is the
+    # repo root.  Spark merges this with the process's own PYTHONPATH; a
+    # caller's extra_conf value replaces it.
+    builder = builder.config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

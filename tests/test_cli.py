@@ -406,3 +406,50 @@ def test_cli_unquoted_numeric_comparison_is_lexical(spark, capsys):
                spark) == 0
     rows = json.loads(capsys.readouterr().out)
     assert [r["name"] for r in rows] == ["Bob"]
+
+
+def test_verbose_reports_rewrite_and_functions(spark, capsys):
+    """--verbose prints the rewritten SQL and the library functions
+    registered for it to stderr; stdout stays byte-identical.  A session
+    that already has the library registers nothing more."""
+    from dsq_spark.functions import library_names
+
+    q = "SELECT name, glob('A*', name) AS g FROM {} ORDER BY id"
+    assert run([f"{FIX}/cli_users.csv", q], spark.newSession()) == 0
+    plain = capsys.readouterr()
+    fresh = spark.newSession()
+    assert run(["--verbose", f"{FIX}/cli_users.csv", q], fresh) == 0
+    verbose = capsys.readouterr()
+    assert verbose.out == plain.out
+    assert plain.err == ""
+    assert "rewritten SQL: SELECT name, glob('A*', name) AS g FROM t_0" \
+        in verbose.err
+    assert ("functions registered: " + ", ".join(library_names()) + "\n"
+            in verbose.err)
+    assert run(["--verbose", f"{FIX}/cli_users.csv", q], fresh) == 0
+    assert "functions registered: (none)\n" in capsys.readouterr().err
+
+
+def test_python_workers_import_the_package_from_any_cwd(tmp_path):
+    """A pandas-UDF query (quote(1.5) runs dsq_quote_real) from a foreign
+    cwd with no PYTHONPATH, the package found through sys.path.insert the
+    way bench.py does: get_spark must put the package on the Python
+    workers' path, or they fail with ModuleNotFoundError."""
+    import subprocess
+    import sys
+    import textwrap
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    (tmp_path / "one.csv").write_text("a\n1\n")
+    (tmp_path / "probe.py").write_text(textwrap.dedent(f"""\
+        import sys
+        sys.path.insert(0, {repo!r})
+        from dsq_spark.cli import run
+        sys.exit(run(["one.csv", "SELECT quote(1.5) AS q FROM {{}}"]))
+        """))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(SPARK_GRAFT_CPUS="1", SPARK_GRAFT_DRIVER_MEM="1g")
+    p = subprocess.run([sys.executable, "probe.py"], cwd=tmp_path, env=env,
+                       capture_output=True, text=True, timeout=600)
+    assert p.returncode == 0, p.stderr[-3000:]
+    assert json.loads(p.stdout) == [{"q": "1.5"}]
