@@ -44,7 +44,6 @@ Flags (reference-compatible, main.go:341-432):
   -i, --interactive       REPL (implies --pretty, --cache)
       --no-sqlite-writer  accepted for compatibility (no-op)
       --strict-json       SQLite-loud JSON1: malformed JSON raises
-      --json-fast         Python-free plan for simple JSON1 mutator shapes
       --verbose           print the rewritten SQL and the functions
                           registered for it to stderr
   -v, --version           print version
@@ -117,12 +116,6 @@ def parse_args(argv: list[str]) -> Args | None:
             # inlining decisions, all of which read DSQ_STRICT_JSON
             # through functions.strict_json_mode.
             os.environ["DSQ_STRICT_JSON"] = "1"
-        elif arg == "--json-fast":
-            # compile SIMPLE json_set/insert/replace shapes to the
-            # pure-Catalyst state machine (functions/json_fast.py):
-            # Python-free plan, measured 3-8× slower wall-clock than the
-            # Arrow engine (BENCH_NOTES §17) — opt-in by design.
-            os.environ["DSQ_JSON_FAST"] = "1"
         elif arg == "--verbose":
             a.verbose = True
         else:

@@ -139,8 +139,14 @@ INLINE_UDFS: dict[str, tuple[tuple[str, ...], str, str]] = {
     "json_extract": (("STRING", "STRING"), "STRING",
                      "get_json_object({0}, {1})"),
     "json": (("STRING",), "STRING", "get_json_object({0}, '$')"),
+    # the one element of to_json(array(x)); a non-integer number token
+    # (Java's Double.toString: -0.0, 1.0E20) renders like SQLite's
+    # %!.15g (0.0, 1.0e+20) through dsq_real_text
     "dsq_json_unbox": (("STRING",), "STRING",
-                       "substr({0}, 2, length({0}) - 2)"),
+                       "CASE WHEN {0} RLIKE '^\\\\[-?[0-9]+[.E]' THEN "
+                       "dsq_real_text(try_cast(substr({0}, 2, "
+                       "length({0}) - 2) AS DOUBLE)) "
+                       "ELSE substr({0}, 2, length({0}) - 2) END"),
     # SQLite planner hints: semantically the identity
     "likely": (("DOUBLE",), "DOUBLE", "{0}"),
     "unlikely": (("DOUBLE",), "DOUBLE", "{0}"),
@@ -380,6 +386,21 @@ _REAL_TEXT_UDF = (
 
 def _sql_udfs() -> list[str]:
     stmts = [
+        # SQLite REAL→TEXT rendering (C printf %!.15g, sqlite3 src/func.c):
+        # 15 significant digits, trailing zeros trimmed, a mandatory
+        # fractional part ('100.0', '1.0e+20'), scientific form exactly
+        # when the decimal exponent is < -4 or >= 15, lowercase 'e' with a
+        # signed 2+-digit exponent.  Java's %.15g shares the threshold and
+        # exponent syntax but keeps trailing zeros — trimmed here.  Used by
+        # CAST(real AS TEXT) and real-operand || via dsq_spark.sqlexpr,
+        # and by dsq_json_unbox below, so it is registered first.
+        # Deltas (documented, ~2% of RANDOM doubles, none of typical data):
+        # subnormals render with Java's shortened digits, and doubles whose
+        # shortest repr is 16 digits ending in 5 can differ in the 15th
+        # digit (Java rounds the shortest repr, C the exact expansion).
+        # NaN is NULL (SQLite cannot store NaN); ±Inf prints 'Inf'/'-Inf'.
+        _REAL_TEXT_UDF,
+    ] + [
         stmt
         for name, (ptypes, ret, body) in INLINE_UDFS.items()
         for stmt in [
@@ -407,19 +428,6 @@ def _sql_udfs() -> list[str]:
         # LIKE-pattern compiler for DYNAMIC patterns under ESCAPE (the
         # literal forms fold at rewrite time) — see _LIKE_REGEX_UDF
         _LIKE_REGEX_UDF,
-        # SQLite REAL→TEXT rendering (C printf %!.15g, sqlite3 src/func.c):
-        # 15 significant digits, trailing zeros trimmed, a mandatory
-        # fractional part ('100.0', '1.0e+20'), scientific form exactly
-        # when the decimal exponent is < -4 or >= 15, lowercase 'e' with a
-        # signed 2+-digit exponent.  Java's %.15g shares the threshold and
-        # exponent syntax but keeps trailing zeros — trimmed here.  Used by
-        # CAST(real AS TEXT) and real-operand || via dsq_spark.sqlexpr.
-        # Deltas (documented, ~2% of RANDOM doubles, none of typical data):
-        # subnormals render with Java's shortened digits, and doubles whose
-        # shortest repr is 16 digits ending in 5 can differ in the 15th
-        # digit (Java rounds the shortest repr, C the exact expansion).
-        # NaN is NULL (SQLite cannot store NaN); ±Inf prints 'Inf'/'-Inf'.
-        _REAL_TEXT_UDF,
         # SQLite cross-type sort key for dynamically-typed (varied) columns:
         # SQLite orders NULL < numeric (by value) < TEXT (lexically) in ONE
         # column (datatype3.html#sort_order); our varied columns land as
@@ -439,10 +447,6 @@ def _sql_udfs() -> list[str]:
         "THEN named_struct('r', 1, 'n', CAST(trim(x) AS DOUBLE), 't', '') "
         "ELSE named_struct('r', 2, 'n', 0.0d, 't', x) END",
     ]
-    # pure-Catalyst fast path for simple JSON1 mutator shapes
-    from dsq_spark.functions.json_fast import fast_mutator_udfs
-
-    stmts.extend(fast_mutator_udfs())
     return stmts
 
 
@@ -497,11 +501,11 @@ def register_all(spark: SparkSession, sql: str | None = None,
 
     With ``sql`` (the CLI's rewritten statement) it registers only if the
     statement calls a library function (:func:`calls_library`), and then
-    all of it.  The library is 41 SQL-UDF DDLs (56 kB) plus 12 pandas-UDF
-    registrations: 7.0 s of a 22.7 s traced cold CLI call (4 cores,
-    1.8 % steal) whose taxi group-by calls none of them, so a statement
-    like that skips it.  With ``sql=None`` (registry queries, tests) it
-    always registers.
+    all of it.  The library is 38 SQL-UDF DDLs (10 kB) plus 12 pandas-UDF
+    registrations; at 41 DDLs (56 kB) it took 7.0 s of a 22.7 s traced
+    cold CLI call (4 cores, 1.8 % steal) whose taxi group-by calls none
+    of them, so a statement like that skips it.  With ``sql=None``
+    (registry queries, tests) it always registers.
 
     ``strict_json`` (default: :func:`strict_json_mode`) reproduces
     SQLite's LOUDNESS on malformed JSON: the reference surfaces SQLite's
@@ -1130,79 +1134,14 @@ def _json_val(expr: str) -> str:
     return expr.strip() if _JSON_VALUED.match(expr) else _jq(expr)
 
 
-_SIMPLE_JSON_PATH = _re.compile(r"^'\$\.([A-Za-z_][A-Za-z0-9_]*)'$")
-_INT_LIT = _re.compile(r"^[+-]?[0-9]+$")
-_REAL_LIT = _re.compile(r"^[+-]?[0-9]+\.[0-9]+$")
-_STR_LIT = _re.compile(r"^'(?:[^'\\]|''|\\\\)*'$")
-
-
-def _fast_json_value(expr: str) -> str | None:
-    """JSON text of a LITERAL mutator value, rendered at rewrite time —
-    or None when the argument is not a literal this renderer covers (the
-    general Python engine takes those).  Matches SQLite's value→JSON
-    conversion: integers verbatim (int64-range — an oversized integer
-    literal reads as REAL and renders via %!.15g, like everywhere else
-    in the dialect: json_set(j,'$.a',9223372036854775808) stores
-    9.22337203685478e+18), reals via SQLite's %!.15g with the decimal
-    point FORCED and -0.0 normalized (json_set(j,'$.a',3.0) stores 3.0
-    not 3, keeping the stored JSON type real — ADVICE r6, probed vs
-    sqlite3), true/false as 1/0 (SQLite booleans ARE integers), NULL as
-    null, strings JSON-escaped.  The incoming text is post-escape-pass
-    SQL, so a string literal carries '' quote doubling and doubled
-    backslashes — both undone before JSON encoding."""
-    import json as _json
-
-    from dsq_spark.sqlexpr import _real_text_py
-
-    t = expr.strip()
-    up = t.upper()
-    if up == "NULL":
-        return "null"
-    if up in ("TRUE", "FALSE"):
-        return "1" if up == "TRUE" else "0"
-    if _INT_LIT.match(t):
-        v = int(t)
-        if -(2**63) <= v <= 2**63 - 1:
-            return str(v)
-        return _real_text_py(float(v))
-    if _REAL_LIT.match(t):
-        return _real_text_py(float(t))
-    if _STR_LIT.match(t):
-        body = t[1:-1].replace("''", "'").replace("\\\\", "\\")
-        return _json.dumps(body, ensure_ascii=False)
-    return None
-
-
 def _json_mutator_alias(kind: str):
     """json_set/json_insert/json_replace(j, p1, v1, ...) → fixed-signature
     Pandas UDF call dsq_json_<kind>(j, array(p1, v1json, ...)).  Generic
     JSON mutation needs a real JSON engine (see functions/json1.py) — the
-    one deliberate Python hop in the function library.
-
-    The SIMPLE shape — ONE literal top-level path and ONE scalar literal
-    value — can compile instead to the pure-Catalyst state-machine UDF
-    (functions/json_fast.py): no Python in the plan, byte-exact vs
-    sqlite3.  That path is OPT-IN (DSQ_JSON_FAST=1): measured on
-    120 B / 1.2 KB / 13 KB docs it runs 3-8× SLOWER wall-clock than the
-    Arrow-batched engine, because Spark evaluates higher-order-function
-    lambdas interpreted per element (BENCH_NOTES §17) — the flag buys a
-    Python-free plan (no serialization barrier, no Python workers) at
-    that price.  Strict-JSON mode keeps the raising Python engine for
-    everything (the fast path returns NULL on malformed input, the
-    default-mode behavior)."""
+    one deliberate Python hop in the function library."""
     def alias(parts: list[str]) -> str:
         if len(parts) < 3 or len(parts) % 2 == 0:
             raise ValueError(f"json_{kind}() requires (json, path, value, ...)")
-        if (len(parts) == 3
-                and os.environ.get("DSQ_JSON_FAST", "").lower()
-                in ("1", "true", "yes")
-                and not strict_json_mode()):
-            pm = _SIMPLE_JSON_PATH.match(parts[1].strip())
-            vj = _fast_json_value(parts[2]) if pm else None
-            if pm and vj is not None:
-                vsql = vj.replace("\\", "\\\\").replace("'", "''")
-                return (f"dsq_json_{kind}1({parts[0].strip()}, "
-                        f"'{pm.group(1)}', '{vsql}')")
         args = []
         for p, v in zip(parts[1::2], parts[2::2]):
             args.append(p.strip())

@@ -1356,13 +1356,26 @@ def _inline_agg_safe(sql: str) -> str:
     from dsq_spark.functions import INLINE_UDFS, strict_json_mode
 
     skip = {"json", "json_extract"} if strict_json_mode() else set()
-    spans = _skip_spans(sql)
+    out = sql
+    # transitive: wrappers → best_effort_ts; runs before the swaps below
+    # because an inlined body may call dsq_real_text (dsq_json_unbox)
+    for _ in range(6):
+        new = out
+        for name, (ptypes, _ret, body) in INLINE_UDFS.items():
+            if name in skip:
+                continue
+            new = _inline_calls(new, name, ptypes, body)
+        if new == out or len(new) > 400_000:
+            out = new
+            break
+        out = new
+    spans = _skip_spans(out)
     out = re.sub(
         r"(?<![\w.`$])dsq_real_text\(",
         lambda m: (m.group(0)
                    if any(a <= m.start() < b for a, b in spans)
                    else "dsq_real_text_agg("),
-        sql)
+        out)
     # glob patterns: LITERAL ones fold to their compiled regex (the
     # Python mirror of the glob_regex machine), computed ones ride the
     # pandas twin — either way the SQL UDF is gone
@@ -1397,16 +1410,6 @@ def _inline_agg_safe(sql: str) -> str:
                    if any(a <= m.start() < b for a, b in spans3)
                    else "dsq_like_regex_agg("),
         out)
-    for _ in range(6):  # transitive: wrappers → best_effort_ts
-        new = out
-        for name, (ptypes, _ret, body) in INLINE_UDFS.items():
-            if name in skip:
-                continue
-            new = _inline_calls(new, name, ptypes, body)
-        if new == out or len(new) > 400_000:
-            out = new
-            break
-        out = new
     # Spark's native nullif desugars through a With/common-expression
     # wrapper whose refs leak un-rewritten into codegen when the same
     # statement carries an aggregate and a (non-inlinable) SQL UDF —

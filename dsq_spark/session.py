@@ -20,8 +20,8 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
 
 
-def get_spark(app_name: str = "dsq-spark", master: str | None = None,
-              extra_conf: dict[str, str] | None = None) -> SparkSession:
+def get_spark(app_name: str = "dsq-spark",
+              master: str | None = None) -> SparkSession:
     """Build (or reuse) a SparkSession with scale-appropriate defaults.
 
     On a real cluster, pass ``master=None`` with an external master URL in
@@ -77,11 +77,8 @@ def get_spark(app_name: str = "dsq-spark", master: str | None = None,
     # Python workers import dsq_spark (pandas-UDF closures pickle its
     # functions by reference), so put the directory that holds the
     # package on their path, or they only find it when the cwd is the
-    # repo root.  Spark merges this with the process's own PYTHONPATH; a
-    # caller's extra_conf value replaces it.
+    # repo root.  Spark merges this with the process's own PYTHONPATH.
     builder = builder.config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
-    for k, v in (extra_conf or {}).items():
-        builder = builder.config(k, v)
     return builder.getOrCreate()
 
 

@@ -272,8 +272,7 @@ _FN_TEXT = frozenset((
     # return TEXT, so `date(x) < 20250000` compares by storage class
     # (text > numeric → false) — without the kind the comparison stayed
     # native and Spark's string→number coercion NULLed it (r6 probes)
-    "date_format", "from_unixtime", "dsq_json_set1", "dsq_json_insert1",
-    "dsq_json_replace1",
+    "date_format", "from_unixtime",
 ))
 # functions returning BINARY — their comparisons take the BLOB storage
 # class rank (zeroblob(2) < 'x' is 0: BLOB sorts above TEXT)

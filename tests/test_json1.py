@@ -302,22 +302,26 @@ def test_strict_json_mode(spark):
         register_all(spark)  # restore the default (soft) registrations
 
 
-def test_json_mutator_fast_path_matrix(spark):
-    """The simple-shape fast path (functions/json_fast.py, opt-in via
-    DSQ_JSON_FAST) pinned byte-for-byte vs sqlite3 through the FULL
-    rewrite pipeline: minification, verbatim number spellings and string
-    escapes, replace in place, append at end ({} included),
-    insert/replace asymmetry, non-object-root no-ops, duplicate keys
-    (first wins), hostile nested values, and malformed → NULL (default
-    mode).  Both the O(n) position-splice leg (minified docs) and the
-    minify-fold leg (whitespace docs) are exercised."""
-    import os
+def test_json_mutator_sqlite_matrix(spark):
+    """json_set/json_insert/json_replace pinned byte-for-byte vs sqlite3
+    through the full rewrite pipeline: minification, verbatim number
+    spellings, replace in place, append at end ({} included),
+    insert/replace asymmetry, non-object-root no-ops, hostile nested
+    values, REAL values in SQLite's %!.15g shape (3.0 stays 3.0, -0.0
+    is 0.0, an integer literal past int64 is REAL) and malformed → NULL
+    (default mode).
+
+    Two documents are named deltas (PARITY.md JSON1 row): the engine
+    answers as sqlite3 does on the document it parses to.  A string
+    escape is decoded ('\\u0041' comes back as 'A') and duplicate keys
+    collapse to the last one, where sqlite3 keeps the text as written."""
     import sqlite3
 
     from dsq_spark.functions import register_all
     from dsq_spark.rewrite import rewrite_query
 
     register_all(spark)
+    deltas = {'{"a":"\\u0041"}': '{"a":"A"}', '{"a":1,"a":2}': '{"a":2}'}
     docs = [
         '{ "a" : 1 }', '{"a":1e0}', '{"a":"\\u0041"}', '{"a":1}',
         '{"a":{"x":[1, 2]}}', '{"b":1,"a":2}', '[1, 2]', '{"a":0.10}',
@@ -331,30 +335,52 @@ def test_json_mutator_fast_path_matrix(spark):
         "json_set(j, '$.b', true)", "json_insert(j, '$.a', 9)",
         "json_insert(j, '$.b', 9)", "json_replace(j, '$.a', 9)",
         "json_replace(j, '$.b', 9)", "json_set(j, '$.c', 'q\\path')",
-        # ADVICE r6: the value renderer must keep SQLite's %!.15g shape —
-        # integral reals keep the forced decimal point (3.0 stays 3.0,
-        # preserving the stored JSON type), -0.0 normalizes to 0.0, and
-        # an integer literal past int64 promotes to REAL
         "json_set(j, '$.b', 3.0)", "json_set(j, '$.b', -0.0)",
         "json_set(j, '$.b', 9223372036854775808)",
     ]
     spark.createDataFrame([(d,) for d in docs], "j string") \
-        .createOrReplaceTempView("jfast_m")
+        .createOrReplaceTempView("jmut_m")
     con = sqlite3.connect(":memory:")
-    os.environ["DSQ_JSON_FAST"] = "1"
-    try:
-        for e in exprs:
-            rw = rewrite_query(f"SELECT j, {e} AS r FROM jfast_m",
-                               {"j": "text"})
-            assert "1(" in rw  # the fast path actually fired
-            got = {r["j"]: r["r"] for r in spark.sql(rw).collect()}
-            for d in docs:
-                try:
-                    want = con.execute(
-                        "SELECT " + e.replace("j,", "?,"),
-                        (d,)).fetchone()[0]
-                except Exception:
-                    want = None  # SQLite raises; default mode NULLs
-                assert got.get(d) == want, (e, d, got.get(d), want)
-    finally:
-        os.environ.pop("DSQ_JSON_FAST", None)
+
+    def want(e, d):
+        try:
+            return con.execute("SELECT " + e.replace("j,", "?,"),
+                               (d,)).fetchone()[0]
+        except Exception:
+            return None  # SQLite raises; default mode NULLs
+
+    differs = set()
+    for e in exprs:
+        rw = rewrite_query(f"SELECT j, {e} AS r FROM jmut_m", {"j": "text"})
+        got = {r["j"]: r["r"] for r in spark.sql(rw).collect()}
+        for d in docs:
+            assert got.get(d) == want(e, deltas.get(d, d)), (e, d)
+            if got.get(d) != want(e, d):
+                differs.add(d)
+    assert differs == set(deltas)  # both deltas are real, and only they
+
+
+def test_json_real_values_match_sqlite(spark):
+    """REAL values inside JSON1 constructors and mutators render like
+    SQLite's %!.15g (json_array(0.1 + 0.2) is [0.3], -0.0 is 0.0, 1e20
+    is 1.0e+20), not like Java's Double.toString — both in a plain
+    projection and in an aggregate statement, where the constructors
+    are inlined.  Infinity is a documented residual (PARITY.md)."""
+    import sqlite3
+
+    from dsq_spark.functions import register_all
+    from dsq_spark.rewrite import rewrite_query
+
+    register_all(spark)
+    con = sqlite3.connect(":memory:")
+    vals = ["-0.0", "0.1 + 0.2", "1e20", "1.5e-7", "1e15",
+            "123456789012345678.0", "2.5"]
+    calls = ["json_array({})", "json_object('a', {})", "json_quote({})",
+             "json_set('{{}}', '$.b', {})"]
+    for c in calls:
+        items = ", ".join(f"{c.format(v)} AS c{i}" for i, v in enumerate(vals))
+        for q in (f"SELECT {items}", f"SELECT {items}, count(*) AS n"):
+            want = con.execute(q).fetchone()
+            got = spark.sql(rewrite_query(q)).collect()[0]
+            for i, v in enumerate(vals):
+                assert got[i] == want[i], (q, v, got[i], want[i])

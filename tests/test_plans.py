@@ -434,44 +434,6 @@ def test_in_subquery_affinity_stays_semi_join(spark, sf_dir):
     assert df.collect()[0]["n"] == 50
 
 
-def test_json_mutator_simple_shape_no_python(spark, sf_dir):
-    """Under DSQ_JSON_FAST, the simple JSON1 mutator shape — one literal
-    top-level path, one scalar literal — compiles to the pure-Catalyst
-    state-machine UDF (functions/json_fast.py): NO Python evaluation
-    node in the plan.  The general shape (multiple pairs / computed
-    paths) keeps the Arrow-batched Python engine, as does the DEFAULT
-    mode (measured 3-8× faster wall-clock, BENCH_NOTES §17) — all three
-    asserted so the dispatch can't silently regress any way."""
-    import io
-    import os
-    from contextlib import redirect_stdout
-
-    from dsq_spark.rewrite import rewrite_query
-
-    spark.createDataFrame([('{"a":1}',)], "j string") \
-        .createOrReplaceTempView("jfast_t")
-
-    def plan_of(sql):
-        df = spark.sql(rewrite_query(sql, {"j": "text"}))
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            df.explain("formatted")
-        return buf.getvalue()
-
-    os.environ["DSQ_JSON_FAST"] = "1"
-    try:
-        simple = plan_of("SELECT json_set(j, '$.b', 1) AS r FROM jfast_t")
-        assert "BatchEvalPython" not in simple
-        assert "ArrowEvalPython" not in simple
-        general = plan_of(
-            "SELECT json_set(j, '$.b', 1, '$.c', 2) AS r FROM jfast_t")
-        assert "EvalPython" in general
-    finally:
-        os.environ.pop("DSQ_JSON_FAST", None)
-    default = plan_of("SELECT json_set(j, '$.b', 1) AS r FROM jfast_t")
-    assert "EvalPython" in default
-
-
 def test_r10_dialect_rows_stay_jvm_side(spark, sf_dir):
     """The four r10 driver rows (CTE kind tracking, DISTINCT dynamic
     aggregates, GROUPS/EXCLUDE frames, VALUES + mixed chains) compile to

@@ -2494,11 +2494,20 @@ def test_r9_windowed_dynamic_aggregates(engines_w):
         "FROM tw",
         "SELECT sum(t) AS s, total(t) AS u, group_concat(t, '|') AS g "
         "FROM tw",
+        "SELECT sum(t) AS s FROM tw",
+        "SELECT total(t) AS s FROM tw",
+        "SELECT group_concat(t, '|') AS s FROM tw",
     ]:
         want, got = _run_w(spark, con, q)
         assert want == got, q
         rw = rewrite_query(q, WSCHEMA)
         assert rewrite_query(rw, WSCHEMA) == rw, q
+    for q in [
+        "SELECT a, sum(a) OVER (ORDER BY a) AS s FROM td",
+        "SELECT a, total(b) OVER (PARTITION BY c) AS s FROM td",
+    ]:
+        want, got = _run(spark, con, q)
+        assert want == got, q
 
 
 def test_r9_filter_clause_matrix(engines_w):
@@ -2522,11 +2531,27 @@ def test_r9_filter_clause_matrix(engines_w):
         "AS s FROM tw",
         "SELECT id, count(*) FILTER (WHERE t <> '') OVER (ORDER BY id) "
         "AS n FROM tw",
+        "SELECT group_concat(t, '|') FILTER (WHERE id > 1) AS s FROM tw",
+        "SELECT sum(t) FILTER (WHERE id IN (2, 6)) AS s FROM tw",
+        "SELECT avg(t) FILTER (WHERE id > 3) AS s FROM tw",
+        "SELECT count(*) FILTER (WHERE id > 3) AS s FROM tw",
+        "SELECT id, count(*) FILTER (WHERE t <> '') OVER (ORDER BY id) "
+        "AS s FROM tw",
+        "SELECT id, group_concat(t) FILTER (WHERE id <> 2) "
+        "OVER (ORDER BY id) AS s FROM tw",
     ]:
         want, got = _run_w(spark, con, q)
         assert want == got, q
         rw = rewrite_query(q, WSCHEMA)
         assert rewrite_query(rw, WSCHEMA) == rw, q
+    for q in [
+        "SELECT c, count(*) FILTER (WHERE a > 0) AS n FROM td GROUP BY c",
+        "SELECT sum(b) FILTER (WHERE a > 2) AS s FROM td",
+        "SELECT a, sum(b) FILTER (WHERE a > 0) OVER (ORDER BY a) AS s "
+        "FROM td",
+    ]:
+        want, got = _run(spark, con, q)
+        assert want == got, q
 
 
 def test_r9_quote_class_mixed_no_crash(engines):
@@ -2562,6 +2587,7 @@ def test_r9_compound_storage_classes(engines):
         "SELECT c AS v FROM td EXCEPT SELECT a FROM td",
         "SELECT a AS v FROM td INTERSECT SELECT c FROM td",
         "SELECT a AS v, c AS w FROM td UNION SELECT c, c FROM td",
+        "SELECT c AS v FROM td INTERSECT SELECT a FROM td",
     ]:
         want, got = _run(spark, con, q)
         assert want == got, q
@@ -2570,6 +2596,7 @@ def test_r9_compound_storage_classes(engines):
         "SELECT a AS v FROM td UNION SELECT c FROM td ORDER BY v",
         "SELECT a AS v FROM td UNION ALL SELECT c FROM td ORDER BY v, 1",
         "SELECT 2 AS v UNION SELECT 'x' UNION SELECT 1.5 ORDER BY v DESC",
+        "SELECT b AS v FROM td UNION ALL SELECT a FROM td ORDER BY v",
     ]:
         want = [tuple(_canon(v) for v in r) for r in con.execute(q)]
         got = [tuple(_canon(v) for v in r)
@@ -2620,6 +2647,8 @@ def test_r9_case_base_exact_boundaries(engines):
         "SELECT CASE min('abc', 9223372036854775807) "
         "WHEN 9223372036854775808.0 THEN 'a' WHEN 9223372036854775807 "
         "THEN 'b' ELSE 'c' END AS r",
+        "SELECT CASE max('abc', 9223372036854775807) "
+        "WHEN 9223372036854775807 THEN 'eq' ELSE 'ne' END AS r",
     ]:
         want, got = _run(spark, con, q)
         assert want == got, q
@@ -2629,7 +2658,9 @@ def test_r9_dynamic_like_escape(engines):
     """Dynamic (non-literal) LIKE patterns with ESCAPE (r8 verdict #5):
     Spark's native ESCAPE raises INVALID_FORMAT on escapes SQLite
     accepts — computed patterns route through the runtime LIKE→regex
-    machine (dsq_like_regex)."""
+    machine (dsq_like_regex).  Also the pattern anchors against a
+    trailing newline in the subject (ADVICE r9 item 4): 'abc' || char(10)
+    neither LIKEs nor GLOBs 'abc'."""
     spark, con = engines
     for q in [
         "SELECT a FROM td WHERE 'a!b' LIKE ('a' || upper(c) || '!b') "
@@ -2638,6 +2669,14 @@ def test_r9_dynamic_like_escape(engines):
         "SELECT c LIKE (c || '%') ESCAPE '!' AS r FROM td",
         "SELECT c NOT LIKE ('%' || c) ESCAPE '@' AS r FROM td",
         "SELECT 'A_B' LIKE lower(c) ESCAPE '_' AS r FROM td",
+        "SELECT c LIKE c ESCAPE '!' AS r FROM td",
+        "SELECT c, c LIKE ('%' || c) ESCAPE '\\' AS r FROM td",
+        "SELECT 'abc' || char(10) LIKE 'abc' AS r",
+        "SELECT 'abc' || char(10) LIKE 'ab_' AS r",
+        "SELECT 'abc' || char(10) LIKE 'abc' ESCAPE '!' AS r",
+        "SELECT c || char(10) LIKE c AS r FROM td",
+        "SELECT 'abc' || char(10) GLOB 'abc' AS r",
+        "SELECT 'abc' || char(10) LIKE 'abc%' AS r",
     ]:
         want, got = _run(spark, con, q)
         assert want == got, q
@@ -2808,6 +2847,10 @@ def test_r10_cte_kind_tracking(engines_w):
     ]:
         want, got = _run_w(spark, con, q)
         assert want == got, q
+    q = ("WITH u AS (SELECT c AS v FROM td), w AS (SELECT a AS x FROM td) "
+         "SELECT sum(v) AS s, (SELECT sum(x) FROM w) AS s2 FROM u")
+    want, got = _run(spark, con, q)
+    assert want == got, q
 
 
 def test_r10_boolean_derived_columns(engines):
@@ -2845,6 +2888,12 @@ def test_r10_distinct_dynamic_aggregates(engines_w):
     ]:
         want, got = _run_w(spark, con, q)
         assert want == got, q
+    for q in [
+        "SELECT sum(DISTINCT a) AS s FROM td",
+        "SELECT avg(DISTINCT b) AS s FROM td",
+    ]:
+        want, got = _run(spark, con, q)
+        assert want == got, q
 
 
 def test_r10_groups_exclude_frames(engines):
@@ -2869,6 +2918,10 @@ def test_r10_groups_exclude_frames(engines):
         "2 FOLLOWING EXCLUDE CURRENT ROW) AS m FROM td",
         "SELECT a, sum(a) OVER (ORDER BY c GROUPS BETWEEN 1 PRECEDING "
         "AND CURRENT ROW EXCLUDE GROUP) AS s FROM td",
+        "SELECT a, sum(b) OVER (ORDER BY a GROUPS BETWEEN UNBOUNDED "
+        "PRECEDING AND CURRENT ROW) AS s FROM td",
+        "SELECT a, count(*) OVER (ORDER BY c GROUPS BETWEEN CURRENT ROW "
+        "AND UNBOUNDED FOLLOWING) AS n FROM td",
     ]:
         want, got = _run(spark, con, q)
         assert want == got, q
@@ -2905,19 +2958,25 @@ def test_r10_mixed_operator_chains(engines):
         assert want == got, q
 
 
-def test_r10_mixed_class_values(engines):
+@pytest.mark.parametrize("q", [
+    "VALUES (1), ('1')",
+    "SELECT * FROM (VALUES (1), ('1'), (2.5))",
+    "SELECT 9 AS v UNION VALUES (1), ('1')",
+    "SELECT sum(column1) AS s FROM (VALUES (1), ('5kg'), (2.5))",
+    pytest.param(
+        "VALUES (1, 'a'), ('1', 2), (1.0, x'41')",
+        marks=pytest.mark.xfail(strict=True, reason=(
+            "class-mixed columns surface as text: REAL 1.0 comes back "
+            "as '1.0' and BLOB x'41' as 'A', where sqlite3 returns the "
+            "REAL and the bytes"))),
+])
+def test_r10_mixed_class_values(engines, q):
     """SQLite VALUES lists with heterogeneous storage classes rewrite to
     UNION ALL selects named column1..N (r9 judge What's missing #5 —
     Spark's inline tables reject them outright)."""
     spark, con = engines
-    for q in [
-        "VALUES (1), ('1')",
-        "SELECT * FROM (VALUES (1), ('1'), (2.5))",
-        "SELECT 9 AS v UNION VALUES (1), ('1')",
-        "SELECT sum(column1) AS s FROM (VALUES (1), ('5kg'), (2.5))",
-    ]:
-        want, got = _run(spark, con, q)
-        assert want == got, q
+    want, got = _run(spark, con, q)
+    assert want == got, q
 
 
 def test_r10_int_real_compound_arm_class(engines):
@@ -2951,6 +3010,7 @@ def test_r10_companion_scope_hygiene(engines):
         "(SELECT 1 AS v UNION ALL SELECT '1')) AS m FROM td",
         "SELECT sum(b) AS s, (SELECT max(b) FROM "
         "(SELECT 1 AS b UNION ALL SELECT '1')) AS m FROM td",
+        "SELECT count(*) AS n FROM (SELECT 1 AS v UNION SELECT '1')",
     ]:
         want, got = _run(spark, con, q)
         assert want == got, q
