@@ -26,6 +26,7 @@ from dsq_spark.io_out import dump_json, pretty_table, schema_json, schema_pretty
 from dsq_spark.rewrite import TableRef, extract_table_refs, rewrite_query_tracked
 from dsq_spark.sources import read_file
 from dsq_spark.sources.flatten import flatten
+from dsq_spark.sqllex import opaque_spans
 
 VERSION = "dsq-spark 0.1.0"
 
@@ -266,10 +267,18 @@ def _sql(spark, sql: str, dquoted: frozenset[str] = frozenset()):
         return spark.sql(sql)
     except AnalysisException as e:
         name = _unresolved_column(e)
-        if name is not None and name in dquoted and f"`{name}`" in sql:
-            lit = "'" + name.replace("'", "''") + "'"
-            return _sql(spark, sql.replace(f"`{name}`", lit),
-                        frozenset(n for n in dquoted if n != name))
+        if name is not None and name in dquoted:
+            # only the identifier tokens: a string literal that happens to
+            # contain `name` keeps its text
+            ident, lit = f"`{name}`", "'" + name.replace("'", "''") + "'"
+            out, pos = [], 0
+            for a, b in opaque_spans(sql):
+                if sql[a:b] == ident:
+                    out += [sql[pos:a], lit]
+                    pos = b
+            if out:
+                return _sql(spark, "".join(out) + sql[pos:],
+                            frozenset(n for n in dquoted if n != name))
         raise
 
 

@@ -27,6 +27,8 @@ import re
 
 from pyspark.sql import SparkSession
 
+from dsq_spark.sqllex import opaque_spans, split_top
+
 # Formats best_effort_ts tries, in order (first match wins). Mirrors the
 # high-frequency cases of the reference's dateparse dependency.
 _TS_FORMATS = [
@@ -722,15 +724,8 @@ def _julianday_inner(tv: str) -> str | None:
     if not (s.startswith(_JD_RENDER_PREFIX) and s.endswith(_JD_RENDER_SUFFIX)):
         return None
     inner = s[len(_JD_RENDER_PREFIX):-len(_JD_RENDER_SUFFIX)]
-    depth = 0
-    for c in inner:  # reject if the slice isn't paren-balanced
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-            if depth < 0:
-                return None
-    return inner if depth == 0 else None
+    # reject if the slice isn't paren-balanced
+    return None if split_top(inner) is None else inner
 
 
 def _is_arith_expr(tv: str) -> bool:
@@ -741,23 +736,23 @@ def _is_arith_expr(tv: str) -> bool:
     (start of expression or right after another operator/comma/paren) are
     not binary operators; operators inside parens or string literals don't
     count (conservative: missing one only costs the slower generic path)."""
-    depth, in_str, prev = 0, False, ""
-    for c in tv:
-        if in_str:
-            in_str = c != "'"
-        elif c == "'":
-            in_str = True
-        elif c in "([":
-            depth += 1
-        elif c in ")]":
-            depth -= 1
-        elif depth == 0 and c in "+-*/%":
-            if c in "+-" and (not prev or prev in "+-*/%(,"):
-                pass  # sign, not operator
-            else:
-                return True
-        if not c.isspace():
-            prev = c
+    depth, prev, pos = 0, "", 0
+    for a, b in opaque_spans(tv) + [(len(tv), len(tv))]:
+        for c in tv[pos:a]:
+            if c in "([":
+                depth += 1
+            elif c in ")]":
+                depth -= 1
+            elif depth == 0 and c in "+-*/%":
+                if c in "+-" and (not prev or prev in "+-*/%(,"):
+                    pass  # sign, not operator
+                else:
+                    return True
+            if not c.isspace():
+                prev = c
+        if a < b and tv[a] not in "-/":
+            prev = tv[a]  # a quoted operand (a comment is whitespace)
+        pos = b
     return False
 
 

@@ -35,21 +35,28 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from dsq_spark.sqllex import close_paren, opaque_spans
+
 _REC_SEQ = itertools.count()
 
 
 def _rename_refs(sql: str, name: str, internal: str) -> str:
     """Rewrite word-boundary references to the CTE name outside string
-    literals, so the iteration binding can use a unique internal view name
-    and never clobber a user view/table of the same name (e.g. a `t_0`
-    input view or `orders`)."""
-    from dsq_spark.rewrite import _split_on_strings
-
+    literals, comments and quoted aliases (a backticked `name` itself is a
+    reference too), so the iteration binding can use a unique internal
+    view name and never clobber a user view/table of the same name (e.g.
+    a `t_0` input view or `orders`)."""
     pat = re.compile(r"\b" + re.escape(name) + r"\b", re.IGNORECASE)
-    return "".join(
-        chunk if is_str else pat.sub(internal, chunk)
-        for is_str, chunk in _split_on_strings(sql)
-    )
+    out, pos = [], 0
+    for a, b in opaque_spans(sql):
+        out.append(pat.sub(internal, sql[pos:a]))
+        quoted = sql[a:b]
+        out.append(f"`{internal}`" if quoted.lower() == f"`{name.lower()}`"
+                   else quoted)
+        pos = b
+    out.append(pat.sub(internal, sql[pos:]))
+    return "".join(out)
+
 
 _HEAD = re.compile(
     r"^\s*WITH\s+RECURSIVE\s+([A-Za-z_][A-Za-z0-9_]*)\s*"
@@ -69,59 +76,17 @@ class RecursiveCTE:
     main: str
 
 
-def _scan_body(sql: str, start: int) -> int:
-    """Index just past the ')' matching the '(' at start-1 (string-aware)."""
-    depth, i, n = 1, start, len(sql)
-    while i < n:
-        c = sql[i]
-        if c == "'":
-            i += 1
-            while i < n:
-                if sql[i] == "'":
-                    if i + 1 < n and sql[i + 1] == "'":
-                        i += 2
-                        continue
-                    break
-                i += 1
-        elif c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-            if depth == 0:
-                return i + 1
-        i += 1
-    raise ValueError("unbalanced parentheses in WITH RECURSIVE body")
-
-
 _UNION = re.compile(r"\bUNION(\s+ALL)?\b", re.IGNORECASE)
 
 
 def _split_union(body: str) -> tuple[str, str, bool]:
     """Split on the LAST top-level UNION [ALL] (base may itself be a union)."""
-    depth, i, n = 0, 0, len(body)
-    last = None
-    while i < n:
-        c = body[i]
-        if c == "'":
-            i += 1
-            while i < n:
-                if body[i] == "'":
-                    if i + 1 < n and body[i + 1] == "'":
-                        i += 2
-                        continue
-                    break
-                i += 1
-        elif c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif depth == 0 and c in "Uu":
-            m = _UNION.match(body, i)
-            if m:
-                last = m
-                i = m.end()
-                continue
-        i += 1
+    from dsq_spark.rewrite import _scan_kw
+
+    spans, last, pos = opaque_spans(body), None, 0
+    while (i := _scan_kw(body, spans, pos, "UNION")) is not None:
+        last = _UNION.match(body, i)
+        pos = last.end()
     if last is None:
         raise ValueError("WITH RECURSIVE body has no top-level UNION")
     return body[: last.start()], body[last.end():], bool(last.group(1))
@@ -132,7 +97,10 @@ def parse_recursive(sql: str) -> RecursiveCTE | None:
     m = _HEAD.match(sql)
     if m is None:
         return None
-    body_end = _scan_body(sql, m.end())
+    close = close_paren(sql, m.end() - 1)
+    if close is None:
+        raise ValueError("unbalanced parentheses in WITH RECURSIVE body")
+    body_end = close + 1
     base, step, union_all = _split_union(sql[m.end() : body_end - 1])
     main = sql[body_end:].strip()
     if main.startswith(","):

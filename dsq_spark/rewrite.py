@@ -17,17 +17,21 @@ Spark SQL is a near-superset of the SQLite dialect, so parity needs:
     `GROUP_CONCAT` → listagg-equivalent via concat_ws/collect_list is
     registered as a SQL macro in dsq_spark.functions).
 
-All rewrites are token-aware: single-quoted string literals are never
-touched. This is a string→string transform — Catalyst does the actual
-parsing/optimization downstream.
+All rewrites take SQLite's lexical rules from dsq_spark.sqllex: string
+literals are never touched, and a quote, comma or parenthesis inside a
+literal, a quoted identifier or a comment is never SQL structure. This is
+a string→string transform — Catalyst does the actual parsing/optimization
+downstream.
 """
 
 from __future__ import annotations
 
-import os
 import re
 from collections import OrderedDict
 from dataclasses import dataclass
+
+from dsq_spark.sqllex import (close_paren, inside, opaque_spans, split_top,
+                              wrapped)
 
 # {N}, {}, {N, "path"}, {"path"}, {N, 'path'} — reference regex main.go:54.
 TABLE_MACRO = re.compile(
@@ -48,44 +52,16 @@ class TableRef:
         return f"t_{self.index}__{safe}"
 
 
-def _split_on_strings(sql: str):
-    """Yield (is_string_literal, chunk) pieces; literals are single-quoted
-    with '' escapes (SQLite/ANSI)."""
-    out, i, n = [], 0, len(sql)
-    while i < n:
-        if sql[i] == "'":
-            j = i + 1
-            while j < n:
-                if sql[j] == "'" and j + 1 < n and sql[j + 1] == "'":
-                    j += 2
-                elif sql[j] == "'":
-                    j += 1
-                    break
-                else:
-                    j += 1
-            else:
-                j = n
-            out.append((True, sql[i:j]))
-            i = j
-        else:
-            j = sql.find("'", i)
-            if j == -1:
-                j = n
-            out.append((False, sql[i:j]))
-            i = j
-    return out
-
-
 def extract_table_refs(sql: str) -> list[TableRef]:
     """All `{...}` macros NOT STARTING inside a string literal, dedup'd, in
     order. Matching runs whole-statement: a macro's path operand may itself
     be single-quoted (`{0, 'data.data2'}` — reference scripts/test.py:163),
     which per-chunk scanning would split in half; only the macro's starting
     `{` must sit outside a literal."""
-    spans = _literal_spans(sql)
+    spans = opaque_spans(sql)
     refs: list[TableRef] = []
     for m in TABLE_MACRO.finditer(sql):
-        if any(a <= m.start() < b for a, b in spans):
+        if inside(spans, m.start()):
             continue
         idx = int(m.group(1)) if m.group(1) is not None else 0
         path = m.group(2) if m.group(2) is not None else m.group(3)
@@ -99,10 +75,10 @@ def _sub_table_macros(sql: str) -> str:
     """Whole-statement `{...}` → view-name substitution (span-aware, same
     rule as extract_table_refs). Runs BEFORE chunk rewriting so a
     single-quoted path operand is consumed with its macro."""
-    spans = _literal_spans(sql)
+    spans = opaque_spans(sql)
 
     def repl(m: re.Match) -> str:
-        if any(a <= m.start() < b for a, b in spans):
+        if inside(spans, m.start()):
             return m.group(0)
         idx = int(m.group(1)) if m.group(1) is not None else 0
         path = m.group(2) if m.group(2) is not None else m.group(3)
@@ -111,22 +87,10 @@ def _sub_table_macros(sql: str) -> str:
     return TABLE_MACRO.sub(repl, sql)
 
 
-def _rewrite_chunk(chunk: str, dquoted: set[str] | None = None) -> str:
-    # (table macros were already substituted whole-statement by
-    # _sub_table_macros — their single-quoted path operands would split a
-    # per-chunk scan.)
-
-    # "quoted identifier" → `quoted identifier`. The converted names are
-    # collected so the CLI can apply SQLite's double-quote fallback: a
-    # double-quoted token that does NOT resolve as a column is retried as a
-    # string literal (SQLite's documented misfeature, which dsq queries in
-    # the wild rely on — e.g. split_part(x, ".", -1)).
-    def repl_q(m: re.Match) -> str:
-        if dquoted is not None:
-            dquoted.add(m.group(1))
-        return "`" + m.group(1) + "`"
-
-    chunk = re.sub(r'"((?:[^"\\]|\\.)*)"', repl_q, chunk)
+def _rewrite_chunk(chunk: str) -> str:
+    """Keyword rewrites for the text between two string literals (table
+    macros were already substituted whole-statement by _sub_table_macros
+    — their single-quoted path operands would split a per-chunk scan)."""
     # REGEXP operator → RLIKE (word-boundary, case-insensitive)
     chunk = re.sub(r"\bREGEXP\b", "RLIKE", chunk, flags=re.IGNORECASE)
     # SQLite collation names → Spark 4 collations. NOCASE folds ASCII only
@@ -142,13 +106,12 @@ def _rewrite_chunk(chunk: str, dquoted: set[str] | None = None) -> str:
 
 
 _ARROW = re.compile(
-    r"([A-Za-z_][\w.]*|`[^`]+`)\s*->(>?)\s*"
-    r"(?:'((?:[^'\\]|\\.)*)'|(\d+)|\"((?:[^\"\\]|\\.)*)\")"
-)
+    r"([A-Za-z_][\w.]*|`[^`]+`)\s*->(>?)\s*(?:'((?:[^']|'')*)'|(\d+))")
 
 
 def _rewrite_arrows(sql: str) -> str:
-    """col->key / col->>key → get_json_object(col, '$.key' / '$[i]').
+    """col->key / col->>key → get_json_object(col, '$.key' / '$[i]'); a
+    key that starts with `$` is the JSON path itself (`j->>'$.a[0]'`).
 
     SQLite `->` returns a JSON text representation and `->>` returns SQL
     text; on dsq's flattened data (arrays of scalars serialized to JSON
@@ -160,19 +123,21 @@ def _rewrite_arrows(sql: str) -> str:
     literal, so per-chunk rewriting would split the match); matches starting
     inside a literal or a backticked alias are skipped.
     """
-    spans = _skip_spans(sql)
+    spans = opaque_spans(sql)
+    bt_starts = {a for a, _ in spans if sql[a] == "`"}
 
     def repl(m: re.Match) -> str:
         # a match may legitimately START a backtick span (`a.b`->0 — the
         # column operand is itself backtick-quoted); skip only matches
         # strictly inside a span (alias text) or inside a string literal
         s = m.start(1)
-        if any(a <= s < b and not (s == a and sql[a] == "`") for a, b in spans):
+        if inside(spans, s) and s not in bt_starts:
             return m.group(0)
-        col = m.group(1)
-        key = m.group(3) or m.group(5)
-        idx = m.group(4)
-        path = f"$[{idx}]" if idx is not None else f"$.{key}"
+        col, key, idx = m.group(1), m.group(3), m.group(4)
+        if idx is not None:
+            path = f"$[{idx}]"
+        else:
+            path = key if key.startswith("$") else f"$.{key}"
         return f"get_json_object({col}, '{path}')"
 
     return _ARROW.sub(repl, sql)
@@ -196,56 +161,14 @@ def _rewrite_glob(sql: str) -> str:
     in dsq_spark.sqlexpr (both operands through SQLite's TEXT rendering).
     Runs whole-statement because the pattern operand IS a literal; GLOB
     keywords inside literals are skipped via span check."""
-    spans = _skip_spans(sql)
+    spans = opaque_spans(sql)
 
     def repl(m: re.Match) -> str:
-        if any(a <= m.start() < b for a, b in spans):
+        if inside(spans, m.start()):
             return m.group(0)
         return f"RLIKE glob_regex({m.group(1)})"
 
     return _GLOB.sub(repl, sql)
-
-
-def _literal_spans(sql: str) -> list[tuple[int, int]]:
-    spans, pos = [], 0
-    for is_str, chunk in _split_on_strings(sql):
-        if is_str:
-            spans.append((pos, pos + len(chunk)))
-        pos += len(chunk)
-    return spans
-
-
-def _skip_spans(sql: str) -> list[tuple[int, int]]:
-    """Single-quoted literal spans PLUS backtick-quoted identifier spans, in
-    one scan (a backtick inside a literal does not open an identifier and
-    vice versa). Whole-statement rewrite passes must skip both — backticked
-    aliases produced by _alias_select_list carry verbatim SQL text that
-    later passes must never rewrite."""
-    spans, i, n = [], 0, len(sql)
-    while i < n:
-        c = sql[i]
-        if c == "'":
-            j = i + 1
-            while j < n:
-                if sql[j] == "'" and j + 1 < n and sql[j + 1] == "'":
-                    j += 2
-                elif sql[j] == "'":
-                    j += 1
-                    break
-                else:
-                    j += 1
-            else:
-                j = n
-            spans.append((i, j))
-            i = j
-        elif c == "`":
-            j = sql.find("`", i + 1)
-            j = n if j == -1 else j + 1
-            spans.append((i, j))
-            i = j
-        else:
-            i += 1
-    return spans
 
 
 # Words that end an expression rather than naming it (so a trailing bare
@@ -274,18 +197,7 @@ _IMPLICIT_ALIAS = re.compile(r'(?s)^(.*?\S)(\s+)("[^"]*"|`[^`]*`|[A-Za-z_]\w*)$'
 def _paren_stripped(core: str) -> str:
     """Peel balanced outer parens: SQLite names `(a)` / `((t.a))` by the
     bare column, not the parenthesized text."""
-    def balanced(s: str) -> bool:
-        d = 0
-        for ch in s:
-            if ch == "(":
-                d += 1
-            elif ch == ")":
-                d -= 1
-                if d < 0:
-                    return False
-        return d == 0
-
-    while core.startswith("(") and core.endswith(")") and balanced(core[1:-1]):
+    while wrapped(core):
         core = core[1:-1].strip()
     return core
 
@@ -324,7 +236,7 @@ def _scan_kw(sql: str, spans, start: int, *words: str,
     depth, i = 0, start
     n = len(sql) if end is None else end
     targets = [(len(w), w.upper()) for w in words]
-    # spans come from _literal_spans/_skip_spans: sorted, non-overlapping —
+    # spans come from opaque_spans: sorted, non-overlapping —
     # walk them with a monotone pointer and jump whole spans (the per-char
     # `any(a <= i < b ...)` membership test was O(len(sql)*len(spans)); on a
     # 30 KB dialect emission with ~900 literal spans that alone cost >1 s of
@@ -373,7 +285,7 @@ def _alias_select_list(sql: str) -> str:
     #the_select_list; the reference's own tests expect e.g. a "COUNT(*)"
     key). Spark invents names like count(1), so alias every unaliased
     top-level select-list expression with its verbatim text."""
-    spans = _literal_spans(sql)
+    spans = opaque_spans(sql)
 
     def scan_keyword(start: int, *words: str) -> int | None:
         return _scan_kw(sql, spans, start, *words)
@@ -389,7 +301,7 @@ def _alias_select_list(sql: str) -> str:
                        "ORDER", "LIMIT", "UNION", "INTERSECT", "EXCEPT")
     if end is None:
         end = len(sql)
-    items = _split_top_commas(sql[start:end])
+    items = split_top(sql[start:end]) or [sql[start:end]]
     return sql[:start] + ",".join(_alias_item(it) for it in items) + sql[end:]
 
 
@@ -412,44 +324,23 @@ def _find_agg_calls(seg: str) -> list[tuple[str, str]]:
     string literals, subqueries (the aggregate belongs to the inner
     SELECT) and window invocations (`… ) OVER` — a window function does
     not make the query an aggregate, sqlite.org/windowfunctions.html)."""
-    spans = _literal_spans(seg)
+    spans = opaque_spans(seg)
     # subquery spans: '(' whose first token is SELECT, to its match
     sub_spans = []
     for m in re.finditer(r"\(\s*SELECT\b", seg, re.IGNORECASE):
-        if any(a <= m.start() < b for a, b in spans):
+        if inside(spans, m.start()):
             continue
-        d, i = 0, m.start()
-        while i < len(seg):
-            if any(a <= i < b for a, b in spans):
-                i += 1
-                continue
-            if seg[i] == "(":
-                d += 1
-            elif seg[i] == ")":
-                d -= 1
-                if d == 0:
-                    break
-            i += 1
-        sub_spans.append((m.start(), i + 1))
+        i = close_paren(seg, m.start())
+        sub_spans.append((m.start(), len(seg) + 1 if i is None else i + 1))
     out = []
     for m in _BARE_AGG_NAMES.finditer(seg):
-        if any(a <= m.start() < b for a, b in spans):
+        if inside(spans, m.start()):
             continue
         if any(a < m.start() < b for a, b in sub_spans):
             continue
-        # matching close paren of the call
-        d, i = 0, m.end() - 1
-        while i < len(seg):
-            if any(a <= i < b for a, b in spans):
-                i += 1
-                continue
-            if seg[i] == "(":
-                d += 1
-            elif seg[i] == ")":
-                d -= 1
-                if d == 0:
-                    break
-            i += 1
+        i = close_paren(seg, m.end() - 1)
+        if i is None:
+            i = len(seg)
         arg = seg[m.end():i]
         # `… ) OVER` / `… ) FILTER (…) OVER` → window, not aggregate
         tail = seg[i + 1:].lstrip()
@@ -457,7 +348,7 @@ def _find_agg_calls(seg: str) -> list[tuple[str, str]]:
             continue
         name = m.group(1).lower()
         if name in ("min", "max"):
-            if len(_split_top_commas(arg)) != 1:
+            if len(split_top(arg) or [arg]) != 1:
                 continue  # 2+-arg scalar min/max
         out.append((name, arg.strip()))
     return out
@@ -484,7 +375,7 @@ def _bare_agg_columns(sql: str,
     # window-mixed aggregate queries are out of this rule's scope
     if re.search(r"(?i)\bOVER\b", sql):
         return sql
-    spans = _literal_spans(sql)
+    spans = opaque_spans(sql)
     # split into compound arms at depth-0 UNION/INTERSECT/EXCEPT
     bounds, pos = [0], 0
     while True:
@@ -516,36 +407,28 @@ def _wrap_stray_cols(core: str, cols: frozenset, wrap) -> str:
     select item: `sum(b) OR c` is a legal SQLite aggregate expression
     whose `c` takes an input-row value (the same bareagg rule), while
     Spark demands every non-aggregate input be grouped."""
-    lits = _literal_spans(core)
+    lits = opaque_spans(core)
+    # a quoted identifier is itself a column reference below: only string
+    # literals and comments hide one
+    strs = [(a, b) for a, b in lits if core[a] not in '`"']
     excl = []
 
     def close_of(op: int) -> int:
-        d, i = 0, op
-        while i < len(core):
-            if any(a <= i < b for a, b in lits):
-                i += 1
-                continue
-            if core[i] == "(":
-                d += 1
-            elif core[i] == ")":
-                d -= 1
-                if d == 0:
-                    return i
-            i += 1
-        return len(core) - 1
+        i = close_paren(core, op)
+        return len(core) - 1 if i is None else i
 
     for m in re.finditer(r"\(\s*SELECT\b", core, re.IGNORECASE):
-        if not any(a <= m.start() < b for a, b in lits):
+        if not inside(lits, m.start()):
             excl.append((m.start(), close_of(m.start()) + 1))
     for m in _BARE_AGG_NAMES.finditer(core):
-        if any(a <= m.start() < b for a, b in lits):
+        if inside(lits, m.start()):
             continue
         if any(a <= m.start() < b for a, b in excl):
             continue
         cp = close_of(m.end() - 1)
         name = m.group(1).lower()
-        if name in ("min", "max") and len(
-                _split_top_commas(core[m.end():cp])) != 1:
+        arg = core[m.end():cp]
+        if name in ("min", "max") and len(split_top(arg) or [arg]) != 1:
             continue  # scalar 2-arg min/max: its args are per-row refs
         # extend the exclusion through a trailing FILTER (WHERE ...)
         # group: its predicate columns are per-row refs in both engines
@@ -561,7 +444,7 @@ def _wrap_stray_cols(core: str, cols: frozenset, wrap) -> str:
     for m in re.finditer(
             r"(?:[A-Za-z_]\w*\s*\.\s*)?(`[^`]+`|[A-Za-z_]\w*)", core):
         s0 = m.start()
-        if (any(a <= s0 < b for a, b in lits)
+        if (inside(strs, s0)
                 or any(a <= s0 < b for a, b in excl)
                 or s0 < last):
             continue
@@ -583,7 +466,7 @@ def _wrap_stray_cols(core: str, cols: frozenset, wrap) -> str:
 
 
 def _bare_agg_one(seg: str, cols: frozenset) -> str:
-    spans = _literal_spans(seg)
+    spans = opaque_spans(seg)
     sel = _scan_kw(seg, spans, 0, "SELECT")
     if sel is None:
         return seg
@@ -595,7 +478,7 @@ def _bare_agg_one(seg: str, cols: frozenset) -> str:
                    "WINDOW", "ORDER", "LIMIT")
     if end is None:
         end = len(seg)
-    items = _split_top_commas(seg[start:end])
+    items = split_top(seg[start:end]) or [seg[start:end]]
     item_aggs = [_find_agg_calls(it) for it in items]
     sel_aggs = [a for ia in item_aggs for a in ia]
     if not sel_aggs:
@@ -620,8 +503,8 @@ def _bare_agg_one(seg: str, cols: frozenset) -> str:
         if gby:
             gend = _scan_kw(seg, spans, gpos + gby.end(), "HAVING",
                             "ORDER", "LIMIT", "WINDOW")
-            gterms = _split_top_commas(
-                seg[gpos + gby.end():gend if gend is not None else len(seg)])
+            gtext = seg[gpos + gby.end():len(seg) if gend is None else gend]
+            gterms = split_top(gtext) or [gtext]
 
     def norm(t: str) -> str:
         return " ".join(_paren_stripped(t.strip()).split()).lower()
@@ -652,21 +535,9 @@ def _bare_agg_one(seg: str, cols: frozenset) -> str:
         # and unary signs ((2), +2 are position 2) but not arithmetic
         ts = t.strip()
         while True:
-            if ts.startswith("(") and ts.endswith(")"):
-                inner = ts[1:-1].strip()
-                d9 = 0
-                ok9 = True
-                for ch in inner:
-                    if ch == "(":
-                        d9 += 1
-                    elif ch == ")":
-                        d9 -= 1
-                        if d9 < 0:
-                            ok9 = False
-                            break
-                if ok9 and d9 == 0:
-                    ts = inner
-                    continue
+            if wrapped(ts):
+                ts = ts[1:-1].strip()
+                continue
             if ts[:1] == "+":
                 ts = ts[1:].lstrip()
                 continue
@@ -790,24 +661,14 @@ def _fold_filter_over(sql: str) -> str:
     FILTER forms reach AGG_ALIASES_OVER already folded."""
     pat = re.compile(r"(?is)\bFILTER\s*\(")
     while True:
-        spans = _skip_spans(sql)
+        spans = opaque_spans(sql)
         for m in pat.finditer(sql):
-            if any(a <= m.start() < b for a, b in spans):
+            if inside(spans, m.start()):
                 continue
-            # matching close paren of the FILTER group
-            d, k, in_s = 1, m.end(), False
-            n = len(sql)
-            while k < n and d:
-                ch = sql[k]
-                if in_s:
-                    in_s = ch != "'"
-                elif ch == "'":
-                    in_s = True
-                elif ch == "(":
-                    d += 1
-                elif ch == ")":
-                    d -= 1
-                k += 1
+            k = close_paren(sql, m.end() - 1)
+            if k is None:
+                continue
+            k += 1
             body = sql[m.end():k - 1].strip()
             wm = re.match(r"(?is)^WHERE\b(.*)$", body, re.DOTALL)
             if not wm:
@@ -820,7 +681,7 @@ def _fold_filter_over(sql: str) -> str:
                 continue
             d2, k2 = 0, len(pre) - 1
             while k2 >= 0:
-                if any(a <= k2 < b for a, b in spans):
+                if inside(spans, k2):
                     k2 -= 1
                     continue
                 if pre[k2] == ")":
@@ -852,7 +713,7 @@ def _fold_filter_over(sql: str) -> str:
             if fname.lower() == "count" and args.strip() == "*":
                 newargs = f"CASE WHEN {pred} THEN 1 END"
             else:
-                parts = _split_top_commas(args)
+                parts = split_top(args)
                 first = parts[0].strip()
                 dm = re.match(r"(?is)^(DISTINCT\s+)(.*)$", first,
                               re.DOTALL)
@@ -880,31 +741,21 @@ def _rewrite_fn_aliases(sql: str) -> str:
         r"\b(" + "|".join(re.escape(n) for n in AGG_ALIASES) + r")\s*\(",
         re.IGNORECASE,
     )
-    spans = _skip_spans(sql)
+    spans = opaque_spans(sql)
     out, i = [], 0
     while True:
         m = pat.search(sql, i)
         if not m:
             out.append(sql[i:])
             break
-        if any(a <= m.start() < b for a, b in spans):
+        j = None if inside(spans, m.start()) else \
+            close_paren(sql, m.end() - 1)
+        if j is None:
             out.append(sql[i:m.end()])
             i = m.end()
             continue
         out.append(sql[i:m.start()])
-        depth, j, n = 1, m.end(), len(sql)
-        in_str = False
-        while j < n and depth:
-            ch = sql[j]
-            if in_str:
-                in_str = ch != "'"
-            elif ch == "'":
-                in_str = True
-            elif ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            j += 1
+        j += 1
         # Idempotence guards: several aliases EMIT a call to their own name
         # (round/sign inside their CAST type pin, hex's inner byte-hex,
         # typeof comparing Spark type names).  A second rewrite pass must
@@ -958,19 +809,8 @@ def _rewrite_fn_aliases(sql: str) -> str:
                 k0 = j + ov_m.end()
                 ov_end = None
                 if k0 < len(sql) and sql[k0] == "(":
-                    d2, k1, in_s2 = 1, k0 + 1, False
-                    while k1 < len(sql) and d2:
-                        ch2 = sql[k1]
-                        if in_s2:
-                            in_s2 = ch2 != "'"
-                        elif ch2 == "'":
-                            in_s2 = True
-                        elif ch2 == "(":
-                            d2 += 1
-                        elif ch2 == ")":
-                            d2 -= 1
-                        k1 += 1
-                    ov_end = k1
+                    k1 = close_paren(sql, k0)
+                    ov_end = len(sql) if k1 is None else k1 + 1
                 else:
                     wm = re.match(r"`[^`]+`|[A-Za-z_]\w*", sql[k0:])
                     if wm:
@@ -979,43 +819,16 @@ def _rewrite_fn_aliases(sql: str) -> str:
                     over = "OVER " + sql[k0:ov_end].strip() if \
                         sql[k0:k0 + 1] == "(" else "OVER " + sql[k0:ov_end]
                     out.append(AGG_ALIASES_OVER[name](
-                        _split_top_commas(args), over))
+                        split_top(args), over))
                     i = ov_end
                     continue
         tpl = AGG_ALIASES[m.group(1).lower()]
         if callable(tpl):
-            out.append(tpl(_split_top_commas(args)))
+            out.append(tpl(split_top(args)))
         else:
             out.append(tpl.format(args=args))
         i = j
     return "".join(out)
-
-
-def _split_top_commas(args: str) -> list[str]:
-    """Split an argument list on commas at paren depth 0, outside string
-    literals — so `group_concat(x, ', ')` keeps its separator intact."""
-    parts, depth, start, in_str = [], 0, 0, False
-    i, n = 0, len(args)
-    while i < n:
-        ch = args[i]
-        if in_str:
-            if ch == "'":
-                if i + 1 < n and args[i + 1] == "'":
-                    i += 2
-                    continue
-                in_str = False
-        elif ch == "'":
-            in_str = True
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            parts.append(args[start:i])
-            start = i + 1
-        i += 1
-    parts.append(args[start:])
-    return parts
 
 
 _JSON_EACH = re.compile(
@@ -1032,9 +845,9 @@ def _wants_rich_json_each(sql: str, alias: str) -> bool:
     pat = re.compile(
         rf"\b{re.escape(alias)}\s*\.\s*(?:{'|'.join(_RICH_JSON_COLS)})\b"
         r"|\b(?:fullkey|atom)\b", re.IGNORECASE)
-    spans = _literal_spans(sql)
-    return any(not any(a <= m.start() < b for a, b in spans)
-               for m in pat.finditer(sql))
+    # quoted identifiers (`j`.atom) still count: skip literals and comments
+    spans = [(a, b) for a, b in opaque_spans(sql) if sql[a] not in '`"']
+    return any(not inside(spans, m.start()) for m in pat.finditer(sql))
 
 
 def _rewrite_json_each(sql: str) -> str:
@@ -1072,34 +885,23 @@ def _rewrite_json_each(sql: str) -> str:
     uses integers for arrays), and values surface as TEXT."""
     from dsq_spark.functions import strict_json_mode
 
-    spans = _skip_spans(sql)
+    spans = opaque_spans(sql)
     out, i = [], 0
     while True:
         m = _JSON_EACH.search(sql, i)
         if not m:
             out.append(sql[i:])
             break
-        if any(a <= m.start() < b for a, b in spans):
+        j = None if inside(spans, m.start()) else \
+            close_paren(sql, m.end() - 1)
+        if j is None:
             out.append(sql[i:m.end()])
             i = m.end()
             continue
-        # balanced-paren scan for the argument (string-aware)
-        depth, j, n = 1, m.end(), len(sql)
-        in_str = False
-        while j < n and depth:
-            ch = sql[j]
-            if in_str:
-                in_str = ch != "'"
-            elif ch == "'":
-                in_str = True
-            elif ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            j += 1
+        j += 1
         kind = m.group(2).lower()
         arg = sql[m.end():j - 1]
-        arg_parts = _split_top_commas(arg)
+        arg_parts = split_top(arg)
         path = arg_parts[1].strip() if len(arg_parts) == 2 else None
         # optional alias after the closing paren
         am = re.match(r"\s*(?:AS\s+)?([A-Za-z_][A-Za-z0-9_]*)", sql[j:],
@@ -1196,10 +998,10 @@ def _rewrite_real_literals(sql: str) -> str:
     literals stay integers (both engines agree). Span-aware: literals
     inside strings and backticked (verbatim-name) aliases are untouched,
     and the D suffix blocks re-matching, so the pass is idempotent."""
-    spans = _skip_spans(sql)
+    spans = opaque_spans(sql)
     out, i = [], 0
     for m in _REAL_LIT.finditer(sql):
-        if any(a <= m.start() < b for a, b in spans):
+        if inside(spans, m.start()):
             continue
         out.append(sql[i:m.end()])
         out.append("D")
@@ -1217,68 +1019,24 @@ _AGG_CALL = re.compile(
     re.IGNORECASE)
 
 
-def _split_top_args(s: str) -> list[str] | None:
-    """Split a call's argument text on TOP-LEVEL commas, quote- and
-    paren-aware ('' quote doubling toggles twice, backslashes are plain
-    characters in our emitted literals).  None on imbalance."""
-    out, depth, instr, last = [], 0, False, 0
-    for i, ch in enumerate(s):
-        if instr:
-            if ch == "'":
-                instr = False
-        elif ch == "'":
-            instr = True
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth < 0:
-                return None
-        elif ch == "," and depth == 0:
-            out.append(s[last:i])
-            last = i + 1
-    if depth != 0 or instr:
-        return None
-    out.append(s[last:])
-    return out
-
-
 def _inline_calls(sql: str, name: str, ptypes, body: str) -> str:
     """Textually inline every top-level call to one SQL UDF: arguments
     keep the UDF's declared-type casts, the body is the exact CREATE
     FUNCTION body (functions.INLINE_UDFS — single source)."""
+    if name.lower() not in sql.lower():
+        return sql
     pat = re.compile(r"(?<![\w.`$])" + name + r"\s*\(", re.IGNORECASE)
-    pos = 0
+    spans, pos = opaque_spans(sql), 0
     while True:
-        spans = _skip_spans(sql)
-        m = None
-        for m0 in pat.finditer(sql, pos):
-            if not any(a <= m0.start() < b for a, b in spans):
-                m = m0
-                break
+        m = next((m0 for m0 in pat.finditer(sql, pos)
+                  if not inside(spans, m0.start())), None)
         if m is None:
             return sql
-        # find the matching close paren (quote-aware)
-        depth, instr, j = 0, False, m.end() - 1
-        n = len(sql)
-        while j < n:
-            ch = sql[j]
-            if instr:
-                if ch == "'":
-                    instr = False
-            elif ch == "'":
-                instr = True
-            elif ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-                if depth == 0:
-                    break
-            j += 1
-        if j >= n:
+        j = close_paren(sql, m.end() - 1)
+        if j is None:
             return sql  # imbalance: leave untouched
-        args = _split_top_args(sql[m.end():j])
-        if args is None or len(args) != len(ptypes):
+        args = split_top(sql[m.end():j])
+        if len(args) != len(ptypes):
             pos = m.end()
             continue
         casted = [f"CAST(({a.strip()}) AS {t})" if t
@@ -1287,6 +1045,10 @@ def _inline_calls(sql: str, name: str, ptypes, body: str) -> str:
         repl = "(" + body.format(*casted) + ")"
         sql = sql[:m.start()] + repl + sql[j + 1:]
         pos = m.start() + len(repl)
+        # the scan resumes after the inlined call, so only the spans
+        # behind it matter: shift them instead of re-lexing the text
+        shift = pos - (j + 1)
+        spans = [(a + shift, b + shift) for a, b in spans if a > j]
 
 
 def _sort_needs_inline(sql: str) -> bool:
@@ -1308,13 +1070,13 @@ def _sort_needs_inline(sql: str) -> bool:
     rx = re.compile(r"(?<![\w.`$])(?:" +
                     "|".join(re.escape(n) for n in names) + r")\s*\(",
                     re.IGNORECASE)
-    spans = _skip_spans(sql)
+    spans = opaque_spans(sql)
     for m in re.finditer(r"(?i)\bORDER\s+BY\b", sql):
-        if any(a <= m.start() < b for a, b in spans):
+        if inside(spans, m.start()):
             continue
         i, depth, n = m.end(), 0, len(sql)
         while i < n:
-            if any(a <= i < b for a, b in spans):
+            if inside(spans, i):
                 i += 1
                 continue
             ch = sql[i]
@@ -1332,6 +1094,12 @@ def _sort_needs_inline(sql: str) -> bool:
         if rx.search(sql[m.end():i]):
             return True
     return False
+
+
+# SQL UDF → its pandas twin, for statements with an aggregate
+_AGG_TWINS = {"dsq_real_text": "dsq_real_text_agg",
+              "glob_regex": "dsq_glob_regex_agg",
+              "dsq_like_regex": "dsq_like_regex_agg"}
 
 
 def _inline_agg_safe(sql: str) -> str:
@@ -1369,47 +1137,31 @@ def _inline_agg_safe(sql: str) -> str:
             out = new
             break
         out = new
-    spans = _skip_spans(out)
-    out = re.sub(
-        r"(?<![\w.`$])dsq_real_text\(",
-        lambda m: (m.group(0)
-                   if any(a <= m.start() < b for a, b in spans)
-                   else "dsq_real_text_agg("),
-        out)
     # glob patterns: LITERAL ones fold to their compiled regex (the
     # Python mirror of the glob_regex machine), computed ones ride the
-    # pandas twin — either way the SQL UDF is gone
+    # pandas twin — either way the SQL UDF is gone.  Dynamic LIKE-ESCAPE
+    # patterns take the same SQL-UDF → pandas-twin swap (literal forms
+    # already folded at rewrite time and never emit the UDF).
     from dsq_spark.functions import glob_regex_py
     from dsq_spark.sqlexpr import _like_decode_lit
 
-    def fold_glob(m: re.Match) -> str:
-        if any(a <= m.start() < b for a, b in _skip_spans(out)):
-            return m.group(0)
-        dec = _like_decode_lit("'" + m.group(1) + "'")
-        if dec is None:
-            return m.group(0)
-        rx = glob_regex_py("".join(dec))
-        return "'" + rx.replace("\\", "\\\\").replace("'", "''") + "'"
+    spans = opaque_spans(out)
 
-    out = re.sub(r"(?<![\w.`$])glob_regex\(\s*'((?:[^'\\]|\\.|'')*)'\s*\)",
-                 fold_glob, out)
-    spans2 = _skip_spans(out)
-    out = re.sub(
-        r"(?<![\w.`$])glob_regex\(",
-        lambda m: (m.group(0)
-                   if any(a <= m.start() < b for a, b in spans2)
-                   else "dsq_glob_regex_agg("),
-        out)
-    # dynamic LIKE-ESCAPE patterns: same SQL-UDF → pandas-twin swap
-    # (literal forms already folded at rewrite time and never emit the
-    # UDF, so no literal-fold pass is needed here)
-    spans3 = _skip_spans(out)
-    out = re.sub(
-        r"(?<![\w.`$])dsq_like_regex\(",
-        lambda m: (m.group(0)
-                   if any(a <= m.start() < b for a, b in spans3)
-                   else "dsq_like_regex_agg("),
-        out)
+    def swap(m: re.Match) -> str:
+        if inside(spans, m.start()):
+            return m.group(0)
+        lit, name = m.group(1), m.group(2)
+        if lit is not None:
+            dec = _like_decode_lit("'" + lit + "'")
+            if dec is not None:
+                rx = glob_regex_py("".join(dec))
+                return "'" + rx.replace("\\", "\\\\").replace("'", "''") + "'"
+            name = "glob_regex"
+        return _AGG_TWINS[name] + m.group(0)[len(name):]
+
+    out = re.sub(r"(?<![\w.`$])(?:"
+                 r"glob_regex\(\s*'((?:[^'\\]|\\.|'')*)'\s*\)"
+                 r"|(dsq_real_text|glob_regex|dsq_like_regex)\()", swap, out)
     # Spark's native nullif desugars through a With/common-expression
     # wrapper whose refs leak un-rewritten into codegen when the same
     # statement carries an aggregate and a (non-inlinable) SQL UDF —
@@ -1442,10 +1194,10 @@ def _rewrite_hex_literals(sql: str) -> str:
         return sql
     from dsq_spark.sqlexpr import _int_lit
 
-    spans = _skip_spans(sql)
+    spans = opaque_spans(sql)
 
     def repl(m: re.Match) -> str:
-        if any(a <= m.start() < b for a, b in spans):
+        if inside(spans, m.start()):
             return m.group(0)
         v = int(m.group(1), 16)
         if v > 0xFFFFFFFFFFFFFFFF:
@@ -1475,10 +1227,10 @@ def _rewrite_like(sql: str) -> str:
     special casing (only the LIKE token changes); RLIKE/ILIKE themselves
     never match (no word boundary before their L). Delta: ILIKE folds full
     Unicode where SQLite folds ASCII only (PARITY.md)."""
-    spans = _skip_spans(sql)
+    spans = opaque_spans(sql)
     out, i = [], 0
     for m in _LIKE_TOKEN.finditer(sql):
-        if any(a <= m.start() < b for a, b in spans):
+        if inside(spans, m.start()):
             continue
         out.append(sql[i:m.start()])
         out.append("ILIKE")
@@ -1510,57 +1262,32 @@ _WIN_HEAD = re.compile(r"(?i)\b(sum|count|avg|min|max)\s*\(")
 _OVER_GAP = re.compile(r"(?i)^\s*OVER\s*\(")
 
 
-def _balance_close(text: str, i: int) -> int | None:
-    """Index of the ')' closing the '(' at ``i`` (quote-aware: parens
-    inside single-quoted literals don't count)."""
-    d, j, n = 0, i, len(text)
-    while j < n:
-        c = text[j]
-        if c == "'":
-            j += 1
-            while j < n:
-                if text[j] == "'":
-                    if j + 1 < n and text[j + 1] == "'":
-                        j += 2
-                        continue
-                    break
-                j += 1
-        elif c == "(":
-            d += 1
-        elif c == ")":
-            d -= 1
-            if d == 0:
-                return j
-        j += 1
-    return None
-
-
 def _window_calls(text: str) -> list[str]:
     """Full `agg(args) OVER (spec)` substrings of ``text`` (balanced-paren
     scan; nested window calls cannot occur — Spark rejects them)."""
     out = []
     for m in _WIN_HEAD.finditer(text):
         i = text.find("(", m.end() - 1)
-        j = _balance_close(text, i)
+        j = close_paren(text, i)
         if j is None:
             continue
         g = _OVER_GAP.match(text[j + 1:])
         if not g:
             continue
-        k = _balance_close(text, j + g.end())
+        k = close_paren(text, j + g.end())
         if k is not None:
             out.append(text[m.start():k + 1])
     return out
 
 
-def _find_unquoted(text: str, needle: str) -> list[int]:
+def _find_unquoted(text: str, needle: str,
+                   spans: list[tuple[int, int]]) -> list[int]:
     """Start offsets of ``needle`` in ``text`` whose first character lies
-    OUTSIDE single-quoted literals and backticked identifiers.  A
-    compiler-emitted chain colliding with the inside of a user string
-    literal is implausible (chains are >= 80 chars of SQL) but replacing
-    into one would corrupt the literal — so the hoist pass only ever
-    rewrites occurrences that start in plain SQL text (r10 VERDICT #7)."""
-    spans = _skip_spans(text)
+    OUTSIDE ``spans`` (opaque_spans of ``text``).  A compiler-emitted
+    chain colliding with the inside of a user string literal is
+    implausible (chains are >= 80 chars of SQL) but replacing into one
+    would corrupt the literal — so the hoist pass only ever rewrites
+    occurrences that start in plain SQL text (r10 VERDICT #7)."""
     out, i, si, nspan = [], 0, 0, len(spans)
     while True:
         j = text.find(needle, i)
@@ -1569,25 +1296,32 @@ def _find_unquoted(text: str, needle: str) -> list[int]:
         while si < nspan and spans[si][1] <= j:
             si += 1
         if si < nspan and spans[si][0] <= j:
-            i = spans[si][1]  # starts inside a literal/backtick span: skip it
+            i = spans[si][1]  # starts inside an opaque span: skip it
             continue
         out.append(j)
         i = j + len(needle)
 
 
-def _replace_unquoted(text: str, needle: str, repl: str) -> str:
-    """Replace every occurrence of ``needle`` that starts outside literal
-    spans (see _find_unquoted) with ``repl``."""
-    hits = _find_unquoted(text, needle)
-    if not hits:
-        return text
-    parts, prev = [], 0
-    for j in hits:
-        parts.append(text[prev:j])
-        parts.append(repl)
-        prev = j + len(needle)
-    parts.append(text[prev:])
-    return "".join(parts)
+def _hoist_repeats(pre: str, post: str, cands, prefix: str):
+    """Replace every candidate text that occurs at least twice outside
+    opaque spans of ``pre`` + ``post`` (longest first) with a fresh
+    ``prefix``-numbered name; returns (pre, post, {name: candidate})."""
+    names: dict[str, str] = {}
+    pre_sp, post_sp = opaque_spans(pre), opaque_spans(post)
+    for c in sorted(cands, key=len, reverse=True):
+        hits = (_find_unquoted(pre, c, pre_sp),
+                _find_unquoted(post, c, post_sp))
+        if len(hits[0]) + len(hits[1]) < 2:
+            continue
+        name = f"{prefix}{len(names) + 1}"
+        # every hit is replaced, not just the first: same text, same value
+        pre, post = (
+            name.join(text[a:b] for a, b in
+                      zip([0] + [j + len(c) for j in hs], hs + [len(text)]))
+            for text, hs in zip((pre, post), hits))
+        pre_sp, post_sp = opaque_spans(pre), opaque_spans(post)
+        names[name] = c
+    return pre, post, names
 
 
 def _hoist_per_row(sql: str, cands: list[str]) -> str:
@@ -1616,7 +1350,7 @@ def _hoist_per_row(sql: str, cands: list[str]) -> str:
              if len(c) >= 80 and _PER_ROW_SAFE(c)]
     if not cands or "__dsq_h" in sql:
         return sql
-    spans = _skip_spans(sql)
+    spans = opaque_spans(sql)
     lead = len(sql) - len(sql.lstrip())
     if sql[lead:lead + 7].upper() not in ("SELECT ", "SELECT\n", "SELECT\t"):
         return sql
@@ -1658,22 +1392,8 @@ def _hoist_per_row(sql: str, cands: list[str]) -> str:
     if j >= len(sql):
         return sql
     if sql[j] == "(":
-        d, k = 0, j
-        sk, nspan = 0, len(spans)
-        while k < len(sql):
-            while sk < nspan and spans[sk][1] <= k:
-                sk += 1
-            if sk < nspan and spans[sk][0] <= k:
-                k = spans[sk][1]
-                continue
-            if sql[k] == "(":
-                d += 1
-            elif sql[k] == ")":
-                d -= 1
-                if d == 0:
-                    break
-            k += 1
-        if d != 0:
+        k = close_paren(sql, j)
+        if k is None:
             return sql
         src_lo, src_hi = j, k + 1
         if not _INNER_STAR.match(sql[src_lo:src_hi]):
@@ -1696,14 +1416,7 @@ def _hoist_per_row(sql: str, cands: list[str]) -> str:
     pre, src, post = sql[:src_lo], sql[src_lo:src_hi], sql[src_hi:]
     if re.search(r"\(\s*select\b", pre + post, re.IGNORECASE):
         return sql  # nested subquery outside the FROM source
-    names: dict[str, str] = {}
-    for c in sorted(cands, key=len, reverse=True):
-        if len(_find_unquoted(pre, c)) + len(_find_unquoted(post, c)) < 2:
-            continue
-        name = f"__dsq_h{len(names) + 1}"
-        pre = _replace_unquoted(pre, c, name)
-        post = _replace_unquoted(post, c, name)
-        names[name] = c
+    pre, post, names = _hoist_repeats(pre, post, cands, "__dsq_h")
     if names:
         proj = ", ".join(f"{c} AS {n}" for n, c in names.items())
         if src.startswith("("):
@@ -1719,16 +1432,11 @@ def _hoist_per_row(sql: str, cands: list[str]) -> str:
     # Spark already plans them as one window expression; this just stops
     # the analyzer/codegen from re-walking the clone subtrees.
     if _TAIL_KW_NOWHERE.match(post):
-        wins: dict[str, str] = {}
-        for c in sorted(set(_window_calls(pre) + _window_calls(post)),
-                        key=len, reverse=True):
-            if (len(_find_unquoted(pre, c)) + len(_find_unquoted(post, c)) < 2
-                    or "(select" in c.lower()):
-                continue
-            name = f"__dsq_w{len(wins) + 1}"
-            pre = _replace_unquoted(pre, c, name)
-            post = _replace_unquoted(post, c, name)
-            wins[name] = c
+        # first-occurrence order breaks length ties (a set's order would
+        # follow the per-process string hash)
+        wcands = dict.fromkeys(_window_calls(pre) + _window_calls(post))
+        wcands = [c for c in wcands if "(select" not in c.lower()]
+        pre, post, wins = _hoist_repeats(pre, post, wcands, "__dsq_w")
         if wins:
             wproj = ", ".join(f"{c} AS {n}" for n, c in wins.items())
             tail_alias = f" AS {src_alias}" if src_alias else ""
@@ -1789,17 +1497,16 @@ def _remember_output(out: str, schema: dict[str, str] | None) -> None:
 # shapes, and an unbounded emission is a driver-side analysis stall
 # (6-28 s measured at 26 KB, minutes under load) or a janino 64 KB codegen
 # fallback at scale.  Better a clear, immediate error than a silent
-# multi-minute stall.  Caps are env-tunable.  The OVER-count cap is the
+# multi-minute stall.  The caps apply to the text actually sent to Spark,
+# i.e. after aggregate-safe inlining.  The OVER-count cap is the
 # real detector of the r9/r10 pathology (analysis cost is superlinear in
 # WINDOW-expression count: the 26 KB bombs carried 72-144 OVERs); plain
 # WIDTH is benign — wide flat SELECT lists analyze linearly, and the
 # differential matrix tests legitimately emit 60-expression statements of
 # 80 KB+ — so the char cap sits at 256 KB (a true runaway, ~10x the worst
 # pathological emission observed) and the OVER cap at 256 (~2x).
-_MAX_EMISSION_CHARS = int(os.environ.get("DSQ_SPARK_MAX_EMISSION_CHARS",
-                                         "262144"))
-_MAX_EMISSION_OVERS = int(os.environ.get("DSQ_SPARK_MAX_EMISSION_OVERS",
-                                         "256"))
+_MAX_EMISSION_CHARS = 262144
+_MAX_EMISSION_OVERS = 256
 _OVER_RE = re.compile(r"(?i)\bOVER\s*\(")
 
 
@@ -1809,14 +1516,14 @@ def _check_emission_size(out: str) -> None:
             f"rewritten SQL emission is {len(out)} chars "
             f"(cap {_MAX_EMISSION_CHARS}); this query's dynamic-typing "
             "expansion is too large to analyze safely — simplify the "
-            "expression or raise DSQ_SPARK_MAX_EMISSION_CHARS")
+            "expression")
     n_over = len(_OVER_RE.findall(out))
     if n_over > _MAX_EMISSION_OVERS:
         raise ValueError(
             f"rewritten SQL emission contains {n_over} window calls "
             f"(cap {_MAX_EMISSION_OVERS}); this query's dynamic-typing "
             "expansion is too large to analyze safely — simplify the "
-            "expression or raise DSQ_SPARK_MAX_EMISSION_OVERS")
+            "expression")
 
 
 def rewrite_query_tracked(
@@ -1843,16 +1550,32 @@ def rewrite_query_tracked(
     # SQLite bare-columns-in-aggregate-queries (runs on the aliased list:
     # every wrapped item keeps its verbatim SQLite result name)
     sql = _bare_agg_columns(sql, schema)
-    parts = []
-    for is_str, chunk in _split_on_strings(sql):
-        if is_str:
+    parts, run, pos = [], [], 0
+    for a, b in opaque_spans(sql):
+        run.append(sql[pos:a])
+        tok, pos = sql[a:b], b
+        if tok[0] == "'":
             # SQLite string literals are escape-free ('' is the ONLY escape;
             # a backslash is a literal character), while Spark's parser
             # processes C-style escapes — double backslashes so regex/glob/
             # LIKE-escape patterns written in the SQLite dialect survive.
-            parts.append(chunk.replace("\\", "\\\\"))
+            parts.append(_rewrite_chunk("".join(run)))
+            parts.append(tok.replace("\\", "\\\\"))
+            run = []
+        elif tok[0] == '"' and len(tok) > 1 and tok[-1] == '"':
+            # "quoted identifier" → `quoted identifier`.  The names are
+            # collected so the CLI can apply SQLite's double-quote
+            # fallback: a double-quoted token that does NOT resolve as a
+            # column is retried as a string literal (SQLite's documented
+            # misfeature, which dsq queries in the wild rely on — e.g.
+            # split_part(x, ".", -1)).
+            name = tok[1:-1].replace('""', '"')
+            dquoted.add(name)
+            run.append("`" + name.replace("`", "``") + "`")
         else:
-            parts.append(_rewrite_chunk(chunk, dquoted))
+            run.append(tok)
+    run.append(sql[pos:])
+    parts.append(_rewrite_chunk("".join(run)))
     # arrow + glob + alias rewriting run whole-statement (their matches can
     # span a literal boundary) with literal-span skipping inside.
     # real-literal suffixing runs after so decimals emitted by the alias/
@@ -1871,12 +1594,12 @@ def rewrite_query_tracked(
     # tree-size control: project repeated per-row coercion chains once
     # under the FROM clause (see _hoist_per_row; guards fail open)
     out = _hoist_per_row(out, take_pending_hoists())
-    _check_emission_size(out)
-    # LAST: aggregate-mixed statements must not reach the analyzer with
-    # SQL temporary functions in them (Spark 4.1 extraction bug — see
+    # aggregate-mixed statements must not reach the analyzer with SQL
+    # temporary functions in them (Spark 4.1 extraction bug — see
     # _inline_agg_safe); runs after sqlexpr so every alias/compiler
     # emission is covered, and leaves aggregate-free statements
     # byte-identical.
     out = _inline_agg_safe(out)
+    _check_emission_size(out)
     _remember_output(out, schema)
     return out, frozenset(dquoted)

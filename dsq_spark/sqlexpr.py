@@ -109,89 +109,8 @@ from __future__ import annotations
 import math
 import os
 import re
-from dataclasses import dataclass, field
 
-# ---------------------------------------------------------------------------
-# Tokenizer
-# ---------------------------------------------------------------------------
-
-_NUM = re.compile(r"(?:\d+\.?\d*|\.\d+)(?:[eE][+-]?\d+)?(?:BD|[dDfFlLsSyY])?")
-_WORD = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
-_OPS = ("<=>", "->>", "||", "<<", ">>", "<=", ">=", "<>", "!=", "==", "->")
-
-
-@dataclass
-class Tok:
-    kind: str  # 'str' | 'bt' | 'num' | 'word' | 'op'
-    text: str
-    start: int
-    end: int
-    low: str = field(default="")
-
-
-def tokenize(sql: str) -> list[Tok]:
-    """Lex into string-literal / backtick-ident / number / word / operator
-    tokens (positions kept for byte-exact reconstruction); whitespace and
-    SQL comments (`-- …`, `/* … */`) are skipped, so a `/` inside a
-    comment or literal never looks like division."""
-    toks: list[Tok] = []
-    i, n = 0, len(sql)
-    while i < n:
-        c = sql[i]
-        if c.isspace():
-            i += 1
-            continue
-        if c == "-" and sql[i:i + 2] == "--":
-            j = sql.find("\n", i)
-            i = n if j == -1 else j + 1
-            continue
-        if c == "/" and sql[i:i + 2] == "/*":
-            j = sql.find("*/", i + 2)
-            i = n if j == -1 else j + 2
-            continue
-        if c == "'":
-            j = i + 1
-            while j < n:
-                if sql[j] == "'" and j + 1 < n and sql[j + 1] == "'":
-                    j += 2
-                elif sql[j] == "'":
-                    j += 1
-                    break
-                else:
-                    j += 1
-            else:
-                j = n
-            toks.append(Tok("str", sql[i:j], i, j))
-            i = j
-            continue
-        if c == "`":
-            j = sql.find("`", i + 1)
-            j = n if j == -1 else j + 1
-            toks.append(Tok("bt", sql[i:j], i, j))
-            i = j
-            continue
-        if c.isdigit() or (c == "." and i + 1 < n and sql[i + 1].isdigit()):
-            m = _NUM.match(sql, i)
-            toks.append(Tok("num", m.group(0), i, m.end()))
-            i = m.end()
-            continue
-        if c.isalpha() or c == "_":
-            m = _WORD.match(sql, i)
-            t = Tok("word", m.group(0), i, m.end())
-            t.low = t.text.lower()
-            toks.append(t)
-            i = m.end()
-            continue
-        for op in _OPS:
-            if sql.startswith(op, i):
-                toks.append(Tok("op", op, i, i + len(op)))
-                i += len(op)
-                break
-        else:
-            toks.append(Tok("op", c, i, i + 1))
-            i += 1
-    return toks
-
+from dsq_spark.sqllex import Tok, split_top, tokenize, wrapped
 
 # ---------------------------------------------------------------------------
 # Kind lattice (SQLite storage classes + Spark 'bool')
@@ -403,35 +322,6 @@ _LIT_NUM = re.compile(
     r"[+-]?(?:\d+\.?\d*|\.\d+)(?:[eE][+-]?\d+)?(?:BD|[dDfFlLsSyY])?")
 
 _I64_MIN, _I64_MAX = -(1 << 63), (1 << 63) - 1
-
-
-def _paren_atom(t: str) -> bool:
-    """True when the whole text is ONE parenthesized atom — `(a < b)`
-    yes, `(a) < b(c)` no.  Quote-aware (''-escaped string literals may
-    contain parens).  Used to decide whether a bool operand needs
-    explicit grouping before Spark re-parses it."""
-    if len(t) < 2 or t[0] != "(" or t[-1] != ")":
-        return False
-    d, i, n = 0, 0, len(t)
-    while i < n:
-        ch = t[i]
-        if ch == "'":
-            i += 1
-            while i < n:
-                if t[i] == "'":
-                    if i + 1 < n and t[i + 1] == "'":
-                        i += 2
-                        continue
-                    break
-                i += 1
-        elif ch == "(":
-            d += 1
-        elif ch == ")":
-            d -= 1
-            if d == 0 and i < n - 1:
-                return False
-        i += 1
-    return d == 0
 
 
 def _dbl_lit(v: float) -> str:
@@ -1202,19 +1092,6 @@ def _typed_key_null_sql(t: str, k: str = "unknown",
             f"ELSE {body} END)")
 
 
-def _balanced(s: str) -> bool:
-    """Paren-balance check for peeling redundant outer parens."""
-    d = 0
-    for ch in s:
-        if ch == "(":
-            d += 1
-        elif ch == ")":
-            d -= 1
-            if d < 0:
-                return False
-    return d == 0
-
-
 def _cls_key_sql(cls, parse: bool, null_rank0: bool = False) -> str:
     """Comparison key of a TEXT-rendered branch construct, built from
     its per-arm class structure: each arm keys with ITS OWN static kind
@@ -1621,8 +1498,7 @@ class _Rw:
             # parens and unary +/- are ordinal-transparent in SQLite
             t = t.strip()
             while True:
-                if (t.startswith("(") and t.endswith(")")
-                        and _balanced(t[1:-1])):
+                if wrapped(t):
                     t = t[1:-1].strip()
                 elif t[:1] in "+-":
                     t = t[1:].lstrip()
@@ -1630,8 +1506,7 @@ class _Rw:
                     return t
 
         t = p.text.strip()
-        while (t.startswith("(") and t.endswith(")")
-               and _balanced(t[1:-1])):
+        while wrapped(t):
             t = t[1:-1].strip()
         if not re.fullmatch(r"[-+]?\d+", t):
             return p  # not an integer-literal key
@@ -1995,7 +1870,7 @@ class _Rw:
                     elif rk2 == "bool" and lk != "bool" and lhs_one:
                         rp = _P(f"CAST(({rp.text}) AS BIGINT)", rp.s, rp.e)
                     elif (rk2 == "bool" and lk == "bool" and eq_level
-                          and not _paren_atom(rp.text)):
+                          and not wrapped(rp.text)):
                         # a bool RHS from the TIGHTER relational level
                         # (`a = b < c` is `a = (b < c)` in SQLite's
                         # two-level precedence) needs its grouping made
@@ -6341,34 +6216,6 @@ def _quad_cls_key(e: str) -> str:
     return _bound_big(e, body)
 
 
-def _split_commas_txt(args: str) -> list[str]:
-    """Split on commas at paren depth 0, outside string literals (the
-    compound pass's ORDER-BY-term splitter; rewrite.py has its own
-    twin — no import, the modules would be circular)."""
-    parts, depth, start, in_str = [], 0, 0, False
-    i, n = 0, len(args)
-    while i < n:
-        ch = args[i]
-        if in_str:
-            if ch == "'":
-                if i + 1 < n and args[i + 1] == "'":
-                    i += 2
-                    continue
-                in_str = False
-        elif ch == "'":
-            in_str = True
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            parts.append(args[start:i])
-            start = i + 1
-        i += 1
-    parts.append(args[start:])
-    return parts
-
-
 def _tok_scan(toks, lo, hi, words, depth0=True):
     """Indices of depth-0 word tokens in [lo, hi) whose .low is in
     ``words``."""
@@ -7389,7 +7236,7 @@ def _distinct_mix_rewrite(text, toks, kinds, top, no_cls):
                       tail, re.DOTALL)
         if tm:
             terms = []
-            for term in _split_commas_txt(tm.group(1)):
+            for term in split_top(tm.group(1)) or [tm.group(1)]:
                 tt = term.strip()
                 dm = re.match(r"(?is)^(.*?)\s+(ASC|DESC)\s*$", tt,
                               re.DOTALL)
@@ -7722,7 +7569,7 @@ def _stmt_compound_pass(text, kinds, once_bound, top, schema_cols,
                       tail, re.DOTALL)
         if tm:
             terms = []
-            for term in _split_commas_txt(tm.group(1)):
+            for term in split_top(tm.group(1)) or [tm.group(1)]:
                 tt = term.strip()
                 dm = re.match(r"(?is)^(.*?)\s+(ASC|DESC)\s*$", tt,
                               re.DOTALL)

@@ -166,6 +166,42 @@ def test_double_quote_string_fallback(spark, tmp_path, capsys):
     rc = cli.run([str(p2), 'SELECT "a b" FROM {}'], spark)
     assert rc == 0
     assert _json.loads(capsys.readouterr().out) == [{"a b": "2"}]
+    # the fallback swaps the identifier token only, never the same text
+    # inside a string literal (sqlite3: ('nosuch', 'a `nosuch` b'))
+    rc = cli.run([str(p2), 'SELECT "nosuch" AS a, \'a `nosuch` b\' AS s '
+                  "FROM {}"], spark)
+    assert rc == 0
+    assert _json.loads(capsys.readouterr().out) == [
+        {"a": "nosuch", "s": "a `nosuch` b"}]
+
+
+def test_quoted_names_and_comments_match_sqlite(spark, tmp_path):
+    """Quotes, commas and parens inside "…" identifiers and comments are
+    SQLite tokens, not SQL structure: each statement answers as sqlite3
+    does on the same rows (all columns TEXT, as the CSV reader gives)."""
+    import sqlite3
+
+    rows = [("1", "A1", "Doe, J", '{"theme":"dark"}'),
+            ("2", "B2", "Roe, R", '{"theme":"light"}')]
+    p = tmp_path / "people.csv"
+    p.write_text('id,"driver\'s license","last, first",prefs\n' + "".join(
+        ",".join('"' + v.replace('"', '""') + '"' for v in r) + "\n"
+        for r in rows))
+    con = sqlite3.connect(":memory:")
+    con.execute('CREATE TABLE t (id TEXT, "driver\'s license" TEXT, '
+                '"last, first" TEXT, prefs TEXT)')
+    con.executemany("INSERT INTO t VALUES (?, ?, ?, ?)", rows)
+    for sql in [
+        'SELECT "driver\'s license" FROM {} ORDER BY id',
+        "SELECT group_concat(\"last, first\", '; ') FROM {}",
+        "SELECT id -- owner's note\nFROM {} ORDER BY id",
+        "SELECT id /* don't */ FROM {} ORDER BY id",
+        "SELECT prefs ->> '$.theme' FROM {} ORDER BY id",
+    ]:
+        want = con.execute(sql.replace("{}", "t")).fetchall()
+        rc, out = _run([str(p), sql], spark)
+        assert rc == 0, sql
+        assert [tuple(r.values()) for r in json.loads(out)] == want, sql
 
 
 def test_compact_dataset(spark, tmp_path):

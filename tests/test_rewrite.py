@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import pytest
+
 from dsq_spark.rewrite import TableRef, extract_table_refs, rewrite_query
 
 
@@ -47,6 +49,43 @@ def test_arrow_operators():
         "SELECT get_json_object(c, '$.k') AS v FROM t_0"
     assert rewrite_query('SELECT "a.b"->0 AS v FROM {}') == \
         "SELECT get_json_object(`a.b`, '$[0]') AS v FROM t_0"
+    # a key starting with `$` is the JSON path itself (sqlite3 3.40:
+    # '{"theme":"dark"}' ->> '$.theme' is 'dark'), and a '' escape in the
+    # key stays inside the path literal
+    assert rewrite_query("SELECT j->>'$.theme' AS v FROM {}") == \
+        "SELECT get_json_object(j, '$.theme') AS v FROM t_0"
+    assert rewrite_query("SELECT j -> '$[0]' AS v FROM {}") == \
+        "SELECT get_json_object(j, '$[0]') AS v FROM t_0"
+    assert rewrite_query("SELECT j ->> 'it''s' AS v FROM {}") == \
+        "SELECT get_json_object(j, '$.it''s') AS v FROM t_0"
+
+
+# SQLite's opaque spans — '…', "…", `…`, -- and /* */ — hide quotes,
+# commas and parentheses from every pass (each case failed when the passes
+# knew only '…'); sqlite3 3.40.1 accepts every statement.
+@pytest.mark.parametrize("sql, want", [
+    ('SELECT "driver\'s license" FROM {}',
+     "SELECT `driver's license` FROM t_0"),
+    ("SELECT id -- owner's note\nFROM {}",
+     "SELECT id -- owner's note\nFROM t_0"),
+    ("SELECT id /* don't */ FROM {}", "SELECT id /* don't */ FROM t_0"),
+    ('SELECT group_concat("last, first", \'; \') AS g FROM {}',
+     "array_join(collect_list(CAST(`last, first` AS STRING)), '; ')"),
+    ("SELECT percentile_75(`x)y`) AS p FROM {}", "percentile(`x)y`, 0.75D)"),
+    ('SELECT count(*) FILTER (WHERE "a)b" > 0) OVER () AS n FROM {}',
+     "count(CASE WHEN `a)b` > 0 THEN 1 END)  OVER ()"),
+    ("SELECT j ->> 'it''s' AS v FROM {}", "get_json_object(j, '$.it''s')"),
+    ("WITH RECURSIVE c(x) AS (SELECT min(id) FROM {} /* it's */ UNION ALL "
+     "SELECT x + 1 FROM c WHERE x < 3) SELECT x FROM c",
+     "FROM t_0 /* it's */ UNION ALL"),
+])
+def test_opaque_spans_hide_quotes_commas_parens(sql, want):
+    from dsq_spark.recursive import parse_recursive
+
+    assert extract_table_refs(sql) == [TableRef(0, None)]
+    out = rewrite_query(sql)
+    assert want in out
+    parse_recursive(out)  # the WITH RECURSIVE body must scan to its ')'
 
 
 def test_agg_aliases():
@@ -351,8 +390,6 @@ def test_hoist_replace_skips_literal_spans():
 def test_emission_size_circuit_breaker(monkeypatch):
     """r10 VERDICT #4: a pathological emission trips a clear error instead
     of a multi-minute Catalyst analysis stall."""
-    import pytest
-
     import dsq_spark.rewrite as rw
 
     monkeypatch.setattr(rw, "_MAX_EMISSION_CHARS", 200)
@@ -368,3 +405,15 @@ def test_emission_size_circuit_breaker(monkeypatch):
                 "CURRENT ROW)" for i in range(1, 6)) + " FROM tw")
     # normal emissions pass untouched
     assert "length" in rw.rewrite_query("SELECT length(t) FROM tw")
+    # the cap applies to the text actually sent: here aggregate-safe
+    # inlining more than doubles the statement, and the cap sits between
+    # the two sizes
+    q = "SELECT count(*), unicode(t), unicode(u) FROM tw"
+    sent = len(rw.rewrite_query(q))
+    monkeypatch.setattr(rw, "_inline_agg_safe", lambda s: s)
+    before_inline = len(rw.rewrite_query(q))
+    monkeypatch.undo()
+    assert 2 * before_inline < sent
+    monkeypatch.setattr(rw, "_MAX_EMISSION_CHARS", sent - 1)
+    with pytest.raises(ValueError, match="emission is .* chars"):
+        rw.rewrite_query(q)

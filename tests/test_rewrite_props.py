@@ -25,6 +25,18 @@ literal_text_bs = st.text(
     max_size=12,
 )
 table_ref = st.integers(min_value=0, max_value=3).map(lambda i: f"{{{i}}}")
+# SQLite tokens that hide quotes, commas and parens: comments carrying a
+# quote, and "…" identifiers carrying ', "," and ")"
+comment_text = st.text(
+    alphabet=st.characters(blacklist_characters="\n*{}", max_codepoint=0x7E),
+    max_size=10,
+)
+comment = st.one_of(
+    comment_text.map(lambda t: f" -- {t}'s\n"),
+    comment_text.map(lambda t: f" /* {t}'s */ "),
+)
+quoted_ident = st.from_regex(r"[A-Za-z_][A-Za-z0-9_ ',)]{0,8}",
+                             fullmatch=True).map(lambda s: f'"{s}"')
 
 
 @st.composite
@@ -35,8 +47,12 @@ def sql_query(draw):
         parts.append(f", \"{draw(ident)}.{draw(ident)}\"")
     if draw(st.booleans()):
         parts.append(f", percentile_75({draw(ident)})")
+    if draw(st.booleans()):
+        parts.append(f", group_concat({draw(quoted_ident)}, ', ')")
     parts.append(" FROM ")
     parts.append(draw(table_ref))
+    if draw(st.booleans()):
+        parts.append(draw(comment))
     if draw(st.booleans()):
         parts.append(f" WHERE {draw(ident)} REGEXP '{draw(literal_text)}'")
     if draw(st.booleans()):
@@ -65,18 +81,20 @@ def test_rewrite_idempotent_backslash_literals(a, b):
     assert f"'{b}'".replace("\\", "\\\\") in once
 
 
-@given(literal_text, literal_text)
+@given(literal_text, literal_text, comment, quoted_ident)
 @settings(max_examples=100, deadline=None)
-def test_literals_survive(a, b):
-    q = f"SELECT * FROM {{0}} WHERE x = '{a}' OR y = '{b}'"
+def test_literals_survive(a, b, note, qi):
+    q = f"SELECT * FROM {{0}}{note} WHERE {qi} = '{a}' OR y = '{b}'"
     out = rewrite_query(q)
     assert f"'{a}'" in out and f"'{b}'" in out
 
 
-@given(st.lists(st.integers(min_value=0, max_value=5), min_size=1, max_size=5))
+@given(st.lists(st.integers(min_value=0, max_value=5), min_size=1, max_size=5),
+       comment, quoted_ident)
 @settings(max_examples=100, deadline=None)
-def test_extract_refs_complete(indexes)	:
-    q = "SELECT * FROM " + " JOIN ".join(f"{{{i}}}" for i in indexes)
+def test_extract_refs_complete(indexes, note, qi):
+    q = f"SELECT {qi} FROM " + f"{note}JOIN ".join(
+        f"{{{i}}}" for i in indexes)
     found = {r.index for r in extract_table_refs(q)}
     assert found == set(indexes)
     rewritten = rewrite_query(q)
