@@ -4,7 +4,13 @@ tests/fixtures/rewrite_corpus.jsonl.gz holds every distinct (sql, schema)
 pair that rewrite_query_tracked received during a full test run
 (`DSQ_SPARK_FULL_TESTS=1`, which includes the sqlite3 differential
 sweep), minus the inputs that were remembered outputs of an earlier
-rewrite.  Each line records what the rewrite returned for it — `out` and
+rewrite, followed by the SQL that scripts/probe_constants.py (400
+expressions, seed 0xC0FFEE) and scripts/probe_columns.py (300, seed
+0xBEEF) send, and the statements perfbench's `warm` and `cli_cold`
+workloads send for seeds 0-2 (the 1/4/48-wide dialect statements,
+group_concat, WITH RECURSIVE, the double-quote fallback, the CLI calls,
+the known-defect probes and the taxi group-by), each with the column
+kinds the CLI derives for its input file.  Each line records what the rewrite returned for it — `out` and
 the sorted `dquoted` names — or the `error` it raised ("Type: message"),
 computed one input at a time with the remembered-output cache cleared.
 A refactor of the rewrite passes must reproduce it byte for byte; a line
