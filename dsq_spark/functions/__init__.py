@@ -1160,8 +1160,8 @@ def _trim_alias(kind: str):
     def build(parts: list[str]) -> str:
         name = {"BOTH": "trim", "LEADING": "ltrim", "TRAILING": "rtrim"}[kind]
         if len(parts) == 1:
-            # already-compiled TRIM(BOTH/LEADING/TRAILING … FROM …) re-entering
-            # via the case-insensitive TRIM( match: keep verbatim (idempotence)
+            # Spark's own TRIM(BOTH/LEADING/TRAILING … FROM …) form, matched
+            # by the case-insensitive TRIM( pattern: keep it verbatim
             if _re.match(r"(?is)\s*(BOTH|LEADING|TRAILING)\b", parts[0]):
                 return f"TRIM({parts[0]})"
             return f"{name}({parts[0]})"
@@ -1220,8 +1220,7 @@ def _quote_alias(parts: list[str]) -> str:
         # string(x), not CAST AS DOUBLE: a BINARY argument would fail
         # ANALYSIS in this (dead) arm, and Spark's string() of a double
         # is Java's shortest round-trip rendering, which the UDF parses
-        # back to the identical double; string() is also never touched
-        # by the %!.15g string-cast interception on a second pass
+        # back to the identical double
         # the UDF argument is NULL-guarded on the SAME class test as the
         # arm: Spark hoists the Arrow UDF into an ArrowEvalPython node
         # that runs on every row, so a dead text-arm row would otherwise
@@ -1231,8 +1230,6 @@ def _quote_alias(parts: list[str]) -> str:
         f"WHEN {t} IN ('float', 'double') OR {t} ILIKE 'decimal%' "
         f"THEN dsq_quote_real(CASE WHEN {t} IN ('float', 'double') "
         f"OR {t} ILIKE 'decimal%' THEN string({x}) END) "
-        # (the hex alias's idempotence guard recognizes this emitted
-        # concat('X''', upper(hex(  prefix and leaves the byte-hex alone)
         f"WHEN {t} = 'binary' THEN concat('X''', upper(hex({x})), '''') "
         f"ELSE concat('''', replace(string({x}), '''', ''''''), '''') END")
 

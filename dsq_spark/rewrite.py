@@ -22,16 +22,23 @@ literals are never touched, and a quote, comma or parenthesis inside a
 literal, a quoted identifier or a comment is never SQL structure. This is
 a string→string transform — Catalyst does the actual parsing/optimization
 downstream.
+
+Contract: rewrite_query is applied ONCE per statement (the CLI, the REPL
+and the query registry each rewrite a statement once), and its output
+depends only on ``(sql, schema)`` — no state is kept from one call to the
+next, so concurrent calls are safe.  Its input is SQLite-dialect text and
+its output is Spark SQL: applied to its own output it reads that as
+SQLite text like any other (a literal's backslashes are doubled again),
+so the rewrite is not a fixpoint and callers must not apply it twice.
 """
 
 from __future__ import annotations
 
 import re
-from collections import OrderedDict
 from dataclasses import dataclass
 
-from dsq_spark.sqllex import (close_paren, inside, opaque_spans, split_top,
-                              wrapped)
+from dsq_spark.sqllex import (WORD, close_paren, inside, opaque_spans,
+                              split_top, wrapped)
 
 # {N}, {}, {N, "path"}, {"path"}, {N, 'path'} — reference regex main.go:54.
 TABLE_MACRO = re.compile(
@@ -85,6 +92,22 @@ def _sub_table_macros(sql: str) -> str:
         return TableRef(idx, path).view_name
 
     return TABLE_MACRO.sub(repl, sql)
+
+
+_WORD_RE = re.compile(rf"(?<![\w$]){WORD}")
+
+
+def _quote_non_ascii(text: str) -> str:
+    """Backtick every unquoted identifier holding a character at or above
+    U+0080 (`naïve`): SQLite counts such a character as an identifier
+    character, while Spark takes only ASCII letters, digits and `_` in an
+    unquoted identifier.  ``text`` holds no literal, quoted identifier or
+    comment."""
+    if text.isascii():
+        return text
+    return _WORD_RE.sub(
+        lambda m: m.group() if m.group().isascii() else f"`{m.group()}`",
+        text)
 
 
 def _rewrite_chunk(chunk: str) -> str:
@@ -188,10 +211,10 @@ _OPEN_EXPR_WORDS = {
 }
 
 _BARE_COL = re.compile(
-    r'^(?:`[^`]+`|"[^"]+"|[A-Za-z_]\w*)'
-    r'(?:\s*\.\s*(?:`[^`]+`|"[^"]+"|[A-Za-z_]\w*|\*))*$')
-_EXPLICIT_ALIAS = re.compile(r'(?is)\s+AS\s+("[^"]*"|`[^`]*`|[A-Za-z_]\w*)\s*$')
-_IMPLICIT_ALIAS = re.compile(r'(?s)^(.*?\S)(\s+)("[^"]*"|`[^`]*`|[A-Za-z_]\w*)$')
+    rf'^(?:`[^`]+`|"[^"]+"|{WORD})'
+    rf'(?:\s*\.\s*(?:`[^`]+`|"[^"]+"|{WORD}|\*))*$')
+_EXPLICIT_ALIAS = re.compile(rf'(?is)\s+AS\s+("[^"]*"|`[^`]*`|{WORD})\s*$')
+_IMPLICIT_ALIAS = re.compile(rf'(?s)^(.*?\S)(\s+)("[^"]*"|`[^`]*`|{WORD})$')
 
 
 def _paren_stripped(core: str) -> str:
@@ -307,9 +330,8 @@ def _alias_select_list(sql: str) -> str:
 
 # SQLite aggregate names (core + the engine's registered stats aggs) for
 # the bare-column pass; min/max count only in their 1-argument form.
-# any_value/min_by/max_by are this pass's own emissions — recognizing
-# them keeps the pass idempotent (an already-wrapped item is never a
-# "bare" column again).
+# any_value/min_by/max_by are this pass's own emissions and aggregates:
+# an item already wrapped in one is never a "bare" column.
 _BARE_AGG_NAMES = re.compile(
     r"(?<![\w.`$])(avg|count|group_concat|string_agg|min|max|sum|total|"
     r"median|mode|stdev|stddev|stddev_samp|stddev_pop|variance|var_samp|"
@@ -756,42 +778,7 @@ def _rewrite_fn_aliases(sql: str) -> str:
             continue
         out.append(sql[i:m.start()])
         j += 1
-        # Idempotence guards: several aliases EMIT a call to their own name
-        # (round/sign inside their CAST type pin, hex's inner byte-hex,
-        # typeof comparing Spark type names).  A second rewrite pass must
-        # not re-expand those — each guard matches the exact textual
-        # signature of the emitted form, which no SQLite-dialect user query
-        # produces with a different meaning (found by
-        # test_rewrite_idempotent_on_dialect_grammar).
         name = m.group(1).lower()
-        argtext = sql[m.end():j - 1].strip()
-        after = sql[j:].lstrip().upper()
-        before = sql[:m.start()].rstrip().upper()
-        skip = False
-        if name == "round":
-            skip = before.endswith("CAST(") and after.startswith("AS DOUBLE)")
-        elif name == "sign":
-            skip = before.endswith("CAST(") and after.startswith(
-                ("AS INT)", "AS BIGINT)"))
-        elif name == "hex":
-            # already byte-hex: the expansion's own encode(...) form, or
-            # quote()'s emitted blob branch (both mean "hex these bytes" —
-            # exactly what un-expanded Spark hex() does)
-            skip = argtext.startswith("encode(") or \
-                before.endswith("CONCAT('X''', UPPER(")
-        elif name == "typeof":
-            # the expansion (and sqlexpr's typeof-dispatched dynamic
-            # forms) compare raw Spark typeof() against SPARK type names —
-            # meaningless in the SQLite dialect (SQLite typeof never
-            # returns 'boolean'/'string'/'bigint'), so only our own
-            # emitted text looks like this
-            skip = after.startswith(("IN ('TINYINT'", "IN ('FLOAT', 'DOUBLE')",
-                                     "ILIKE 'DECIMAL%'", "= 'BINARY'",
-                                     "= 'BOOLEAN'", "= 'STRING'"))
-        if skip:
-            out.append(sql[m.start():j])
-            i = j
-            continue
         # recurse into the arg list first so nested alias calls
         # (e.g. date(datetime(x, '+1 day'))) are expanded too
         args = _rewrite_fn_aliases(sql[m.end():j - 1])
@@ -1333,7 +1320,8 @@ def _hoist_per_row(sql: str, cands: list[str]) -> str:
     GROUPS/EXCLUDE query over a text column emitted 26 KB of SQL whose
     Catalyst ANALYSIS alone cost 6-28 s and whose codegen risked janino's
     64 KB method limit (r9 VERDICT What's-wrong #7).  The compiler
-    registers each chain (sqlexpr.take_pending_hoists); this pass rewrites
+    returns each chain with its text (sqlexpr.rewrite_semantics); this
+    pass rewrites
 
         SELECT …chain…chain… FROM src …chain…
       → SELECT …__dsq_h1…__dsq_h1… FROM (SELECT *, chain AS __dsq_h1
@@ -1411,6 +1399,15 @@ def _hoist_per_row(sql: str, cands: list[str]) -> str:
         # Spark exposes for a bare table reference.
         ref = sql[src_lo:src_hi].strip()
         src_alias = ref if ref.startswith("`") else ref.split(".")[-1].strip()
+        # ...but a reference qualified by the whole dotted name
+        # (default.tw.id for FROM default.tw) has no wrapper to resolve
+        # against: leave such a statement unhoisted
+        if src_alias != ref:
+            segs = [re.escape(p.strip()) for p in ref.split(".")]
+            qual = r"\s*\.\s*".join(rf"(?:{p}|`{p}`)" for p in segs)
+            if re.search(rf"(?i)(?<![\w`.]){qual}\s*\.",
+                         sql[:src_lo] + sql[src_hi:]):
+                return sql
     if not _TAIL_KW.match(sql[src_hi:]):
         return sql  # alias / comma join / anything unexpected after src
     pre, src, post = sql[:src_lo], sql[src_lo:src_hi], sql[src_hi:]
@@ -1458,38 +1455,6 @@ def rewrite_query(sql: str, schema: dict[str, str] | None = None) -> str:
     return rewrite_query_tracked(sql, schema)[0]
 
 
-# rewrite_query is ONE-SHOT by contract (the CLI rewrites each query
-# exactly once), but accidental double application must be harmless.
-# Most passes are structurally idempotent, but no per-literal rule can
-# be: SQLite literals are escape-free while Spark's parser processes
-# C-style escapes, so the escape pass doubles '\' — and whether '\\d'
-# means two user backslashes or one already-escaped backslash is
-# undecidable from the text alone.  rewrite_query therefore REMEMBERS
-# its recent outputs (bounded LRU) and returns a remembered output
-# UNCHANGED — an output is by definition fully rewritten — making the
-# rewrite a true fixpoint on the full literal surface, not just the
-# backslash-free grammar (r5 VERDICT #5; property-tested with backslash
-# literals in tests/test_rewrite_props.py).
-_RECENT_OUTPUTS: "OrderedDict[tuple, None]" = OrderedDict()
-_RECENT_OUTPUTS_MAX = 512
-
-
-def _output_key(out: str, schema: dict[str, str] | None) -> tuple:
-    # keyed on (text, schema): the same text can be a fixpoint under one
-    # view's column kinds and still need rewriting under another's (REPL
-    # sessions load many tables), so identity only short-circuits when
-    # the kinds that drive the rewrite are the same too
-    return (out, None if schema is None else tuple(sorted(schema.items())))
-
-
-def _remember_output(out: str, schema: dict[str, str] | None) -> None:
-    key = _output_key(out, schema)
-    _RECENT_OUTPUTS[key] = None
-    _RECENT_OUTPUTS.move_to_end(key)
-    while len(_RECENT_OUTPUTS) > _RECENT_OUTPUTS_MAX:
-        _RECENT_OUTPUTS.popitem(last=False)
-
-
 # Hard circuit breaker on the rewritten-SQL emission (r9 VERDICT #7 /
 # r10 VERDICT #4).  The dialect compiler's dynamic-typing machinery can
 # multiply coercion chains combinatorially; the hoist pass bounds the
@@ -1532,15 +1497,6 @@ def rewrite_query_tracked(
     """Like rewrite_query, also returning the set of identifier names that
     came from double-quoted tokens — the CLI retries those as string
     literals when they fail column resolution (SQLite fallback)."""
-    _in_key = _output_key(sql, schema)
-    if _in_key in _RECENT_OUTPUTS:
-        # already-rewritten Spark SQL (see _RECENT_OUTPUTS above); a
-        # rewrite output contains backticked identifiers, never
-        # double-quoted ones, so the dquoted set is empty by construction.
-        # Refresh LRU recency on the hit (ADVICE r6): a still-live output
-        # must not age out just because only lookups touch it.
-        _RECENT_OUTPUTS.move_to_end(_in_key)
-        return sql, frozenset()
     dquoted: set[str] = set()
     # SQLite's EXPLAIN QUERY PLAN prefix (the reference passes it straight
     # to SQLite) → Spark's bare EXPLAIN; plain EXPLAIN already parses.
@@ -1552,7 +1508,7 @@ def rewrite_query_tracked(
     sql = _bare_agg_columns(sql, schema)
     parts, run, pos = [], [], 0
     for a, b in opaque_spans(sql):
-        run.append(sql[pos:a])
+        run.append(_quote_non_ascii(sql[pos:a]))
         tok, pos = sql[a:b], b
         if tok[0] == "'":
             # SQLite string literals are escape-free ('' is the ONLY escape;
@@ -1574,7 +1530,7 @@ def rewrite_query_tracked(
             run.append("`" + name.replace("`", "``") + "`")
         else:
             run.append(tok)
-    run.append(sql[pos:])
+    run.append(_quote_non_ascii(sql[pos:]))
     parts.append(_rewrite_chunk("".join(run)))
     # arrow + glob + alias rewriting run whole-statement (their matches can
     # span a literal boundary) with literal-span skipping inside.
@@ -1585,15 +1541,13 @@ def rewrite_query_tracked(
             _rewrite_glob(_rewrite_like(_rewrite_arrows("".join(parts))))))))
     # SQLite arithmetic/affinity semantics (integer division, CAST
     # numeric-prefix parse, truthiness) run LAST, over settled literal
-    # typing.  Every pass is idempotent (property-tested): the D suffix
-    # blocks real-literal re-matching, and sqlexpr's generated forms
-    # contain no bare '/', SQLite CAST names, or bare-numeric booleans.
-    from dsq_spark.sqlexpr import rewrite_semantics, take_pending_hoists
+    # typing.
+    from dsq_spark.sqlexpr import rewrite_semantics
 
-    out = rewrite_semantics(out, schema)
+    out, hoists = rewrite_semantics(out, schema)
     # tree-size control: project repeated per-row coercion chains once
     # under the FROM clause (see _hoist_per_row; guards fail open)
-    out = _hoist_per_row(out, take_pending_hoists())
+    out = _hoist_per_row(out, hoists)
     # aggregate-mixed statements must not reach the analyzer with SQL
     # temporary functions in them (Spark 4.1 extraction bug — see
     # _inline_agg_safe); runs after sqlexpr so every alias/compiler
@@ -1601,5 +1555,4 @@ def rewrite_query_tracked(
     # byte-identical.
     out = _inline_agg_safe(out)
     _check_emission_size(out)
-    _remember_output(out, schema)
     return out, frozenset(dquoted)

@@ -81,22 +81,3 @@ def get_spark(app_name: str = "dsq-spark",
     builder = builder.config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     return builder.getOrCreate()
 
-
-def load_tables(spark: SparkSession, sf_dir: str,
-                tables: tuple[str, ...] = (
-                    "region", "nation", "customer", "supplier", "part",
-                    "orders", "lineitem", "events", "documents", "embeddings",
-                )) -> dict:
-    """Load the driver's parquet tables as DataFrames and register temp views.
-
-    Parquet scans are columnar + vectorized; filters/projections push down
-    (verify via ``df.explain`` → PushedFilters/ReadSchema).
-    """
-    dfs = {}
-    for t in tables:
-        path = os.path.join(sf_dir, f"{t}.parquet")
-        if os.path.exists(path):
-            df = spark.read.parquet(path)
-            df.createOrReplaceTempView(t)
-            dfs[t] = df
-    return dfs

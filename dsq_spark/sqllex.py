@@ -93,12 +93,16 @@ def split_top(args: str) -> list[str] | None:
 # Tokenizer (the dialect compiler in dsq_spark.sqlexpr parses these tokens)
 # ---------------------------------------------------------------------------
 
+# An unquoted identifier, by SQLite's rule: any character at or above
+# U+0080 is an identifier character, like an ASCII letter or `_`.
+WORD = r"[A-Za-z_\u0080-\U0010FFFF][A-Za-z0-9_\u0080-\U0010FFFF]*"
+
 _TOKEN_RE = re.compile(
     r"(?P<skip>\s+|--[^\n]*\n?|/\*(?s:.*?)(?:\*/|\Z))"
     r"|(?P<str>'[^']*(?:''[^']*)*'?)"
     r"|(?P<bt>`[^`]*`?)"
     r"|(?P<num>(?:\d+\.?\d*|\.\d+)(?:[eE][+-]?\d+)?(?:BD|[dDfFlLsSyY])?)"
-    r"|(?P<word>[A-Za-z_][A-Za-z0-9_]*)"
+    rf"|(?P<word>{WORD})"
     r"|(?P<op><=>|->>|\|\||<<|>>|<=|>=|<>|!=|==|->|.)")
 
 
@@ -117,18 +121,15 @@ def tokenize(sql: str) -> list[Tok]:
     SQL comments (`-- …`, `/* … */`) are skipped, so a `/` inside a
     comment or literal never looks like division.  Runs over rewritten
     text, where double-quoted identifiers are already backticked; a
-    doubled backtick lexes as two adjacent 'bt' tokens.  Words are ASCII:
-    any other letter or digit outside quotes raises ValueError."""
+    doubled backtick lexes as two adjacent 'bt' tokens.  A word follows
+    SQLite's identifier rule (WORD), so `naïve` is one word; every other
+    character is a one-character operator token, and nothing raises."""
     toks: list[Tok] = []
     for m in _TOKEN_RE.finditer(sql):
         kind = m.lastgroup
         if kind == "skip":
             continue
         text = m.group()
-        if kind == "word":
-            toks.append(Tok(kind, text, m.start(), m.end(), text.lower()))
-            continue
-        if kind == "op" and (text.isalpha() or text.isdigit()):
-            raise ValueError(f"unexpected character {text!r} at {m.start()}")
-        toks.append(Tok(kind, text, m.start(), m.end()))
+        low = text.lower() if kind == "word" else ""
+        toks.append(Tok(kind, text, m.start(), m.end(), low))
     return toks

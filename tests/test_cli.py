@@ -204,6 +204,43 @@ def test_quoted_names_and_comments_match_sqlite(spark, tmp_path):
         assert [tuple(r.values()) for r in json.loads(out)] == want, sql
 
 
+
+def test_rewrite_keeps_no_state_between_statements(spark):
+    """One session, two statements: the second one's backslashes are
+    escaped for Spark whatever the first one's rewrite produced, so each
+    returns what sqlite3 returns for it alone."""
+    import sqlite3
+
+    from dsq_spark.cli import Args, _prepare, _sql
+
+    con = sqlite3.connect(":memory:")
+    for sql in ["SELECT length('a\\b') AS n",
+                "SELECT length('a\\\\b') AS n"]:
+        got = _sql(spark, *_prepare(spark, Args(), sql, {})).collect()
+        assert [tuple(r) for r in got] == con.execute(sql).fetchall(), sql
+
+
+def test_non_ascii_identifiers_match_sqlite(spark, tmp_path):
+    """SQLite counts any character at or above U+0080 as an identifier
+    character: a non-ASCII column or alias keeps SQLite's arithmetic
+    (integer division over a TEXT column) and its name."""
+    import sqlite3
+
+    rows = [("1", "7"), ("2", "5"), ("3", "x"), ("4", "9.5")]
+    p = tmp_path / "n.csv"
+    p.write_text("id,naïve\n" + "".join(f"{a},{b}\n" for a, b in rows),
+                 encoding="utf-8")
+    con = sqlite3.connect(":memory:")
+    con.execute('CREATE TABLE t (id TEXT, "naïve" TEXT)')
+    con.executemany("INSERT INTO t VALUES (?, ?)", rows)
+    sql = "SELECT naïve / 2 AS d, 7 / 2 AS ñ FROM {}"
+    cur = con.execute(sql.replace("{}", "t"))
+    rc, out = _run([str(p), sql], spark)
+    assert rc == 0
+    got = json.loads(out)
+    assert [list(r) for r in got] == [[d[0] for d in cur.description]] * 4
+    assert [tuple(r.values()) for r in got] == cur.fetchall()
+
 def test_compact_dataset(spark, tmp_path):
     from dsq_spark.io_out import compact_dataset
 

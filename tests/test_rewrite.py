@@ -372,6 +372,31 @@ def test_hoist_bare_table_wrapper_keeps_alias(spark):
     assert "__dsq_w1" in out2 and out2.count(") AS tw") >= 1
 
 
+
+def test_hoist_keeps_refs_qualified_by_dotted_table(spark, tmp_path):
+    """A hoist wrapper over `FROM default.tw` is aliased `tw`, where
+    `default.tw.id` no longer resolves: such a statement stays unhoisted
+    and runs on a real table of the default database (stored under a
+    temp dir), answering as sqlite3 does."""
+    import sqlite3
+
+    rows = [(1, "2"), (2, "x"), (3, None), (4, "1.5")]
+    q = ("SELECT sum(s) OVER (ORDER BY id) AS a, default.tw.id AS k "
+         "FROM default.tw ORDER BY k")
+    spark.sql("CREATE TABLE default.tw (id INT, s STRING) USING parquet "
+              f"LOCATION '{tmp_path / 'tw'}'")
+    try:
+        spark.createDataFrame(rows, "id int, s string") \
+            .write.insertInto("default.tw")
+        got = [tuple(r) for r in spark.sql(
+            rewrite_query(q, {"id": "int", "s": "text"})).collect()]
+    finally:
+        spark.sql("DROP TABLE IF EXISTS default.tw")
+    con = sqlite3.connect(":memory:")
+    con.execute("CREATE TABLE tw (id INTEGER, s TEXT)")
+    con.executemany("INSERT INTO tw VALUES (?, ?)", rows)
+    assert got == con.execute(q.replace("default.", "")).fetchall()
+
 def test_hoist_replace_skips_literal_spans():
     """r10 VERDICT #7: a candidate chain colliding with the inside of a
     string literal must not be rewritten there."""

