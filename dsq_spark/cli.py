@@ -45,8 +45,9 @@ Flags (reference-compatible, main.go:341-432):
   -i, --interactive       REPL (implies --pretty, --cache)
       --no-sqlite-writer  accepted for compatibility (no-op)
       --strict-json       SQLite-loud JSON1: malformed JSON raises
-      --verbose           print the rewritten SQL and the functions
-                          registered for it to stderr
+      --verbose           print the class-data archive state, the
+                          rewritten SQL and the functions registered
+                          for it to stderr
   -v, --version           print version
   -h, --help              this help
 
@@ -205,9 +206,11 @@ def run(argv: list[str], spark=None) -> int:
         return 1
 
     if spark is None:
-        from dsq_spark.session import get_spark
+        from dsq_spark import session
 
-        spark = get_spark("dsq-spark-cli")
+        spark = session.get_spark("dsq-spark-cli")
+        if a.verbose and session.cds_state:
+            print(f"dsq-spark: class-data archive: {session.cds_state}", file=sys.stderr)
 
     if a.schema:
         # Schema dump describes the RAW input shape (pre-flatten), like the

@@ -5,19 +5,57 @@ large cluster: AQE on (runtime coalescing + skew-join handling), Arrow on
 (vectorized pandas-UDF exchange), modest shuffle partitions locally (AQE
 coalesces further), broadcast threshold left at default so Catalyst
 broadcasts small dimension tables (region/nation/...) automatically.
+
+The driver JVM maps a per-user class-data-sharing archive (JDK dynamic
+AppCDS, JEP 350) when one exists for its JDK, Spark and heap mode, and
+dumps one at exit when none does; see _cds_plan.  It changes start-up
+time only, never a result.
 """
 
 from __future__ import annotations
 
+import atexit
+import glob
+import hashlib
 import os
+import re
+import shlex
+import shutil
+import subprocess
+import sys
 
 from pyspark.sql import SparkSession
 
 _PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
+# What the last launch of the driver JVM did with the class-data archive
+# ("mapped <path>", "dumping <path>" or "skipped: <reason>"); the CLI's
+# --verbose prints it.  None until this process launches a JVM.
+cds_state: str | None = None
+
+# HotSpot keeps compressed oops up to a 32 GiB heap less one 32 MiB region
+# (measured on JDK 17: -Xmx32736m on, -Xmx32737m off), and an archive
+# dumped in one mode is ignored in the other.
+_COOPS_MAX_HEAP = (32 << 30) - (32 << 20)
+# The JVM sends its own log lines (CDS warnings among them) to stderr, so
+# no JVM byte ever lands in the CLI's output.
+_JVM_LOG_OPTS = ["-Xlog:disable", "-Xlog:all=warning:stderr"]
+# How long interpreter exit waits for the driver JVM to write its archive.
+_DUMP_WAIT_S = 90.0
+
 
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
+
+
+def driver_memory() -> str:
+    """`SPARK_GRAFT_DRIVER_MEM`, else min(32g, 60 % of physical memory).
+    The heap size does not move JVM start-up; a heap larger than the host
+    gets the process OOM-killed under load."""
+    if os.environ.get("SPARK_GRAFT_DRIVER_MEM"):
+        return os.environ["SPARK_GRAFT_DRIVER_MEM"]
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(32 << 10, int(total * 0.6) >> 20)}m"
 
 
 def get_spark(app_name: str = "dsq-spark",
@@ -28,6 +66,7 @@ def get_spark(app_name: str = "dsq-spark",
     the environment; locally this defaults to ``local[$SPARK_GRAFT_CPUS]``.
     """
     cpus = default_parallelism()
+    memory = driver_memory()
     builder = (
         SparkSession.builder.appName(app_name)
         # AQE: runtime partition coalescing, skew-join splitting, and
@@ -67,7 +106,7 @@ def get_spark(app_name: str = "dsq-spark",
         # local[N] runs executors inside the driver JVM: size the heap for
         # N concurrent tasks + persisted caches, or late-suite full GCs
         # show up as multi-second noise spikes on otherwise-fast queries.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
+        .config("spark.driver.memory", memory)
         .config("spark.ui.enabled", "false")
     )
     if master is not None:
@@ -79,5 +118,229 @@ def get_spark(app_name: str = "dsq-spark",
     # package on their path, or they only find it when the cwd is the
     # repo root.  Spark merges this with the process's own PYTHONPATH.
     builder = builder.config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
-    return builder.getOrCreate()
+    from pyspark import SparkContext
+
+    if SparkContext._gateway is not None or "PYSPARK_GATEWAY_PORT" in os.environ:
+        return builder.getOrCreate()  # no JVM launch, nothing to share
+    global cds_state
+    cds_state, java_opts, conf_dir, dump = _cds_plan(memory)
+    if not java_opts:
+        return builder.getOrCreate()
+    # defaultJavaOptions, because --driver-java-options in
+    # PYSPARK_SUBMIT_ARGS replaces extraJavaOptions set here.
+    builder = builder.config("spark.driver.defaultJavaOptions", shlex.join(java_opts))
+    saved = os.environ.get("SPARK_CONF_DIR")
+    os.environ["SPARK_CONF_DIR"] = conf_dir  # the launcher reads it from our env
+    try:
+        spark = builder.getOrCreate()
+    finally:
+        if saved is None:
+            del os.environ["SPARK_CONF_DIR"]
+        else:
+            os.environ["SPARK_CONF_DIR"] = saved
+    if dump is not None:
+        system = spark._jvm.System
+        atexit.register(_publish_archive, SparkContext._gateway.proc, *dump,
+                        os.path.join(system.getProperty("java.home"), "bin", "java"),
+                        system.getProperty("java.class.path"), memory)
+    return spark
+
+
+# ------------------------------------------------------ class-data sharing
+def _cds_plan(memory: str):
+    """(state, java options, SPARK_CONF_DIR, dump) for a JVM about to be
+    launched with `memory` of heap.  `dump` is (temp, archive) when
+    this launch writes the archive at exit, else None; no options means
+    launch as is.
+
+    The archive is keyed by everything the JVM checks before it maps one:
+    the JDK build, the Spark jars on the launcher classpath and the
+    compressed-oops mode.  The JVM refuses to dump with a non-empty
+    directory on the classpath, so the conf dir is swapped for an empty
+    one, which is only safe when it holds nothing but templates."""
+    conf = os.environ.get("SPARK_CONF_DIR") or os.path.join(_spark_home(), "conf")
+    if os.path.isdir(conf):
+        kept = sorted(n for n in os.listdir(conf) if not n.endswith(".template"))
+        if kept:
+            return f"skipped: the conf dir {conf} holds {kept[0]}", [], None, None
+    heap = _heap_bytes(memory)
+    java_home = _java_home()
+    if heap is None:
+        return f"skipped: cannot read the heap size {memory!r}", [], None, None
+    if java_home is None:
+        return "skipped: no java found", [], None, None
+    cache = _cache_dir()
+    if os.pathsep in cache:  # the JVM splits SharedArchiveFile on it
+        return f"skipped: the cache dir {cache} contains {os.pathsep!r}", [], None, None
+    empty_conf = os.path.join(cache, "empty-conf")
+    try:
+        os.makedirs(empty_conf, exist_ok=True)
+        if os.listdir(empty_conf):
+            return f"skipped: {empty_conf} is not empty", [], None, None
+        coops = heap <= _COOPS_MAX_HEAP
+        archive = os.path.join(cache, f"driver-{'coops' if coops else 'nocoops'}-"
+                                      f"{_cds_key(java_home, empty_conf, coops)}.jsa")
+        st = _stat(archive)
+        if st is not None and st[0] == _published_size(archive):
+            return f"mapped {archive}", [f"-XX:SharedArchiveFile={archive}", *_JVM_LOG_OPTS], \
+                empty_conf, None
+        _remove_stale(archive)
+    except OSError as e:
+        return f"skipped: {e}", [], None, None
+    temp = f"{archive}.{os.getpid()}.tmp"
+    # -Xlog:cds=error drops the dump's per-class "Skipping ..." warnings
+    return f"dumping {archive}", [f"-XX:ArchiveClassesAtExit={temp}", *_JVM_LOG_OPTS,
+                                  "-Xlog:cds=error:stderr"], empty_conf, (temp, archive)
+
+
+def _publish_archive(proc, temp: str, archive: str, java: str, classpath: str,
+                     memory: str) -> None:
+    """At interpreter exit: let the driver JVM exit (it reads EOF on its
+    stdin), wait while it writes `temp`, then _publish it."""
+    from pyspark import SparkContext
+
+    sc = SparkContext._active_spark_context
+    if sc is not None:
+        # stops the accumulator server first, which would otherwise print
+        # an EOFError when the JVM drops its connection
+        try:
+            sc.stop()
+        except Exception:  # noqa: BLE001 - the JVM is gone already
+            pass
+    try:
+        proc.stdin.close()
+    except OSError:  # the JVM is gone already
+        pass
+    try:
+        proc.wait(timeout=_DUMP_WAIT_S)
+        why = _publish(temp, archive, java, classpath, memory)
+    except subprocess.TimeoutExpired:
+        why = f"the driver JVM did not exit within {_DUMP_WAIT_S:.0f} s"
+    except KeyboardInterrupt:
+        why = "interrupted"
+    if why is not None:
+        print(f"dsq-spark: class-data archive not published: {why}", file=sys.stderr)
+
+
+def _publish(temp: str, archive: str, java: str, classpath: str, memory: str) -> str | None:
+    """Rename `temp` to `archive` if a JVM with this heap and classpath
+    that must share it (-Xshare:on) starts with it; else delete it and
+    say why.  A truncated archive crashes a JVM that maps it, so the size
+    it was published at is recorded next to it and checked before every
+    map."""
+    if not os.path.exists(temp):
+        return (f"the driver JVM wrote no {temp} (did other JVM options replace "
+                "spark.driver.defaultJavaOptions?)")
+    try:
+        probe = subprocess.run(
+            [java, f"-Xmx{memory}", "-Xshare:on", f"-XX:SharedArchiveFile={temp}",
+             "-cp", classpath, *_JVM_LOG_OPTS, f"-XX:ErrorFile={os.devnull}", "-version"],
+            stdin=subprocess.DEVNULL, capture_output=True, timeout=60)
+        if probe.returncode != 0:
+            return f"a JVM started with it exits with {probe.returncode}"
+        record = f"{archive}.size.{os.getpid()}.tmp"
+        with open(record, "w") as fh:
+            fh.write(str(os.path.getsize(temp)))
+        os.replace(temp, archive)
+        os.replace(record, archive + ".size")
+        return None
+    except (OSError, subprocess.TimeoutExpired) as e:
+        return str(e)
+    finally:
+        _unlink(temp)
+
+
+def _cds_key(java_home: str, conf_dir: str, coops: bool) -> str:
+    import pyspark
+
+    h = hashlib.sha256()
+
+    def add(*parts) -> None:
+        h.update(repr(parts).encode())
+
+    with open(os.path.join(java_home, "release"), "rb") as fh:
+        add(os.path.realpath(java_home), fh.read())
+    add(_stat(os.path.join(java_home, "lib", "server", "libjvm.so")))
+    jars = os.path.join(_spark_home(), "jars")
+    add(pyspark.__version__, os.path.realpath(jars), conf_dir, coops)
+    for e in sorted(os.scandir(jars), key=lambda e: e.name):
+        add(e.name, _stat(e.path))
+    add(*(os.environ.get(v) for v in ("SPARK_DIST_CLASSPATH", "HADOOP_CONF_DIR",
+                                       "YARN_CONF_DIR")))
+    return h.hexdigest()[:16]
+
+
+def _cache_dir() -> str:
+    base = os.environ.get("XDG_CACHE_HOME", "")
+    if not os.path.isabs(base):
+        base = os.path.join(os.path.expanduser("~"), ".cache")
+    return os.path.join(base, "dsq-spark")
+
+
+def _spark_home() -> str:
+    from pyspark.find_spark_home import _find_spark_home
+
+    return _find_spark_home()
+
+
+def _java_home() -> str | None:
+    """The JDK the Spark launcher runs: $JAVA_HOME, else java on PATH."""
+    if os.environ.get("JAVA_HOME"):
+        java = os.path.join(os.environ["JAVA_HOME"], "bin", "java")
+    else:
+        java = shutil.which("java")
+    if not java or not os.path.exists(java):
+        return None
+    return os.path.dirname(os.path.dirname(os.path.realpath(java)))
+
+
+def _heap_bytes(memory: str) -> int | None:
+    """-Xmx bytes of a Spark memory string ("9642m", "32g")."""
+    m = re.fullmatch(r"(\d+)([kmgt]?)b?", memory.strip().lower())
+    return None if m is None else int(m[1]) << {"": 0, "k": 10, "m": 20, "g": 30, "t": 40}[m[2]]
+
+
+def _stat(path: str) -> tuple[int, int] | None:
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    return st.st_size, st.st_mtime_ns
+
+
+def _published_size(archive: str) -> int | None:
+    try:
+        with open(archive + ".size") as fh:
+            return int(fh.read())
+    except (OSError, ValueError):
+        return None
+
+
+def _remove_stale(archive: str) -> None:
+    """Delete an archive that is not the one published (truncated,
+    replaced, or never recorded) and temp files of processes that died
+    before publishing theirs."""
+    for path in (archive, archive + ".size"):
+        _unlink(path)
+    for temp in glob.glob(glob.escape(archive) + ".*.tmp"):
+        pid = temp.rsplit(".", 2)[-2]
+        if not pid.isdigit() or not _alive(int(pid)):
+            _unlink(temp)
+
+
+def _alive(pid: int) -> bool:
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:
+        pass
+    return True
+
+
+def _unlink(path: str) -> None:
+    try:
+        os.remove(path)
+    except FileNotFoundError:
+        pass
 

@@ -1,11 +1,22 @@
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import sys
+import tempfile
 
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+# The driver JVM's class-data archive (dsq_spark.session) goes under
+# $XDG_CACHE_HOME: give each test session, and the CLI processes its tests
+# start, a fresh one, so no run writes to or reads from the user's
+# ~/.cache.  Removed after the session's own archive is published at exit.
+_CACHE_HOME = tempfile.mkdtemp(prefix="dsq-spark-test-cache-")
+os.environ["XDG_CACHE_HOME"] = _CACHE_HOME
+atexit.register(shutil.rmtree, _CACHE_HOME, ignore_errors=True)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
