@@ -14,15 +14,15 @@ time only, never a result.
 
 from __future__ import annotations
 
-import atexit
 import glob
 import hashlib
+import json
 import os
 import re
 import shlex
 import shutil
 import subprocess
-import sys
+import threading
 
 from pyspark.sql import SparkSession
 
@@ -40,8 +40,9 @@ _COOPS_MAX_HEAP = (32 << 30) - (32 << 20)
 # The JVM sends its own log lines (CDS warnings among them) to stderr, so
 # no JVM byte ever lands in the CLI's output.
 _JVM_LOG_OPTS = ["-Xlog:disable", "-Xlog:all=warning:stderr"]
-# How long interpreter exit waits for the driver JVM to write its archive.
-_DUMP_WAIT_S = 90.0
+# The first bytes of a finished JDK 17 dynamic archive (0xf00baba8,
+# little-endian); the JVM writes the header after everything else.
+_DYNAMIC_ARCHIVE_MAGIC = bytes.fromhex("a8ab0bf0")
 
 
 def default_parallelism() -> int:
@@ -103,9 +104,9 @@ def get_spark(app_name: str = "dsq-spark",
         # (dsq_spark.queries.base.t) — DuckDB truncates nanos→micros the
         # same way.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # local[N] runs executors inside the driver JVM: size the heap for
-        # N concurrent tasks + persisted caches, or late-suite full GCs
-        # show up as multi-second noise spikes on otherwise-fast queries.
+        # local[N] runs executors inside the driver JVM, so this one heap
+        # holds N concurrent tasks and every persisted cache; see
+        # driver_memory() for why it stops short of the host's memory.
         .config("spark.driver.memory", memory)
         .config("spark.ui.enabled", "false")
     )
@@ -123,7 +124,7 @@ def get_spark(app_name: str = "dsq-spark",
     if SparkContext._gateway is not None or "PYSPARK_GATEWAY_PORT" in os.environ:
         return builder.getOrCreate()  # no JVM launch, nothing to share
     global cds_state
-    cds_state, java_opts, conf_dir, dump = _cds_plan(memory)
+    cds_state, java_opts, conf_dir, archive, temp = _cds_plan(memory)
     if not java_opts:
         return builder.getOrCreate()
     # defaultJavaOptions, because --driver-java-options in
@@ -132,122 +133,213 @@ def get_spark(app_name: str = "dsq-spark",
     saved = os.environ.get("SPARK_CONF_DIR")
     os.environ["SPARK_CONF_DIR"] = conf_dir  # the launcher reads it from our env
     try:
+        if temp is not None:
+            _launch_dumping_gateway(builder)
         spark = builder.getOrCreate()
     finally:
         if saved is None:
             del os.environ["SPARK_CONF_DIR"]
         else:
             os.environ["SPARK_CONF_DIR"] = saved
-    if dump is not None:
-        system = spark._jvm.System
-        atexit.register(_publish_archive, SparkContext._gateway.proc, *dump,
-                        os.path.join(system.getProperty("java.home"), "bin", "java"),
-                        system.getProperty("java.class.path"), memory)
+    cds_state = _check_launch(spark, archive, temp)
     return spark
 
 
 # ------------------------------------------------------ class-data sharing
 def _cds_plan(memory: str):
-    """(state, java options, SPARK_CONF_DIR, dump) for a JVM about to be
-    launched with `memory` of heap.  `dump` is (temp, archive) when
-    this launch writes the archive at exit, else None; no options means
-    launch as is.
+    """(state, java options, SPARK_CONF_DIR, archive, temp) for a JVM
+    about to be launched with `memory` of heap.  `temp` is where the JVM
+    dumps an archive as it exits, or None when it maps `archive` or
+    (no options) launches as is.
 
     The archive is keyed by everything the JVM checks before it maps one:
     the JDK build, the Spark jars on the launcher classpath and the
-    compressed-oops mode.  The JVM refuses to dump with a non-empty
-    directory on the classpath, so the conf dir is swapped for an empty
-    one, which is only safe when it holds nothing but templates."""
-    conf = os.environ.get("SPARK_CONF_DIR") or os.path.join(_spark_home(), "conf")
-    if os.path.isdir(conf):
-        kept = sorted(n for n in os.listdir(conf) if not n.endswith(".template"))
-        if kept:
-            return f"skipped: the conf dir {conf} holds {kept[0]}", [], None, None
+    compressed-oops mode `memory` implies.  The JVM refuses to dump with a
+    non-empty directory on the classpath, so the conf dir is swapped for an
+    empty one, which is only safe when it holds nothing but templates.
+    The first launch with a cache only marks it; the second dumps, and
+    the third publishes that archive (_settle) and maps it."""
+    def skip(why):
+        return f"skipped: {why}", [], None, None, None
+
+    if (why := _user_conf()) is not None:
+        return skip(why)
     heap = _heap_bytes(memory)
     java_home = _java_home()
     if heap is None:
-        return f"skipped: cannot read the heap size {memory!r}", [], None, None
+        return skip(f"cannot read the heap size {memory!r}")
     if java_home is None:
-        return "skipped: no java found", [], None, None
+        return skip("no java found")
     cache = _cache_dir()
     if os.pathsep in cache:  # the JVM splits SharedArchiveFile on it
-        return f"skipped: the cache dir {cache} contains {os.pathsep!r}", [], None, None
+        return skip(f"the cache dir {cache} contains {os.pathsep!r}")
     empty_conf = os.path.join(cache, "empty-conf")
     try:
         os.makedirs(empty_conf, exist_ok=True)
         if os.listdir(empty_conf):
-            return f"skipped: {empty_conf} is not empty", [], None, None
-        coops = heap <= _COOPS_MAX_HEAP
-        archive = os.path.join(cache, f"driver-{'coops' if coops else 'nocoops'}-"
-                                      f"{_cds_key(java_home, empty_conf, coops)}.jsa")
+            return skip(f"{empty_conf} is not empty")
+        archive = os.path.join(
+            cache, f"driver-{_cds_key(java_home, empty_conf, heap <= _COOPS_MAX_HEAP)}.jsa")
+        writing = _settle(archive)
         st = _stat(archive)
         if st is not None and st[0] == _published_size(archive):
             return f"mapped {archive}", [f"-XX:SharedArchiveFile={archive}", *_JVM_LOG_OPTS], \
-                empty_conf, None
-        _remove_stale(archive)
+                empty_conf, archive, None
+        if os.path.exists(archive + ".failed"):
+            with open(archive + ".failed") as fh:
+                return skip(fh.read())
+        if writing:
+            return skip(f"another JVM is still writing the archive for {archive}")
+        for path in (archive, archive + ".size"):
+            _unlink(path)
+        # A JVM that dumps runs slower (a cold taxi group-by on 4 cores:
+        # ~20 s against ~15 s), so dump only once an earlier launch has
+        # shown that this cache outlives its process.
+        if not os.path.exists(archive + ".seen"):
+            open(archive + ".seen", "w").close()
+            return skip(f"first launch for {archive}; the next one dumps it")
     except OSError as e:
-        return f"skipped: {e}", [], None, None
+        return skip(e)
     temp = f"{archive}.{os.getpid()}.tmp"
     # -Xlog:cds=error drops the dump's per-class "Skipping ..." warnings
     return f"dumping {archive}", [f"-XX:ArchiveClassesAtExit={temp}", *_JVM_LOG_OPTS,
-                                  "-Xlog:cds=error:stderr"], empty_conf, (temp, archive)
+                                  "-Xlog:cds=error:stderr"], empty_conf, archive, temp
 
 
-def _publish_archive(proc, temp: str, archive: str, java: str, classpath: str,
-                     memory: str) -> None:
-    """At interpreter exit: let the driver JVM exit (it reads EOF on its
-    stdin), wait while it writes `temp`, then _publish it."""
-    from pyspark import SparkContext
+def _user_conf() -> str | None:
+    """Why the Spark conf dir cannot be swapped for an empty one, if it
+    cannot: it holds a file other than a template."""
+    conf = os.environ.get("SPARK_CONF_DIR") or os.path.join(_spark_home(), "conf")
+    if os.path.isdir(conf):
+        kept = sorted(n for n in os.listdir(conf) if not n.endswith(".template"))
+        if kept:
+            return f"the conf dir {conf} holds {kept[0]}"
+    return None
 
-    sc = SparkContext._active_spark_context
-    if sc is not None:
-        # stops the accumulator server first, which would otherwise print
-        # an EOFError when the JVM drops its connection
+
+def _launch_dumping_gateway(builder) -> None:
+    """Start the driver JVM of `builder` with its stdout and stderr on
+    pipes that this process copies to its own.  A dumping JVM writes its
+    archive for ~20 s after this process exits; it must not hold the
+    caller's stdout or stderr open for that long."""
+    from pyspark import SparkConf, SparkContext
+    from pyspark.java_gateway import launch_gateway
+
+    conf = SparkConf().setAll(builder._options.items())
+    gateway = launch_gateway(conf, popen_kwargs={"stdout": subprocess.PIPE,
+                                                 "stderr": subprocess.PIPE})
+    for pipe, fd in ((gateway.proc.stdout, 1), (gateway.proc.stderr, 2)):
+        threading.Thread(target=_forward, args=(pipe, fd), daemon=True).start()
+    SparkContext._ensure_initialized(gateway=gateway)
+
+
+def _forward(pipe, fd: int) -> None:
+    while chunk := os.read(pipe.fileno(), 1 << 16):
         try:
-            sc.stop()
-        except Exception:  # noqa: BLE001 - the JVM is gone already
+            os.write(fd, chunk)
+        except OSError:  # keep draining, or the JVM blocks on a full pipe
             pass
-    try:
-        proc.stdin.close()
-    except OSError:  # the JVM is gone already
-        pass
-    try:
-        proc.wait(timeout=_DUMP_WAIT_S)
-        why = _publish(temp, archive, java, classpath, memory)
-    except subprocess.TimeoutExpired:
-        why = f"the driver JVM did not exit within {_DUMP_WAIT_S:.0f} s"
-    except KeyboardInterrupt:
-        why = "interrupted"
-    if why is not None:
-        print(f"dsq-spark: class-data archive not published: {why}", file=sys.stderr)
 
 
-def _publish(temp: str, archive: str, java: str, classpath: str, memory: str) -> str | None:
-    """Rename `temp` to `archive` if a JVM with this heap and classpath
-    that must share it (-Xshare:on) starts with it; else delete it and
-    say why.  A truncated archive crashes a JVM that maps it, so the size
-    it was published at is recorded next to it and checked before every
-    map."""
-    if not os.path.exists(temp):
-        return (f"the driver JVM wrote no {temp} (did other JVM options replace "
-                "spark.driver.defaultJavaOptions?)")
+def _check_launch(spark, archive: str, temp: str | None) -> str:
+    """The archive state of the driver JVM just launched, read from the
+    JVM itself.  A dumping JVM's pid and heap settings are recorded next
+    to `temp`, for the launch that publishes its archive (_settle)."""
+    from py4j.protocol import Py4JError
+
+    jvm = spark._jvm
     try:
+        bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+            jvm.Class.forName("com.sun.management.HotSpotDiagnosticMXBean"))
+
+        def flag(name: str) -> str:
+            return bean.getVMOption(name).getValue()
+
+        pid = jvm.ProcessHandle.current().pid()
+        if flag("ArchiveClassesAtExit" if temp else "SharedArchiveFile") != (temp or archive):
+            return ("skipped: other JVM options replaced the ones in "
+                    "spark.driver.defaultJavaOptions")
+        if temp is None:
+            return f"mapped {archive}" if _maps(pid, archive) else \
+                f"skipped: the driver JVM did not map {archive}"
+        system = jvm.System
+        oops = "+" if flag("UseCompressedOops") == "true" else "-"
+        record = {"pid": pid,
+                  "java": os.path.join(system.getProperty("java.home"), "bin", "java"),
+                  "classpath": system.getProperty("java.class.path"),
+                  "options": [f"-XX:MaxHeapSize={flag('MaxHeapSize')}",
+                              f"-XX:{oops}UseCompressedOops"]}
+        with open(temp[:-len("tmp")] + "json", "w") as fh:
+            json.dump(record, fh)
+    except (Py4JError, OSError) as e:
+        return f"skipped: {e}"
+    return f"dumping {archive}"
+
+
+def _settle(archive: str) -> bool:
+    """Publish or delete what the dumping JVMs of other processes left
+    next to `archive`: a temp archive `<archive>.<owner pid>.tmp` and the
+    record of its JVM, `<archive>.<owner pid>.json`.  True while one of
+    those JVMs still runs."""
+    writing = False
+    stems = {path.rsplit(".", 1)[0] for ext in ("tmp", "json")
+             for path in glob.glob(f"{glob.escape(archive)}.*.{ext}")}
+    for stem in stems:
+        owner = stem.rsplit(".", 1)[1]
+        try:
+            with open(stem + ".json") as fh:
+                jvm = json.load(fh)
+        except (OSError, ValueError):
+            jvm = None
+        if jvm is not None and _alive(jvm["pid"]) or jvm is None and owner.isdigit() \
+                and int(owner) != os.getpid() and _alive(int(owner)):
+            writing = True  # with no record yet, its owner is still launching it
+            continue
+        if jvm is not None:
+            _publish(stem + ".tmp", archive, jvm)
+        for path in (stem + ".tmp", stem + ".json"):
+            _unlink(path)
+    return writing
+
+
+def _publish(temp: str, archive: str, jvm: dict) -> None:
+    """Rename `temp` to `archive` if a JVM with the dumping JVM's heap
+    settings and classpath, required to share it (-Xshare:on), starts with
+    it.  A truncated archive crashes a JVM that maps it, so the size it was
+    published at is recorded next to it and checked before every map.  A
+    finished archive the probe rejects is recorded in `archive`.failed,
+    which turns CDS off for its key; one whose JVM died while writing it
+    (its header, written last, is still blank) is only deleted."""
+    try:
+        with open(temp, "rb") as fh:
+            if fh.read(4) != _DYNAMIC_ARCHIVE_MAGIC:
+                return
         probe = subprocess.run(
-            [java, f"-Xmx{memory}", "-Xshare:on", f"-XX:SharedArchiveFile={temp}",
-             "-cp", classpath, *_JVM_LOG_OPTS, f"-XX:ErrorFile={os.devnull}", "-version"],
+            [jvm["java"], *jvm["options"], "-Xshare:on", f"-XX:SharedArchiveFile={temp}",
+             "-cp", jvm["classpath"], *_JVM_LOG_OPTS, "-XX:-UsePerfData",
+             f"-XX:ErrorFile={os.devnull}", "-version"],
             stdin=subprocess.DEVNULL, capture_output=True, timeout=60)
         if probe.returncode != 0:
-            return f"a JVM started with it exits with {probe.returncode}"
-        record = f"{archive}.size.{os.getpid()}.tmp"
+            with open(archive + ".failed", "w") as fh:
+                fh.write(f"a JVM started with the archive dumped for {archive} "
+                         f"exits with {probe.returncode}")
+            return
+        record = f"{archive}.size.{os.getpid()}"
         with open(record, "w") as fh:
             fh.write(str(os.path.getsize(temp)))
         os.replace(temp, archive)
         os.replace(record, archive + ".size")
-        return None
-    except (OSError, subprocess.TimeoutExpired) as e:
-        return str(e)
-    finally:
-        _unlink(temp)
+    except (OSError, subprocess.TimeoutExpired):
+        pass  # another launch published it, or it is unreadable: dump again
+
+
+def _maps(pid: int, path: str) -> bool:
+    """Whether process `pid` maps `path`; True where that cannot be read."""
+    try:
+        with open(f"/proc/{pid}/maps") as fh:
+            return any(line.rstrip("\n").endswith(" " + path) for line in fh)
+    except OSError:
+        return True
 
 
 def _cds_key(java_home: str, conf_dir: str, coops: bool) -> str:
@@ -316,18 +408,6 @@ def _published_size(archive: str) -> int | None:
         return None
 
 
-def _remove_stale(archive: str) -> None:
-    """Delete an archive that is not the one published (truncated,
-    replaced, or never recorded) and temp files of processes that died
-    before publishing theirs."""
-    for path in (archive, archive + ".size"):
-        _unlink(path)
-    for temp in glob.glob(glob.escape(archive) + ".*.tmp"):
-        pid = temp.rsplit(".", 2)[-2]
-        if not pid.isdigit() or not _alive(int(pid)):
-            _unlink(temp)
-
-
 def _alive(pid: int) -> bool:
     try:
         os.kill(pid, 0)
@@ -343,4 +423,3 @@ def _unlink(path: str) -> None:
         os.remove(path)
     except FileNotFoundError:
         pass
-

@@ -1,22 +1,19 @@
 from __future__ import annotations
 
-import atexit
 import os
-import shutil
 import sys
-import tempfile
 
 import pytest
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 # The driver JVM's class-data archive (dsq_spark.session) goes under
-# $XDG_CACHE_HOME: give each test session, and the CLI processes its tests
-# start, a fresh one, so no run writes to or reads from the user's
-# ~/.cache.  Removed after the session's own archive is published at exit.
-_CACHE_HOME = tempfile.mkdtemp(prefix="dsq-spark-test-cache-")
-os.environ["XDG_CACHE_HOME"] = _CACHE_HOME
-atexit.register(shutil.rmtree, _CACHE_HOME, ignore_errors=True)
+# $XDG_CACHE_HOME: point it, for this session and the CLI processes its
+# tests start, at .test-cache/ in the checkout (git-ignored), so no test
+# run reads or writes the user's ~/.cache, and runs after the first two
+# map the archive instead of dumping one.
+os.environ["XDG_CACHE_HOME"] = os.path.join(ROOT, ".test-cache")
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
