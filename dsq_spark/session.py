@@ -225,7 +225,7 @@ def _launch_dumping_gateway(builder) -> None:
     from pyspark import SparkConf, SparkContext
     from pyspark.java_gateway import launch_gateway
 
-    conf = SparkConf().setAll(builder._options.items())
+    conf = SparkConf().setAll(builder._options.items())  # what getOrCreate would pass
     gateway = launch_gateway(conf, popen_kwargs={"stdout": subprocess.PIPE,
                                                  "stderr": subprocess.PIPE})
     for pipe, fd in ((gateway.proc.stdout, 1), (gateway.proc.stderr, 2)):

@@ -131,7 +131,7 @@ def archive(dumped):
     return dumped[0]
 
 
-def test_first_call_dumps_and_the_next_maps(archive):
+def test_the_second_call_dumps_and_the_third_maps(archive):
     assert _published(archive)
     name = os.path.basename(archive)
     assert sorted(os.listdir(os.path.dirname(archive))) == \
