@@ -17,6 +17,7 @@ rewritten statement calls it (dsq_spark.functions) → spark.sql → sink
 from __future__ import annotations
 
 import os
+import stat
 import sys
 import tempfile
 from dataclasses import dataclass, field
@@ -46,8 +47,8 @@ Flags (reference-compatible, main.go:341-432):
       --no-sqlite-writer  accepted for compatibility (no-op)
       --strict-json       SQLite-loud JSON1: malformed JSON raises
       --verbose           print the class-data archive state, the
-                          rewritten SQL and the functions registered
-                          for it to stderr
+                          driver JIT, the rewritten SQL and the
+                          functions registered for it to stderr
   -v, --version           print version
   -h, --help              this help
 
@@ -141,11 +142,30 @@ def parse_args(argv: list[str]) -> Args | None:
 
 
 def _spool_stdin(mimetype: str) -> str:
+    """Copy stdin to a temp file; `run` removes it when it returns."""
     suffix = "." + mimetype.split("/")[-1]
     tmp = tempfile.NamedTemporaryFile("wb", suffix=suffix, delete=False)
     with tmp as fh:
         fh.write(sys.stdin.buffer.read())
     return tmp.name
+
+
+def _input_bytes(a: Args) -> int | None:
+    """The bytes a one-shot call reads from its inputs, for get_spark's
+    choice of JIT; None for the REPL, or when an input is not a regular
+    file (a directory, a URI, a missing path)."""
+    if a.interactive:
+        return None
+    total = 0
+    for path in a.files:
+        try:
+            st = os.stat(path)
+        except OSError:
+            return None
+        if not stat.S_ISREG(st.st_mode):
+            return None
+        total += st.st_size
+    return total
 
 
 def _ingest(spark, a: Args, refs: list[TableRef]):
@@ -199,8 +219,17 @@ def run(argv: list[str], spark=None) -> int:
     a = parse_args(argv)
     if a is None:
         return 0
-    if a.piped_mimetype:
-        a.files.insert(0, _spool_stdin(a.piped_mimetype))
+    if not a.piped_mimetype:
+        return _run(a, spark)
+    spooled = _spool_stdin(a.piped_mimetype)
+    a.files.insert(0, spooled)
+    try:
+        return _run(a, spark)
+    finally:
+        os.remove(spooled)
+
+
+def _run(a: Args, spark) -> int:
     if not a.files:
         print("No input files.", file=sys.stderr)
         return 1
@@ -208,9 +237,11 @@ def run(argv: list[str], spark=None) -> int:
     if spark is None:
         from dsq_spark import session
 
-        spark = session.get_spark("dsq-spark-cli")
+        spark = session.get_spark("dsq-spark-cli", input_bytes=_input_bytes(a))
         if a.verbose and session.cds_state:
             print(f"dsq-spark: class-data archive: {session.cds_state}", file=sys.stderr)
+        if a.verbose and session.jit_state:
+            print(f"dsq-spark: driver JIT: {session.jit_state}", file=sys.stderr)
 
     if a.schema:
         # Schema dump describes the RAW input shape (pre-flatten), like the

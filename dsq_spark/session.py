@@ -8,8 +8,9 @@ broadcasts small dimension tables (region/nation/...) automatically.
 
 The driver JVM maps a per-user class-data-sharing archive (JDK dynamic
 AppCDS, JEP 350) when one exists for its JDK, Spark and heap mode, and
-dumps one at exit when none does; see _cds_plan.  It changes start-up
-time only, never a result.
+dumps one at exit when none does; see _cds_plan.  A one-shot call that
+reads less than C1_MAX_INPUT_BYTES runs the driver JVM's JIT at C1 only;
+see _jit_plan.  Neither changes a result, only the time to one.
 """
 
 from __future__ import annotations
@@ -29,9 +30,17 @@ from pyspark.sql import SparkSession
 _PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # What the last launch of the driver JVM did with the class-data archive
-# ("mapped <path>", "dumping <path>" or "skipped: <reason>"); the CLI's
-# --verbose prints it.  None until this process launches a JVM.
+# ("mapped <path>", "dumping <path>" or "skipped: <reason>") and which JIT
+# it runs ("C1 only (...)" or "tiered (...)"), as the JVM reports them; the
+# CLI's --verbose prints both.  None until this process launches a JVM.
 cds_state: str | None = None
+jit_state: str | None = None
+
+# Below this many input bytes a one-shot call is over before C2-compiled
+# code pays back its compile time, and a C1-only JIT halves the call's CPU.
+# A cold taxi group-by on 4 cores, C1 only against tiered: 19.4 MB -12 to
+# -19 % wall, 58 MB -13 %, 194 MB +3 %, 1.94 GB +87 %.
+C1_MAX_INPUT_BYTES = 64 << 20
 
 # HotSpot keeps compressed oops up to a 32 GiB heap less one 32 MiB region
 # (measured on JDK 17: -Xmx32736m on, -Xmx32737m off), and an archive
@@ -60,11 +69,15 @@ def driver_memory() -> str:
 
 
 def get_spark(app_name: str = "dsq-spark",
-              master: str | None = None) -> SparkSession:
+              master: str | None = None,
+              input_bytes: int | None = None) -> SparkSession:
     """Build (or reuse) a SparkSession with scale-appropriate defaults.
 
     On a real cluster, pass ``master=None`` with an external master URL in
     the environment; locally this defaults to ``local[$SPARK_GRAFT_CPUS]``.
+    `input_bytes` is what a one-shot caller will read from its input files
+    in all; None (a long-lived session, or a size not known) keeps the
+    JVM's default tiered JIT.
     """
     cpus = default_parallelism()
     memory = driver_memory()
@@ -123,26 +136,70 @@ def get_spark(app_name: str = "dsq-spark",
 
     if SparkContext._gateway is not None or "PYSPARK_GATEWAY_PORT" in os.environ:
         return builder.getOrCreate()  # no JVM launch, nothing to share
-    global cds_state
+    global cds_state, jit_state
     cds_state, java_opts, conf_dir, archive, temp = _cds_plan(memory)
-    if not java_opts:
-        return builder.getOrCreate()
-    # defaultJavaOptions, because --driver-java-options in
-    # PYSPARK_SUBMIT_ARGS replaces extraJavaOptions set here.
-    builder = builder.config("spark.driver.defaultJavaOptions", shlex.join(java_opts))
+    jit_opts, jit_why = _jit_plan(input_bytes)
+    if java_opts or jit_opts:
+        # defaultJavaOptions, because --driver-java-options in
+        # PYSPARK_SUBMIT_ARGS replaces extraJavaOptions set here.
+        builder = builder.config("spark.driver.defaultJavaOptions",
+                                 shlex.join(java_opts + jit_opts))
     saved = os.environ.get("SPARK_CONF_DIR")
-    os.environ["SPARK_CONF_DIR"] = conf_dir  # the launcher reads it from our env
+    if conf_dir is not None:
+        os.environ["SPARK_CONF_DIR"] = conf_dir  # the launcher reads it from our env
     try:
         if temp is not None:
             _launch_dumping_gateway(builder)
         spark = builder.getOrCreate()
     finally:
         if saved is None:
-            del os.environ["SPARK_CONF_DIR"]
+            os.environ.pop("SPARK_CONF_DIR", None)
         else:
             os.environ["SPARK_CONF_DIR"] = saved
-    cds_state = _check_launch(spark, archive, temp)
+    if archive is not None:
+        cds_state = _check_launch(spark, archive, temp)
+    jit_state = _check_jit(spark, bool(jit_opts), jit_why)
     return spark
+
+
+# ------------------------------------------------------------ JIT by size
+def _jit_plan(input_bytes: int | None) -> tuple[list[str], str]:
+    """(java options, why) for the JIT of a driver JVM whose caller reads
+    `input_bytes` in all: C1 only below C1_MAX_INPUT_BYTES, else the
+    default tiered JIT.  A conf dir holding more than templates keeps the
+    JVM options as they are: a spark.driver.defaultJavaOptions set here
+    would replace the one in the user's spark-defaults.conf."""
+    if input_bytes is None:
+        return [], "no input size given"
+    if (why := _user_conf()) is not None:
+        return [], why
+    size = f"{input_bytes / 1e6:.1f} MB of input"
+    if input_bytes >= C1_MAX_INPUT_BYTES:
+        return [], f"{size}, at or over {C1_MAX_INPUT_BYTES >> 20} MiB"
+    return ["-XX:TieredStopAtLevel=1"], size
+
+
+def _check_jit(spark, asked: bool, why: str) -> str:
+    """The JIT of the driver JVM just launched, read from the JVM itself, so
+    that options from elsewhere (PYSPARK_SUBMIT_ARGS) show up."""
+    from py4j.protocol import Py4JError
+
+    try:
+        bean = _hotspot(spark._jvm)
+        if bean.getVMOption("TieredCompilation").getValue() != "true":
+            return "C2 only (TieredCompilation is off)"
+        c1 = int(bean.getVMOption("TieredStopAtLevel").getValue()) < 4
+    except (Py4JError, ValueError) as e:
+        return f"unknown ({e})"
+    if c1 == asked:
+        return f"C1 only ({why})" if c1 else f"tiered ({why})"
+    return ("C1 only (set by other JVM options)" if c1 else
+            "tiered (other JVM options replaced the ones in spark.driver.defaultJavaOptions)")
+
+
+def _hotspot(jvm):
+    return jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+        jvm.Class.forName("com.sun.management.HotSpotDiagnosticMXBean"))
 
 
 # ------------------------------------------------------ class-data sharing
@@ -249,8 +306,7 @@ def _check_launch(spark, archive: str, temp: str | None) -> str:
 
     jvm = spark._jvm
     try:
-        bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
-            jvm.Class.forName("com.sun.management.HotSpotDiagnosticMXBean"))
+        bean = _hotspot(jvm)
 
         def flag(name: str) -> str:
             return bean.getVMOption(name).getValue()

@@ -27,7 +27,12 @@ def _escape_key(key: str) -> str:
 
 def flatten(df: DataFrame, serialize_arrays: bool = True) -> DataFrame:
     """Flatten struct columns to dotted top-level columns; serialize arrays
-    (and maps) to JSON strings. Scalars pass through unchanged."""
+    (and maps) to JSON strings. Scalars pass through unchanged, and a frame
+    of scalars only, with no "." in a name, is returned as it is."""
+    fields = df.schema.fields
+    if not any(isinstance(f.dataType, (T.StructType, T.ArrayType, T.MapType))
+               or "." in f.name for f in fields):
+        return df
     cols = []
 
     def walk(col, dtype, name_parts):
@@ -41,7 +46,7 @@ def flatten(df: DataFrame, serialize_arrays: bool = True) -> DataFrame:
         else:
             cols.append(col.alias(name))
 
-    for f in df.schema.fields:
+    for f in fields:
         # Backtick-quote so a literal "." in a source column name is not
         # parsed as struct access.
         walk(F.col("`" + f.name + "`"), f.dataType, [_escape_key(f.name)])

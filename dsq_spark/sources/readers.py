@@ -25,6 +25,7 @@ from xml.etree import ElementTree
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 class UnknownFileType(ValueError):
@@ -40,7 +41,7 @@ class UnknownFileType(ValueError):
 
 def read_csv(spark: SparkSession, path: str, convert_numbers: bool = False,
              sep: str = ",") -> DataFrame:
-    return (
+    reader = (
         spark.read.option("header", True)
         .option("sep", sep)
         .option("inferSchema", convert_numbers)
@@ -53,8 +54,41 @@ def read_csv(spark: SparkSession, path: str, convert_numbers: bool = False,
         # default escape is backslash, which silently mis-parses such
         # fields — e.g. "{""a"":1}" JSON-in-CSV payloads.
         .option("escape", '"')
-        .csv(path)
     )
+    names = None if convert_numbers else _plain_header(path, sep)
+    if names is not None:
+        # The all-string schema Spark would infer, without the job that
+        # reads the header line to infer it.
+        reader = reader.schema(T.StructType([T.StructField(n, T.StringType()) for n in names]))
+    return reader.csv(path)
+
+
+_HEADER_PEEK = 64 << 10
+
+
+def _plain_header(path: str, sep: str) -> list[str] | None:
+    """The column names of `path`'s header line when Spark would take them
+    verbatim from a plain split on `sep`, else None.  The line must be the
+    file's first, end in "\n" within _HEADER_PEEK bytes, be UTF-8 and not
+    blank (Spark skips blank lines to find the header), and hold no quote,
+    BOM or control character but `sep` (so no "\r"); every name must be
+    non-empty and unique case-insensitively (Spark renames empty and
+    duplicate names).  The path must be one regular file, not a glob."""
+    if any(c in path for c in "{}[]*?\\") or not os.path.isfile(path):
+        return None
+    try:
+        with open(path, "rb") as fh:
+            head = fh.read(_HEADER_PEEK)
+        line = head[:head.index(b"\n")].decode("utf-8")
+    except (OSError, ValueError):
+        return None
+    if all(c <= " " for c in line) or any(
+            c == '"' or c == "\ufeff" or c < " " and c != sep for c in line):
+        return None
+    names = line.split(sep)
+    if "" in names or len({n.casefold() for n in names}) < len(names):
+        return None
+    return names
 
 
 def read_tsv(spark: SparkSession, path: str, convert_numbers: bool = False) -> DataFrame:
