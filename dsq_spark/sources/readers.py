@@ -70,10 +70,11 @@ def _plain_header(path: str, sep: str) -> list[str] | None:
     """The column names of `path`'s header line when Spark would take them
     verbatim from a plain split on `sep`, else None.  The line must be the
     file's first, end in "\n" within _HEADER_PEEK bytes, be UTF-8 and not
-    blank (Spark skips blank lines to find the header), and hold no quote,
-    BOM or control character but `sep` (so no "\r"); every name must be
-    non-empty and unique case-insensitively (Spark renames empty and
-    duplicate names).  The path must be one regular file, not a glob."""
+    blank (Spark skips blank lines to find the header), and hold no BOM and
+    no control character but `sep` (so no "\r").  Each name is bare or
+    wholly quoted, with no quote inside; every name must be non-empty and
+    unique case-insensitively (Spark renames empty and duplicate names).
+    The path must be one regular file, not a glob."""
     if any(c in path for c in "{}[]*?\\") or not os.path.isfile(path):
         return None
     try:
@@ -83,10 +84,11 @@ def _plain_header(path: str, sep: str) -> list[str] | None:
     except (OSError, ValueError):
         return None
     if all(c <= " " for c in line) or any(
-            c == '"' or c == "\ufeff" or c < " " and c != sep for c in line):
+            c == "\ufeff" or c < " " and c != sep for c in line):
         return None
-    names = line.split(sep)
-    if "" in names or len({n.casefold() for n in names}) < len(names):
+    names = [n[1:-1] if len(n) > 1 and n[0] == n[-1] == '"' else n for n in line.split(sep)]
+    if any(not n or '"' in n for n in names) or \
+            len({n.casefold() for n in names}) < len(names):
         return None
     return names
 

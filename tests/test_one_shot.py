@@ -33,12 +33,18 @@ CORPUS = {
     "hash.csv": (b"#a,b\n1,2\n", True),
     "header_only.csv": (b"x,y\n", True),
     "plain.tsv": (b"a\tb c\td,e\n1\t2\t3\n", True),
+    "quoted.csv": (b'"a","b c"," d ",e\n1,2,3,4\n', True),
+    "quoted_backslash.csv": (b'"a\\b",c\\\n1,2\n', True),
     "empty_name.csv": (b"a,,b\n1,2,3\n", False),
     "dup_case.csv": (b"A,a\n1,2\n", False),
     "dup.tsv": (b"x\tX\n1\t2\n", False),
     "trailing_sep.csv": (b"a,b,\n1,2,3\n", False),
-    "quoted.csv": (b'"a",b\n1,2\n', False),
     "doubled_quote.csv": (b'"a""x",b\n1,2\n', False),
+    "quoted_sep.csv": (b'"a,b",c\n1,2\n', False),
+    "quoted_empty.csv": (b'"",a\n1,2\n', False),
+    "half_quoted.csv": (b'"a"b,c\n1,2\n', False),
+    "inner_quote.csv": (b'a"b,c\n1,2\n', False),
+    "space_quote.csv": (b' "a",b\n1,2\n', False),
     "bom.csv": (b"\xef\xbb\xbfa,b\n1,2\n", False),
     "crlf.csv": (b"a,b\r\n1,2\r\n", False),
     "blank_first.csv": (b"\na,b\n1,2\n", False),
@@ -87,7 +93,7 @@ def test_csv_header_matches_spark_inference(spark, corpus, name):
     assert df.collect() == inferred.collect()
     if plain:
         assert jobs == 0
-        assert df.columns == CORPUS[name][0].decode().split("\n")[0].split(sep)
+        assert df.columns == CORPUS[name][0].decode().split("\n")[0].replace('"', "").split(sep)
     else:  # a declined header goes through Spark's inference job, as before
         assert jobs == inferred_jobs and (jobs > 0 or not CORPUS[name][0])
 
