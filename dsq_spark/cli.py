@@ -237,7 +237,8 @@ def _run(a: Args, spark) -> int:
     if spark is None:
         from dsq_spark import session
 
-        spark = session.get_spark("dsq-spark-cli", input_bytes=_input_bytes(a))
+        spark = session.get_spark("dsq-spark-cli", input_bytes=_input_bytes(a),
+                                  statement_chars=len(a.query or ""))
         if a.verbose and session.cds_state:
             print(f"dsq-spark: class-data archive: {session.cds_state}", file=sys.stderr)
         if a.verbose and session.jit_state:

@@ -8,9 +8,9 @@ broadcasts small dimension tables (region/nation/...) automatically.
 
 The driver JVM maps a per-user class-data-sharing archive (JDK dynamic
 AppCDS, JEP 350) when one exists for its JDK, Spark and heap mode, and
-dumps one at exit when none does; see _cds_plan.  A one-shot call that
-reads less than C1_MAX_INPUT_BYTES runs the driver JVM's JIT at C1 only;
-see _jit_plan.  Neither changes a result, only the time to one.
+dumps one at exit when none does; see _cds_plan.  A one-shot call with a
+small input for its statement runs the driver JVM's JIT at C1 only; see
+_jit_plan.  Neither changes a result, only the time to one.
 """
 
 from __future__ import annotations
@@ -36,11 +36,19 @@ _PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 cds_state: str | None = None
 jit_state: str | None = None
 
-# Below this many input bytes a one-shot call is over before C2-compiled
-# code pays back its compile time, and a C1-only JIT halves the call's CPU.
-# A cold taxi group-by on 4 cores, C1 only against tiered: 19.4 MB -12 to
-# -19 % wall, 58 MB -13 %, 194 MB +3 %, 1.94 GB +87 %.
-C1_MAX_INPUT_BYTES = 64 << 20
+# A one-shot call is over before C2-compiled code pays back its compile
+# time while its JVM work is small, and then a C1-only JIT halves the
+# call's CPU at no cost in wall time.  That work grows with the input and
+# with what the statement computes per row, so C1 is used only for a
+# statement of at most C1_STATEMENT_CHARS characters over less than
+# C1_MAX_INPUT_BYTES of input.  Measured cold on 4 cores, C1 only against
+# tiered, wall time: the taxi group-by (84 characters) over a CSV -20 % at
+# 19.4 MB, even at 58 MB, +3 % at 194 MB, +69 % at 1.94 GB; a 4-wide
+# dialect statement (128 characters) over a users JSON -10 % at 24 MB but
+# +8 % at 32 MB; the 48-wide one (1,610 characters) even at 0.3 MB, +5 %
+# at 2.5 MB, +80 % at 64 MB.
+C1_MAX_INPUT_BYTES = 24 << 20
+C1_STATEMENT_CHARS = 128
 
 # HotSpot keeps compressed oops up to a 32 GiB heap less one 32 MiB region
 # (measured on JDK 17: -Xmx32736m on, -Xmx32737m off), and an archive
@@ -70,14 +78,16 @@ def driver_memory() -> str:
 
 def get_spark(app_name: str = "dsq-spark",
               master: str | None = None,
-              input_bytes: int | None = None) -> SparkSession:
+              input_bytes: int | None = None,
+              statement_chars: int = 0) -> SparkSession:
     """Build (or reuse) a SparkSession with scale-appropriate defaults.
 
     On a real cluster, pass ``master=None`` with an external master URL in
     the environment; locally this defaults to ``local[$SPARK_GRAFT_CPUS]``.
     `input_bytes` is what a one-shot caller will read from its input files
-    in all; None (a long-lived session, or a size not known) keeps the
-    JVM's default tiered JIT.
+    in all, and `statement_chars` the length of the one statement it runs
+    over them; input_bytes=None (a long-lived session, or a size not
+    known) keeps the JVM's default tiered JIT.
     """
     cpus = default_parallelism()
     memory = driver_memory()
@@ -138,7 +148,7 @@ def get_spark(app_name: str = "dsq-spark",
         return builder.getOrCreate()  # no JVM launch, nothing to share
     global cds_state, jit_state
     cds_state, java_opts, conf_dir, archive, temp = _cds_plan(memory)
-    jit_opts, jit_why = _jit_plan(input_bytes)
+    jit_opts, jit_why = _jit_plan(input_bytes, statement_chars)
     if java_opts or jit_opts:
         # defaultJavaOptions, because --driver-java-options in
         # PYSPARK_SUBMIT_ARGS replaces extraJavaOptions set here.
@@ -163,12 +173,13 @@ def get_spark(app_name: str = "dsq-spark",
 
 
 # ------------------------------------------------------------ JIT by size
-def _jit_plan(input_bytes: int | None) -> tuple[list[str], str]:
+def _jit_plan(input_bytes: int | None, statement_chars: int = 0) -> tuple[list[str], str]:
     """(java options, why) for the JIT of a driver JVM whose caller reads
-    `input_bytes` in all: C1 only below C1_MAX_INPUT_BYTES, else the
-    default tiered JIT.  A conf dir holding more than templates keeps the
-    JVM options as they are: a spark.driver.defaultJavaOptions set here
-    would replace the one in the user's spark-defaults.conf."""
+    `input_bytes` in all with a statement of `statement_chars` characters:
+    C1 only for a short statement over a small input, else the default
+    tiered JIT.  A conf dir holding more than templates keeps the JVM
+    options as they are: a spark.driver.defaultJavaOptions set here would
+    replace the one in the user's spark-defaults.conf."""
     if input_bytes is None:
         return [], "no input size given"
     if (why := _user_conf()) is not None:
@@ -176,6 +187,8 @@ def _jit_plan(input_bytes: int | None) -> tuple[list[str], str]:
     size = f"{input_bytes / 1e6:.1f} MB of input"
     if input_bytes >= C1_MAX_INPUT_BYTES:
         return [], f"{size}, at or over {C1_MAX_INPUT_BYTES >> 20} MiB"
+    if statement_chars > C1_STATEMENT_CHARS:
+        return [], f"a statement of {statement_chars} characters, over {C1_STATEMENT_CHARS}"
     return ["-XX:TieredStopAtLevel=1"], size
 
 

@@ -113,19 +113,23 @@ def test_flatten_returns_a_flat_frame_as_is(spark):
 
 
 def test_jit_gate_follows_the_input_size(tmp_path, monkeypatch):
-    """C1 only below the constant, for a one-shot call over regular files;
-    tiered at and over it, for a directory, for the REPL and for a conf
-    dir that holds more than templates."""
+    """C1 only below the byte budget, for a one-shot call over regular
+    files; tiered at and over it, for a directory, for the REPL and for a
+    conf dir that holds more than templates, and for a statement longer
+    than C1_STATEMENT_CHARS."""
     conf = tmp_path / "conf"
     conf.mkdir()
     (conf / "spark-defaults.conf.template").write_text("")
     monkeypatch.setenv("SPARK_CONF_DIR", str(conf))
-    limit = session.C1_MAX_INPUT_BYTES
-    assert session._jit_plan(limit - 1) == (["-XX:TieredStopAtLevel=1"],
-                                            f"{(limit - 1) / 1e6:.1f} MB of input")
+    limit, chars = session.C1_MAX_INPUT_BYTES, session.C1_STATEMENT_CHARS
+    c1 = ["-XX:TieredStopAtLevel=1"]
+    assert session._jit_plan(limit - 1) == (c1, f"{(limit - 1) / 1e6:.1f} MB of input")
+    assert session._jit_plan(limit - 1, chars)[0] == c1
     for size in (limit, limit + 1):
         opts, why = session._jit_plan(size)
-        assert opts == [] and "at or over 64 MiB" in why
+        assert opts == [] and why.endswith(f", at or over {limit >> 20} MiB")
+    assert session._jit_plan(1, chars + 1) == (
+        [], f"a statement of {chars + 1} characters, over {chars}")
     assert session._jit_plan(None) == ([], "no input size given")
 
     (tmp_path / "a.csv").write_bytes(b"a\n1\n")
