@@ -172,7 +172,7 @@ def get_spark(app_name: str = "dsq-spark",
     return spark
 
 
-# ------------------------------------------------------------ JIT by size
+# ------------------------------------------------- JIT by input and statement
 def _jit_plan(input_bytes: int | None, statement_chars: int = 0) -> tuple[list[str], str]:
     """(java options, why) for the JIT of a driver JVM whose caller reads
     `input_bytes` in all with a statement of `statement_chars` characters:
