@@ -152,8 +152,11 @@ def _spool_stdin(mimetype: str) -> str:
 
 def _input_bytes(a: Args) -> int | None:
     """The bytes a one-shot call reads from its inputs, for get_spark's
-    choice of JIT; None for the REPL, or when an input is not a regular
-    file (a directory, a URI, a missing path)."""
+    choice of JIT; None for the REPL, when an input is not a regular file
+    (a directory, a URI, a missing path), or when its format is not one of
+    session.C1_FORMATS (a Parquet file holds many more rows per byte)."""
+    from dsq_spark.session import C1_FORMATS
+
     if a.interactive:
         return None
     total = 0
@@ -162,7 +165,8 @@ def _input_bytes(a: Args) -> int | None:
             st = os.stat(path)
         except OSError:
             return None
-        if not stat.S_ISREG(st.st_mode):
+        ext = os.path.splitext(path)[1].lstrip(".").lower()
+        if not stat.S_ISREG(st.st_mode) or ext not in C1_FORMATS:
             return None
         total += st.st_size
     return total
@@ -237,12 +241,13 @@ def _run(a: Args, spark) -> int:
     if spark is None:
         from dsq_spark import session
 
-        spark = session.get_spark("dsq-spark-cli", input_bytes=_input_bytes(a),
-                                  statement_chars=len(a.query or ""))
+        size = _input_bytes(a)
+        spark = session.get_spark("dsq-spark-cli", input_bytes=size, statement=a.query)
         if a.verbose and session.cds_state:
             print(f"dsq-spark: class-data archive: {session.cds_state}", file=sys.stderr)
-        if a.verbose and session.jit_state:
-            print(f"dsq-spark: driver JIT: {session.jit_state}", file=sys.stderr)
+        if a.verbose:
+            print(f"dsq-spark: driver JIT: {session.driver_jit(spark, size, a.query)}",
+                  file=sys.stderr)
 
     if a.schema:
         # Schema dump describes the RAW input shape (pre-flatten), like the

@@ -30,25 +30,27 @@ from pyspark.sql import SparkSession
 _PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # What the last launch of the driver JVM did with the class-data archive
-# ("mapped <path>", "dumping <path>" or "skipped: <reason>") and which JIT
-# it runs ("C1 only (...)" or "tiered (...)"), as the JVM reports them; the
-# CLI's --verbose prints both.  None until this process launches a JVM.
+# ("mapped <path>", "dumping <path>" or "skipped: <reason>"); the CLI's
+# --verbose prints it.  None until this process launches a JVM.
 cds_state: str | None = None
-jit_state: str | None = None
 
 # A one-shot call is over before C2-compiled code pays back its compile
 # time while its JVM work is small, and then a C1-only JIT halves the
-# call's CPU at no cost in wall time.  That work grows with the input and
-# with what the statement computes per row, so C1 is used only for a
-# statement of at most C1_STATEMENT_CHARS characters over less than
-# C1_MAX_INPUT_BYTES of input.  Measured cold on 4 cores, C1 only against
-# tiered, wall time: the taxi group-by (84 characters) over a CSV -20 % at
-# 19.4 MB, even at 58 MB, +3 % at 194 MB, +69 % at 1.94 GB; a 4-wide
-# dialect statement (128 characters) over a users JSON -10 % at 24 MB but
-# +8 % at 32 MB; the 48-wide one (1,610 characters) even at 0.3 MB, +5 %
-# at 2.5 MB, +80 % at 64 MB.
+# call's CPU at no cost in wall time.  That work grows with the rows read,
+# with what the statement computes per row and with the rows printed (the
+# JVM pickles each one), so C1 is used only for calls shaped like those
+# measured to win: a statement that cuts its output down (GROUP BY or
+# LIMIT), of at most C1_STATEMENT_CHARS characters, over less than
+# C1_MAX_INPUT_BYTES of CSV or JSON (C1_FORMATS).  Measured
+# cold on 4 cores, C1 only against tiered, wall time: the taxi group-by
+# (84 characters) over a CSV -20 % at 19.4 MB, even at 58 MB, +3 % at
+# 194 MB, +69 % at 1.94 GB; a 4-wide dialect statement (128 characters,
+# LIMIT 300) over a users JSON -10 % at 24 MB but +8 % at 32 MB; the
+# 48-wide one (1,610 characters) even at 0.3 MB, +5 % at 2.5 MB; a dump
+# of every row of the 19.4 MB CSV with no statement +8 %.
 C1_MAX_INPUT_BYTES = 24 << 20
 C1_STATEMENT_CHARS = 128
+C1_FORMATS = frozenset({"csv", "tsv", "tab", "json"})
 
 # HotSpot keeps compressed oops up to a 32 GiB heap less one 32 MiB region
 # (measured on JDK 17: -Xmx32736m on, -Xmx32737m off), and an archive
@@ -79,15 +81,16 @@ def driver_memory() -> str:
 def get_spark(app_name: str = "dsq-spark",
               master: str | None = None,
               input_bytes: int | None = None,
-              statement_chars: int = 0) -> SparkSession:
+              statement: str | None = None) -> SparkSession:
     """Build (or reuse) a SparkSession with scale-appropriate defaults.
 
     On a real cluster, pass ``master=None`` with an external master URL in
     the environment; locally this defaults to ``local[$SPARK_GRAFT_CPUS]``.
-    `input_bytes` is what a one-shot caller will read from its input files
-    in all, and `statement_chars` the length of the one statement it runs
-    over them; input_bytes=None (a long-lived session, or a size not
-    known) keeps the JVM's default tiered JIT.
+    `input_bytes` is what a one-shot caller will read from its CSV and
+    JSON input files in all, and `statement` the one statement it runs
+    over them (None for a dump of every row); input_bytes=None (a
+    long-lived session, or a size not known) keeps the JVM's default
+    tiered JIT.
     """
     cpus = default_parallelism()
     memory = driver_memory()
@@ -146,9 +149,9 @@ def get_spark(app_name: str = "dsq-spark",
 
     if SparkContext._gateway is not None or "PYSPARK_GATEWAY_PORT" in os.environ:
         return builder.getOrCreate()  # no JVM launch, nothing to share
-    global cds_state, jit_state
+    global cds_state
     cds_state, java_opts, conf_dir, archive, temp = _cds_plan(memory)
-    jit_opts, jit_why = _jit_plan(input_bytes, statement_chars)
+    jit_opts, _ = _jit_plan(input_bytes, statement)
     if java_opts or jit_opts:
         # defaultJavaOptions, because --driver-java-options in
         # PYSPARK_SUBMIT_ARGS replaces extraJavaOptions set here.
@@ -168,18 +171,17 @@ def get_spark(app_name: str = "dsq-spark",
             os.environ["SPARK_CONF_DIR"] = saved
     if archive is not None:
         cds_state = _check_launch(spark, archive, temp)
-    jit_state = _check_jit(spark, bool(jit_opts), jit_why)
     return spark
 
 
 # ------------------------------------------------- JIT by input and statement
-def _jit_plan(input_bytes: int | None, statement_chars: int = 0) -> tuple[list[str], str]:
+def _jit_plan(input_bytes: int | None, statement: str | None) -> tuple[list[str], str]:
     """(java options, why) for the JIT of a driver JVM whose caller reads
-    `input_bytes` in all with a statement of `statement_chars` characters:
-    C1 only for a short statement over a small input, else the default
-    tiered JIT.  A conf dir holding more than templates keeps the JVM
-    options as they are: a spark.driver.defaultJavaOptions set here would
-    replace the one in the user's spark-defaults.conf."""
+    `input_bytes` in all and runs `statement` over it: C1 only for a short
+    statement that cuts its output down over a small input, else the
+    default tiered JIT.  A conf dir holding more than templates keeps the
+    JVM options as they are: a spark.driver.defaultJavaOptions set here
+    would replace the one in the user's spark-defaults.conf."""
     if input_bytes is None:
         return [], "no input size given"
     if (why := _user_conf()) is not None:
@@ -187,16 +189,40 @@ def _jit_plan(input_bytes: int | None, statement_chars: int = 0) -> tuple[list[s
     size = f"{input_bytes / 1e6:.1f} MB of input"
     if input_bytes >= C1_MAX_INPUT_BYTES:
         return [], f"{size}, at or over {C1_MAX_INPUT_BYTES >> 20} MiB"
-    if statement_chars > C1_STATEMENT_CHARS:
-        return [], f"a statement of {statement_chars} characters, over {C1_STATEMENT_CHARS}"
+    if statement is None:
+        return [], "no statement: every row is printed"
+    if len(statement) > C1_STATEMENT_CHARS:
+        return [], f"a statement of {len(statement)} characters, over {C1_STATEMENT_CHARS}"
+    if not _cuts_output(statement):
+        return [], "a statement with no GROUP BY or LIMIT"
     return ["-XX:TieredStopAtLevel=1"], size
 
 
-def _check_jit(spark, asked: bool, why: str) -> str:
-    """The JIT of the driver JVM just launched, read from the JVM itself, so
-    that options from elsewhere (PYSPARK_SUBMIT_ARGS) show up."""
+def _cuts_output(statement: str) -> bool:
+    """True when `statement` has GROUP BY or LIMIT outside parentheses,
+    string literals, quoted names and comments."""
+    from dsq_spark import sqllex
+
+    spans = sqllex.opaque_spans(statement)
+    depth, prev = 0, ""
+    for t in sqllex.tokenize(statement):
+        if sqllex.inside(spans, t.start):
+            continue
+        if t.text in "()":
+            depth += 1 if t.text == "(" else -1
+        elif depth == 0 and (t.low == "limit" or prev == "group" and t.low == "by"):
+            return True
+        prev = t.low
+    return False
+
+
+def driver_jit(spark, input_bytes: int | None, statement: str | None) -> str:
+    """The JIT the driver JVM runs, read from the JVM itself so that options
+    from elsewhere (PYSPARK_SUBMIT_ARGS) show up, with get_spark's reason
+    for it when the JVM runs what get_spark asked for."""
     from py4j.protocol import Py4JError
 
+    asked, why = _jit_plan(input_bytes, statement)
     try:
         bean = _hotspot(spark._jvm)
         if bean.getVMOption("TieredCompilation").getValue() != "true":
@@ -204,7 +230,7 @@ def _check_jit(spark, asked: bool, why: str) -> str:
         c1 = int(bean.getVMOption("TieredStopAtLevel").getValue()) < 4
     except (Py4JError, ValueError) as e:
         return f"unknown ({e})"
-    if c1 == asked:
+    if c1 == bool(asked):
         return f"C1 only ({why})" if c1 else f"tiered ({why})"
     return ("C1 only (set by other JVM options)" if c1 else
             "tiered (other JVM options replaced the ones in spark.driver.defaultJavaOptions)")

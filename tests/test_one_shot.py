@@ -113,35 +113,46 @@ def test_flatten_returns_a_flat_frame_as_is(spark):
 
 
 def test_jit_gate_follows_the_input_size(tmp_path, monkeypatch):
-    """C1 only below the byte budget, for a one-shot call over regular
-    files; tiered at and over it, for a directory, for the REPL and for a
-    conf dir that holds more than templates, and for a statement longer
-    than C1_STATEMENT_CHARS."""
+    """C1 only below the byte budget, for a short statement that cuts its
+    output down, over CSV and JSON files; tiered at and over the budget,
+    for a dump with no statement, for a statement without GROUP BY or
+    LIMIT or longer than C1_STATEMENT_CHARS, for a directory, a Parquet
+    file, the REPL and a conf dir that holds more than templates."""
     conf = tmp_path / "conf"
     conf.mkdir()
     (conf / "spark-defaults.conf.template").write_text("")
     monkeypatch.setenv("SPARK_CONF_DIR", str(conf))
     limit, chars = session.C1_MAX_INPUT_BYTES, session.C1_STATEMENT_CHARS
     c1 = ["-XX:TieredStopAtLevel=1"]
-    assert session._jit_plan(limit - 1) == (c1, f"{(limit - 1) / 1e6:.1f} MB of input")
-    assert session._jit_plan(limit - 1, chars)[0] == c1
+    grouped = "SELECT a, COUNT(*) FROM {} GROUP BY a"
+    assert session._jit_plan(limit - 1, grouped) == (c1, f"{(limit - 1) / 1e6:.1f} MB of input")
+    long_limit = "SELECT id FROM {} LIMIT 300 " + "-" * (chars - 28)
+    assert len(long_limit) == chars and session._jit_plan(limit - 1, long_limit)[0] == c1
+    assert session._jit_plan(1, "select a from {} group\nby a")[0] == c1
     for size in (limit, limit + 1):
-        opts, why = session._jit_plan(size)
+        opts, why = session._jit_plan(size, grouped)
         assert opts == [] and why.endswith(f", at or over {limit >> 20} MiB")
-    assert session._jit_plan(1, chars + 1) == (
+    assert session._jit_plan(1, long_limit + "-") == (
         [], f"a statement of {chars + 1} characters, over {chars}")
-    assert session._jit_plan(None) == ([], "no input size given")
+    assert session._jit_plan(1, None) == ([], "no statement: every row is printed")
+    for rows_out in ("SELECT * FROM {}", "SELECT a FROM {} WHERE b = 'GROUP BY'",
+                     "SELECT a AS `limit` FROM {}", "SELECT a FROM {} -- LIMIT 1",
+                     "SELECT * FROM {} WHERE a IN (SELECT a FROM {} GROUP BY a)"):
+        assert session._jit_plan(1, rows_out) == ([], "a statement with no GROUP BY or LIMIT")
+    assert session._jit_plan(None, grouped) == ([], "no input size given")
 
     (tmp_path / "a.csv").write_bytes(b"a\n1\n")
-    (tmp_path / "b.csv").write_bytes(b"b\n22\n")
-    files = [str(tmp_path / "a.csv"), str(tmp_path / "b.csv")]
-    assert _input_bytes(parse_args([*files, "SELECT 1 FROM {0}, {1}"])) == 9
+    (tmp_path / "b.JSON").write_bytes(b'[{"b":22}]')
+    (tmp_path / "c.parquet").write_bytes(b"PAR1")
+    files = [str(tmp_path / "a.csv"), str(tmp_path / "b.JSON")]
+    assert _input_bytes(parse_args([*files, "SELECT 1 FROM {0}, {1}"])) == 14
+    assert _input_bytes(parse_args([str(tmp_path / "c.parquet"), grouped])) is None
     assert _input_bytes(parse_args([str(tmp_path), "SELECT 1 FROM {}"])) is None
     assert _input_bytes(parse_args([str(tmp_path / "missing.csv")])) is None
     assert _input_bytes(parse_args(["-i", *files])) is None
 
     (conf / "spark-defaults.conf").write_text("spark.driver.defaultJavaOptions -Da=b\n")
-    assert session._jit_plan(9) == ([], f"the conf dir {conf} holds spark-defaults.conf")
+    assert session._jit_plan(9, grouped) == ([], f"the conf dir {conf} holds spark-defaults.conf")
 
 
 def _cli(tmp_path, *argv, stdin=None, **env):
