@@ -9,8 +9,8 @@ broadcasts small dimension tables (region/nation/...) automatically.
 The driver JVM maps a per-user class-data-sharing archive (JDK dynamic
 AppCDS, JEP 350) when one exists for its JDK, Spark and heap mode, and
 dumps one at exit when none does; see _cds_plan.  A one-shot call with a
-small input for its statement runs the driver JVM's JIT at C1 only; see
-_jit_plan.  Neither changes a result, only the time to one.
+short statement that prints few rows over a small input runs the driver
+JVM's JIT at C1 only; see _jit_plan.  Neither changes a result, only the time to one.
 """
 
 from __future__ import annotations
@@ -41,13 +41,14 @@ cds_state: str | None = None
 # JVM pickles each one), so C1 is used only for calls shaped like those
 # measured to win: a statement that cuts its output down (GROUP BY or
 # LIMIT), of at most C1_STATEMENT_CHARS characters, over less than
-# C1_MAX_INPUT_BYTES of CSV or JSON (C1_FORMATS).  Measured
-# cold on 4 cores, C1 only against tiered, wall time: the taxi group-by
-# (84 characters) over a CSV -20 % at 19.4 MB, even at 58 MB, +3 % at
-# 194 MB, +69 % at 1.94 GB; a 4-wide dialect statement (128 characters,
-# LIMIT 300) over a users JSON -10 % at 24 MB but +8 % at 32 MB; the
-# 48-wide one (1,610 characters) even at 0.3 MB, +5 % at 2.5 MB; a dump
-# of every row of the 19.4 MB CSV with no statement +8 %.
+# C1_MAX_INPUT_BYTES of CSV or JSON (C1_FORMATS; a Parquet file holds about
+# four times the rows of a CSV of its size).  Measured cold on 4 cores, C1
+# only against tiered, median wall time: the taxi group-by (84 characters)
+# over a CSV -20 % at 19.4 MB, even at 58 MB, +3 % at 194 MB, +69 % at
+# 1.94 GB; a 4-wide dialect statement (128 characters, LIMIT 300) over a
+# users JSON -8 % at 25.1 MB and only -1 % at 32 MB; the 48-wide one (1,610
+# characters) even at 0.3 MB, +5 % at 2.5 MB; every row of the 19.4 MB
+# CSV printed, +11 % with no statement and +2 % for SELECT *.
 C1_MAX_INPUT_BYTES = 24 << 20
 C1_STATEMENT_CHARS = 128
 C1_FORMATS = frozenset({"csv", "tsv", "tab", "json"})
