@@ -16,6 +16,7 @@ rewritten statement calls it (dsq_spark.functions) → spark.sql → sink
 
 from __future__ import annotations
 
+import logging
 import os
 import stat
 import sys
@@ -296,15 +297,21 @@ def _sql(spark, sql: str, dquoted: frozenset[str] = frozenset()):
     `dquoted` holds identifier names that came from double-quoted tokens:
     if one fails column resolution it is retried as a string literal,
     mirroring SQLite's double-quote fallback (dsq queries rely on it —
-    the reference's own suite uses split_part(x, ".", -1))."""
+    the reference's own suite uses split_part(x, ".", -1)).  What pyspark
+    logs about a first attempt that the fallback then answers is dropped;
+    a statement that fails for real logs it as usual."""
     from pyspark.errors.exceptions.captured import AnalysisException
 
     from dsq_spark.recursive import parse_recursive, run_recursive
 
     if parse_recursive(sql) is not None:
         return run_recursive(spark, sql)
-    try:
+    if not dquoted:
         return spark.sql(sql)
+    held = _HeldLog()
+    try:
+        with held:
+            return spark.sql(sql)
     except AnalysisException as e:
         name = _unresolved_column(e)
         if name is not None and name in dquoted:
@@ -319,12 +326,40 @@ def _sql(spark, sql: str, dquoted: frozenset[str] = frozenset()):
             if out:
                 return _sql(spark, "".join(out) + sql[pos:],
                             frozenset(n for n in dquoted if n != name))
+        held.release()
         raise
+
+
+class _HeldLog(logging.Filter):
+    """Within `with`, holds the records of pyspark's SQLQueryContextLogger
+    (it logs every AnalysisException as it is raised, with the JVM stack
+    trace) instead of printing them; release() prints them."""
+
+    def __init__(self):
+        super().__init__()
+        self.records: list[logging.LogRecord] = []
+        from pyspark.logger import PySparkLogger
+
+        self.logger = PySparkLogger.getLogger("SQLQueryContextLogger")
+
+    def filter(self, record):
+        self.records.append(record)
+        return False
+
+    def __enter__(self):
+        self.logger.addFilter(self)
+
+    def __exit__(self, *exc):
+        self.logger.removeFilter(self)
+
+    def release(self) -> None:
+        for record in self.records:
+            self.logger.handle(record)
 
 
 def _unresolved_column(e) -> str | None:
     try:
-        if (e.getErrorClass() or "").startswith("UNRESOLVED_COLUMN"):
+        if (e.getCondition() or "").startswith("UNRESOLVED_COLUMN"):
             obj = (e.getMessageParameters() or {}).get("objectName", "")
             if obj.startswith("`") and obj.endswith("`") and "`.`" not in obj[1:-1]:
                 return obj[1:-1]

@@ -5,10 +5,12 @@ columns and an `(N rows)` footer, K3 schema dump in the reference's exact
 pretty/JSON grammar (reference main.go:90-182; goldens pinned at
 scripts/test.py:207-266).
 
-Both sinks stream via toLocalIterator() — one partition in driver memory
-at a time, so a 100 TB result spools without materializing.  The pretty
-table needs global column widths before the first output byte, so it makes
-two streaming passes (widths, then rows) rather than one collect().
+Both sinks stream via toLocalIterator(prefetchPartitions=True): the JVM
+computes partition k+1 while Python prints partition k, so the driver
+holds at most two partitions at a time and a 100 TB result spools without
+materializing.  The pretty table needs global column widths before the
+first output byte, so it makes two streaming passes (widths, then rows)
+rather than one collect().
 """
 
 from __future__ import annotations
@@ -60,7 +62,7 @@ def dump_json(df: DataFrame, fh: Optional[IO[str]] = None) -> None:
     fh = fh if fh is not None else sys.stdout
     fh.write("[")
     first = True
-    for row in df.toLocalIterator():
+    for row in df.toLocalIterator(prefetchPartitions=True):
         if not first:
             fh.write(",\n")
         fh.write(json.dumps(
@@ -88,7 +90,7 @@ def pretty_table(df: DataFrame, fh: Optional[IO[str]] = None) -> None:
 
     Two passes over toLocalIterator(), never collect(): pass 1 folds the
     rendered column widths (and row count), pass 2 streams the rows out —
-    so driver memory stays one-partition-bounded and an un-LIMITed
+    so driver memory stays two-partition-bounded and an un-LIMITed
     `--pretty` at cluster scale cannot OOM the driver (r3 verdict).  The
     DataFrame is persisted MEMORY_AND_DISK between the passes so a
     nondeterministic result (random(), un-ORDERed LIMIT across
@@ -114,7 +116,7 @@ def pretty_table(df: DataFrame, fh: Optional[IO[str]] = None) -> None:
     try:
         widths = [len(c) for c in cols]
         n = 0
-        for r in proj.toLocalIterator():
+        for r in proj.toLocalIterator(prefetchPartitions=True):
             n += 1
             for i, c in enumerate(cols):
                 w = len(_render_cell(r[c]))
@@ -130,7 +132,7 @@ def pretty_table(df: DataFrame, fh: Optional[IO[str]] = None) -> None:
         fh.write(border + "\n")
         fh.write("|" + "|".join(" " + center(c, w + 1) for c, w in zip(cols, widths)) + "|\n")
         fh.write(border + "\n")
-        for r in proj.toLocalIterator():
+        for r in proj.toLocalIterator(prefetchPartitions=True):
             out = []
             for i, c in enumerate(cols):
                 cell = _render_cell(r[c])

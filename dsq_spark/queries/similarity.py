@@ -18,6 +18,8 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
+from collections import Counter
+
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -256,9 +258,9 @@ def sim_cosine_neardup(spark, sf_dir):
     )
 
 
-def _neardup_edges(spark, sf_dir):
-    """Undirected near-dup edge list (u, v) from the cosine >= 0.35 pairs
-    over vec_id < 200 — the same pair set sim_cosine_neardup verifies."""
+def _neardup_pairs(spark, sf_dir):
+    """Near-dup pairs (vec_a < vec_b) with cosine >= 0.35 over
+    vec_id < 200 — the same pair set sim_cosine_neardup verifies."""
     e = t(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 200)
     n = e.select("vec_id", F.expr(VD).alias("vd")).select(
         "vec_id", "vd", F.sqrt(F.expr(DOT.format(a="vd", b="vd"))).alias("nrm"))
@@ -267,16 +269,11 @@ def _neardup_edges(spark, sf_dir):
     b = n.select(F.col("vec_id").alias("vec_b"), F.col("vd").alias("vd_b"),
                  F.col("nrm").alias("nrm_b"))
     cos = F.expr(DOT.format(a="vd_a", b="vd_b")) / (F.col("nrm_a") * F.col("nrm_b"))
-    pairs = (
+    return (
         a.join(b, F.col("vec_a") < F.col("vec_b"))
         .filter(cos >= 0.35)
         .select("vec_a", "vec_b")
-        # both union branches read from here — persist or the O(n²) scoring
-        # join runs twice (memory lesson: UNION re-evaluates upstream)
-        .persist()
     )
-    return pairs.select(F.col("vec_a").alias("u"), F.col("vec_b").alias("v")).union(
-        pairs.select(F.col("vec_b").alias("u"), F.col("vec_a").alias("v")))
 
 
 @register(
@@ -303,56 +300,37 @@ SELECT vec_id, component,
 FROM comp
 """,
     doc="Duplicate-cluster assignment: connected components over the "
-        "embedding near-dup graph (cosine >= 0.35, vec_id < 200) by "
-        "min-label propagation — each node converges to the smallest "
-        "vec_id reachable from it, i.e. the cluster's canonical id, the "
-        "standard keep-one-per-cluster dedup step. Spark has no recursive "
-        "CTE (SURVEY O4); the idiomatic replacement is a driver loop of "
-        "DISTRIBUTED joins: per iteration every node takes "
-        "min(own, neighbours' labels); converges in O(graph diameter) "
-        "iterations. Only a scalar changed-count crosses the driver "
-        "boundary per iteration, and localCheckpoint truncates the "
-        "exponentially-growing lineage — the same Pregel shape GraphX/"
-        "GraphFrames use, so the loop survives a 1000-executor scale-up. "
-        "Oracle: DuckDB WITH RECURSIVE transitive closure, min(d) per s.",
+        "embedding near-dup graph (cosine >= 0.35, vec_id < 200), each "
+        "labelled by its smallest vec_id — the cluster's canonical id, the "
+        "standard keep-one-per-cluster dedup step. The graph is bounded by "
+        "construction (200 vertices, at most 19,900 pairs), so the pairs "
+        "are collected in one distributed join and union-find runs on the "
+        "driver; the labels come back as an inline VALUES relation, with "
+        "no job per round. Oracle: DuckDB WITH RECURSIVE transitive "
+        "closure, min(d) per s.",
 )
 def sim_neardup_components(spark, sf_dir):
-    edges = _neardup_edges(spark, sf_dir).persist()
-    labels = edges.select("u").distinct().withColumn("comp", F.col("u"))
-    # r11 (guide §1.2): each loop round costs a fixed 2-3 tiny jobs, so
-    # avoidable JOBS are the cost driver.  The round-0 convergence count is
-    # skipped — any nonempty edge set changes at least one label in round 0
-    # (the lower endpoint of every edge lowers its neighbor), so that count
-    # was a constant-true job; an empty edge set converges at round 1's
-    # count over zero rows.  Pointer jumping (comp <- min(comp, comp[comp]),
-    # O(log diameter) rounds) was ALSO tried and measured SLOWER under the
-    # paired A/B (3.80 vs 3.09 s): on this graph it saved no rounds
-    # (changed counts 35,7,1,1,0 vs 35,7,2,1,0) and its extra per-round
-    # join is pure cost — reverted, documented here so it isn't re-tried.
-    for i in range(20):  # >= graph diameter; corpus clusters are shallow
-        neigh = (
-            edges.join(labels.withColumnRenamed("u", "v2"),
-                       edges.v == F.col("v2"))
-            .groupBy("u").agg(F.min("comp").alias("ncomp"))
-        )
-        new_labels = (
-            labels.join(neigh, "u", "left")
-            .select("u", F.least(F.col("comp"),
-                                 F.coalesce(F.col("ncomp"), F.col("comp"))).alias("ncomp"),
-                    "comp")
-        ).localCheckpoint()
-        changed = 1 if i == 0 else (
-            new_labels.filter(F.col("ncomp") != F.col("comp")).count())
-        labels = new_labels.select("u", F.col("ncomp").alias("comp"))
-        if changed == 0:
-            break
-    else:
-        raise RuntimeError("label propagation did not converge in 20 iterations")
-    w = Window.partitionBy("comp")
-    return labels.select(
-        F.col("u").alias("vec_id"), F.col("comp").alias("component"),
-        F.count("*").over(w).alias("cluster_size"),
-    )
+    pairs = _neardup_pairs(spark, sf_dir)
+    id_type = pairs.schema["vec_a"].dataType.simpleString()
+    parent: dict[int, int] = {}
+
+    def find(x: int) -> int:
+        while parent[x] != x:
+            parent[x] = x = parent[parent[x]]
+        return x
+
+    for a, b in pairs.collect():
+        ra, rb = find(parent.setdefault(a, a)), find(parent.setdefault(b, b))
+        # the smaller root wins, so every root is its component's min vec_id
+        parent[max(ra, rb)] = min(ra, rb)
+    comp = {v: find(v) for v in parent}
+    size = Counter(comp.values())
+    # an empty graph still needs one VALUES row; the filter drops it
+    rows = ", ".join(f"({v}, {c}, {size[c]})" for v, c in sorted(comp.items()))
+    return spark.sql(
+        f"SELECT CAST(col1 AS {id_type}) AS vec_id, CAST(col2 AS {id_type}) AS component, "
+        f"CAST(col3 AS BIGINT) AS cluster_size "
+        f"FROM VALUES {rows or '(NULL, NULL, NULL)'} WHERE col1 IS NOT NULL")
 
 
 from dsq_spark.queries.base import REGISTRY as _REG
@@ -505,14 +483,14 @@ FROM tot t CROSS JOIN stats s
     doc=(
         "End-to-end near-dup dedup: each connected component of the "
         "near-duplicate graph keeps ONE canonical member (the min vec_id — "
-        "which IS the component label, since labels are min-propagated), "
+        "which IS the component label), "
         "everything else is dropped. The operation a training pipeline "
         "actually runs on top of the cluster assignment; composed from the "
         "oracle-matched components query so the summary is value-checked. "
         "At scale: the canonical choice is a map-side comparison on the "
         "already-computed labels — no extra shuffle beyond the rollup."
     ),
-    bench=False,  # re-runs the Pregel loop; components already benched
+    bench=False,  # re-runs sim_neardup_components, which is benched
 )
 def dedup_canonical_keep(spark, sf_dir):
     comp = sim_neardup_components(spark, sf_dir)

@@ -11,6 +11,13 @@ AppCDS, JEP 350) when one exists for its JDK, Spark and heap mode, and
 dumps one at exit when none does; see _cds_plan.  A one-shot call with a
 short statement that prints few rows over a small input runs the driver
 JVM's JIT at C1 only; see _jit_plan.  Neither changes a result, only the time to one.
+
+Spark keeps the classes it compiles for whole-stage codegen in a cache
+of 100 entries by default.  A warm session's working set is about 200
+(perfbench's `warm` pass compiles 174-198), so every pass evicted what
+the next one needed and Janino recompiled about 195 classes each time
+round.  get_spark raises the cache to CODEGEN_CACHE_ENTRIES, so a
+statement run again compiles nothing.
 """
 
 from __future__ import annotations
@@ -52,6 +59,10 @@ cds_state: str | None = None
 C1_MAX_INPUT_BYTES = 24 << 20
 C1_STATEMENT_CHARS = 128
 C1_FORMATS = frozenset({"csv", "tsv", "tab", "json"})
+
+# Entries of Spark's codegen cache (spark.sql.codegen.cache.maxEntries, a
+# static conf); see the module docstring.
+CODEGEN_CACHE_ENTRIES = 1000
 
 # HotSpot keeps compressed oops up to a 32 GiB heap less one 32 MiB region
 # (measured on JDK 17: -Xmx32736m on, -Xmx32737m off), and an archive
@@ -136,6 +147,10 @@ def get_spark(app_name: str = "dsq-spark",
         # driver_memory() for why it stops short of the host's memory.
         .config("spark.driver.memory", memory)
         .config("spark.ui.enabled", "false")
+        # dsq prints nothing while a statement runs; Spark's console
+        # progress bar would write `[Stage 0:> ...]` lines to stderr.
+        .config("spark.ui.showConsoleProgress", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     if master is not None:
         builder = builder.master(master)

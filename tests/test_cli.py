@@ -175,6 +175,55 @@ def test_double_quote_string_fallback(spark, tmp_path, capsys):
         {"a": "nosuch", "s": "a `nosuch` b"}]
 
 
+def test_double_quote_fallback_logs_only_a_real_failure(spark):
+    """pyspark logs every AnalysisException as it is raised; a first
+    attempt that the double-quote fallback then answers logs nothing, a
+    statement that still fails logs its UNRESOLVED_COLUMN."""
+    import logging
+
+    from pyspark.errors.exceptions.captured import AnalysisException
+    from pyspark.logger import PySparkLogger
+
+    from dsq_spark.cli import _sql
+
+    log = PySparkLogger.getLogger("SQLQueryContextLogger")
+    seen: list[logging.LogRecord] = []
+    handler = logging.Handler()
+    handler.emit = seen.append
+    log.addHandler(handler)
+    try:
+        df = _sql(spark, "SELECT `teal` AS tag FROM VALUES (1) AS t(x)",
+                  frozenset({"teal"}))
+        assert [r.tag for r in df.collect()] == ["teal"] and seen == []
+        with pytest.raises(AnalysisException, match="UNRESOLVED_COLUMN"):
+            _sql(spark, "SELECT `teal` AS tag, nosuch FROM VALUES (1) AS t(x)",
+                 frozenset({"teal"}))
+        assert len(seen) == 1 and "UNRESOLVED_COLUMN" in seen[0].getMessage()
+    finally:
+        log.removeHandler(handler)
+
+
+def test_a_call_writes_no_progress_bar_or_fallback_error(tmp_path):
+    """A CLI call's stderr carries nothing dsq would not print: no console
+    progress bar for a stage that runs over the 500 ms after which Spark
+    draws one (a self-join of 4,000 rows), and no trace of the first
+    attempt that the double-quote fallback then answers."""
+    import subprocess
+    import sys
+
+    csv = tmp_path / "ids.csv"
+    csv.write_text("id,name\n" + "".join(f"{i},n{i}\n" for i in range(4000)))
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    p = subprocess.run(
+        [sys.executable, "-m", "dsq_spark.cli", str(csv),
+         'SELECT "teal" AS tag, count(*) AS n FROM {0} a JOIN {0} b ON a.name < b.name'],
+        cwd=repo, capture_output=True, text=True, timeout=600)
+    assert p.returncode == 0, p.stderr[-3000:]
+    assert json.loads(p.stdout) == [{"tag": "teal", "n": 4000 * 3999 // 2}]
+    assert "[Stage" not in p.stderr
+    assert "teal" not in p.stderr and "Traceback" not in p.stderr, p.stderr[-3000:]
+
+
 def test_quoted_names_and_comments_match_sqlite(spark, tmp_path):
     """Quotes, commas and parens inside "…" identifiers and comments are
     SQLite tokens, not SQL structure: each statement answers as sqlite3
@@ -382,7 +431,7 @@ def test_write_zordered_dataset_skips_on_both_columns(spark, tmp_path, sf_dir):
 def test_pretty_table_streams_without_collect(spark, monkeypatch):
     """pretty_table must never materialize the result driver-side: widths
     come from a first toLocalIterator pass, rows stream in a second — an
-    un-LIMITed --pretty at cluster scale stays one-partition-bounded
+    un-LIMITed --pretty at cluster scale stays two-partition-bounded
     (r3 verdict item)."""
     import io
 
