@@ -324,16 +324,19 @@ def _sql(spark, sql: str, dquoted: frozenset[str] = frozenset()):
                     out += [sql[pos:a], lit]
                     pos = b
             if out:
+                held.records.clear()
                 return _sql(spark, "".join(out) + sql[pos:],
                             frozenset(n for n in dquoted if n != name))
-        held.release()
         raise
+    finally:
+        held.release()
 
 
 class _HeldLog(logging.Filter):
     """Within `with`, holds the records of pyspark's SQLQueryContextLogger
-    (it logs every AnalysisException as it is raised, with the JVM stack
-    trace) instead of printing them; release() prints them."""
+    (it logs every error with a SQL query context as it is raised, with
+    the JVM stack trace) instead of printing them; release() prints what
+    it still holds."""
 
     def __init__(self):
         super().__init__()

@@ -27,6 +27,24 @@ def spark():
 
 
 @pytest.fixture(scope="session")
+def count_jobs(spark):
+    """count_jobs(group, fn) -> (fn(), the number of Spark jobs fn
+    launched), counted with a job group and the status tracker."""
+    sc = spark.sparkContext
+
+    def count(group: str, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count
+
+
+@pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
 

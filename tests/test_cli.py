@@ -176,11 +176,14 @@ def test_double_quote_string_fallback(spark, tmp_path, capsys):
 
 
 def test_double_quote_fallback_logs_only_a_real_failure(spark):
-    """pyspark logs every AnalysisException as it is raised; a first
-    attempt that the double-quote fallback then answers logs nothing, a
-    statement that still fails logs its UNRESOLVED_COLUMN."""
+    """pyspark logs every error with a SQL query context as it is raised;
+    a first attempt that the double-quote fallback then answers logs
+    nothing, a statement that still fails logs its UNRESOLVED_COLUMN, and
+    one that fails some other way (a 1/0 an eager CACHE TABLE folds under
+    ANSI) logs that."""
     import logging
 
+    from pyspark.errors import ArithmeticException
     from pyspark.errors.exceptions.captured import AnalysisException
     from pyspark.logger import PySparkLogger
 
@@ -199,6 +202,15 @@ def test_double_quote_fallback_logs_only_a_real_failure(spark):
             _sql(spark, "SELECT `teal` AS tag, nosuch FROM VALUES (1) AS t(x)",
                  frozenset({"teal"}))
         assert len(seen) == 1 and "UNRESOLVED_COLUMN" in seen[0].getMessage()
+        prev = spark.conf.get("spark.sql.ansi.enabled")
+        spark.conf.set("spark.sql.ansi.enabled", "true")
+        try:
+            with pytest.raises(ArithmeticException, match="DIVIDE_BY_ZERO"):
+                _sql(spark, "CACHE TABLE dq_fallback_fails AS SELECT 1/0 AS x",
+                     frozenset({"teal"}))
+        finally:
+            spark.conf.set("spark.sql.ansi.enabled", prev)
+        assert len(seen) == 2 and "DIVIDE_BY_ZERO" in seen[1].getMessage()
     finally:
         log.removeHandler(handler)
 

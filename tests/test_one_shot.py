@@ -65,27 +65,16 @@ def corpus(tmp_path_factory):
     return d
 
 
-def _jobs(spark, group: str, fn):
-    """(fn(), the number of Spark jobs it launched)."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 @pytest.mark.parametrize("name", sorted(CORPUS))
-def test_csv_header_matches_spark_inference(spark, corpus, name):
+def test_csv_header_matches_spark_inference(spark, corpus, count_jobs, name):
     """read_file's schema and rows are what Spark's own header inference
     gives with the same options; only a plain header skips its job."""
     path = str(corpus / name)
     sep = "\t" if name.endswith(".tsv") else ","
     plain = CORPUS[name][1]
     assert (_plain_header(path, sep) is not None) == plain
-    df, jobs = _jobs(spark, f"dsq-read-{name}", lambda: read_file(spark, path))
-    inferred, inferred_jobs = _jobs(spark, f"dsq-infer-{name}", lambda: (
+    df, jobs = count_jobs(f"dsq-read-{name}", lambda: read_file(spark, path))
+    inferred, inferred_jobs = count_jobs(f"dsq-infer-{name}", lambda: (
         spark.read.option("header", True).option("sep", sep).option("inferSchema", False)
         .option("ignoreLeadingWhiteSpace", False).option("ignoreTrailingWhiteSpace", False)
         .option("escape", '"').csv(path)))

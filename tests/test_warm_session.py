@@ -30,24 +30,15 @@ def test_a_statement_run_again_compiles_nothing(spark):
     assert _compiled(spark) - before == first
 
 
-def _jobs(spark, sf_dir, name: str) -> int:
-    """Jobs one evaluation of registry query `name` launches, built and
-    written to the noop sink the way bench.py runs it."""
-    sc = spark.sparkContext
-    group = f"job-budget-{name}"
-    spark.catalog.clearCache()
-    sc.setJobGroup(group, name)
-    try:
-        Q.REGISTRY[name].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 @pytest.mark.parametrize("name, budget", [("sim_neardup_components", 8)])
-def test_driver_loop_operator_stays_in_its_job_budget(spark, sf_dir, name, budget):
+def test_driver_loop_operator_stays_in_its_job_budget(spark, sf_dir, count_jobs,
+                                                       name, budget):
     """sim_neardup_components collects its near-dup pairs once and labels
     them on the driver (4 jobs here); the label-propagation loop it
-    replaced launched 43 on this table."""
-    assert _jobs(spark, sf_dir, name) <= budget
+    replaced launched 43 on this table.  Jobs are counted for one
+    evaluation, built and written to the noop sink the way bench.py runs
+    it."""
+    spark.catalog.clearCache()
+    _, jobs = count_jobs(f"job-budget-{name}", lambda: (
+        Q.REGISTRY[name].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()))
+    assert jobs <= budget
