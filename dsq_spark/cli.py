@@ -48,8 +48,9 @@ Flags (reference-compatible, main.go:341-432):
       --no-sqlite-writer  accepted for compatibility (no-op)
       --strict-json       SQLite-loud JSON1: malformed JSON raises
       --verbose           print the class-data archive state, the
-                          driver JIT, the rewritten SQL and the
-                          functions registered for it to stderr
+                          driver JIT, whether each input's schema was
+                          inferred or reused, the rewritten SQL and
+                          the functions registered for it to stderr
   -v, --version           print version
   -h, --help              this help
 
@@ -118,7 +119,7 @@ def parse_args(argv: list[str]) -> Args | None:
             # default NULL/zero-rows.  Env, not an Args field: the flag
             # must reach register_all AND the rewrite-time lowering and
             # inlining decisions, all of which read DSQ_STRICT_JSON
-            # through functions.strict_json_mode.
+            # through functions.strict_json_mode.  `run` restores it.
             os.environ["DSQ_STRICT_JSON"] = "1"
         elif arg == "--verbose":
             a.verbose = True
@@ -221,17 +222,35 @@ def _ingest(spark, a: Args, refs: list[TableRef]):
 
 
 def run(argv: list[str], spark=None) -> int:
-    a = parse_args(argv)
-    if a is None:
-        return 0
-    if not a.piped_mimetype:
-        return _run(a, spark)
-    spooled = _spool_stdin(a.piped_mimetype)
-    a.files.insert(0, spooled)
+    """Run one dsq call.  What the call sets for itself, --strict-json's
+    DSQ_STRICT_JSON and --verbose's reports from the readers, lasts only
+    until it returns, so a later call in the same session is not changed."""
+    strict = os.environ.get("DSQ_STRICT_JSON")
+    sources = logging.getLogger("dsq_spark.sources")
+    level, report, spooled = sources.level, None, None
     try:
+        a = parse_args(argv)
+        if a is None:
+            return 0
+        if a.verbose:
+            report = logging.StreamHandler(sys.stderr)
+            report.setFormatter(logging.Formatter("dsq-spark: %(message)s"))
+            sources.addHandler(report)
+            sources.setLevel(logging.INFO)
+        if a.piped_mimetype:
+            spooled = _spool_stdin(a.piped_mimetype)
+            a.files.insert(0, spooled)
         return _run(a, spark)
     finally:
-        os.remove(spooled)
+        if spooled is not None:
+            os.remove(spooled)
+        if report is not None:
+            sources.removeHandler(report)
+            sources.setLevel(level)
+        if strict is None:
+            os.environ.pop("DSQ_STRICT_JSON", None)
+        else:
+            os.environ["DSQ_STRICT_JSON"] = strict
 
 
 def _run(a: Args, spark) -> int:

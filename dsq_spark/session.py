@@ -71,6 +71,11 @@ _COOPS_MAX_HEAP = (32 << 30) - (32 << 20)
 # The JVM sends its own log lines (CDS warnings among them) to stderr, so
 # no JVM byte ever lands in the CLI's output.
 _JVM_LOG_OPTS = ["-Xlog:disable", "-Xlog:all=warning:stderr"]
+# The driver's log4j 2 configuration (errors only), passed with the other
+# JVM options and, like them, only while the conf dir holds nothing but
+# templates: a log4j2.properties there is the user's to keep.
+_LOG4J_OPTS = ["-Dlog4j2.configurationFile="
+               + os.path.join(os.path.dirname(os.path.abspath(__file__)), "log4j2.properties")]
 # The first bytes of a finished JDK 17 dynamic archive (0xf00baba8,
 # little-endian); the JVM writes the header after everything else.
 _DYNAMIC_ARCHIVE_MAGIC = bytes.fromhex("a8ab0bf0")
@@ -168,11 +173,11 @@ def get_spark(app_name: str = "dsq-spark",
     global cds_state
     cds_state, java_opts, conf_dir, archive, temp = _cds_plan(memory)
     jit_opts, _ = _jit_plan(input_bytes, statement)
-    if java_opts or jit_opts:
+    opts = java_opts + jit_opts + (_LOG4J_OPTS if _user_conf() is None else [])
+    if opts:
         # defaultJavaOptions, because --driver-java-options in
         # PYSPARK_SUBMIT_ARGS replaces extraJavaOptions set here.
-        builder = builder.config("spark.driver.defaultJavaOptions",
-                                 shlex.join(java_opts + jit_opts))
+        builder = builder.config("spark.driver.defaultJavaOptions", shlex.join(opts))
     saved = os.environ.get("SPARK_CONF_DIR")
     if conf_dir is not None:
         os.environ["SPARK_CONF_DIR"] = conf_dir  # the launcher reads it from our env

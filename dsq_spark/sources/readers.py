@@ -17,15 +17,24 @@ from __future__ import annotations
 
 import io
 import json
+import logging
 import os
 import re
+import stat
 import tempfile
+import weakref
 import zipfile
+from collections import OrderedDict
 from xml.etree import ElementTree
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+
+# Says for each JSON and CSV input whether its schema was inferred or
+# reused (the CLI's --verbose shows these records).
+_log = logging.getLogger(__name__)
 
 
 class UnknownFileType(ValueError):
@@ -60,6 +69,7 @@ def read_csv(spark: SparkSession, path: str, convert_numbers: bool = False,
         # The all-string schema Spark would infer, without the job that
         # reads the header line to infer it.
         reader = reader.schema(T.StructType([T.StructField(n, T.StringType()) for n in names]))
+    _log.info("schema of %s: %s", path, "inferred" if names is None else "taken from its header")
     return reader.csv(path)
 
 
@@ -147,8 +157,8 @@ def _sample_json_records(path: str, array: bool, limit: int = _VARIED_SAMPLE):
         return []
 
 
-def _tag_varied_columns(df: DataFrame, records) -> DataFrame:
-    """Attach `dsq_varied` metadata to top-level fields whose sampled JSON
+def _varied_shapes(records) -> dict[str, list[dict]]:
+    """The `dsq_varied` shapes of the top-level fields whose sampled JSON
     values mix scalar types (number + string + boolean in one field).
     SQLite — the engine the reference embeds — keeps per-VALUE storage
     classes for such a column (dsq creates untyped columns, so a JSON
@@ -172,21 +182,93 @@ def _tag_varied_columns(df: DataFrame, records) -> DataFrame:
                 s.add("string")
             else:
                 s.add("complex")
+    shapes = {}
     for name, s in seen.items():
         scalars = sorted(s & {"number", "string", "boolean"})
-        if len(scalars) >= 2 and "complex" not in s and name in df.columns:
-            shapes = [{"kind": "scalar", "scalar": t} for t in scalars]
+        if len(scalars) >= 2 and "complex" not in s:
+            shapes[name] = [{"kind": "scalar", "scalar": t} for t in scalars]
             if "null" in s:
-                shapes.append({"kind": "unknown"})
-            df = df.withMetadata(name, {"dsq_varied": shapes})
+                shapes[name].append({"kind": "unknown"})
+    return shapes
+
+
+def _tag_varied_columns(df: DataFrame, shapes: dict[str, list[dict]]) -> DataFrame:
+    """Attach each of `shapes` (_varied_shapes) to its column of `df` as
+    `dsq_varied` metadata."""
+    for name, varied in shapes.items():
+        if name in df.columns:
+            df = df.withMetadata(name, {"dsq_varied": varied})
     return df
+
+
+# A warm session reads the same JSON files again and again, and inferring
+# a schema is a job over the whole file: 64-81 ms for the 1k-row users JSON
+# of perfbench's `warm` workload on 4 cores, against 14-17 ms for the same
+# read given the schema, and its dsq_varied sample parses up to 1 MB more
+# in Python.  So each SparkSession keeps, for its last _SCHEMA_MEMO_ENTRIES
+# reads, the schema and the varied shapes it found, keyed by the file as it
+# is now (its real path, device, inode, size, mtime and ctime), the reader
+# mode and the session conf that JSON inference reads.  A file written
+# since, or a conf set since, misses, and is inferred again.
+_SCHEMA_MEMO_ENTRIES = 32
+_INFERENCE_CONFS = ("spark.sql.columnNameOfCorruptRecord", "spark.sql.caseSensitive",
+                    "spark.sql.session.timeZone", "spark.sql.timestampType",
+                    "spark.sql.legacy.timeParserPolicy")
+_schema_memos: "weakref.WeakKeyDictionary[SparkSession, OrderedDict]" = \
+    weakref.WeakKeyDictionary()
+
+
+def _memo_key(spark: SparkSession, path: str, array: bool) -> tuple | None:
+    """The memo key of `path` as it is now, or None for anything but one
+    regular file (a directory, a glob, a missing path)."""
+    try:
+        real = os.path.realpath(path)
+        st = os.stat(real)
+    except (OSError, ValueError):
+        return None
+    if not stat.S_ISREG(st.st_mode):
+        return None
+    return (real, st.st_dev, st.st_ino, st.st_size, st.st_mtime_ns, st.st_ctime_ns,
+            array, tuple(spark.conf.get(k) for k in _INFERENCE_CONFS))
+
+
+def _read_json(spark: SparkSession, path: str, array: bool,
+               varied: bool) -> DataFrame:
+    """`spark.read.json(path)` (multiLine for an array), with the schema
+    from the session's memo when it holds one for the file as it is now.
+    With `varied`, the top-level columns carry their dsq_varied shapes
+    (_varied_shapes of a head sample, also memoized)."""
+    reader = spark.read.option("multiLine", True) if array else spark.read
+    key = _memo_key(spark, path, array)
+    memo = _schema_memos.setdefault(spark, OrderedDict())
+    entry = memo.get(key) if key is not None else None
+    if entry is not None:
+        memo.move_to_end(key)
+        df = reader.schema(entry[0]).json(path)
+        _log.info("schema of %s: reused", path)
+    else:
+        df = reader.json(path)
+        _log.info("schema of %s: inferred", path)
+        # an empty schema (no records) is cheap to infer and is not one a
+        # read can be given
+        if key is not None and df.schema.fields:
+            entry = memo[key] = [df.schema, None]
+            while len(memo) > _SCHEMA_MEMO_ENTRIES:
+                memo.popitem(last=False)
+    if not varied:
+        return df
+    if entry is None:
+        return _tag_varied_columns(df, _varied_shapes(_sample_json_records(path, array)))
+    if entry[1] is None:
+        entry[1] = _varied_shapes(_sample_json_records(path, array))
+    return _tag_varied_columns(df, entry[1])
 
 
 def read_json_array(spark: SparkSession, path: str, doc_path: str | None = None) -> DataFrame:
     """JSON file whose top level is an array of objects; with `doc_path`,
     navigate to a nested array-of-objects first ({N, "obj.path"} tables —
     reference main.go:76-78, README.md:239-302)."""
-    df = spark.read.option("multiLine", True).json(path)
+    df = _read_json(spark, path, array=True, varied=not doc_path)
     if doc_path:
         cur = df
         for part in doc_path.split("."):
@@ -204,7 +286,7 @@ def read_json_array(spark: SparkSession, path: str, doc_path: str | None = None)
         raise ValueError(NOT_ARRAY_ERROR)
     if df.columns == ["_corrupt_record"]:
         raise ValueError(NOT_ARRAY_ERROR)
-    return _tag_varied_columns(df, _sample_json_records(path, array=True))
+    return df
 
 
 def _is_array(df: DataFrame, col: str) -> bool:
@@ -214,8 +296,7 @@ def _is_array(df: DataFrame, col: str) -> bool:
 
 
 def read_jsonl(spark: SparkSession, path: str) -> DataFrame:
-    df = spark.read.json(path)
-    return _tag_varied_columns(df, _sample_json_records(path, array=False))
+    return _read_json(spark, path, array=False, varied=True)
 
 
 def read_cjson(spark: SparkSession, path: str) -> DataFrame:
@@ -234,7 +315,7 @@ def read_cjson(spark: SparkSession, path: str) -> DataFrame:
         obj, i = dec.raw_decode(text, i)
         rows.append(obj)
     return _tag_varied_columns(_rows_to_df(spark, rows),
-                               rows[:_VARIED_SAMPLE])
+                               _varied_shapes(rows[:_VARIED_SAMPLE]))
 
 
 def _rows_to_df(spark: SparkSession, rows: list) -> DataFrame:

@@ -218,8 +218,9 @@ def test_double_quote_fallback_logs_only_a_real_failure(spark):
 def test_a_call_writes_no_progress_bar_or_fallback_error(tmp_path):
     """A CLI call's stderr carries nothing dsq would not print: no console
     progress bar for a stage that runs over the 500 ms after which Spark
-    draws one (a self-join of 4,000 rows), and no trace of the first
-    attempt that the double-quote fallback then answers."""
+    draws one (a self-join of 4,000 rows), no trace of the first attempt
+    that the double-quote fallback then answers, and no log4j banner or
+    warning (the driver logs errors only, dsq_spark/log4j2.properties)."""
     import subprocess
     import sys
 
@@ -234,6 +235,7 @@ def test_a_call_writes_no_progress_bar_or_fallback_error(tmp_path):
     assert json.loads(p.stdout) == [{"tag": "teal", "n": 4000 * 3999 // 2}]
     assert "[Stage" not in p.stderr
     assert "teal" not in p.stderr and "Traceback" not in p.stderr, p.stderr[-3000:]
+    assert "log4j" not in p.stderr and "NativeCodeLoader" not in p.stderr, p.stderr[-3000:]
 
 
 def test_quoted_names_and_comments_match_sqlite(spark, tmp_path):
@@ -522,6 +524,20 @@ def test_strict_json_flag_sets_env():
         assert os.environ.get("DSQ_STRICT_JSON") == "1"
     finally:
         os.environ.pop("DSQ_STRICT_JSON", None)
+
+
+def test_strict_json_lasts_for_its_own_call(spark):
+    """A --strict-json call leaves the next call in the same session soft:
+    `run` restores DSQ_STRICT_JSON when it returns."""
+    one = os.path.join(FIX, "cli_users.csv")
+    sql = "SELECT json_extract('{bad', '$.a') AS a FROM {} LIMIT 1"
+    session = spark.newSession()
+    assert "DSQ_STRICT_JSON" not in os.environ
+    assert _run([one, sql], session) == (0, '[{"a": null}]\n')
+    with pytest.raises(Exception, match="malformed JSON"):
+        _run(["--strict-json", one, sql], session)
+    assert "DSQ_STRICT_JSON" not in os.environ
+    assert _run([one, sql], session) == (0, '[{"a": null}]\n')
 
 
 def test_cli_unquoted_numeric_comparison_is_lexical(spark, capsys):

@@ -123,16 +123,42 @@ def test_unknown_extension(spark):
         read_file(spark, f"{FIX}/u.xyz")
 
 
+# (records, schema DDL or None for inference, flattened first row)
+_NESTED = [
+    ([{"id": 1, "loc": {"city": "Oslo", "pos": {"lat": 1.5}}, "tags": [1, 2]}],
+     None,
+     {"id": 1, "loc.city": "Oslo", "loc.pos.lat": 1.5,
+      "tags": "[1,2]"}),  # arrays serialize to JSON strings
+    # awkward nested keys: a backtick, a space, a dot (escaped in the flat
+    # name), non-ASCII text; array leaves under a struct; `v` mixes a
+    # number and a string, so it is varied and keeps its dsq_varied tag
+    ([{"id": 1, "s": {"a`b": 1, "c d": {"e.f": "x", "ключ": [{"k": 1}]}, "é": [1]},
+       "v": 1},
+      {"id": 2, "s": {"a`b": 2}, "v": "two"}],
+     None,
+     {"id": 1, "s.a`b": 1, "s.c d.e\\.f": "x", "s.c d.ключ": '[{"k":1}]',
+      "s.é": "[1]", "v": "1"}),
+    # a map leaf (JSON inference never makes one) serializes like an array
+    ([{"id": 1, "s": {"m": {"k": 2}, "n": 3}}],
+     "id BIGINT, s STRUCT<m: MAP<STRING, BIGINT>, n: BIGINT>",
+     {"id": 1, "s.m": '{"k":2}', "s.n": 3}),
+]
+
+
 def test_flatten_nested(spark, tmp_path):
-    p = tmp_path / "n.json"
-    p.write_text(json.dumps([
-        {"id": 1, "loc": {"city": "Oslo", "pos": {"lat": 1.5}}, "tags": [1, 2]},
-    ]))
-    df = flatten(read_file(spark, str(p)))
-    assert set(df.columns) == {"id", "loc.city", "loc.pos.lat", "tags"}
-    row = df.collect()[0]
-    assert row["loc.city"] == "Oslo"
-    assert row["tags"] == "[1,2]"  # arrays serialize to JSON strings
+    for i, (records, schema, first_row) in enumerate(_NESTED):
+        p = tmp_path / f"n{i}.json"
+        p.write_text(json.dumps(records))
+        raw = spark.read.schema(schema).json(str(p), multiLine=True) if schema \
+            else read_file(spark, str(p))
+        df = flatten(raw)
+        assert sorted(df.columns) == sorted(first_row)
+        assert df.orderBy("id").collect()[0].asDict() == first_row
+        if "v" in first_row:
+            assert "dsq_varied" in df.schema["v"].metadata
+        # a top-level scalar keeps its metadata (the varied tag above)
+        assert {f.name: f.metadata for f in df.schema.fields if f.metadata} == {
+            f.name: f.metadata for f in raw.schema.fields if f.metadata}
 
 
 def test_logfmt(spark):
