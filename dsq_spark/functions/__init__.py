@@ -660,7 +660,7 @@ def _add_months_expr(e: str, months: int, extra_days: float) -> str:
 
     out = _bind_once(e, step)
     if extra_days:
-        out = f"({out} + make_dt_interval(0, 0, 0, CAST({extra_days * 86400.0!r} AS DOUBLE)))"
+        out = f"({out} + make_dt_interval(0, 0, 0, CAST({extra_days * 86400.0!r}D AS DOUBLE)))"
     return out
 
 
@@ -675,7 +675,7 @@ def _apply_modifier(e: str, raw: str) -> str:
         n, unit = float(m.group(1)), m.group(2)
         if unit in ("day", "hour", "minute", "second"):
             mult = {"day": 86400.0, "hour": 3600.0, "minute": 60.0, "second": 1.0}[unit]
-            return f"({e} + make_dt_interval(0, 0, 0, CAST({n * mult!r} AS DOUBLE)))"
+            return f"({e} + make_dt_interval(0, 0, 0, CAST({n * mult!r}D AS DOUBLE)))"
         whole = int(n)  # truncate toward zero, like SQLite's (int) cast
         frac = n - whole
         if unit == "month":
@@ -798,7 +798,8 @@ def _dt_base(tv: str, mods: list[str]) -> tuple[str, list[str]]:
                     f"ELSE {_best_effort_inline(tv)} END)", mods[1:])
     # SQLite: a NUMERIC timevalue is a Julian day number (lang_datefunc
     # "time values" #4-5 — both the bare number and the numeric string)
-    txt = lit if lit is not None else tv.strip()
+    # (a real literal arrives D-suffixed: rewrite._rewrite_tokens)
+    txt = lit if lit is not None else _re.sub(r"(?<=[\d.])D$", "", tv.strip())
     try:
         float(txt)
         return _jdn_ts(f"CAST({tv} AS DOUBLE)"), mods
@@ -974,9 +975,10 @@ def _minmax_alias(agg: str, scalar: str):
     return build
 
 
-# a signed, possibly parenthesized numeric literal (int or real)
+# a signed, possibly parenthesized numeric literal (int, or a real with
+# the D suffix rewrite._rewrite_tokens gives it)
 _BARE_NUM_LIT = __import__("re").compile(
-    r"[-+(\s]*\d+(?:\.\d*)?(?:[eE][+-]?\d+)?[)\s]*")
+    r"[-+(\s]*\d+(?:\.\d*)?(?:[eE][+-]?\d+)?D?[)\s]*")
 
 
 def _total_alias(parts: list[str]) -> str:
@@ -990,9 +992,9 @@ def _total_alias(parts: list[str]) -> str:
     a = ", ".join(p.strip() for p in parts)
     m = _re.match(r"(?is)^DISTINCT\s+(.*)$", a)
     if m:
-        return (f"coalesce(CAST(sum(DISTINCT 0.0 + ({m.group(1)})) "
+        return (f"coalesce(CAST(sum(DISTINCT 0.0D + ({m.group(1)})) "
                 f"AS DOUBLE), 0.0d)")
-    return f"coalesce(CAST(sum(0.0 + ({a})) AS DOUBLE), 0.0d)"
+    return f"coalesce(CAST(sum(0.0D + ({a})) AS DOUBLE), 0.0d)"
 
 
 def _group_concat_alias(parts: list[str], over: str = "") -> str:
@@ -1234,7 +1236,7 @@ def _quote_alias(parts: list[str]) -> str:
         f"ELSE concat('''', replace(string({x}), '''', ''''''), '''') END")
 
 
-_NUM_LIT = _re.compile(r"^-?\d+\.\d+$")
+_NUM_LIT = _re.compile(r"^-?\d+\.\d+D$")  # a D-suffixed real literal
 
 
 import re
@@ -1296,12 +1298,12 @@ AGG_ALIASES = {
     "printf": _printf_alias,
     "stdev": "stddev_samp({args})",
     "stddev": "stddev_samp({args})",
-    "percentile_25": "percentile({args}, 0.25)",
-    "percentile_50": "percentile({args}, 0.50)",
-    "percentile_75": "percentile({args}, 0.75)",
-    "percentile_90": "percentile({args}, 0.90)",
-    "percentile_95": "percentile({args}, 0.95)",
-    "percentile_99": "percentile({args}, 0.99)",
+    "percentile_25": "percentile({args}, 0.25D)",
+    "percentile_50": "percentile({args}, 0.50D)",
+    "percentile_75": "percentile({args}, 0.75D)",
+    "percentile_90": "percentile({args}, 0.90D)",
+    "percentile_95": "percentile({args}, 0.95D)",
+    "percentile_99": "percentile({args}, 0.99D)",
     "group_concat": _group_concat_alias,
     # total() is ALWAYS REAL in SQLite (typeof(total(1)) is 'real',
     # total(2) || 'x' is '2.0x' — probed vs sqlite3 3.40.1); the inner
@@ -1390,7 +1392,7 @@ AGG_ALIASES = {
     # SQLite random() is a uniform int64; rand() is a uniform double, so the
     # scaled cast loses the low ~11 bits of entropy — fine for its dominant
     # use (ORDER BY random(), random sampling). Saturating non-ANSI cast.
-    "random": lambda parts: "CAST((rand() - 0.5d) * 1.8446744073709550E19 AS BIGINT)",
+    "random": lambda parts: "CAST((rand() - 0.5d) * 1.8446744073709550E19D AS BIGINT)",
     # SQLite date/time family with modifier support ('now', ±N units,
     # 'start of X', 'weekday N', 'unixepoch', 'localtime'/'utc') — compiled
     # to Catalyst expressions at rewrite time. These shadow the plainer
@@ -1418,7 +1420,7 @@ AGG_ALIASES = {
 # upstream (rewrite._fold_filter_over), so only the OVER clause arrives.
 AGG_ALIASES_OVER = {
     "total": lambda parts, over: (
-        f"coalesce(CAST(sum(0.0 + "
+        f"coalesce(CAST(sum(0.0D + "
         f"({', '.join(p.strip() for p in parts)})) "
         f"{over} AS DOUBLE), 0.0d)"),
     "group_concat": _group_concat_alias,

@@ -2,20 +2,27 @@
 
 The reference's only "planner" is a string rewrite of `{N}` table macros
 (reference main.go:54-88); everything else is passed to SQLite verbatim.
-Spark SQL is a near-superset of the SQLite dialect, so parity needs:
+Spark SQL is a near-superset of the SQLite dialect; rewrite_query_tracked
+closes the gap in this order:
 
-  * `{}` / `{N}` / `{N, "obj.path"}` / `{"obj.path"}` → temp-view names
-    (main.go:56-88, README.md:185-302);
-  * `REGEXP` operator → `RLIKE` (README.md:405-415 — documented syntax
-    delta: Go regexp vs Java regexp);
-  * `col->expr` / `col->>expr` → `get_json_object` (README.md:389-403;
-    both return TEXT, matching SQLite's behavior on dsq's serialized
-    nested arrays);
-  * double-quoted identifiers → backticks (SQLite quotes identifiers with
-    `"`, Spark with backticks);
-  * a handful of SQLite spellings Spark lacks (`IIF` exists in Spark 4;
-    `GROUP_CONCAT` → listagg-equivalent via concat_ws/collect_list is
-    registered as a SQL macro in dsq_spark.functions).
+  1. statement-level passes over the SQLite text: `{}` / `{N}` /
+     `{N, "obj.path"}` / `{"obj.path"}` → temp-view names (main.go:56-88,
+     README.md:185-302), json_each/json_tree → LATERAL VIEW, SQLite's
+     result-column names for unaliased select items, and SQLite's bare
+     columns in aggregate queries;
+  2. ONE pass over the sqllex tokens (_rewrite_tokens) for every
+     token-level form: string-literal backslashes, `"…"` identifiers →
+     backticks, non-ASCII names, REGEXP → RLIKE, COLLATE names, LIKE →
+     ILIKE, hex and real literals, and `x->key` / `x->>key` →
+     get_json_object;
+  3. call-site rewrites: FILTER on window aggregates, and the function
+     aliases of dsq_spark.functions.AGG_ALIASES (`percentile_75(x)`,
+     `group_concat`, the datetime family, …);
+  4. dsq_spark.sqlexpr.rewrite_semantics: SQLite's arithmetic, affinity,
+     CAST, truthiness and GLOB (Spark has no GLOB operator; both operands
+     take SQLite's TEXT rendering);
+  5. tree-size and analyzer guards: repeated per-row chains projected
+     once, SQL functions inlined in aggregate statements, emission caps.
 
 All rewrites take SQLite's lexical rules from dsq_spark.sqllex: string
 literals are never touched, and a quote, comma or parenthesis inside a
@@ -37,8 +44,8 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass
 
-from dsq_spark.sqllex import (WORD, close_paren, inside, opaque_spans,
-                              split_top, wrapped)
+from dsq_spark.sqllex import (WORD, Tok, close_paren, inside, opaque_spans,
+                              split_top, tokenize, wrapped)
 
 # {N}, {}, {N, "path"}, {"path"}, {N, 'path'} — reference regex main.go:54.
 TABLE_MACRO = re.compile(
@@ -94,104 +101,179 @@ def _sub_table_macros(sql: str) -> str:
     return TABLE_MACRO.sub(repl, sql)
 
 
-_WORD_RE = re.compile(rf"(?<![\w$]){WORD}")
+# SQLite collation names → Spark 4 collations.  NOCASE folds ASCII only in
+# SQLite vs full Unicode in UTF8_LCASE (documented delta); RTRIM ignores
+# trailing blanks in comparisons — same in *_RTRIM.
+_COLLATIONS = {"nocase": "UTF8_LCASE", "rtrim": "UTF8_BINARY_RTRIM",
+               "binary": "UTF8_BINARY"}
 
 
-def _quote_non_ascii(text: str) -> str:
-    """Backtick every unquoted identifier holding a character at or above
-    U+0080 (`naïve`): SQLite counts such a character as an identifier
-    character, while Spark takes only ASCII letters, digits and `_` in an
-    unquoted identifier.  ``text`` holds no literal, quoted identifier or
-    comment."""
-    if text.isascii():
-        return text
-    return _WORD_RE.sub(
-        lambda m: m.group() if m.group().isascii() else f"`{m.group()}`",
-        text)
+def _glued(sql: str, t: Tok) -> bool:
+    """True when number token ``t`` touches a word, a number, a `.`, a `$`
+    or a quote (`1.5e`, `x1.5`, `0x1Fg`): it is no literal of its own and
+    is left as written."""
+    before = sql[t.start - 1:t.start]
+    after = sql[t.end:t.end + 1]
+    return bool(before and (before.isalnum() or before in "_.`$\"")
+                or after and (after.isalnum() or after in "_."))
 
 
-def _rewrite_chunk(chunk: str) -> str:
-    """Keyword rewrites for the text between two string literals (table
-    macros were already substituted whole-statement by _sub_table_macros
-    — their single-quoted path operands would split a per-chunk scan)."""
-    # REGEXP operator → RLIKE (word-boundary, case-insensitive)
-    chunk = re.sub(r"\bREGEXP\b", "RLIKE", chunk, flags=re.IGNORECASE)
-    # SQLite collation names → Spark 4 collations. NOCASE folds ASCII only
-    # in SQLite vs full Unicode in UTF8_LCASE (documented delta); RTRIM
-    # ignores trailing blanks in comparisons — same in *_RTRIM.
-    chunk = re.sub(r"\bCOLLATE\s+NOCASE\b", "COLLATE UTF8_LCASE", chunk,
-                   flags=re.IGNORECASE)
-    chunk = re.sub(r"\bCOLLATE\s+RTRIM\b", "COLLATE UTF8_BINARY_RTRIM", chunk,
-                   flags=re.IGNORECASE)
-    chunk = re.sub(r"\bCOLLATE\s+BINARY\b", "COLLATE UTF8_BINARY", chunk,
-                   flags=re.IGNORECASE)
-    return chunk
+def _hex_value(text: str) -> str:
+    """A SQLite hex integer literal (``0x10``, sqlite ≥3.8.6) is a 64-bit
+    TWO'S-COMPLEMENT integer: 0xFFFFFFFFFFFFFFFF is -1, 0x8000000000000000
+    is int64 min, and more than 16 significant hex digits is the 'hex
+    literal too big' error (probed vs sqlite3 3.40.1).  Spark has no hex
+    literal, so it becomes its exact decimal int64 spelling, negative
+    values parenthesized so a preceding unary minus can never fuse into a
+    `--` comment."""
+    from dsq_spark.sqlexpr import _int_lit
+
+    v = int(text, 16)
+    if v > 0xFFFFFFFFFFFFFFFF:
+        raise ValueError(f"hex literal too big: {text}")
+    if v >= 1 << 63:
+        v -= 1 << 64
+    out = _int_lit(v)
+    return f"({out})" if v < 0 and not out.startswith("(") else out
 
 
-_ARROW = re.compile(
-    r"([A-Za-z_][\w.]*|`[^`]+`)\s*->(>?)\s*(?:'((?:[^']|'')*)'|(\d+))")
+def _arrow_operand(out: list[str],
+                   units: list[tuple[int, str, int | None]]) -> int | None:
+    """Index in ``units`` where the left operand of a `->`/`->>` starts:
+    the preceding dotted name (`t."j"`), the preceding balanced `( … )`
+    group with the name of the function it calls (`json(j)`), or an
+    arrow already rewritten (`j->'a'->'b'`).  None when there is none."""
+    from dsq_spark.sqlexpr import _CALLABLE_RESERVED, _RESERVED
+
+    k = len(units) - 1
+    if k < 0:
+        return None
+    role = units[k][1]
+    if role == "expr":
+        return k
+    if role == ")":
+        k = units[k][2]
+        if k is not None and k > 0 and units[k - 1][1] == "name":
+            fn = out[units[k - 1][0]].lower()
+            if fn in _CALLABLE_RESERVED or fn not in _RESERVED | {"not"}:
+                k -= 1
+        return k
+    if role != "name":
+        return None
+    while k >= 2 and units[k - 1][1] == "." and units[k - 2][1] == "name":
+        k -= 2
+    return k
 
 
-def _rewrite_arrows(sql: str) -> str:
-    """col->key / col->>key → get_json_object(col, '$.key' / '$[i]'); a
-    key that starts with `$` is the JSON path itself (`j->>'$.a[0]'`).
+def _rewrite_tokens(sql: str) -> tuple[str, frozenset[str]]:
+    """SQLite's token-level forms → Spark SQL, in one pass over
+    sqllex.tokenize(sql).  The text between two tokens (whitespace and
+    comments) is copied as it stands, so a literal, a quoted identifier
+    or a comment is never edited by a rule meant for another token.
 
-    SQLite `->` returns a JSON text representation and `->>` returns SQL
-    text; on dsq's flattened data (arrays of scalars serialized to JSON
-    strings) both surface as TEXT, which is exactly what
-    get_json_object returns (tested in the reference at
-    scripts/test.py:392-398: `c->1` = '2').
-
-    Runs over the whole statement (the KEY operand is itself a string
-    literal, so per-chunk rewriting would split the match); matches starting
-    inside a literal or a backticked alias are skipped.
-    """
-    spans = opaque_spans(sql)
-    bt_starts = {a for a, _ in spans if sql[a] == "`"}
-
-    def repl(m: re.Match) -> str:
-        # a match may legitimately START a backtick span (`a.b`->0 — the
-        # column operand is itself backtick-quoted); skip only matches
-        # strictly inside a span (alias text) or inside a string literal
-        s = m.start(1)
-        if inside(spans, s) and s not in bt_starts:
-            return m.group(0)
-        col, key, idx = m.group(1), m.group(3), m.group(4)
-        if idx is not None:
-            path = f"$[{idx}]"
-        else:
-            path = key if key.startswith("$") else f"$.{key}"
-        return f"get_json_object({col}, '{path}')"
-
-    return _ARROW.sub(repl, sql)
-
-
-_GLOB = re.compile(
-    r"\bGLOB\s*('(?:[^'\\]|\\.|'')*')"
-    # the literal must BE the whole pattern operand: a following
-    # tighter-binding operator (||, arithmetic, bitwise) extends the
-    # pattern expression (`x GLOB '' * y` matches against ''*y — r7
-    # probe sweep), and the expression compiler handles those
-    r"(?!\s*(?:\|\||<<|>>|[*/%+&|~-]))",
-    re.IGNORECASE)
-
-
-def _rewrite_glob(sql: str) -> str:
-    """`x GLOB 'pat'` → `x RLIKE glob_regex('pat')` (full-match semantics —
-    glob_regex anchors; see dsq_spark.functions). SQLite also exposes the
-    function form glob(pat, s), registered directly. Only literal patterns
-    WHOLLY forming the operand are rewritten — computed patterns compile
-    in dsq_spark.sqlexpr (both operands through SQLite's TEXT rendering).
-    Runs whole-statement because the pattern operand IS a literal; GLOB
-    keywords inside literals are skipped via span check."""
-    spans = opaque_spans(sql)
-
-    def repl(m: re.Match) -> str:
-        if inside(spans, m.start()):
-            return m.group(0)
-        return f"RLIKE glob_regex({m.group(1)})"
-
-    return _GLOB.sub(repl, sql)
+      * a string literal gets its backslashes doubled: SQLite literals are
+        escape-free ('' is the ONLY escape), while Spark's parser reads
+        C-style escapes, so regex/glob/LIKE-escape patterns written in the
+        SQLite dialect survive;
+      * `"name"` → `name`, and the name is returned with the text: the
+        CLI retries a double-quoted token that does NOT resolve as a
+        column as a string literal (SQLite's documented misfeature, which
+        dsq queries in the wild rely on — e.g. split_part(x, ".", -1));
+      * a word holding a character at or above U+0080 (`naïve`) is
+        backticked: SQLite counts it as an identifier character, Spark
+        takes only ASCII letters, digits and `_` in a bare name;
+      * the word REGEXP → RLIKE (README.md:405-415 — documented syntax
+        delta: Go regexp vs Java regexp), COLLATE NOCASE/RTRIM/BINARY →
+        Spark's collations, and the word LIKE → ILIKE: SQLite's LIKE is
+        ASCII-case-insensitive by default (PRAGMA case_sensitive_like is
+        OFF and dsq never flips it), Spark's is not.  A LIKE followed by
+        '(' is left alone: that is the function form like(pat, x) or the
+        parenthesized-pattern operator, both expanded by _like_fn_alias.
+        Delta: ILIKE folds full Unicode where SQLite folds ASCII only
+        (PARITY.md);
+      * a hex integer literal → its int64 value (_hex_value); Spark has
+        none (a bare 0x10 dies with UNRESOLVED_COLUMN);
+      * a real literal (a '.' or an exponent) gets a D suffix: SQLite has
+        no DECIMAL type and every such literal is an IEEE-754 REAL, while
+        Spark parses `3.0` as DECIMAL(2,1) and computes at a decimal scale
+        (length(c)/(a/3.0) = -2.2500005625… vs SQLite's -2.25 — found by
+        tests/test_sqlite_differential.py).  Integer literals stay;
+      * `x->key` / `x->>key` → get_json_object(x, '$.key'), a numeric key
+        → '$[i]', and a key that starts with `$` is the JSON path itself
+        (README.md:389-403).  SQLite `->` returns JSON text and `->>` SQL
+        text; on dsq's flattened data both surface as TEXT, which is what
+        get_json_object returns (reference scripts/test.py:392-398:
+        `c->1` = '2').  The left operand is chosen by _arrow_operand."""
+    toks = tokenize(sql)
+    out: list[str] = []
+    dquoted: set[str] = set()
+    # (index in out, role, index of the matching "(" for a ")") per
+    # token written: what _arrow_operand looks back over
+    units: list[tuple[int, str, int | None]] = []
+    opens: list[int] = []
+    pos, i, n = 0, 0, len(toks)
+    while i < n:
+        t = toks[i]
+        out.append(sql[pos:t.start])
+        pos = t.end
+        nxt = toks[i + 1] if i + 1 < n else None
+        text, role, partner = t.text, "other", None
+        if t.kind == "str":
+            text = text.replace("\\", "\\\\")
+        elif t.kind == "dq":
+            if len(text) > 1 and text[-1] == '"':
+                name = text[1:-1].replace('""', '"')
+                dquoted.add(name)
+                text = "`" + name.replace("`", "``") + "`"
+            role = "name"
+        elif t.kind == "bt":
+            role = "name"
+        elif t.kind == "word":
+            role = "name"
+            if not text.isascii():
+                text = f"`{text}`"
+            elif t.low == "regexp":
+                text = "RLIKE"
+            elif t.low == "like" and (nxt is None or nxt.text != "("):
+                text = "ILIKE"
+            elif (t.low == "collate" and nxt is not None
+                  and nxt.kind == "word" and nxt.low in _COLLATIONS):
+                text, role = f"COLLATE {_COLLATIONS[nxt.low]}", "other"
+                pos, i = nxt.end, i + 1
+        elif t.kind == "hex":
+            if not _glued(sql, t):
+                text = _hex_value(text)
+        elif t.kind == "num":
+            if (text[-1] in "0123456789." and any(c in text for c in ".eE")
+                    and not _glued(sql, t)):
+                text += "D"
+        elif text in ("->", "->>") and nxt is not None:
+            path = None
+            if nxt.kind == "str" and len(nxt.text) > 1 and nxt.text[-1] == "'":
+                key = nxt.text[1:-1].replace("\\", "\\\\")
+                path = key if key.startswith("$") else f"$.{key}"
+            elif nxt.kind == "num" and nxt.text.isdigit():
+                path = f"$[{nxt.text}]"
+            lo = None if path is None else _arrow_operand(out, units)
+            if lo is not None:
+                left = "".join(out[units[lo][0]:units[-1][0] + 1])
+                del out[units[lo][0]:], units[lo:]
+                units.append((len(out), "expr", None))
+                out.append(f"get_json_object({left}, '{path}')")
+                pos, i = nxt.end, i + 2
+                continue
+        elif text == "(":
+            role = "("
+            opens.append(len(units))
+        elif text == ")":
+            role, partner = ")", opens.pop() if opens else None
+        elif text == ".":
+            role = "."
+        units.append((len(out), role, partner))
+        out.append(text)
+        i += 1
+    out.append(sql[pos:])
+    return "".join(out), frozenset(dquoted)
 
 
 # Words that end an expression rather than naming it (so a trailing bare
@@ -967,36 +1049,6 @@ def _rewrite_json_each(sql: str) -> str:
     return "".join(out)
 
 
-_REAL_LIT = re.compile(
-    r"(?<![\w.`])(?:\d+\.\d*(?:[eE][+-]?\d+)?"
-    r"|\.\d+(?:[eE][+-]?\d+)?"
-    r"|\d+[eE][+-]?\d+)(?![\w.])"
-)
-
-
-def _rewrite_real_literals(sql: str) -> str:
-    """SQLite has no DECIMAL type: every numeric literal with a '.' or an
-    exponent is an IEEE-754 REAL. Spark parses `3.0` as DECIMAL(2,1) and
-    then does precision-bounded DECIMAL arithmetic, which produces genuinely
-    different values (a/3.0 as decimal division rounds at a decimal scale:
-    length(c)/(a/3.0) = -2.2500005625... vs SQLite's -2.25 — found by
-    tests/test_sqlite_differential.py). Suffixing the literal with D makes
-    it a Spark DOUBLE literal, restoring SQLite's arithmetic. Integer
-    literals stay integers (both engines agree). Span-aware: literals
-    inside strings and backticked (verbatim-name) aliases are untouched,
-    and the D suffix blocks re-matching, so the pass is idempotent."""
-    spans = opaque_spans(sql)
-    out, i = [], 0
-    for m in _REAL_LIT.finditer(sql):
-        if inside(spans, m.start()):
-            continue
-        out.append(sql[i:m.end()])
-        out.append("D")
-        i = m.end()
-    out.append(sql[i:])
-    return "".join(out)
-
-
 _AGG_CALL = re.compile(
     r"(?<![\w.`$])(?:sum|avg|count|min|max|percentile|percentile_approx|"
     r"median|mode|stddev_samp|stddev_pop|var_samp|var_pop|listagg|"
@@ -1160,70 +1212,6 @@ def _inline_agg_safe(sql: str) -> str:
                         "(CASE WHEN ({0}) = ({1}) THEN NULL "
                         "ELSE ({0}) END)")
     return out
-
-
-_HEX_LIT = re.compile(r"(?<![\w.`$])0[xX]([0-9A-Fa-f]+)(?![\w.])")
-
-
-def _rewrite_hex_literals(sql: str) -> str:
-    """SQLite hex integer literals (``0x10``, sqlite ≥3.8.6; the
-    reference passes them straight to SQLite — main.go:236-265) are
-    64-bit TWO'S-COMPLEMENT integers: 0xFFFFFFFFFFFFFFFF is -1,
-    0x8000000000000000 is int64 min, and more than 16 significant hex
-    digits is the 'hex literal too big' error (probed vs sqlite3
-    3.40.1).  Spark has no hex literal form (a bare 0x10 dies with
-    UNRESOLVED_COLUMN — r7 judge probe), so they rewrite to their exact
-    decimal int64 spelling.  Span-aware (strings/backticks untouched)
-    and idempotent: the output contains no 0x shape.  Negative values
-    are parenthesized so a preceding unary minus can never fuse into a
-    `--` comment."""
-    if "0x" not in sql and "0X" not in sql:
-        return sql
-    from dsq_spark.sqlexpr import _int_lit
-
-    spans = opaque_spans(sql)
-
-    def repl(m: re.Match) -> str:
-        if inside(spans, m.start()):
-            return m.group(0)
-        v = int(m.group(1), 16)
-        if v > 0xFFFFFFFFFFFFFFFF:
-            raise ValueError(f"hex literal too big: {m.group(0)}")
-        if v >= 1 << 63:
-            v -= 1 << 64
-        out = _int_lit(v)
-        if v < 0 and not out.startswith("("):
-            out = f"({out})"
-        return out
-
-    return _HEX_LIT.sub(repl, sql)
-
-
-_LIKE_TOKEN = re.compile(r"\bLIKE\b(?!\s*\()", re.IGNORECASE)
-
-
-def _rewrite_like(sql: str) -> str:
-    """SQLite's LIKE operator is ASCII-case-insensitive by default (PRAGMA
-    case_sensitive_like is OFF and dsq never flips it); Spark's LIKE is
-    case-sensitive and ILIKE is not, so the operator token rewrites to
-    ILIKE outside string literals and backticked aliases. A LIKE followed
-    by '(' is left alone: that is either the function form like(pat, x)
-    (expanded to ILIKE by _like_fn_alias) or the parenthesized-pattern
-    operator form (reconstructed as ILIKE by the same alias). ESCAPE
-    clauses pass through — Spark ILIKE supports them. NOT LIKE needs no
-    special casing (only the LIKE token changes); RLIKE/ILIKE themselves
-    never match (no word boundary before their L). Delta: ILIKE folds full
-    Unicode where SQLite folds ASCII only (PARITY.md)."""
-    spans = opaque_spans(sql)
-    out, i = [], 0
-    for m in _LIKE_TOKEN.finditer(sql):
-        if inside(spans, m.start()):
-            continue
-        out.append(sql[i:m.start()])
-        out.append("ILIKE")
-        i = m.end()
-    out.append(sql[i:])
-    return "".join(out)
 
 
 _FROM_TABLE = re.compile(r"\s*(`[^`]+`|[A-Za-z_]\w*(?:\s*\.\s*[A-Za-z_]\w*)?)")
@@ -1497,7 +1485,6 @@ def rewrite_query_tracked(
     """Like rewrite_query, also returning the set of identifier names that
     came from double-quoted tokens — the CLI retries those as string
     literals when they fail column resolution (SQLite fallback)."""
-    dquoted: set[str] = set()
     # SQLite's EXPLAIN QUERY PLAN prefix (the reference passes it straight
     # to SQLite) → Spark's bare EXPLAIN; plain EXPLAIN already parses.
     sql = re.sub(r"^(\s*)EXPLAIN\s+QUERY\s+PLAN\b", r"\1EXPLAIN",
@@ -1506,39 +1493,10 @@ def rewrite_query_tracked(
     # SQLite bare-columns-in-aggregate-queries (runs on the aliased list:
     # every wrapped item keeps its verbatim SQLite result name)
     sql = _bare_agg_columns(sql, schema)
-    parts, run, pos = [], [], 0
-    for a, b in opaque_spans(sql):
-        run.append(_quote_non_ascii(sql[pos:a]))
-        tok, pos = sql[a:b], b
-        if tok[0] == "'":
-            # SQLite string literals are escape-free ('' is the ONLY escape;
-            # a backslash is a literal character), while Spark's parser
-            # processes C-style escapes — double backslashes so regex/glob/
-            # LIKE-escape patterns written in the SQLite dialect survive.
-            parts.append(_rewrite_chunk("".join(run)))
-            parts.append(tok.replace("\\", "\\\\"))
-            run = []
-        elif tok[0] == '"' and len(tok) > 1 and tok[-1] == '"':
-            # "quoted identifier" → `quoted identifier`.  The names are
-            # collected so the CLI can apply SQLite's double-quote
-            # fallback: a double-quoted token that does NOT resolve as a
-            # column is retried as a string literal (SQLite's documented
-            # misfeature, which dsq queries in the wild rely on — e.g.
-            # split_part(x, ".", -1)).
-            name = tok[1:-1].replace('""', '"')
-            dquoted.add(name)
-            run.append("`" + name.replace("`", "``") + "`")
-        else:
-            run.append(tok)
-    run.append(_quote_non_ascii(sql[pos:]))
-    parts.append(_rewrite_chunk("".join(run)))
-    # arrow + glob + alias rewriting run whole-statement (their matches can
-    # span a literal boundary) with literal-span skipping inside.
-    # real-literal suffixing runs after so decimals emitted by the alias/
-    # datetime compilers get the same double semantics as user literals.
-    out = _rewrite_real_literals(_rewrite_hex_literals(_rewrite_fn_aliases(
-        _fold_filter_over(
-            _rewrite_glob(_rewrite_like(_rewrite_arrows("".join(parts))))))))
+    # token-level forms, then the call-site rewrites over settled tokens
+    # (alias templates emit Spark's final spellings, e.g. 0.25D)
+    out, dquoted = _rewrite_tokens(sql)
+    out = _rewrite_fn_aliases(_fold_filter_over(out))
     # SQLite arithmetic/affinity semantics (integer division, CAST
     # numeric-prefix parse, truthiness) run LAST, over settled literal
     # typing.
@@ -1555,4 +1513,4 @@ def rewrite_query_tracked(
     # byte-identical.
     out = _inline_agg_safe(out)
     _check_emission_size(out)
-    return out, frozenset(dquoted)
+    return out, dquoted

@@ -2400,20 +2400,20 @@ class _Rw:
                     pieces[0] = nb
                     lk = "int"
                 if t.low == "glob":
-                    # GLOB whose pattern is NOT a string literal (the
-                    # text-level pass rewrites literal patterns only):
                     # Spark has no GLOB operator, and SQLite converts
                     # both operands to TEXT via its own rendering
-                    # ('' GLOB 2.5 is 0, not a parse error — r7 probes)
+                    # ('' GLOB 2.5 is 0, not a parse error — r7 probes;
+                    # 10000000.5 GLOB '1000*' is 1)
                     neg2 = bool(pieces) and \
                         pieces[-1].text.lower() == "not"
                     base2 = pieces[:-1] if neg2 else pieces
                     lhs2 = self._join(base2)
-                    po = self._not_value_operand(i + 1, hi, eq=True)
+                    rhs0 = i + 1
+                    po = self._not_value_operand(rhs0, hi, eq=True)
                     if po is not None:
                         (rp, rk2), i = po
                     else:
-                        (rp, rk2), i = self._rel(i + 1, hi)
+                        (rp, rk2), i = self._rel(rhs0, hi)
                     if "blob" in (lk, rk2):
                         # SQLite GLOB is 0 when either operand is a
                         # runtime BLOB — that check precedes even the
@@ -2430,7 +2430,12 @@ class _Rw:
                                 f"ELSE CAST(NULL AS BOOLEAN) END)")
                     else:
                         a2 = _sqlite_text_sql(lhs2, lk)
-                        b2g = _sqlite_text_sql(rp, rk2)
+                        # a literal pattern stays bare: an aggregate
+                        # statement folds glob_regex('…') to its regex
+                        # (rewrite._inline_agg_safe)
+                        b2g = (T[rhs0].text if i == rhs0 + 1
+                               and T[rhs0].kind == "str"
+                               else _sqlite_text_sql(rp, rk2))
                         expr = f"(({a2}) RLIKE glob_regex({b2g}))"
                         bsl = [c for c in (_cls_blob_selected(lhs2),
                                            _cls_blob_selected(rp))

@@ -90,7 +90,8 @@ def split_top(args: str) -> list[str] | None:
 
 
 # ---------------------------------------------------------------------------
-# Tokenizer (the dialect compiler in dsq_spark.sqlexpr parses these tokens)
+# Tokenizer (the rewrite's token pass and the dialect compiler in
+# dsq_spark.sqlexpr read these tokens)
 # ---------------------------------------------------------------------------
 
 # An unquoted identifier, by SQLite's rule: any character at or above
@@ -100,7 +101,9 @@ WORD = r"[A-Za-z_\u0080-\U0010FFFF][A-Za-z0-9_\u0080-\U0010FFFF]*"
 _TOKEN_RE = re.compile(
     r"(?P<skip>\s+|--[^\n]*\n?|/\*(?s:.*?)(?:\*/|\Z))"
     r"|(?P<str>'[^']*(?:''[^']*)*'?)"
+    r'|(?P<dq>"[^"]*(?:""[^"]*)*"?)'
     r"|(?P<bt>`[^`]*`?)"
+    r"|(?P<hex>0[xX][0-9A-Fa-f]+)"
     r"|(?P<num>(?:\d+\.?\d*|\.\d+)(?:[eE][+-]?\d+)?(?:BD|[dDfFlLsSyY])?)"
     rf"|(?P<word>{WORD})"
     r"|(?P<op><=>|->>|\|\||<<|>>|<=|>=|<>|!=|==|->|.)")
@@ -108,7 +111,7 @@ _TOKEN_RE = re.compile(
 
 @dataclass
 class Tok:
-    kind: str  # 'str' | 'bt' | 'num' | 'word' | 'op'
+    kind: str  # 'str' | 'dq' | 'bt' | 'hex' | 'num' | 'word' | 'op'
     text: str
     start: int
     end: int
@@ -116,14 +119,17 @@ class Tok:
 
 
 def tokenize(sql: str) -> list[Tok]:
-    """Lex into string-literal / backtick-ident / number / word / operator
-    tokens (positions kept for byte-exact reconstruction); whitespace and
+    """Lex into string-literal / `"…"` ident / backtick-ident / hex
+    integer (`0x1F`) / number / word / operator tokens.  Whitespace and
     SQL comments (`-- …`, `/* … */`) are skipped, so a `/` inside a
-    comment or literal never looks like division.  Runs over rewritten
-    text, where double-quoted identifiers are already backticked; a
-    doubled backtick lexes as two adjacent 'bt' tokens.  A word follows
-    SQLite's identifier rule (WORD), so `naïve` is one word; every other
-    character is a one-character operator token, and nothing raises."""
+    comment or literal never looks like division; each token keeps its
+    position, so the tokens and the text between them give back ``sql``
+    byte for byte.  A `"…"` ident ends at its first lone `"` (`""`
+    escapes one); a doubled backtick lexes as two adjacent 'bt' tokens.
+    A number may carry a Spark literal suffix (`1.5D`), because the
+    dialect compiler lexes rewritten text.  A word follows SQLite's
+    identifier rule (WORD), so `naïve` is one word; every other character
+    is a one-character operator token, and nothing raises."""
     toks: list[Tok] = []
     for m in _TOKEN_RE.finditer(sql):
         kind = m.lastgroup

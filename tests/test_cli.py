@@ -304,6 +304,87 @@ def test_non_ascii_identifiers_match_sqlite(spark, tmp_path):
     assert [list(r) for r in got] == [[d[0] for d in cur.description]] * 4
     assert [tuple(r.values()) for r in got] == cur.fetchall()
 
+
+@pytest.fixture
+def token_forms(tmp_path):
+    """A CSV whose header names a column with a rule word in it, and the
+    same rows in sqlite3 (all columns TEXT, as the CSV reader gives)."""
+    import sqlite3
+
+    rows = [("1", "x", "Foo", '{"a":5}'), ("2", "y", "bar", '{"a":7}')]
+    p = tmp_path / "forms.csv"
+    p.write_text("id,my regexp col,s,j\n" + "".join(
+        ",".join('"' + v.replace('"', '""') + '"' for v in r) + "\n"
+        for r in rows))
+    con = sqlite3.connect(":memory:")
+    con.execute('CREATE TABLE t (id TEXT, "my regexp col" TEXT, s TEXT, '
+                "j TEXT)")
+    con.executemany("INSERT INTO t VALUES (?, ?, ?, ?)", rows)
+    yield str(p), con
+    con.close()
+
+
+def test_rule_word_inside_quoted_name_matches_sqlite(spark, token_forms):
+    """A keyword inside a quoted identifier is part of the name: REGEXP
+    in `"my regexp col"` or `` `my regexp col` `` is not the operator."""
+    path, con = token_forms
+    for sql in ['SELECT "my regexp col" FROM {} ORDER BY id',
+                "SELECT `my regexp col` FROM {} ORDER BY id"]:
+        cur = con.execute(sql.replace("{}", "t"))
+        rc, out = _run([path, sql], spark)
+        assert rc == 0, sql
+        got = json.loads(out)
+        assert [list(r) for r in got] == [["my regexp col"]] * 2, sql
+        assert [tuple(r.values()) for r in got] == cur.fetchall(), sql
+
+
+def test_collate_result_name_matches_sqlite(spark, token_forms):
+    """An unaliased `s COLLATE NOCASE` is named by its text as written."""
+    path, con = token_forms
+    sql = "SELECT id, s COLLATE NOCASE FROM {} ORDER BY id"
+    cur = con.execute(sql.replace("{}", "t"))
+    rc, out = _run([path, sql], spark)
+    assert rc == 0
+    got = json.loads(out)
+    assert [list(r) for r in got] == [[d[0] for d in cur.description]] * 2
+    assert [tuple(r.values()) for r in got] == cur.fetchall()
+
+
+def test_literal_glob_pattern_matches_sqlite(spark):
+    """A literal GLOB pattern takes the same lowering as a computed one:
+    a REAL operand is matched in SQLite's text rendering, and a BLOB
+    operand never matches."""
+    import sqlite3
+
+    from dsq_spark.cli import Args, _prepare, _sql
+
+    con = sqlite3.connect(":memory:")
+    for sql in ["SELECT 10000000.5 GLOB '1000*' AS g",
+                "SELECT 1e20 GLOB '*e+20' AS g",
+                "SELECT x'41' GLOB 'A' AS g",
+                "SELECT 10000000.5 GLOB ('1000*' || '') AS g"]:
+        got = _sql(spark, *_prepare(spark, Args(), sql, {})).collect()
+        assert [tuple(r) for r in got] == con.execute(sql).fetchall(), sql
+
+
+def test_arrow_left_operands_match_sqlite(spark, token_forms):
+    """The left operand of ->> is the whole dotted name or parenthesized
+    call before it, so each form returns what `j->>'a'` returns."""
+    path, con = token_forms
+    rc, out = _run([path, "SELECT j->>'a' AS v FROM {} ORDER BY id"], spark)
+    assert rc == 0
+    base = json.loads(out)
+    for sql in ["SELECT t.\"j\"->>'a' AS v FROM {} t ORDER BY id",
+                "SELECT (j)->>'a' AS v FROM {} ORDER BY id",
+                "SELECT json(j)->>'a' AS v FROM {} ORDER BY id"]:
+        want = con.execute(sql.replace("{}", "t")).fetchall()
+        rc, out = _run([path, sql], spark)
+        assert rc == 0, sql
+        got = json.loads(out)
+        assert got == base, sql
+        assert [str(r["v"]) for r in got] == [str(v) for v, in want], sql
+
+
 def test_compact_dataset(spark, tmp_path):
     from dsq_spark.io_out import compact_dataset
 

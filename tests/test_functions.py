@@ -77,9 +77,10 @@ def test_glob_against_real_sqlite(spark):
         want = con.execute("SELECT glob(?, ?)", (pat, s)).fetchone()[0]
         got = one(spark, f"glob('{pat}', '{s}')")
         assert got == want, (pat, s)
-    # operator form via the rewriter; literals untouched
+    # operator form via the rewriter (both operands in SQLite's TEXT
+    # rendering, a literal pattern left bare); literals untouched
     sql = rewrite_query("SELECT 1 AS v WHERE 'file.txt' GLOB '*.txt'")
-    assert "RLIKE glob_regex('*.txt')" in sql
+    assert "((('file.txt')) RLIKE glob_regex('*.txt'))" in sql
     assert spark.sql(sql).count() == 1
     lit = rewrite_query("SELECT 'x GLOB y' AS v")
     assert "glob_regex" not in lit

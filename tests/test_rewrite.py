@@ -58,6 +58,47 @@ def test_arrow_operators():
         "SELECT get_json_object(j, '$[0]') AS v FROM t_0"
     assert rewrite_query("SELECT j ->> 'it''s' AS v FROM {}") == \
         "SELECT get_json_object(j, '$.it''s') AS v FROM t_0"
+    # the left operand is the whole dotted name, or the parenthesized
+    # group with the function it calls, or an arrow before it
+    for sql, left in [("t.\"j\"", "t.`j`"), ("`t`.j", "`t`.j"),
+                      ("(j)", "(j)"), ("json(j)", "json(j)"),
+                      ("NOT (j)", "(j)"),
+                      ("j->'a'", "get_json_object(j, '$.a')")]:
+        out = rewrite_query(f"SELECT {sql}->>'b' AS v FROM {{}}")
+        assert f"get_json_object({left}, '$.b')" in out, sql
+
+
+@pytest.mark.parametrize("sql, want", [
+    ('"a ""b"" c"', [("dq", '"a ""b"" c"')]),
+    ('"open', [("dq", '"open')]),
+    ("0x1F+0XaB", [("hex", "0x1F"), ("op", "+"), ("hex", "0XaB")]),
+    ("0xg", [("num", "0"), ("word", "xg")]),
+    ("x0x1", [("word", "x0x1")]),
+    ("t.\"j\"->>'a'", [("word", "t"), ("op", "."), ("dq", '"j"'),
+                       ("op", "->>"), ("str", "'a'")]),
+])
+def test_tokenize_dq_and_hex(sql, want):
+    from dsq_spark.sqllex import tokenize
+
+    assert [(t.kind, t.text) for t in tokenize(sql)] == want
+
+
+def test_token_rules_apply_to_tokens_only():
+    """Each token-level rule rewrites a token of its own; the same text
+    inside a comment, a quoted name, a literal or a longer token stays."""
+    from dsq_spark.rewrite import _rewrite_tokens
+
+    sql = ("SELECT 0x1F + 1.5 AS v, \"0x1f like\" /* 0x1f 1.5 like */, "
+           "1.5e, x1.5, 'a\\b', naïve FROM t WHERE b LIKE 'x' AND "
+           "c REGEXP 'y' COLLATE nocase AND like(b, 'x')")
+    assert _rewrite_tokens(sql) == (
+        "SELECT 31 + 1.5D AS v, `0x1f like` /* 0x1f 1.5 like */, "
+        "1.5e, x1.5, 'a\\\\b', `naïve` FROM t WHERE b ILIKE 'x' AND "
+        "c RLIKE 'y' COLLATE UTF8_LCASE AND like(b, 'x')",
+        frozenset({"0x1f like"}))
+    assert _rewrite_tokens("SELECT 0xFFFFFFFFFFFFFFFF")[0] == "SELECT (-1)"
+    with pytest.raises(ValueError, match="hex literal too big"):
+        _rewrite_tokens("SELECT 0x10000000000000000")
 
 
 # SQLite's opaque spans — '…', "…", `…`, -- and /* */ — hide quotes,

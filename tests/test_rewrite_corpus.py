@@ -8,8 +8,9 @@ expressions, seed 0xC0FFEE) and scripts/probe_columns.py (300, seed
 0xBEEF) send, and the statements perfbench's `warm` and `cli_cold`
 workloads send for seeds 0-2 (the 1/4/48-wide dialect statements,
 group_concat, WITH RECURSIVE, the double-quote fallback, the CLI calls,
-the known-defect probes and the taxi group-by), each with the column
-kinds the CLI derives for its input file.  Each line records what the
+the known-defect probes and the taxi group-by), then the statements of
+test_cli.py's quoted-name, COLLATE-naming, literal-GLOB and `->>` operand
+tests, each with the column kinds the CLI derives for its input file.  Each line records what the
 rewrite returned for it — `out` and the sorted `dquoted` names — or the
 `error` it raised ("Type: message").  The rewrite keeps no state between
 calls, so the corpus replays in file order in one process, and replays
@@ -23,10 +24,12 @@ from __future__ import annotations
 import gzip
 import json
 import os
+import re
 import sys
 from concurrent.futures import ThreadPoolExecutor
 
 from dsq_spark import rewrite
+from dsq_spark.sqllex import tokenize
 
 CORPUS = os.path.join(os.path.dirname(__file__), "fixtures",
                       "rewrite_corpus.jsonl.gz")
@@ -56,6 +59,22 @@ def test_rewrite_matches_golden_corpus():
              for rec, got in zip(corpus, map(_replay, corpus))
              if got != _recorded(rec)]
     assert not diffs, f"{len(diffs)} of {len(corpus)} differ; first: {diffs[0]}"
+
+
+def test_tokens_and_gaps_rebuild_every_input():
+    """sqllex.tokenize loses nothing: between two tokens lie only
+    whitespace and comments, and the tokens with the text between them
+    give back every corpus input byte for byte."""
+    gap = re.compile(r"(?:\s+|--[^\n]*\n?|/\*(?s:.*?)(?:\*/|\Z))*")
+    for rec in _load():
+        sql = rec["sql"]
+        toks = tokenize(sql)
+        ends = [0] + [t.end for t in toks]
+        gaps = [sql[a:t.start] for a, t in zip(ends, toks)] + [sql[ends[-1]:]]
+        assert all(t.text == sql[t.start:t.end] for t in toks), sql
+        assert all(gap.fullmatch(g) for g in gaps), sql
+        assert "".join(g + t.text for g, t in zip(gaps, toks)) + gaps[-1] \
+            == sql
 
 
 def test_threaded_replay_matches_sequential():

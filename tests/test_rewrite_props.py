@@ -24,18 +24,23 @@ literal_text_bs = st.text(
     max_size=12,
 )
 table_ref = st.integers(min_value=0, max_value=3).map(lambda i: f"{{{i}}}")
-# SQLite tokens that hide quotes, commas and parens: comments carrying a
-# quote, and "…" identifiers carrying ', "," and ")"
-comment_text = st.text(
+# What a token-level rule rewrites when it stands as a token of its own;
+# inside a quoted name or a comment it is text and stays as written.
+rule_words = st.sampled_from(
+    ["regexp", "like", "glob", "collate nocase", "0x1f", "1.5", "->"])
+# SQLite tokens that hide quotes, commas, parens and rule words: comments
+# carrying a quote, and "…" identifiers carrying ', "," and ")"
+comment_text = st.lists(st.one_of(st.text(
     alphabet=st.characters(blacklist_characters="\n*{}", max_codepoint=0x7E),
     max_size=10,
-)
+), rule_words), max_size=3).map(" ".join)
 comment = st.one_of(
     comment_text.map(lambda t: f" -- {t}'s\n"),
     comment_text.map(lambda t: f" /* {t}'s */ "),
 )
-quoted_ident = st.from_regex(r"[A-Za-z_][A-Za-z0-9_ ',)]{0,8}",
-                             fullmatch=True).map(lambda s: f'"{s}"')
+quoted_ident = st.lists(st.one_of(
+    st.from_regex(r"[A-Za-z_][A-Za-z0-9_ ',)]{0,8}", fullmatch=True),
+    rule_words), min_size=1, max_size=3).map(lambda ps: f'"{" ".join(ps)}"')
 
 
 @st.composite
@@ -83,9 +88,13 @@ def test_rewrite_escapes_backslashes_per_application(a, b):
 @given(literal_text, literal_text, comment, quoted_ident)
 @settings(max_examples=100, deadline=None)
 def test_literals_survive(a, b, note, qi):
+    """String literals, comments and quoted names come out byte for byte
+    (a "…" name as a backticked one), whatever rule words they hold."""
     q = f"SELECT * FROM {{0}}{note} WHERE {qi} = '{a}' OR y = '{b}'"
     out = rewrite_query(q)
     assert f"'{a}'" in out and f"'{b}'" in out
+    assert note.strip() in out
+    assert f"`{qi[1:-1]}`" in out
 
 
 @given(st.lists(st.integers(min_value=0, max_value=5), min_size=1, max_size=5),
