@@ -35,7 +35,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
-from dsq_spark.sqllex import close_paren, opaque_spans
+from dsq_spark.sqllex import close_paren, opaque_spans, scan_words, tokenize
 
 _REC_SEQ = itertools.count()
 
@@ -76,20 +76,16 @@ class RecursiveCTE:
     main: str
 
 
-_UNION = re.compile(r"\bUNION(\s+ALL)?\b", re.IGNORECASE)
-
-
 def _split_union(body: str) -> tuple[str, str, bool]:
     """Split on the LAST top-level UNION [ALL] (base may itself be a union)."""
-    from dsq_spark.rewrite import _scan_kw
-
-    spans, last, pos = opaque_spans(body), None, 0
-    while (i := _scan_kw(body, spans, pos, "UNION")) is not None:
-        last = _UNION.match(body, i)
-        pos = last.end()
-    if last is None:
+    toks = tokenize(body)
+    unions = scan_words(toks, 0, len(toks), ("union",))
+    if not unions:
         raise ValueError("WITH RECURSIVE body has no top-level UNION")
-    return body[: last.start()], body[last.end():], bool(last.group(1))
+    u = unions[-1]
+    union_all = u + 1 < len(toks) and toks[u + 1].low == "all"
+    end = toks[u + 1].end if union_all else toks[u].end
+    return body[:toks[u].start], body[end:], union_all
 
 
 def parse_recursive(sql: str) -> RecursiveCTE | None:

@@ -7,9 +7,11 @@ closes the gap in this order:
 
   1. statement-level passes over the SQLite text: `{}` / `{N}` /
      `{N, "obj.path"}` / `{"obj.path"}` → temp-view names (main.go:56-88,
-     README.md:185-302), json_each/json_tree → LATERAL VIEW, SQLite's
-     result-column names for unaliased select items, and SQLite's bare
-     columns in aggregate queries;
+     README.md:185-302), json_each/json_tree → LATERAL VIEW, then ONE
+     pass over the sqllex tokens (_select_lists) that parses each select
+     list once and from that parse gives unaliased items SQLite's
+     result-column names and wraps SQLite's bare columns in aggregate
+     queries;
   2. ONE pass over the sqllex tokens (_rewrite_tokens) for every
      token-level form: string-literal backslashes, `"…"` identifiers →
      backticks, non-ASCII names, REGEXP → RLIKE, COLLATE names, LIKE →
@@ -43,9 +45,11 @@ from __future__ import annotations
 
 import re
 from dataclasses import dataclass
+from typing import NamedTuple
 
-from dsq_spark.sqllex import (WORD, Tok, close_paren, inside, opaque_spans,
-                              split_top, tokenize, wrapped)
+from dsq_spark.sqllex import (Tok, close_paren, inside, match_paren,
+                              opaque_spans, scan_words, split_items, split_top,
+                              tokenize)
 
 # {N}, {}, {N, "path"}, {"path"}, {N, 'path'} — reference regex main.go:54.
 TABLE_MACRO = re.compile(
@@ -137,31 +141,60 @@ def _hex_value(text: str) -> str:
     return f"({out})" if v < 0 and not out.startswith("(") else out
 
 
+def _collation(t: Tok) -> str | None:
+    """Spark's collation for the name token after COLLATE: a word, or a
+    '…', "…" or `…` quoted name, as SQLite takes all four."""
+    if t.kind == "word":
+        return _COLLATIONS.get(t.low)
+    if t.kind in ("str", "dq", "bt") and len(t.text) > 1 and \
+            t.text[-1] == t.text[0]:
+        return _COLLATIONS.get(t.text[1:-1].lower())
+    return None
+
+
 def _arrow_operand(out: list[str],
                    units: list[tuple[int, str, int | None]]) -> int | None:
-    """Index in ``units`` where the left operand of a `->`/`->>` starts:
-    the preceding dotted name (`t."j"`), the preceding balanced `( … )`
-    group with the name of the function it calls (`json(j)`), or an
-    arrow already rewritten (`j->'a'->'b'`).  None when there is none."""
+    """Index in ``units`` where the left operand of a `->`/`->>` starts.
+    SQLite gives the arrows the precedence of `||`, left-associative, and
+    a unary `-`, `+` or `~` binds tighter than all three, so the operand
+    is the longest `||`-joined chain of operands before the arrow (`'p' ||
+    j->>'x'` is `('p' || j)->>'x'`).  An operand is a literal, a dotted
+    name (`t."j"`), a call (`json(j)`), a parenthesized group or an arrow
+    already rewritten (`j->'a'->'b'`), with its unary prefix.  None when
+    there is none."""
     from dsq_spark.sqlexpr import _CALLABLE_RESERVED, _RESERVED
 
-    k = len(units) - 1
-    if k < 0:
-        return None
-    role = units[k][1]
-    if role == "expr":
+    keywords = (_RESERVED | {"not", "case"}) - {"end"}
+
+    def ends_operand(k: int) -> bool:
+        role = units[k][1] if k >= 0 else None
+        if role == "name":
+            return out[units[k][0]].lower() not in keywords
+        return role in ("lit", "expr", ")")
+
+    def start_of(k: int) -> int | None:
+        """First unit of the operand whose last unit is units[k]."""
+        role = units[k][1] if k >= 0 else None
+        if role == ")":
+            k = units[k][2]
+            if k is not None and k > 0 and units[k - 1][1] == "name":
+                fn = out[units[k - 1][0]].lower()
+                if fn in _CALLABLE_RESERVED or fn not in _RESERVED | {"not"}:
+                    k -= 1
+        elif role == "name":
+            while k >= 2 and units[k - 1][1] == "." and \
+                    units[k - 2][1] == "name":
+                k -= 2
+        elif role not in ("lit", "expr"):
+            return None
+        while k and units[k - 1][1] == "sign" and not ends_operand(k - 2):
+            k -= 1
         return k
-    if role == ")":
-        k = units[k][2]
-        if k is not None and k > 0 and units[k - 1][1] == "name":
-            fn = out[units[k - 1][0]].lower()
-            if fn in _CALLABLE_RESERVED or fn not in _RESERVED | {"not"}:
-                k -= 1
-        return k
-    if role != "name":
-        return None
-    while k >= 2 and units[k - 1][1] == "." and units[k - 2][1] == "name":
-        k -= 2
+
+    k = start_of(len(units) - 1)
+    while k is not None and k >= 2 and units[k - 1][1] == "||" and \
+            (j := start_of(k - 2)) is not None:
+        k = j
     return k
 
 
@@ -219,7 +252,7 @@ def _rewrite_tokens(sql: str) -> tuple[str, frozenset[str]]:
         nxt = toks[i + 1] if i + 1 < n else None
         text, role, partner = t.text, "other", None
         if t.kind == "str":
-            text = text.replace("\\", "\\\\")
+            text, role = text.replace("\\", "\\\\"), "lit"
         elif t.kind == "dq":
             if len(text) > 1 and text[-1] == '"':
                 name = text[1:-1].replace('""', '"')
@@ -236,14 +269,16 @@ def _rewrite_tokens(sql: str) -> tuple[str, frozenset[str]]:
                 text = "RLIKE"
             elif t.low == "like" and (nxt is None or nxt.text != "("):
                 text = "ILIKE"
-            elif (t.low == "collate" and nxt is not None
-                  and nxt.kind == "word" and nxt.low in _COLLATIONS):
-                text, role = f"COLLATE {_COLLATIONS[nxt.low]}", "other"
+            elif t.low == "collate" and nxt is not None and \
+                    (coll := _collation(nxt)) is not None:
+                text, role = f"COLLATE {coll}", "other"
                 pos, i = nxt.end, i + 1
         elif t.kind == "hex":
+            role = "lit"
             if not _glued(sql, t):
                 text = _hex_value(text)
         elif t.kind == "num":
+            role = "lit"
             if (text[-1] in "0123456789." and any(c in text for c in ".eE")
                     and not _glued(sql, t)):
                 text += "D"
@@ -257,6 +292,10 @@ def _rewrite_tokens(sql: str) -> tuple[str, frozenset[str]]:
             lo = None if path is None else _arrow_operand(out, units)
             if lo is not None:
                 left = "".join(out[units[lo][0]:units[-1][0] + 1])
+                if units[lo][1] == "sign":
+                    # a negated operand is a number; the arrow reads its
+                    # text, as SQLite renders it
+                    left = f"CAST({left} AS TEXT)"
                 del out[units[lo][0]:], units[lo:]
                 units.append((len(out), "expr", None))
                 out.append(f"get_json_object({left}, '{path}')")
@@ -267,8 +306,10 @@ def _rewrite_tokens(sql: str) -> tuple[str, frozenset[str]]:
             opens.append(len(units))
         elif text == ")":
             role, partner = ")", opens.pop() if opens else None
-        elif text == ".":
-            role = "."
+        elif text in (".", "||"):
+            role = text
+        elif text in ("-", "+", "~"):
+            role = "sign"
         units.append((len(out), role, partner))
         out.append(text)
         i += 1
@@ -292,208 +333,22 @@ _OPEN_EXPR_WORDS = {
     "DISTINCT", "ALL", "OVER", "PARTITION", "BY", "ORDER", "INTERVAL",
 }
 
-_BARE_COL = re.compile(
-    rf'^(?:`[^`]+`|"[^"]+"|{WORD})'
-    rf'(?:\s*\.\s*(?:`[^`]+`|"[^"]+"|{WORD}|\*))*$')
-_EXPLICIT_ALIAS = re.compile(rf'(?is)\s+AS\s+("[^"]*"|`[^`]*`|{WORD})\s*$')
-_IMPLICIT_ALIAS = re.compile(rf'(?s)^(.*?\S)(\s+)("[^"]*"|`[^`]*`|{WORD})$')
+# SQLite aggregate names (core + the engine's registered stats aggs, and
+# percentile_N) for the bare-column rule; min/max count only in their
+# 1-argument form.  any_value/min_by/max_by are the rule's own emissions
+# and aggregates: an item already wrapped in one is never a "bare" column.
+_AGG_NAMES = frozenset((
+    "avg", "count", "group_concat", "string_agg", "min", "max", "sum",
+    "total", "median", "mode", "stdev", "stddev", "stddev_samp",
+    "stddev_pop", "variance", "var_samp", "var_pop", "percentile",
+    "percentile_approx", "listagg", "collect_list", "collect_set",
+    "bool_and", "bool_or", "json_group_array", "json_group_object",
+    "approx_count_distinct", "any_value", "min_by", "max_by", "first",
+    "last"))
+_PERCENTILE_N = re.compile(r"percentile_\d+")
 
-
-def _paren_stripped(core: str) -> str:
-    """Peel balanced outer parens: SQLite names `(a)` / `((t.a))` by the
-    bare column, not the parenthesized text."""
-    while wrapped(core):
-        core = core[1:-1].strip()
-    return core
-
-
-def _alias_item(item: str) -> str:
-    core = item.strip()
-    if not core or core == "*" or _BARE_COL.match(_paren_stripped(core)):
-        return item
-    if _EXPLICIT_ALIAS.search(core):
-        return item
-    m = _IMPLICIT_ALIAS.match(core)
-    if m:
-        head, tail = m.group(1), m.group(3)
-        if tail[0] in '"`' or tail.upper() not in _NOT_ALIAS_TAIL:
-            lw = re.search(r"([A-Za-z_]\w*)$", head)
-            if head[-1] not in "+-*/%<>=|&~^(," and not (
-                    lw and lw.group(1).upper() in _OPEN_EXPR_WORDS):
-                return item  # `expr name` — implicitly aliased already
-    if "'" in core or "`" in core or '"' in core:
-        # the verbatim text would need escaping that later passes (literal
-        # span scanning, dquote conversion) cannot survive — keep Spark's
-        # own naming for these rare shapes
-        return item
-    # trailing space: the select list abuts FROM when the last item is
-    # aliased (its own trailing whitespace was consumed into `item`)
-    return f"{item} AS `{core}` "
-
-
-def _scan_kw(sql: str, spans, start: int, *words: str,
-             end: int | None = None) -> int | None:
-    """First depth-0 occurrence of any of ``words`` outside literals,
-    from start.  Multiple words matter for the select-list end scan:
-    a FROM-less query can still carry WHERE/ORDER/LIMIT/UNION/... —
-    stopping only at FROM would swallow the tail clause into the last
-    select item and alias it (SELECT 1 LIMIT 2 AS `1 LIMIT 2`)."""
-    depth, i = 0, start
-    n = len(sql) if end is None else end
-    targets = [(len(w), w.upper()) for w in words]
-    # spans come from opaque_spans: sorted, non-overlapping —
-    # walk them with a monotone pointer and jump whole spans (the per-char
-    # `any(a <= i < b ...)` membership test was O(len(sql)*len(spans)); on a
-    # 30 KB dialect emission with ~900 literal spans that alone cost >1 s of
-    # driver time per rewrite)
-    si, nspan = 0, len(spans)
-    while si < nspan and spans[si][1] <= start:
-        si += 1
-    while i < n:
-        while si < nspan and spans[si][1] <= i:
-            si += 1
-        if si < nspan and spans[si][0] <= i:
-            i = spans[si][1]
-            continue
-        c = sql[i]
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif depth == 0 and (i == 0 or not (sql[i - 1].isalnum() or sql[i - 1] == "_")):
-            for wl, wu in targets:
-                if (sql[i:i + wl].upper() == wu
-                        and (i + wl == len(sql)
-                             or not (sql[i + wl].isalnum() or sql[i + wl] == "_"))):
-                    if wu == "FROM":
-                        # IS [NOT] DISTINCT FROM, not a clause —
-                        # scan back over UNBOUNDED whitespace (a
-                        # fixed lookback window missed five+ spaces
-                        # between DISTINCT and FROM — ADVICE r7)
-                        k9 = i
-                        while k9 > 0 and sql[k9 - 1].isspace():
-                            k9 -= 1
-                        if (k9 >= 8
-                                and sql[k9 - 8:k9].upper() == "DISTINCT"
-                                and (k9 == 8
-                                     or not (sql[k9 - 9].isalnum()
-                                             or sql[k9 - 9] == "_"))):
-                            break
-                    return i
-        i += 1
-    return None
-
-
-def _alias_select_list(sql: str) -> str:
-    """SQLite result-column naming: an output column without an alias is
-    named by the expression text AS WRITTEN (sqlite.org/lang_select.html
-    #the_select_list; the reference's own tests expect e.g. a "COUNT(*)"
-    key). Spark invents names like count(1), so alias every unaliased
-    top-level select-list expression with its verbatim text."""
-    spans = opaque_spans(sql)
-
-    def scan_keyword(start: int, *words: str) -> int | None:
-        return _scan_kw(sql, spans, start, *words)
-
-    sel = scan_keyword(0, "SELECT")
-    if sel is None:
-        return sql
-    start = sel + len("SELECT")
-    m = re.match(r"\s+(DISTINCT|ALL)\b", sql[start:], re.IGNORECASE)
-    if m:
-        start += m.end()
-    end = scan_keyword(start, "FROM", "WHERE", "GROUP", "HAVING", "WINDOW",
-                       "ORDER", "LIMIT", "UNION", "INTERSECT", "EXCEPT")
-    if end is None:
-        end = len(sql)
-    items = split_top(sql[start:end]) or [sql[start:end]]
-    return sql[:start] + ",".join(_alias_item(it) for it in items) + sql[end:]
-
-
-# SQLite aggregate names (core + the engine's registered stats aggs) for
-# the bare-column pass; min/max count only in their 1-argument form.
-# any_value/min_by/max_by are this pass's own emissions and aggregates:
-# an item already wrapped in one is never a "bare" column.
-_BARE_AGG_NAMES = re.compile(
-    r"(?<![\w.`$])(avg|count|group_concat|string_agg|min|max|sum|total|"
-    r"median|mode|stdev|stddev|stddev_samp|stddev_pop|variance|var_samp|"
-    r"var_pop|percentile|percentile_\d+|percentile_approx|listagg|"
-    r"collect_list|collect_set|bool_and|bool_or|json_group_array|"
-    r"json_group_object|approx_count_distinct|any_value|min_by|"
-    r"max_by|first|last)\s*\(", re.IGNORECASE)
-
-
-def _find_agg_calls(seg: str) -> list[tuple[str, str]]:
-    """(name, argtext) for each aggregate call in ``seg``, skipping
-    string literals, subqueries (the aggregate belongs to the inner
-    SELECT) and window invocations (`… ) OVER` — a window function does
-    not make the query an aggregate, sqlite.org/windowfunctions.html)."""
-    spans = opaque_spans(seg)
-    # subquery spans: '(' whose first token is SELECT, to its match
-    sub_spans = []
-    for m in re.finditer(r"\(\s*SELECT\b", seg, re.IGNORECASE):
-        if inside(spans, m.start()):
-            continue
-        i = close_paren(seg, m.start())
-        sub_spans.append((m.start(), len(seg) + 1 if i is None else i + 1))
-    out = []
-    for m in _BARE_AGG_NAMES.finditer(seg):
-        if inside(spans, m.start()):
-            continue
-        if any(a < m.start() < b for a, b in sub_spans):
-            continue
-        i = close_paren(seg, m.end() - 1)
-        if i is None:
-            i = len(seg)
-        arg = seg[m.end():i]
-        # `… ) OVER` / `… ) FILTER (…) OVER` → window, not aggregate
-        tail = seg[i + 1:].lstrip()
-        if re.match(r"(?is)^(FILTER\s*\(.*?\)\s*)?OVER\b", tail):
-            continue
-        name = m.group(1).lower()
-        if name in ("min", "max"):
-            if len(split_top(arg) or [arg]) != 1:
-                continue  # 2+-arg scalar min/max
-        out.append((name, arg.strip()))
-    return out
-
-
-def _bare_agg_columns(sql: str,
-                      schema: dict[str, str] | None = None) -> str:
-    """SQLite's bare-columns-in-aggregate-queries rule
-    (sqlite.org/lang_select.html#bareagg, reference behavior via the
-    embedded engine): `SELECT id, avg(b) FROM t` RUNS in SQLite — the
-    non-aggregate result columns take values from an input row (for a
-    query whose ONLY aggregate is a one-argument min()/max(), from a row
-    holding that extremum; otherwise from an arbitrary row).  Spark
-    raises MISSING_GROUP_BY, so wrap every non-grouped bare item:
-    `max_by(item, x)` / `min_by(item, x)` under the single-min/max rule
-    (exact SQLite semantics; ties/all-NULL are "one of the rows" in both
-    engines), `any_value(item)` otherwise (spec-faithful: SQLite
-    declares the row arbitrary).  GROUP BY terms — by text, ordinal or
-    output alias — are left untouched; compound arms process
-    independently; statements with window functions pass through (a
-    window does not make the query aggregate, and the mixed shape has
-    its own analyzer rules)."""
-    # conservative: any OVER anywhere (even in subqueries) bails —
-    # window-mixed aggregate queries are out of this rule's scope
-    if re.search(r"(?i)\bOVER\b", sql):
-        return sql
-    spans = opaque_spans(sql)
-    # split into compound arms at depth-0 UNION/INTERSECT/EXCEPT
-    bounds, pos = [0], 0
-    while True:
-        nxt = _scan_kw(sql, spans, pos, "UNION", "INTERSECT", "EXCEPT")
-        if nxt is None:
-            break
-        bounds.append(nxt)
-        pos = nxt + 5
-    bounds.append(len(sql))
-    segs = [sql[a:b] for a, b in zip(bounds, bounds[1:])]
-    cols = frozenset(schema) if schema else frozenset()
-    return "".join(_bare_agg_one(s, cols) for s in segs)
-
-
+# Words that are never a column reference to wrap, even where the schema
+# has a column of that name.
 _BARE_KEYWORDS = frozenset((
     "case", "when", "then", "else", "end", "and", "or", "not", "in", "is",
     "null", "like", "glob", "rlike", "regexp", "between", "escape", "cast",
@@ -504,249 +359,341 @@ _BARE_KEYWORDS = frozenset((
     "binary", "rtrim",
 ))
 
+_NAMES = ("word", "dq", "bt")
+_SELECT_END = ("from", "where", "group", "having", "window", "order",
+               "limit")
 
-def _wrap_stray_cols(core: str, cols: frozenset, wrap) -> str:
-    """Wrap bare schema-column references sitting OUTSIDE aggregate-call
-    arguments / subqueries / string literals in an aggregate-containing
-    select item: `sum(b) OR c` is a legal SQLite aggregate expression
-    whose `c` takes an input-row value (the same bareagg rule), while
-    Spark demands every non-aggregate input be grouped."""
-    lits = opaque_spans(core)
-    # a quoted identifier is itself a column reference below: only string
-    # literals and comments hide one
-    strs = [(a, b) for a, b in lits if core[a] not in '`"']
-    excl = []
 
-    def close_of(op: int) -> int:
-        i = close_paren(core, op)
-        return len(core) - 1 if i is None else i
+def _is_name(t: Tok) -> bool:
+    """A bare name or a closed, non-empty quoted one without escapes."""
+    return t.kind == "word" or (
+        t.kind in ("dq", "bt") and len(t.text) > 2
+        and t.text[-1] == t.text[0] and t.text[0] not in t.text[1:-1])
 
-    for m in re.finditer(r"\(\s*SELECT\b", core, re.IGNORECASE):
-        if not inside(lits, m.start()):
-            excl.append((m.start(), close_of(m.start()) + 1))
-    for m in _BARE_AGG_NAMES.finditer(core):
-        if inside(lits, m.start()):
-            continue
-        if any(a <= m.start() < b for a, b in excl):
-            continue
-        cp = close_of(m.end() - 1)
-        name = m.group(1).lower()
-        arg = core[m.end():cp]
-        if name in ("min", "max") and len(split_top(arg) or [arg]) != 1:
-            continue  # scalar 2-arg min/max: its args are per-row refs
-        # extend the exclusion through a trailing FILTER (WHERE ...)
-        # group: its predicate columns are per-row refs in both engines
-        # (Spark evaluates FILTER per input row), so wrapping them in
-        # any_value() breaks analysis outright
-        # (INVALID_AGGREGATE_FILTER.CONTAINS_AGGREGATE — r8 ADVICE)
-        fm = re.match(r"(?is)\s*FILTER\s*\(", core[cp + 1:])
-        if fm:
-            cp = close_of(cp + 1 + fm.end() - 1)
-        excl.append((m.start(), cp + 1))
 
-    out, last = [], 0
-    for m in re.finditer(
-            r"(?:[A-Za-z_]\w*\s*\.\s*)?(`[^`]+`|[A-Za-z_]\w*)", core):
-        s0 = m.start()
-        if (inside(strs, s0)
-                or any(a <= s0 < b for a, b in excl)
-                or s0 < last):
+def _unwrap(toks: list[Tok], a: int, b: int) -> tuple[int, int]:
+    """The token range [a, b) without the parentheses that wrap all of
+    it: `((a + b))` → `a + b`, `(a) + (b)` as it is."""
+    while b - a > 2 and toks[a].text == "(" and \
+            match_paren(toks, a, b) == b - 1:
+        a, b = a + 1, b - 1
+    return a, b
+
+
+def _column_label(toks: list[Tok], a: int, b: int) -> str | None:
+    """SQLite's result name for an item that is a bare column reference
+    (`a`, `t.a`, `t."a b"`, `((a))`): its last segment, unquoted.  None
+    for any other expression."""
+    a, b = _unwrap(toks, a, b)
+    if (b - a) % 2 == 0 or not all(
+            _is_name(toks[ix]) and (ix == a or toks[ix - 1].text == ".")
+            for ix in range(a, b, 2)):
+        return None
+    last = toks[b - 1]
+    return last.text if last.kind == "word" else last.text[1:-1]
+
+
+class _Item(NamedTuple):
+    """One select item: its text is sql[c0:c1] (commas excluded) and its
+    expression toks[a:e], the alias left out."""
+    c0: int
+    c1: int
+    a: int
+    e: int
+    alias: Tok | None
+    label: str | None  # a bare column's result name (_column_label)
+    name: str  # SQLite's name for it unaliased: first token to text end
+    star: bool  # `*` or `t.*`
+
+
+def _parse_item(sql: str, toks: list[Tok], a: int, b: int) -> _Item:
+    """Parse the select item toks[a:b].  The one implicit-alias rule: a
+    trailing name after whitespace or a comment is an alias, unless it is
+    a word that ends an expression (`a IS NULL`) or follows an operator
+    or a word that leaves the expression open (`a + b`, `CASE WHEN b`)."""
+    c0, c1 = toks[a - 1].end, toks[b].start if b < len(toks) else len(sql)
+    text = sql[c0:c1]
+    name = sql[toks[a].start:c0 + len(text.rstrip())] if a < b else ""
+    star = a < b and toks[b - 1].text == "*" and (
+        b - a == 1 or toks[b - 2].text == ".")
+    label = _column_label(toks, a, b)
+    e, alias = b, None
+    if label is None and b - a >= 2 and toks[b - 1].kind in _NAMES:
+        last, prev = toks[b - 1], toks[b - 2]
+        if prev.low == "as" and b - a > 2:
+            e, alias = b - 2, last
+        elif (sql[prev.end:last.start]
+              and (last.kind != "word"
+                   or last.text.upper() not in _NOT_ALIAS_TAIL)
+              and prev.text[-1] not in "+-*/%<>=|&~^(,"
+              and not (prev.kind == "word"
+                       and prev.text.upper() in _OPEN_EXPR_WORDS)):
+            e, alias = b - 1, last
+    return _Item(c0, c1, a, e, alias, label, name, star)
+
+
+def _skip_subquery(toks: list[Tok], ix: int, hi: int) -> int | None:
+    """Index past the `( SELECT … )` group opening at ``ix``; None when
+    toks[ix] opens no subquery."""
+    if toks[ix].text != "(" or ix + 1 >= hi or toks[ix + 1].low != "select":
+        return None
+    close = match_paren(toks, ix, hi)
+    return hi if close is None else close + 1
+
+
+def _agg_calls(toks: list[Tok], lo: int, hi: int) -> list[tuple[int, int]]:
+    """(name index, closing-paren index) of every aggregate call in
+    toks[lo:hi], nested ones included: a word of _AGG_NAMES not after a
+    `.`, followed by `(`.  An aggregate inside a `( SELECT … )` belongs
+    to that subquery and is skipped; min/max count with one argument
+    only (the 2-argument form is the scalar one)."""
+    out, ix = [], lo
+    while ix < hi:
+        past = _skip_subquery(toks, ix, hi)
+        if past is not None:
+            ix = past
             continue
-        name = m.group(1).strip("`").lower()
-        if name in _BARE_KEYWORDS or name not in cols:
+        t = toks[ix]
+        if (t.kind == "word" and ix + 1 < hi and toks[ix + 1].text == "("
+                and (t.low in _AGG_NAMES or _PERCENTILE_N.fullmatch(t.low))
+                and not (ix and toks[ix - 1].text == ".")):
+            close = match_paren(toks, ix + 1, hi)
+            close = hi if close is None else close
+            if t.low not in ("min", "max") or \
+                    len(split_items(toks, ix + 2, close)) == 1:
+                out.append((ix, close))
+        ix += 1
+    return out
+
+
+def _stray_columns(sql: str, toks: list[Tok], lo: int, hi: int,
+                   calls: list[tuple[int, int]], cols: frozenset,
+                   wrap) -> list[tuple[int, int, str]]:
+    """Edits wrapping each schema-column reference in toks[lo:hi] that
+    sits outside aggregate calls and subqueries: `sum(b) OR c` is a legal
+    SQLite aggregate expression whose `c` takes an input-row value (the
+    bareagg rule), while Spark demands every non-aggregate input be
+    grouped.  A call's FILTER (WHERE …) clause counts as part of it: its
+    predicate columns are per-row references in both engines, and
+    wrapping them breaks analysis (INVALID_AGGREGATE_FILTER).  A
+    reference is a dotted chain of names, named by its last segment; one
+    followed by `(` is a function call, a name after AS is a type or an
+    alias, and a word with a string glued to it is a blob literal
+    (`x'41'`).  ``calls`` are the range's _agg_calls."""
+    skip = {}
+    for ix, close in calls:
+        end = close + 1
+        if end + 1 < hi and toks[end].low == "filter" and \
+                toks[end + 1].text == "(":
+            fclose = match_paren(toks, end + 1, hi)
+            end = hi if fclose is None else fclose + 1
+        skip[ix] = end
+    edits, ix = [], lo
+    while ix < hi:
+        past = skip.get(ix, _skip_subquery(toks, ix, hi))
+        if past is not None:
+            ix = past
             continue
-        rest = core[m.end():].lstrip()
-        if rest.startswith("("):
-            continue  # function call, not a column
-        if s0 > 0 and core[:s0].rstrip().endswith("."):
-            continue  # backtick-qualified ref: leave verbatim
-        out.append(core[last:s0])
-        out.append(wrap(m.group(0)))
-        last = m.end()
-    if not out:
-        return core
-    out.append(core[last:])
+        if toks[ix].kind not in _NAMES:
+            ix += 1
+            continue
+        j = ix
+        while j + 2 < hi and toks[j + 1].text == "." and \
+                toks[j + 2].kind in _NAMES:
+            j += 2
+        last = toks[j]
+        name = (last.text if last.kind == "word" else last.text[1:-1]).lower()
+        nxt = toks[j + 1] if j + 1 < hi else None
+        if (name in cols and name not in _BARE_KEYWORDS
+                and not (ix and toks[ix - 1].text == ".")
+                and not (ix and toks[ix - 1].low == "as")
+                and not (nxt and (nxt.text == "(" or last.low == "x"
+                                  and nxt.kind == "str"
+                                  and nxt.start == last.end))):
+            s0, s1 = toks[ix].start, last.end
+            edits.append((s0, s1, wrap(sql[s0:s1])))
+        ix = j + 1
+    return edits
+
+
+def _splice(sql: str, lo: int, hi: int,
+            edits: list[tuple[int, int, str]]) -> str:
+    """sql[lo:hi] with each (start, end, text) edit applied; the edits
+    lie in [lo, hi) and do not overlap."""
+    out, pos = [], lo
+    for s0, s1, text in sorted(edits):
+        out += [sql[pos:s0], text]
+        pos = s1
+    out.append(sql[pos:hi])
     return "".join(out)
 
 
-def _bare_agg_one(seg: str, cols: frozenset) -> str:
-    spans = opaque_spans(seg)
-    sel = _scan_kw(seg, spans, 0, "SELECT")
-    if sel is None:
-        return seg
-    start = sel + len("SELECT")
-    m = re.match(r"\s+(DISTINCT|ALL)\b", seg[start:], re.IGNORECASE)
-    if m:
-        start += m.end()
-    end = _scan_kw(seg, spans, start, "FROM", "WHERE", "GROUP", "HAVING",
-                   "WINDOW", "ORDER", "LIMIT")
-    if end is None:
-        end = len(seg)
-    items = split_top(seg[start:end]) or [seg[start:end]]
-    item_aggs = [_find_agg_calls(it) for it in items]
-    sel_aggs = [a for ia in item_aggs for a in ia]
-    if not sel_aggs:
+def _bare_columns(sql: str, toks: list[Tok], items: list[_Item],
+                  clauses: list[int], hi: int,
+                  cols: frozenset) -> tuple[dict[int, str], list]:
+    """SQLite's bare columns in one aggregate select list
+    (sqlite.org/lang_select.html#bareagg): `SELECT id, avg(b) FROM t`
+    RUNS in SQLite — the non-aggregate result columns take values from an
+    input row (for a query whose ONLY aggregate is a one-argument
+    min()/max(), from a row holding that extremum; otherwise from an
+    arbitrary row).  Spark raises MISSING_GROUP_BY, so every non-grouped
+    item is wrapped: `max_by(item, x)` / `min_by(item, x)` under the
+    single-min/max rule (exact SQLite semantics; ties/all-NULL are "one
+    of the rows" in both engines), `any_value(item)` otherwise (SQLite
+    declares the row arbitrary), and the stray schema columns of
+    aggregate items, HAVING and ORDER BY likewise (_stray_columns).
+    GROUP BY terms — by text, ordinal or output alias — are left as
+    written.  ``clauses`` are the depth-0 clause words after the select
+    list, up to token ``hi``.  Returns the new text of each rewritten
+    item, by its c0, and the edits to HAVING and ORDER BY."""
+    calls = [_agg_calls(toks, it.a, it.e) for it in items]
+    if not any(calls):
         # not an aggregate select list.  HAVING-only aggregates do NOT
         # make the query aggregate — SQLite itself raises "HAVING
         # clause on a non-aggregate query" there.
-        return seg
+        return {}, []
+
+    def clause(word, ends):
+        """(first token, end) of the depth-0 clause opened by word."""
+        at = next((ix for ix in clauses if toks[ix].low == word), None)
+        if at is None:
+            return None, None
+        return at, next((ix for ix in clauses
+                         if ix > at and toks[ix].low in ends), hi)
+
     # HAVING aggregates still count toward the exactly-one-min/max rule
-    hav = _scan_kw(seg, spans, end, "HAVING")
-    hav_aggs = []
-    if hav is not None:
-        hend = _scan_kw(seg, spans, hav + 6, "ORDER", "LIMIT", "WINDOW")
-        hav_aggs = _find_agg_calls(seg[hav:hend if hend is not None
-                                       else len(seg)])
-    all_aggs = sel_aggs + hav_aggs
-    # GROUP BY terms: text-, ordinal- and alias-resolved
-    grouped: set[int] = set()
-    gpos = _scan_kw(seg, spans, end, "GROUP")
-    gterms: list[str] = []
-    if gpos is not None:
-        gby = re.match(r"(?is)GROUP\s+BY\b", seg[gpos:])
-        if gby:
-            gend = _scan_kw(seg, spans, gpos + gby.end(), "HAVING",
-                            "ORDER", "LIMIT", "WINDOW")
-            gtext = seg[gpos + gby.end():len(seg) if gend is None else gend]
-            gterms = split_top(gtext) or [gtext]
+    hav, hav_end = clause("having", ("order", "limit", "window"))
+    hav_calls = [] if hav is None else _agg_calls(toks, hav + 1, hav_end)
+    all_calls = [c for cs in calls for c in cs] + hav_calls
+    single = None
+    if len(all_calls) == 1 and toks[all_calls[0][0]].low in ("min", "max"):
+        ix, close = all_calls[0]
+        arg = ix + 2
+        if arg < close and toks[arg].low == "distinct":
+            arg += 1
+        single = (toks[ix].low, sql[toks[arg].start:toks[close - 1].end]
+                  if arg < close else "")
 
-    def norm(t: str) -> str:
-        return " ".join(_paren_stripped(t.strip()).split()).lower()
+    def wrap(expr: str) -> str:
+        if single is None:
+            return f"any_value({expr})"
+        # all-NULL extremum: SQLite still fills bare columns from one of
+        # the rows, but Spark's max_by/min_by returns NULL when every
+        # ordering key is NULL — dispatch on the extremum itself (count
+        # guards the genuinely empty group, where both engines produce no
+        # row anyway)
+        agg, arg = single
+        return (f"(CASE WHEN {agg}({arg}) IS NULL THEN any_value({expr}) "
+                f"ELSE {agg}_by({expr}, {arg}) END)")
 
-    cores, aliases = [], []
-    for it in items:
-        core = it.strip()
-        alias = None
-        am = _EXPLICIT_ALIAS.search(core)
-        if am:
-            alias = am.group(1)
-            core = core[:am.start()].strip()
-        else:
-            im = _IMPLICIT_ALIAS.match(core)
-            if im:
-                head, tail = im.group(1), im.group(3)
-                if ((tail[0] in '"`' or tail.upper() not in _NOT_ALIAS_TAIL)
-                        and head[-1] not in "+-*/%<>=|&~^(,"
-                        and not (
-                            (lw := re.search(r"([A-Za-z_]\w*)$", head))
-                            and lw.group(1).upper() in _OPEN_EXPR_WORDS)):
-                    alias, core = tail, head.strip()
-        cores.append(core)
-        aliases.append(alias)
-    nterms = {norm(t) for t in gterms}
-    for t in gterms:
-        # ordinal terms: SQLite resolves positions through parentheses
-        # and unary signs ((2), +2 are position 2) but not arithmetic
-        ts = t.strip()
-        while True:
-            if wrapped(ts):
-                ts = ts[1:-1].strip()
-                continue
-            if ts[:1] == "+":
-                ts = ts[1:].lstrip()
-                continue
-            break
-        if re.fullmatch(r"\d+", ts) and 1 <= int(ts) <= len(items):
-            grouped.add(int(ts) - 1)
-    for ix, (core, alias) in enumerate(zip(cores, aliases)):
-        nm = norm(core)
-        anm = (alias or "").strip('`"').lower()
-        if nm in nterms or (anm and anm in nterms):
-            grouped.add(ix)
-    single = all_aggs[0] if (len(all_aggs) == 1
-                             and all_aggs[0][0] in ("min", "max")) else None
+    def key(a: int, b: int) -> str:
+        a, b = _unwrap(toks, a, b)
+        return " ".join(t.text for t in toks[a:b]).lower()
 
-    def wrapper(tok: str) -> str:
-        if single is not None:
-            aggname, aggarg = single
-            arg = re.sub(r"(?is)^\s*DISTINCT\b", "", aggarg).strip()
-            # all-NULL extremum: SQLite still fills bare columns from
-            # one of the rows, but Spark's max_by/min_by returns NULL
-            # when every ordering key is NULL — dispatch on the
-            # extremum itself (r8 ADVICE; count guards the genuinely
-            # empty group, where both engines produce no row anyway)
-            return (f"(CASE WHEN {aggname}({arg}) IS NULL "
-                    f"THEN any_value({tok}) "
-                    f"ELSE {aggname}_by({tok}, {arg}) END)")
-        return f"any_value({tok})"
-
-    out_items = []
-    for ix, it in enumerate(items):
-        if ix in grouped:
-            out_items.append(it)
+    # GROUP BY terms: by text, by ordinal (SQLite resolves a position
+    # through parentheses and unary plus: (2) and +2 are position 2, 1+1
+    # is not) and by output alias
+    keys, grouped = set(), set()
+    group, group_end = clause("group", ("having", "order", "limit",
+                                        "window"))
+    if group is not None and group + 1 < hi and toks[group + 1].low == "by":
+        for a, b in split_items(toks, group + 2, group_end):
+            keys.add(key(a, b))
+            while b - a > 1 and (toks[a].text == "+" or (
+                    toks[a].text == "(" and match_paren(toks, a, b) == b - 1)):
+                a, b = a + 1, b - (toks[a].text == "(")
+            if b - a == 1 and toks[a].text.isdigit() and \
+                    1 <= int(toks[a].text) <= len(items):
+                grouped.add(int(toks[a].text) - 1)
+    out = {}
+    for k, it in enumerate(items):
+        if (k in grouped or it.a == it.e or it.star
+                or key(it.a, it.e) in keys
+                or it.alias is not None
+                and it.alias.text.strip('`"').lower() in keys):
             continue
-        if item_aggs[ix]:
-            # aggregate-containing item: stray per-row column refs in it
-            # ride the same bareagg rule (`sum(b) OR c` — probe_columns)
-            core, alias = cores[ix], aliases[ix]
-            w = _wrap_stray_cols(core, cols, wrapper) if cols else core
-            if w == core:
-                out_items.append(it)
-            else:
-                if alias is None:
-                    alias = "`" + core.replace("`", "``") + "`"
-                pre = it[:len(it) - len(it.lstrip())]
-                out_items.append(f"{pre}{w} AS {alias} ")
-            continue
-        core, alias = cores[ix], aliases[ix]
-        if not core or core == "*" or core.endswith(".*"):
-            out_items.append(it)  # star expansion: out of scope
-            continue
-        if alias is None:
-            # bare column keeps its SQLite-derived name (the last path
-            # segment: `t.x` is named "x"); anything else was already
-            # verbatim-aliased by _alias_select_list except quote-bearing
-            # shapes, which keep their full text as the label
-            nm9 = re.search(r'(?:`([^`]+)`|"([^"]+)"|([A-Za-z_]\w*))\s*$',
-                            core)
-            label = (nm9.group(1) or nm9.group(2) or nm9.group(3)) \
-                if nm9 and _BARE_COL.match(_paren_stripped(core)) else core
-            alias = "`" + label.replace("`", "``") + "`"
-        pre = it[:len(it) - len(it.lstrip())]
-        out_items.append(f"{pre}{wrapper(core)} AS {alias} ")
+        as_name = it.alias.text if it.alias is not None else "`{}`".format(
+            (it.name if it.label is None else it.label).replace("`", "``"))
+        text = sql[it.c0:it.c1]
+        pre = text[:len(text) - len(text.lstrip())]
+        x0, x1 = toks[it.a].start, toks[it.e - 1].end
+        if not calls[k]:
+            out[it.c0] = f"{pre}{wrap(sql[x0:x1])} AS {as_name} "
+        elif cols:
+            stray = _stray_columns(sql, toks, it.a, it.e, calls[k], cols,
+                                   wrap)
+            if stray:
+                out[it.c0] = (f"{pre}{_splice(sql, x0, x1, stray)} "
+                              f"AS {as_name} ")
+    if not cols:
+        return out, []
     # bare columns in HAVING and ORDER BY ride the same rule (SQLite:
     # `SELECT count(*) FROM t HAVING a > 0` and `SELECT max(a) FROM t
-    # ORDER BY c` both run — arbitrary/extremum row).  A bare key that
-    # names a select-item ALIAS resolves to the output column in both
-    # engines and must stay verbatim.
-    out_names = set()
-    for core, alias in zip(cores, aliases):
-        if alias:
-            out_names.add(alias.strip('`"').lower())
-        elif _BARE_COL.match(_paren_stripped(core)):
-            nm9 = re.search(r'(?:`([^`]+)`|"([^"]+)"|([A-Za-z_]\w*))\s*$',
-                            core)
-            if nm9:
-                out_names.add(
-                    (nm9.group(1) or nm9.group(2) or nm9.group(3)).lower())
-    tcols = frozenset(c for c in cols if c not in out_names)
-    splices: list[tuple[int, int, str]] = []
-    if cols and hav is not None:
-        hend2 = _scan_kw(seg, spans, hav + 6, "ORDER", "LIMIT", "WINDOW")
-        h0, h1 = hav + 6, hend2 if hend2 is not None else len(seg)
-        w9 = _wrap_stray_cols(seg[h0:h1], tcols, wrapper)
-        if w9 != seg[h0:h1]:
-            splices.append((h0, h1, w9))
-    opos = _scan_kw(seg, spans, end, "ORDER")
-    if cols and opos is not None:
-        oby = re.match(r"(?is)ORDER\s+BY\b", seg[opos:])
-        if oby:
-            oend = _scan_kw(seg, spans, opos + oby.end(), "LIMIT", "WINDOW")
-            o0 = opos + oby.end()
-            o1 = oend if oend is not None else len(seg)
-            w9 = _wrap_stray_cols(seg[o0:o1], tcols, wrapper)
-            if w9 != seg[o0:o1]:
-                splices.append((o0, o1, w9))
-    tail = seg[end:]
-    if splices:
-        parts9, cur = [], end
-        for s0, s1, txt in sorted(splices):
-            parts9.append(seg[cur:s0])
-            parts9.append(txt)
-            cur = s1
-        parts9.append(seg[cur:])
-        tail = "".join(parts9)
-    return seg[:start] + ",".join(out_items) + tail
+    # ORDER BY c` both run — arbitrary/extremum row).  A key that names a
+    # select item's alias resolves to the output column in both engines
+    # and stays as written.
+    tcols = cols - {(it.alias.text.strip('`"') if it.alias is not None
+                     else it.label or "").lower() for it in items}
+    edits = []
+    if hav is not None:
+        edits += _stray_columns(sql, toks, hav + 1, hav_end, hav_calls,
+                                tcols, wrap)
+    order, order_end = clause("order", ("limit", "window"))
+    if order is not None and order + 1 < hi and toks[order + 1].low == "by":
+        edits += _stray_columns(sql, toks, order + 2, order_end,
+                                _agg_calls(toks, order + 2, order_end),
+                                tcols, wrap)
+    return out, edits
+
+
+def _select_lists(sql: str, schema: dict[str, str] | None = None) -> str:
+    """SQLite's result-column names and its bare columns in aggregate
+    queries, from one parse of each select list over sqllex tokens.
+
+    Naming (sqlite.org/lang_select.html#the_select_list; the reference's
+    own tests expect e.g. a "COUNT(*)" key): an output column without an
+    alias is named by its expression text AS WRITTEN, from its first
+    token to the end of the item, a trailing comment included.  Spark
+    invents names like count(1), so every unaliased item of the
+    statement's first SELECT is aliased with that text.  A bare column
+    (`a`, `t.a`, `(a)`) keeps Spark's name, its last segment, which is
+    SQLite's too; an item whose text holds a quote keeps Spark's name.
+
+    Bare columns: see _bare_columns.  Compound arms are processed
+    independently, and a statement with a window function anywhere passes
+    through (a window does not make the query aggregate, and the mixed
+    shape has its own analyzer rules)."""
+    toks = tokenize(sql)
+    n = len(toks)
+    window = any(t.low == "over" for t in toks)
+    cols = frozenset(schema or ())
+    edits: list[tuple[int, int, str]] = []
+    named = False
+    arms = [0, *scan_words(toks, 0, n, ("union", "intersect", "except")), n]
+    for lo, hi in zip(arms, arms[1:]):
+        sels = scan_words(toks, lo, hi, ("select",))
+        if not sels:
+            continue
+        s0 = sels[0] + 1
+        if s0 < hi and toks[s0].low in ("distinct", "all"):
+            s0 += 1
+        clauses = scan_words(toks, s0, hi, _SELECT_END)
+        items = [_parse_item(sql, toks, a, b) for a, b in
+                 split_items(toks, s0, clauses[0] if clauses else hi)]
+        out = {}
+        if not named:
+            named = True
+            out = {it.c0: f"{sql[it.c0:it.c1]} AS `{it.name}` "
+                   for it in items
+                   if it.a < it.e and not it.star and it.alias is None
+                   and it.label is None
+                   and not any(q in it.name for q in "'`\"")}
+        if not window:
+            bare, more = _bare_columns(sql, toks, items, clauses, hi, cols)
+            out.update(bare)
+            edits += more
+        edits += [(it.c0, it.c1, out[it.c0]) for it in items if it.c0 in out]
+    return _splice(sql, 0, len(sql), edits) if edits else sql
 
 
 def _fold_filter_over(sql: str) -> str:
@@ -1326,41 +1273,28 @@ def _hoist_per_row(sql: str, cands: list[str]) -> str:
              if len(c) >= 80 and _PER_ROW_SAFE(c)]
     if not cands or "__dsq_h" in sql:
         return sql
-    spans = opaque_spans(sql)
     lead = len(sql) - len(sql.lstrip())
     if sql[lead:lead + 7].upper() not in ("SELECT ", "SELECT\n", "SELECT\t"):
         return sql
-    if _scan_kw(sql, spans, lead + 6, "UNION", "INTERSECT", "EXCEPT",
-                "GROUP", "LATERAL", "JOIN", "WINDOW") is not None:
+    toks = tokenize(sql)
+    n = len(toks)
+    if scan_words(toks, 1, n, ("union", "intersect", "except", "group",
+                               "lateral", "join", "window")):
         return sql
-    f_ix = _scan_kw(sql, spans, lead + 6, "FROM")
-    if f_ix is None:
+    fr = scan_words(toks, 1, n, ("from",))
+    if not fr:
         return sql
-    # star select item at depth 0 of the select list?
+    f_ix = toks[fr[0]].start
+    # a star select item at depth 0 of the select list: `*` first, after a
+    # comma, DISTINCT or ALL, or as `t.*`
     depth = 0
-    prev = ""
-    si, nspan = 0, len(spans)
-    i = lead + 6
-    while i < f_ix:
-        while si < nspan and spans[si][1] <= i:
-            si += 1
-        if si < nspan and spans[si][0] <= i:
-            i = spans[si][1]
-            continue
-        ch = sql[i]
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif ch == "*" and depth == 0:
-            if prev in ("", ",", "."):
-                return sql
-            w = re.search(r"([A-Za-z_]\w*)\s*$", sql[lead + 6:i])
-            if w and w.group(1).upper() in ("DISTINCT", "ALL"):
-                return sql
-        if not ch.isspace():
-            prev = ch
-        i += 1
+    for ix in range(1, fr[0]):
+        t = toks[ix]
+        depth += (t.text == "(") - (t.text == ")")
+        if depth == 0 and t.text == "*" and (
+                toks[ix - 1].text in (",", ".")
+                or toks[ix - 1].low in ("select", "distinct", "all")):
+            return sql
     # FROM source: `(SELECT * …)` derived table or a bare table reference
     j = f_ix + 4
     while j < len(sql) and sql[j].isspace():
@@ -1489,10 +1423,8 @@ def rewrite_query_tracked(
     # to SQLite) → Spark's bare EXPLAIN; plain EXPLAIN already parses.
     sql = re.sub(r"^(\s*)EXPLAIN\s+QUERY\s+PLAN\b", r"\1EXPLAIN",
                  sql, count=1, flags=re.IGNORECASE)
-    sql = _alias_select_list(_rewrite_json_each(_sub_table_macros(sql)))
-    # SQLite bare-columns-in-aggregate-queries (runs on the aliased list:
-    # every wrapped item keeps its verbatim SQLite result name)
-    sql = _bare_agg_columns(sql, schema)
+    # SQLite's result-column names and bare columns in aggregate queries
+    sql = _select_lists(_rewrite_json_each(_sub_table_macros(sql)), schema)
     # token-level forms, then the call-site rewrites over settled tokens
     # (alias templates emit Spark's final spellings, e.g. 0.25D)
     out, dquoted = _rewrite_tokens(sql)

@@ -107,7 +107,8 @@ from __future__ import annotations
 import math
 import re
 
-from dsq_spark.sqllex import Tok, split_top, tokenize, wrapped
+from dsq_spark.sqllex import (Tok, match_paren, scan_words, split_items,
+                              split_top, tokenize, wrapped)
 
 # ---------------------------------------------------------------------------
 # Kind lattice (SQLite storage classes + Spark 'bool')
@@ -1632,35 +1633,17 @@ class _Rw:
         depth-0 SELECT before it within this seq range), trailing AS
         aliases stripped.  Empty when no SELECT is found."""
         T = self.T
-        d, sel = 0, None
-        for ix in range(lo, gb_i):
-            t = T[ix]
-            if t.text == "(":
-                d += 1
-            elif t.text == ")":
-                d -= 1
-            elif d == 0 and t.kind == "word" and t.low == "select":
-                sel = ix
-        if sel is None:
+        sels = scan_words(T, lo, gb_i, ("select",))
+        if not sels:
             return []
-        s0 = sel + 1
-        if s0 < gb_i and T[s0].kind == "word" and T[s0].low in (
-                "distinct", "all"):
+        s0 = sels[-1] + 1
+        if s0 < gb_i and T[s0].low in ("distinct", "all"):
             s0 += 1
-        d, s1 = 0, gb_i
-        for ix in range(s0, gb_i):
-            t = T[ix]
-            if t.text == "(":
-                d += 1
-            elif t.text == ")":
-                d -= 1
-            elif d == 0 and t.kind == "word" and t.low in (
-                    "from", "where", "group", "having", "window",
-                    "order", "limit"):
-                s1 = ix
-                break
+        ends = scan_words(T, s0, gb_i, ("from", "where", "group", "having",
+                                        "window", "order", "limit"))
+        s1 = ends[0] if ends else gb_i
         items = []
-        for a, b in _split_items_t(T, s0, s1):
+        for a, b in split_items(T, s0, s1):
             if b <= a:
                 continue
             if (b - a >= 2 and T[b - 2].kind == "word"
@@ -6220,49 +6203,6 @@ def _quad_cls_key(e: str) -> str:
     return _bound_big(e, body)
 
 
-def _tok_scan(toks, lo, hi, words, depth0=True):
-    """Indices of depth-0 word tokens in [lo, hi) whose .low is in
-    ``words``."""
-    out, d = [], 0
-    for ix in range(lo, hi):
-        t = toks[ix]
-        if t.text == "(":
-            d += 1
-        elif t.text == ")":
-            d -= 1
-        elif d == 0 and t.kind == "word" and t.low in words:
-            out.append(ix)
-    return out
-
-
-def _match_paren_t(toks, i, hi):
-    d = 0
-    for ix in range(i, hi):
-        if toks[ix].text == "(":
-            d += 1
-        elif toks[ix].text == ")":
-            d -= 1
-            if d == 0:
-                return ix
-    return None
-
-
-def _split_items_t(toks, lo, hi):
-    """Split token range [lo, hi) on depth-0 commas → list of (a, b)."""
-    out, d, start = [], 0, lo
-    for ix in range(lo, hi):
-        t = toks[ix]
-        if t.text == "(":
-            d += 1
-        elif t.text == ")":
-            d -= 1
-        elif d == 0 and t.text == ",":
-            out.append((start, ix))
-            start = ix + 1
-    out.append((start, hi))
-    return out
-
-
 class _ArmItem:
     __slots__ = ("expr", "alias", "kind", "name")
 
@@ -6278,18 +6218,18 @@ def _parse_arm(text, toks, lo, hi, kinds, hoists):
     Returns (items, sel_end_char, sel_start_char) or None on any shape
     surprise (no SELECT, `*` items, implicit aliases, unclassifiable
     kinds)."""
-    sels = _tok_scan(toks, lo, hi, ("select",))
+    sels = scan_words(toks, lo, hi, ("select",))
     if not sels:
         return None
     s0 = sels[0] + 1
     if s0 < hi and toks[s0].kind == "word" and toks[s0].low in (
             "distinct", "all"):
         s0 += 1
-    ends = _tok_scan(toks, s0, hi, ("from", "where", "group", "having",
-                                    "window", "order", "limit"))
+    ends = scan_words(toks, s0, hi, ("from", "where", "group", "having",
+                                     "window", "order", "limit"))
     s1 = ends[0] if ends else hi
     items = []
-    for a, b in _split_items_t(toks, s0, s1):
+    for a, b in split_items(toks, s0, s1):
         if b <= a:
             return None
         ital = None
@@ -6387,7 +6327,7 @@ def _unordered_window_pass(text: str) -> str:
         if t.kind != "word" or t.low not in names \
                 or toks[ix + 1].text != "(":
             continue
-        close = _match_paren_t(toks, ix + 1, n)
+        close = match_paren(toks, ix + 1, n)
         if close is None or close + 2 >= n:
             continue
         if not (toks[close + 1].kind == "word"
@@ -6395,7 +6335,7 @@ def _unordered_window_pass(text: str) -> str:
                 and toks[close + 2].text == "("):
             continue
         sp_open = close + 2
-        sp_close = _match_paren_t(toks, sp_open, n)
+        sp_close = match_paren(toks, sp_open, n)
         if sp_close is None:
             continue
         d = 0
@@ -6491,7 +6431,7 @@ def _values_pass(text: str) -> str:
             if j >= len(toks) or toks[j].text != "(":
                 bad = True
                 break
-            close = _match_paren_t(toks, j, len(toks))
+            close = match_paren(toks, j, len(toks))
             if close is None or close == j + 1:
                 bad = True
                 break
@@ -6515,7 +6455,7 @@ def _values_pass(text: str) -> str:
     for vix, rows, end_ix in reversed(spans):
         arms = []
         for ri, (j, close) in enumerate(rows):
-            items = _split_items_t(toks, j + 1, close)
+            items = split_items(toks, j + 1, close)
             cols = []
             for ci, (a, b) in enumerate(items):
                 if b <= a:
@@ -6533,7 +6473,7 @@ def _values_pass(text: str) -> str:
             repl = arms[0]
         else:
             names = ", ".join(f"column{ci + 1}"
-                              for ci in range(len(_split_items_t(
+                              for ci in range(len(split_items(
                                   toks, rows[0][0] + 1, rows[0][1]))))
             repl = (f"SELECT {names} FROM "
                     f"({' UNION ALL '.join(arms)})")
@@ -6896,7 +6836,7 @@ def _frames_stmt(text, kinds=None):
     while ix < len(toks) - 1:
         if (toks[ix].text == "(" and toks[ix + 1].kind == "word"
                 and toks[ix + 1].low in ("select", "with")):
-            close = _match_paren_t(toks, ix, len(toks))
+            close = match_paren(toks, ix, len(toks))
             if close is None:
                 return text
             spans.append((toks[ix].end, toks[close].start))
@@ -6914,7 +6854,7 @@ def _frames_stmt(text, kinds=None):
     # parser bails on the clause — inline each simple `OVER w`
     # reference with its spec, drop the clause, and reprocess (r10
     # hunt: a GROUPS frame in a named window was a hard ParseException)
-    wix = [ix for ix in _tok_scan(toks, 0, n, ("window",))
+    wix = [ix for ix in scan_words(toks, 0, n, ("window",))
            if ix + 2 < n and toks[ix + 1].kind in ("word", "bt")
            and toks[ix + 2].low == "as"]
     if wix:
@@ -6922,7 +6862,7 @@ def _frames_stmt(text, kinds=None):
         defs, j = {}, w0 + 1
         while (j + 2 < n and toks[j].kind in ("word", "bt")
                and toks[j + 1].low == "as" and toks[j + 2].text == "("):
-            close = _match_paren_t(toks, j + 2, n)
+            close = match_paren(toks, j + 2, n)
             if close is None:
                 raise _Unsupported("window clause paren")
             spec = text[toks[j + 2].end:toks[close].start]
@@ -6958,7 +6898,7 @@ def _frames_stmt(text, kinds=None):
         t = toks[ix]
         if (t.kind == "word" and t.low == "over"
                 and ix + 1 < n and toks[ix + 1].text == "("):
-            close = _match_paren_t(toks, ix + 1, n)
+            close = match_paren(toks, ix + 1, n)
             if close is None:
                 return text
             sp = _fr_parse_spec(text, toks, ix + 1, close)
@@ -7001,7 +6941,7 @@ def _frames_stmt(text, kinds=None):
     kw_ix = {}
     for kw in ("from", "where", "group", "having", "window", "order",
                "limit", "union", "intersect", "except"):
-        hits = _tok_scan(toks, sel_ix, n, (kw,))
+        hits = scan_words(toks, sel_ix, n, (kw,))
         if hits:
             kw_ix[kw] = hits[0]
     if any(k in kw_ix for k in ("group", "having", "window", "union",
@@ -7167,17 +7107,17 @@ def _distinct_mix_rewrite(text, toks, kinds, top, no_cls, hoists):
     'arbitrary row' family as bare columns in aggregates).  Returns
     (new_text, colinfo) or None when out of scope."""
     n = len(toks)
-    sels = _tok_scan(toks, 0, n, ("select",))
+    sels = scan_words(toks, 0, n, ("select",))
     if not sels:
         return None
     si = sels[0]
     if not (si + 1 < n and toks[si + 1].kind == "word"
             and toks[si + 1].low == "distinct"):
         return None
-    if _tok_scan(toks, si, n, ("group", "having", "window", "union",
-                               "intersect", "except")):
+    if scan_words(toks, si, n, ("group", "having", "window", "union",
+                                "intersect", "except")):
         return None
-    fr = _tok_scan(toks, si, n, ("from",))
+    fr = scan_words(toks, si, n, ("from",))
     if not fr:
         return None
     pa = _parse_arm(text, toks, si, n, kinds, hoists)
@@ -7215,7 +7155,7 @@ def _distinct_mix_rewrite(text, toks, kinds, top, no_cls, hoists):
             keyed[ci] = _quad_cls_key(it.expr)
     if not keyed:
         return None
-    tail_hits = _tok_scan(toks, fr[0], n, ("order", "limit"))
+    tail_hits = scan_words(toks, fr[0], n, ("order", "limit"))
     t_ix = tail_hits[0] if tail_hits else n
     from_txt = text[toks[fr[0]].start:toks[t_ix - 1].end]
     tail = text[toks[t_ix].start:] if t_ix < n else ""
@@ -7318,7 +7258,7 @@ def _stmt_compound_pass(text, kinds, once_bound, top, schema_cols, hoists,
                   and toks[ix + 2].kind == "word"
                   and toks[ix + 2].low == "select")
         if is_from or is_cte:
-            close = _match_paren_t(toks, ix + 1, len(toks))
+            close = match_paren(toks, ix + 1, len(toks))
             if close is None:
                 return text, {}
             star_r = any_star if is_cte else _owner_select_star(toks, ix)
@@ -7365,7 +7305,7 @@ def _stmt_compound_pass(text, kinds, once_bound, top, schema_cols, hoists,
         _demote_mix()
         return text, {}
     # -- split this statement into compound arms ------------------------
-    ops_ix = _tok_scan(toks, 0, n, ("union", "intersect", "except"))
+    ops_ix = scan_words(toks, 0, n, ("union", "intersect", "except"))
     if not ops_ix:
         dq = _distinct_mix_rewrite(text, toks, kinds, top, no_cls,
                                    hoists)
@@ -7433,7 +7373,7 @@ def _stmt_compound_pass(text, kinds, once_bound, top, schema_cols, hoists,
         ops.append(op)
         pos = nxt
     # the final arm runs to the compound's ORDER BY / LIMIT tail
-    tail_ix = _tok_scan(toks, pos, n, ("order", "limit"))
+    tail_ix = scan_words(toks, pos, n, ("order", "limit"))
     last_hi = tail_ix[0] if tail_ix else n
     arms.append((pos, last_hi))
     tail = text[toks[last_hi].start:] if last_hi < n else ""

@@ -139,3 +139,58 @@ def tokenize(sql: str) -> list[Tok]:
         low = text.lower() if kind == "word" else ""
         toks.append(Tok(kind, text, m.start(), m.end(), low))
     return toks
+
+
+# ---------------------------------------------------------------------------
+# Structure over tokens: parentheses, depth-0 words, depth-0 commas.  A
+# parenthesis or comma inside a literal, a quoted name or a comment is no
+# token of its own, so none of these can miscount it.
+# ---------------------------------------------------------------------------
+
+def scan_words(toks: list[Tok], lo: int, hi: int, words) -> list[int]:
+    """Indices of the depth-0 word tokens in ``toks[lo:hi]`` whose ``low``
+    is in ``words``.  A `from` directly after the word `distinct` belongs
+    to `IS [NOT] DISTINCT FROM`, not to a FROM clause, and is skipped."""
+    out, depth = [], 0
+    for ix in range(lo, hi):
+        t = toks[ix]
+        if t.text == "(":
+            depth += 1
+        elif t.text == ")":
+            depth -= 1
+        elif (depth == 0 and t.kind == "word" and t.low in words
+              and not (t.low == "from" and ix
+                       and toks[ix - 1].low == "distinct")):
+            out.append(ix)
+    return out
+
+
+def match_paren(toks: list[Tok], i: int, hi: int) -> int | None:
+    """Index of the `)` token closing the `(` token at ``i``, searched
+    before ``hi``; None when it is not closed there."""
+    depth = 0
+    for ix in range(i, hi):
+        if toks[ix].text == "(":
+            depth += 1
+        elif toks[ix].text == ")":
+            depth -= 1
+            if depth == 0:
+                return ix
+    return None
+
+
+def split_items(toks: list[Tok], lo: int, hi: int) -> list[tuple[int, int]]:
+    """Split the token range [lo, hi) on its depth-0 commas: one (a, b)
+    range per item, an empty range for an empty item."""
+    out, depth, start = [], 0, lo
+    for ix in range(lo, hi):
+        t = toks[ix]
+        if t.text == "(":
+            depth += 1
+        elif t.text == ")":
+            depth -= 1
+        elif depth == 0 and t.text == ",":
+            out.append((start, ix))
+            start = ix + 1
+    out.append((start, hi))
+    return out

@@ -12,8 +12,12 @@ locally):
     re-asserted before every query because the dialect queries pin it off
     at runtime (their declared semantics).
 
+Named queries (any other arguments) are checked alone, on both legs,
+whatever the window.
+
 Usage:
     python scripts/verify_contract.py [--ansi off|on|both]   # default both
+    python scripts/verify_contract.py q1 q2 ...              # only these
 """
 import json, math, os, sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -22,9 +26,10 @@ from dsq_spark.session import get_spark
 import duckdb
 
 SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-MODE = "both"
-if "--ansi" in sys.argv:
-    MODE = sys.argv[sys.argv.index("--ansi") + 1]
+MODE, args = "both", sys.argv[1:]
+if "--ansi" in args:
+    k = args.index("--ansi")
+    MODE, args = args[k + 1], args[:k] + args[k + 2:]
 spark = get_spark("verify-contract")
 spark.sparkContext.setLogLevel("ERROR")
 print("entry rows:", E.entry(spark).count(), flush=True)
@@ -74,9 +79,9 @@ def run_leg(ansi: str, names):
             fails.append(f"{name}@ansi={ansi}")
             print(f"[ansi={ansi}] {i:2d} {name}: ERR {str(ex).splitlines()[0][:160]}", flush=True)
 
-names = list(qs)
+names = args or list(qs)
 if MODE in ("off", "both"):
     run_leg("false", names)
 if MODE in ("on", "both"):
-    run_leg("true", names[:50])
+    run_leg("true", args or names[:50])
 print("FAILS:", fails)

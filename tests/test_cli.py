@@ -350,6 +350,24 @@ def test_collate_result_name_matches_sqlite(spark, token_forms):
     assert [tuple(r.values()) for r in got] == cur.fetchall()
 
 
+def test_quoted_collation_names_match_sqlite(spark):
+    """SQLite takes a collation name in "…", `…` or '…' as the bare
+    word: each comparison is 1, and the quoted name is no identifier for
+    the double-quote fallback."""
+    import sqlite3
+
+    from dsq_spark.cli import Args, _prepare, _sql
+    from dsq_spark.rewrite import rewrite_query_tracked
+
+    con = sqlite3.connect(":memory:")
+    sql = ("SELECT 'a' = 'A' COLLATE \"nocase\" AS d, "
+           "'a' = 'A' COLLATE `NOCASE` AS b, 'a' = 'A' COLLATE 'nocase' AS s")
+    assert rewrite_query_tracked(sql)[1] == frozenset()
+    got = _sql(spark, *_prepare(spark, Args(), sql, {})).collect()
+    assert [tuple(r) for r in got] == con.execute(sql).fetchall() \
+        == [(1, 1, 1)]
+
+
 def test_literal_glob_pattern_matches_sqlite(spark):
     """A literal GLOB pattern takes the same lowering as a computed one:
     a REAL operand is matched in SQLite's text rendering, and a BLOB
@@ -383,6 +401,30 @@ def test_arrow_left_operands_match_sqlite(spark, token_forms):
         got = json.loads(out)
         assert got == base, sql
         assert [str(r["v"]) for r in got] == [str(v) for v, in want], sql
+
+
+def test_arrow_binds_like_concat(spark, token_forms):
+    """`->`/`->>` share `||`'s precedence, left-associative, and a unary
+    prefix binds tighter than all three: the left operand is the whole
+    `||` chain before the arrow, a literal included, while `*` binds
+    looser.  sqlite3 raises "malformed JSON" on `'p' || j`; this engine
+    answers NULL there (the soft-NULL delta in PARITY.md), not `'p' ||
+    (j->>'a')`."""
+    path, con = token_forms
+    for sql in ["SELECT j || ''->>'a' AS v FROM {} ORDER BY id",
+                "SELECT '{\"a\":5}'->>'a' AS v FROM {} ORDER BY id",
+                "SELECT -j->>'a' AS v FROM {} ORDER BY id",
+                "SELECT 2 * j->>'a' AS v FROM {} ORDER BY id",
+                "SELECT 'p' || j->>'a' AS v FROM {} ORDER BY id"]:
+        rc, out = _run([path, sql], spark)
+        assert rc == 0, sql
+        got = [r["v"] for r in json.loads(out)]
+        if "'p'" in sql:
+            assert got == [None, None], sql
+            continue
+        want = con.execute(sql.replace("{}", "t")).fetchall()
+        assert [None if v is None else str(v) for v in got] == \
+            [None if v is None else str(v) for v, in want], sql
 
 
 def test_compact_dataset(spark, tmp_path):

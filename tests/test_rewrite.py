@@ -101,6 +101,67 @@ def test_token_rules_apply_to_tokens_only():
         _rewrite_tokens("SELECT 0x10000000000000000")
 
 
+@pytest.mark.parametrize("gap", [" ", "     ", " /* x */ ", "\n-- x\n"])
+def test_scan_words_depth0_outside_opaque_tokens(gap):
+    """A clause word inside a literal, a quoted name, a comment or a
+    parenthesis is not found, and neither is the FROM of
+    `IS DISTINCT FROM`, whatever lies between DISTINCT and FROM."""
+    from dsq_spark.sqllex import scan_words, tokenize
+
+    sql = ("SELECT 'from', \"from\", `from` /* from */, -- from\n"
+           f"a IS DISTINCT{gap}FROM b, (SELECT 1 FROM u) FROM t")
+    toks = tokenize(sql)
+    hits = scan_words(toks, 0, len(toks), ("from", "select"))
+    assert [toks[ix].start for ix in hits] == [0, sql.rindex("FROM")]
+
+
+def test_match_paren_and_split_items():
+    from dsq_spark.sqllex import match_paren, split_items, tokenize
+
+    sql = "group_concat(\"last, first\", ', ') || f((1, 2))"
+    toks = tokenize(sql)
+    close = match_paren(toks, 1, len(toks))
+    assert toks[close].end == sql.index("||") - 1
+    assert [sql[toks[a].start:toks[b - 1].end]
+            for a, b in split_items(toks, 2, close)] == \
+        ['"last, first"', "', '"]
+    assert split_items(toks, 2, 2) == [(2, 2)]
+    assert match_paren(toks, 1, close) is None
+
+
+@pytest.mark.parametrize("sql, want", [
+    # a bare column is named by itself: a comment after it is no part of
+    # its name (sqlite3 3.40.1 names each of these `a`)
+    ("SELECT a /* note */ FROM t", "SELECT a /* note */ FROM t"),
+    ("SELECT a -- c\nFROM t", "SELECT a -- c\nFROM t"),
+    ("SELECT (a) /* c */, count(*) FROM t",
+     "SELECT any_value((a)) AS `a` , count(*)  AS `count(*)` FROM t"),
+    # a computed item keeps a trailing comment in its name, not a
+    # leading one
+    ("SELECT a+1 /* note */ FROM t",
+     "SELECT a+1 /* note */  AS `a+1 /* note */` FROM t"),
+    ("SELECT /* c */ a+1 FROM t", "SELECT /* c */ a+1  AS `a+1` FROM t"),
+    # the name after a comment is an implicit alias
+    ("SELECT a+1 /* c */ total FROM t", "SELECT a+1 /* c */ total FROM t"),
+])
+def test_select_item_names_around_comments(sql, want):
+    assert rewrite_query(sql) == want
+
+
+def test_stray_columns_skip_type_names_and_blob_literals():
+    """In an aggregate item a schema column is wrapped where it is a
+    reference, not as a CAST type name or a blob literal's x."""
+    from dsq_spark.rewrite import _select_lists
+
+    schema = {"a": "int", "x": "text", "text": "text"}
+    sql = "SELECT max(a) + length(x'41') FROM t"
+    assert _select_lists(sql, schema) == sql
+    assert _select_lists("SELECT sum(a) || CAST(a AS text) FROM t",
+                         schema) == ("SELECT sum(a) || CAST(any_value(a) AS "
+                                     "text) AS `sum(a) || CAST(a AS text)` "
+                                     "FROM t")
+
+
 # SQLite's opaque spans — '…', "…", `…`, -- and /* */ — hide quotes,
 # commas and parentheses from every pass (each case failed when the passes
 # knew only '…'); sqlite3 3.40.1 accepts every statement.

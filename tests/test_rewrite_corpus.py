@@ -10,9 +10,11 @@ workloads send for seeds 0-2 (the 1/4/48-wide dialect statements,
 group_concat, WITH RECURSIVE, the double-quote fallback, the CLI calls,
 the known-defect probes and the taxi group-by), then the statements of
 test_cli.py's quoted-name, COLLATE-naming, literal-GLOB and `->>` operand
-tests, each with the column kinds the CLI derives for its input file.  Each line records what the
-rewrite returned for it — `out` and the sorted `dquoted` names — or the
-`error` it raised ("Type: message").  The rewrite keeps no state between
+tests, each with the column kinds the CLI derives for its input file, then
+the select items around comments of test_rewrite.py and the quoted
+collation names and `||`-chained arrow operands of test_cli.py.  Each
+line records what the rewrite returned for it — `out` and the sorted
+`dquoted` names — or the `error` it raised ("Type: message").  The rewrite keeps no state between
 calls, so the corpus replays in file order in one process, and replays
 the same from several threads at once.  A refactor of the rewrite passes
 must reproduce it byte for byte; a line that changes on purpose is

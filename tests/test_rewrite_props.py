@@ -123,19 +123,22 @@ def test_unaliased_naming_matches_sqlite(spark):
     con.executemany("INSERT INTO tn VALUES (?, ?)", [(1, 2), (3, 4), (5, 6)])
     spark.sql("CREATE OR REPLACE TEMP VIEW tn AS "
               "SELECT * FROM VALUES (1, 2), (3, 4), (5, 6) AS v(a, b)")
-    # SQLite allows mixing aggregates with bare columns sans GROUP BY;
-    # Spark does not — keep the two families separate per query.
+    # a comment after a bare column is not part of its name; after a
+    # computed item it is (sqlite3 names `a+1 /* n */` by its text)
     scalar_pool = [
         "a", "b", "a + b", "a+b", "a * 2 - b", "abs(a - b)", "max(a, b)",
         "CAST(a AS INT)", "CASE WHEN a > 1 THEN a ELSE b END",
         "a + b total", "b AS bee", "(a)", "(a + b)", "a % 2", "-a",
         "typeof(a)", "iif(a > b, a, b)",
+        "a /* n */", "(a) -- n\n", "tn.a /* n */", "a+1 /* n */",
     ]
     agg_pool = ["count(*)", "COUNT(*)", "sum(a)", "Sum(B)", "max(a)",
                 "total(b)", "sum(a + b)"]
     rnd = random.Random(7)
-    for _ in range(25):
-        pool = scalar_pool if rnd.random() < 0.7 else agg_pool
+    for _ in range(40):
+        # SQLite runs an aggregate list with bare columns in it (each
+        # takes a value from one input row), so draw mixed lists too
+        pool = rnd.choice([scalar_pool, agg_pool, scalar_pool + agg_pool])
         items = rnd.sample(pool, k=rnd.randint(1, 3))
         q = "SELECT " + ", ".join(items) + " FROM tn"
         want = [d[0] for d in con.execute(q).description]

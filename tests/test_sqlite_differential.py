@@ -2277,6 +2277,9 @@ def test_r8_bare_columns_having_orderby(engines):
         "SELECT max(a) FROM td ORDER BY c",
         "SELECT a, c, max(b) FROM td GROUP BY a IS NULL ORDER BY b",
         "SELECT b AS k, count(*) AS n FROM td GROUP BY b ORDER BY k",
+        # a "…" column is one reference, wrapped whole
+        'SELECT max(a) FROM td ORDER BY "c"',
+        'SELECT max(a) + "b" FROM td',
     ]:
         want, got = _run(spark, con, q)
         assert want == got, q
@@ -2290,6 +2293,8 @@ def test_r8_bare_columns_having_orderby(engines):
         "SELECT count(*) FROM td HAVING a IS NOT NULL",
         "SELECT a, count(*) FROM td GROUP BY a HAVING b IS NOT NULL",
         "SELECT a, count(*) AS n FROM td GROUP BY a ORDER BY b, a",
+        # OVER in a literal is no window
+        "SELECT c, count(*) FROM td WHERE c <> 'over'",
     ]:
         want = con.execute(q).fetchall()
         got = spark.sql(rewrite_query(q, SCHEMA)).collect()
