@@ -54,7 +54,8 @@ Flags (reference-compatible, main.go:341-432):
   -v, --version           print version
   -h, --help              this help
 
-Env: DSQ_CACHE=true, DSQ_CONVERT_NUMBERS=true (reference main.go:344-346).
+Env: DSQ_CACHE=true, DSQ_CONVERT_NUMBERS=true (reference main.go:344-346),
+DSQ_STRICT_JSON=1 (as --strict-json).
 """
 
 
@@ -71,12 +72,15 @@ class Args:
     dump_cache_file: bool = False
     interactive: bool = False
     verbose: bool = False
+    strict_json: bool = False
 
 
 def parse_args(argv: list[str]) -> Args | None:
     a = Args()
     a.convert_numbers = os.environ.get("DSQ_CONVERT_NUMBERS", "").lower() == "true"
     a.cache = os.environ.get("DSQ_CACHE", "").lower() == "true"
+    a.strict_json = os.environ.get("DSQ_STRICT_JSON", "").lower() in (
+        "1", "true", "yes")
     nonflag: list[str] = []
     i = 0
     while i < len(argv):
@@ -116,11 +120,9 @@ def parse_args(argv: list[str]) -> Args | None:
         elif arg == "--strict-json":
             # SQLite-loud JSON1: malformed JSON / bad paths raise (the
             # reference surfaces SQLite's error) instead of the engine's
-            # default NULL/zero-rows.  Env, not an Args field: the flag
-            # must reach register_all AND the rewrite-time lowering and
-            # inlining decisions, all of which read DSQ_STRICT_JSON
-            # through functions.strict_json_mode.  `run` restores it.
-            os.environ["DSQ_STRICT_JSON"] = "1"
+            # default NULL/zero-rows.  _prepare hands the mode to the
+            # rewrite and to register_all.
+            a.strict_json = True
         elif arg == "--verbose":
             a.verbose = True
         else:
@@ -222,10 +224,9 @@ def _ingest(spark, a: Args, refs: list[TableRef]):
 
 
 def run(argv: list[str], spark=None) -> int:
-    """Run one dsq call.  What the call sets for itself, --strict-json's
-    DSQ_STRICT_JSON and --verbose's reports from the readers, lasts only
-    until it returns, so a later call in the same session is not changed."""
-    strict = os.environ.get("DSQ_STRICT_JSON")
+    """Run one dsq call.  What the call sets for itself, --verbose's
+    reports from the readers, lasts only until it returns, so a later call
+    in the same session is not changed."""
     sources = logging.getLogger("dsq_spark.sources")
     level, report, spooled = sources.level, None, None
     try:
@@ -247,10 +248,6 @@ def run(argv: list[str], spark=None) -> int:
         if report is not None:
             sources.removeHandler(report)
             sources.setLevel(level)
-        if strict is None:
-            os.environ.pop("DSQ_STRICT_JSON", None)
-        else:
-            os.environ["DSQ_STRICT_JSON"] = strict
 
 
 def _run(a: Args, spark) -> int:
@@ -298,10 +295,11 @@ def _prepare(spark, a: Args, query: str, kinds) -> tuple[str, frozenset[str]]:
     """Rewrite one statement and register the function library if it
     calls any of it (functions.register_all); --verbose reports the
     rewrite and what was registered on stderr."""
-    rewritten, dquoted = rewrite_query_tracked(query, kinds)
+    rewritten, dquoted = rewrite_query_tracked(query, kinds, a.strict_json)
     from dsq_spark.functions import register_all
 
-    registered = register_all(spark, sql=rewritten)
+    registered = register_all(spark, sql=rewritten,
+                              strict_json=a.strict_json)
     if a.verbose:
         print(f"dsq-spark: rewritten SQL: {rewritten}", file=sys.stderr)
         print("dsq-spark: functions registered: "

@@ -22,12 +22,11 @@ pure JVM, no Python UDF in the hot path.
 from __future__ import annotations
 
 import functools
-import os
 import re
 
 from pyspark.sql import SparkSession
 
-from dsq_spark.sqllex import opaque_spans, split_top
+from dsq_spark.sqllex import call_name, opaque_spans, split_top, tokenize
 
 # Formats best_effort_ts tries, in order (first match wins). Mirrors the
 # high-frequency cases of the reference's dateparse dependency.
@@ -472,31 +471,20 @@ def library_names() -> tuple[str, ...]:
         for s in _sql_udfs()) + _PYTHON_UDFS
 
 
-@functools.cache
-def _call_re() -> re.Pattern:
-    return re.compile(r"\b(?:%s)`?\s*\(" % "|".join(library_names()),
-                      re.IGNORECASE)
-
-
 def calls_library(sql: str) -> bool:
-    """Whether ``sql`` calls any library function (``name(``, any case)."""
-    return _call_re().search(sql) is not None
-
-
-def strict_json_mode(strict_json: bool | None = None) -> bool:
-    """The JSON1 mode: ``strict_json`` when given, else the
-    DSQ_STRICT_JSON env flag (the CLI's --strict-json).  register_all and
-    the rewrite-time inliner (rewrite._inline_agg_safe, which must not
-    inline the soft json()/json_extract() bodies in strict mode) both
-    read it here, so neither depends on which ran first."""
-    if strict_json is not None:
-        return bool(strict_json)
-    return os.environ.get("DSQ_STRICT_JSON", "").lower() in (
-        "1", "true", "yes")
+    """Whether ``sql`` calls any library function (sqllex.call_name: any
+    case, a backticked name too, a comment before the `(` allowed).  A
+    call holds its name, so text that holds none is not tokenized."""
+    names = frozenset(library_names())
+    low = sql.lower()
+    if not any(name in low for name in names):
+        return False
+    toks = tokenize(sql)
+    return any(call_name(toks, ix) in names for ix in range(len(toks)))
 
 
 def register_all(spark: SparkSession, sql: str | None = None,
-                 strict_json: bool | None = None,
+                 strict_json: bool = False,
                  force: bool = False) -> list[str]:
     """Register the extended function library on this session and return
     the names registered.
@@ -509,7 +497,7 @@ def register_all(spark: SparkSession, sql: str | None = None,
     of them, so a statement like that skips it.  With ``sql=None``
     (registry queries, tests) it always registers.
 
-    ``strict_json`` (default: :func:`strict_json_mode`) reproduces
+    ``strict_json`` (the CLI's --strict-json) reproduces
     SQLite's LOUDNESS on malformed JSON: the reference surfaces SQLite's
     'malformed JSON' error to the user, while this engine's default is
     the softer NULL / zero rows (documented PARITY delta).  Strict mode
@@ -523,7 +511,6 @@ def register_all(spark: SparkSession, sql: str | None = None,
     of strftime_code_coverage: every datetime/dialect query re-paid the
     whole registration).  ``force`` replays regardless (tests that
     monkeypatch registration)."""
-    strict_json = strict_json_mode(strict_json)
     mode = "strict" if strict_json else "soft"
     marker = "spark.dsq.registeredFunctions"
     if not force:
@@ -1108,18 +1095,23 @@ def _json_type_alias(parts: list[str]) -> str:
         "ELSE 'text' END")
 
 
-# Forms that already ARE json text when the mutator alias sees them.  The
-# alias callable runs AFTER its arguments were recursively alias-expanded
-# (rewrite._rewrite_fn_aliases), so this matches the EXPANDED spellings:
+# Calls that already ARE json text when the mutator alias sees them.  The
+# alias callable runs AFTER its arguments were alias-expanded
+# (rewrite._rewrite_calls), so these are the EXPANDED spellings:
 # json()/json_extract() are plain SQL UDFs (pass through unexpanded), the
 # other mutators expand to dsq_json_*, and json_array/json_object/
 # json_group_* expand to concat('['… / concat('{'… builders.
-_JSON_VALUED = _re.compile(
-    r"(?is)^\s*(?:"
-    r"json\s*\(|json_extract\s*\(|json_patch\s*\(|"
-    r"dsq_json_(?:set|insert|replace|remove)\s*\(|"
-    r"concat\(\s*'\[|concat\(\s*'\{"
-    r")")
+_JSON_CALLS = frozenset((
+    "json", "json_extract", "json_patch", "dsq_json_set", "dsq_json_insert",
+    "dsq_json_replace", "dsq_json_remove"))
+
+
+def _json_valued(expr: str) -> bool:
+    """Whether ``expr`` starts with a call that yields JSON text."""
+    toks = tokenize(expr)
+    name = call_name(toks, 0) if toks else None
+    return name in _JSON_CALLS or name == "concat" and len(toks) > 2 and \
+        toks[2].kind == "str" and toks[2].text[1:2] in ("[", "{")
 
 
 def _json_val(expr: str) -> str:
@@ -1128,7 +1120,7 @@ def _json_val(expr: str) -> str:
     SQLite's JSON subtype for the syntactic cases — json_set(j, p,
     json_array(...)) inserts an array, not a quoted string); everything
     else serializes through _jq so SQL typing is preserved."""
-    return expr.strip() if _JSON_VALUED.match(expr) else _jq(expr)
+    return expr.strip() if _json_valued(expr) else _jq(expr)
 
 
 def _json_mutator_alias(kind: str):
@@ -1417,7 +1409,7 @@ AGG_ALIASES = {
 # OVER text.  Aliases whose expansion ENDS at the aggregate call
 # (stddev, percentile_NN, 1-arg min/max) need no entry: the suffix
 # attaches naturally.  FILTER-before-OVER is folded into a CASE argument
-# upstream (rewrite._fold_filter_over), so only the OVER clause arrives.
+# in the same pass (rewrite._rewrite_calls), so only the OVER clause arrives.
 AGG_ALIASES_OVER = {
     "total": lambda parts, over: (
         f"coalesce(CAST(sum(0.0D + "

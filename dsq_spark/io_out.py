@@ -302,203 +302,3 @@ def _shape_pretty(shape: dict, indent: int, fh: IO[str]) -> None:
 def schema_pretty(df: DataFrame, fh: Optional[IO[str]] = None) -> None:
     fh = fh if fh is not None else sys.stdout
     _shape_pretty(table_shape(df), 0, fh)
-
-
-def write_parquet_dataset(
-    df: DataFrame,
-    path: str,
-    partition_by: tuple[str, ...] = (),
-    max_records_per_file: int = 1_000_000,
-    mode: str = "error",
-) -> None:
-    """Training-pipeline sink (extension beyond the reference's JSON/table
-    outputs): a partitioned parquet dataset laid out for downstream
-    consumption at scale.
-
-    * `partition_by` gives directory-level partition pruning to every later
-      reader (e.g. lang=en/ shards for per-language training mixes);
-    * `maxRecordsPerFile` bounds individual file size so a skewed partition
-      (one dominant language) still splits into parallel-readable files;
-    * parquet + snappy keeps scans columnar and splittable — the same
-      properties our own readers rely on.
-    """
-    w = df.write.mode(mode).option("maxRecordsPerFile", max_records_per_file)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(path)
-
-
-def compact_dataset(
-    spark,
-    path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-    partition_by: tuple[str, ...] = (),
-) -> int:
-    """Compact a small-file parquet dataset in place (write-new-then-swap):
-    long-running ingest jobs accumulate many small files, and at scale the
-    per-file open/footer cost dominates scans. Sizes the output file count
-    from the actual input bytes, preserves partition columns, and returns
-    the number of files after compaction.
-
-    All filesystem operations go through the Hadoop FileSystem API resolved
-    from the path's own scheme, so the same code compacts local directories
-    (file:/), HDFS, and object stores (s3a:/ etc.) — no driver-local
-    os.walk/shutil assumptions. On object stores the final rename is a copy
-    under the hood but remains the correct single-writer swap."""
-    import math
-
-    jvm = spark._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(hconf)
-
-    def _scan(p):
-        """(total_bytes, file_count) over *.parquet, recursively."""
-        total = count = 0
-        it = fs.listFiles(p, True)
-        while it.hasNext():
-            st = it.next()
-            if st.getPath().getName().endswith(".parquet"):
-                total += st.getLen()
-                count += 1
-        return total, count
-
-    total, _ = _scan(jpath)
-    n_files = max(1, math.ceil(total / target_file_bytes))
-    df = spark.read.parquet(path)
-    tmp = path.rstrip("/") + ".compact.tmp"
-    jtmp = jvm.org.apache.hadoop.fs.Path(tmp)
-    w = df.repartition(n_files).write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(tmp)
-    if not fs.delete(jpath, True):
-        raise IOError(f"could not delete {path} for compaction swap")
-    if not fs.rename(jtmp, jpath):
-        raise IOError(f"could not rename {tmp} back to {path}")
-    _, count = _scan(jpath)
-    return count
-
-
-def write_clustered_dataset(
-    df: DataFrame,
-    path: str,
-    cluster_by: tuple[str, ...],
-    num_files: int | None = None,
-    mode: str = "error",
-) -> None:
-    """Range-clustered parquet write: the write-side half of data skipping.
-
-    `partitionBy` (write_parquet_dataset) prunes on low-cardinality
-    directory keys; for HIGH-cardinality range predicates (timestamps, ids)
-    the lever is clustering: repartitionByRange assigns disjoint key ranges
-    to files and sortWithinPartitions orders rows inside each, so every
-    parquet file/row-group carries tight min-max stats and a later
-    `WHERE ts BETWEEN ...` scan skips all but the overlapping files. At
-    100 TB this turns full-corpus scans into touched-range scans without
-    any directory explosion."""
-    from pyspark.sql import functions as F
-
-    parts = num_files or df.sparkSession.sparkContext.defaultParallelism
-    (
-        df.repartitionByRange(parts, *[F.col(c) for c in cluster_by])
-        .sortWithinPartitions(*cluster_by)
-        .write.mode(mode)
-        .parquet(path)
-    )
-
-
-def write_zordered_dataset(
-    df: DataFrame,
-    path: str,
-    zorder_by: tuple[str, ...],
-    num_files: int | None = None,
-    bits: int = 16,
-    mode: str = "error",
-) -> None:
-    """Z-order-clustered parquet write: multi-column data skipping.
-
-    `write_clustered_dataset` gives tight per-file min/max on ONE range key;
-    a second predicate column still touches every file. Interleaving the
-    bits of 2-4 normalized keys into one Morton (Z) value and range-
-    clustering on THAT gives every file a bounding box that is small in
-    EVERY z-ordered dimension, so predicates on any of the columns skip
-    most files — the layout trick behind Delta/Iceberg OPTIMIZE ZORDER,
-    built here from Spark primitives only:
-
-      1. one aggregate computes per-column min/max (two driver scalars per
-         column — no collect of data);
-      2. each key maps to a `bits`-wide integer: numerics/timestamps/dates
-         min-max-normalize (monotone, so per-file z-ranges translate back
-         to value ranges); strings hash (xxhash64 & mask) — equality
-         skipping only, documented;
-      3. the Morton value is a pure Catalyst bit-interleave (HOF over
-         sequence(0, bits-1) of shift/mask terms — whole-stage codegen,
-         no UDF);
-      4. repartitionByRange + sortWithinPartitions on z, drop z, write —
-         identical write path to the range-clustered sink.
-
-    Min-max normalization is deliberate: it keeps the prepass to one tiny
-    aggregate. Heavily skewed keys compress into few buckets and weaken
-    skipping on that column; the production extension is rank-based
-    bucketing from an approx-quantile sketch, same interleave after.
-    """
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    spark = df.sparkSession
-    mask = (1 << bits) - 1
-
-    def numeric_expr(c: str):
-        dt = df.schema[c].dataType
-        if isinstance(dt, T.TimestampType) or isinstance(dt, T.TimestampNTZType):
-            return F.expr(f"CAST(unix_micros(CAST({c} AS TIMESTAMP)) AS DOUBLE)")
-        if isinstance(dt, T.DateType):
-            return F.expr(f"CAST(datediff({c}, DATE '1970-01-01') AS DOUBLE)")
-        if isinstance(dt, T.StringType):
-            return None  # hash path
-        return F.col(c).cast("double")
-
-    nums = {c: numeric_expr(c) for c in zorder_by}
-    bounds_cols = []
-    for c, e in nums.items():
-        if e is not None:
-            bounds_cols += [F.min(e).alias(f"mn_{c}"), F.max(e).alias(f"mx_{c}")]
-    bounds = df.agg(*bounds_cols).first().asDict() if bounds_cols else {}
-
-    def numeric_sql(c: str) -> str:
-        dt = df.schema[c].dataType
-        if isinstance(dt, (T.TimestampType, T.TimestampNTZType)):
-            return f"CAST(unix_micros(CAST({c} AS TIMESTAMP)) AS DOUBLE)"
-        if isinstance(dt, T.DateType):
-            return f"CAST(datediff({c}, DATE '1970-01-01') AS DOUBLE)"
-        return f"CAST({c} AS DOUBLE)"
-
-    terms = []
-    n = len(zorder_by)
-    for i, c in enumerate(zorder_by):
-        if nums[c] is None:
-            nv = f"(xxhash64({c}) & {mask})"
-        else:
-            mn, mx = bounds[f"mn_{c}"], bounds[f"mx_{c}"]
-            span = (mx - mn) or 1.0
-            scaled = (f"CAST(round(({numeric_sql(c)} - CAST({mn!r} AS DOUBLE)) "
-                      f"* {mask}.0d / CAST({span!r} AS DOUBLE)) AS BIGINT)")
-            nv = (f"greatest(CAST(0 AS BIGINT), "
-                  f"least(CAST({mask} AS BIGINT), {scaled}))")
-        # bit j of column i lands at position j*n + i (MSB-significant
-        # columns alternate, the textbook Morton layout)
-        terms.append(
-            f"aggregate(sequence(0, {bits - 1}), CAST(0 AS BIGINT), "
-            f"(acc, j) -> acc + shiftleft(shiftright({nv}, j) & 1, j * {n} + {i}))")
-    z = "(" + " + ".join(terms) + ")"
-
-    parts = num_files or spark.sparkContext.defaultParallelism
-    (
-        df.withColumn("__z", F.expr(z))
-        .repartitionByRange(parts, F.col("__z"))
-        .sortWithinPartitions("__z")
-        .drop("__z")
-        .write.mode(mode)
-        .parquet(path)
-    )

@@ -17,39 +17,48 @@ closes the gap in this order:
      backticks, non-ASCII names, REGEXP → RLIKE, COLLATE names, LIKE →
      ILIKE, hex and real literals, and `x->key` / `x->>key` →
      get_json_object;
-  3. call-site rewrites: FILTER on window aggregates, and the function
-     aliases of dsq_spark.functions.AGG_ALIASES (`percentile_75(x)`,
-     `group_concat`, the datetime family, …);
+  3. ONE pass over the sqllex tokens (_rewrite_calls) for every call
+     site: the FILTER fold, the function aliases of
+     dsq_spark.functions.AGG_ALIASES (`percentile_75(x)`, `group_concat`,
+     the datetime family, …) and the OVER clause they take, innermost
+     call first;
   4. dsq_spark.sqlexpr.rewrite_semantics: SQLite's arithmetic, affinity,
      CAST, truthiness and GLOB (Spark has no GLOB operator; both operands
      take SQLite's TEXT rendering);
   5. tree-size and analyzer guards: repeated per-row chains projected
-     once, SQL functions inlined in aggregate statements, emission caps.
+     once, SQL functions inlined in aggregate statements by one pass over
+     the sqllex tokens (_inline_agg_safe), emission caps.
 
 All rewrites take SQLite's lexical rules from dsq_spark.sqllex: string
 literals are never touched, and a quote, comma or parenthesis inside a
-literal, a quoted identifier or a comment is never SQL structure. This is
-a string→string transform — Catalyst does the actual parsing/optimization
-downstream.
+literal, a quoted identifier or a comment is never SQL structure.
+sqllex.call_name decides what a function call is for steps 3 and 5 and
+for functions.calls_library, so a comment between a call's tokens is
+whitespace there, as in SQLite (json_each and the hoist's search for
+window calls still scan text).  This is a string→string transform —
+Catalyst does the actual parsing/optimization downstream.
 
 Contract: rewrite_query is applied ONCE per statement (the CLI, the REPL
 and the query registry each rewrite a statement once), and its output
-depends only on ``(sql, schema)`` — no state is kept from one call to the
-next, so concurrent calls are safe.  Its input is SQLite-dialect text and
-its output is Spark SQL: applied to its own output it reads that as
-SQLite text like any other (a literal's backslashes are doubled again),
-so the rewrite is not a fixpoint and callers must not apply it twice.
+depends only on ``(sql, schema, strict_json)`` — no state is kept from
+one call to the next and no environment is read, so concurrent calls are
+safe.  Its input is SQLite-dialect text and its output is Spark SQL:
+applied to its own output it reads that as SQLite text like any other (a
+literal's backslashes are doubled again), so the rewrite is not a
+fixpoint and callers must not apply it twice.
 """
 
 from __future__ import annotations
 
+import functools
 import re
+from collections.abc import Iterator
 from dataclasses import dataclass
 from typing import NamedTuple
 
-from dsq_spark.sqllex import (Tok, close_paren, inside, match_paren,
-                              opaque_spans, scan_words, split_items, split_top,
-                              tokenize)
+from dsq_spark.sqllex import (Tok, call_name, calls, close_paren, inside,
+                              match_paren, opaque_spans, scan_words,
+                              split_items, split_top, tokenize)
 
 # {N}, {}, {N, "path"}, {"path"}, {N, 'path'} — reference regex main.go:54.
 TABLE_MACRO = re.compile(
@@ -70,39 +79,32 @@ class TableRef:
         return f"t_{self.index}__{safe}"
 
 
-def extract_table_refs(sql: str) -> list[TableRef]:
-    """All `{...}` macros NOT STARTING inside a string literal, dedup'd, in
-    order. Matching runs whole-statement: a macro's path operand may itself
-    be single-quoted (`{0, 'data.data2'}` — reference scripts/test.py:163),
-    which per-chunk scanning would split in half; only the macro's starting
-    `{` must sit outside a literal."""
+def _table_macros(sql: str) -> Iterator[tuple[re.Match, TableRef]]:
+    """Each `{...}` macro of ``sql`` with the table it names, in order.
+    Matching runs whole-statement: a macro's path operand may itself be
+    single-quoted (`{0, 'data.data2'}` — reference scripts/test.py:163);
+    only the macro's starting `{` must sit outside a literal, a quoted
+    name or a comment."""
     spans = opaque_spans(sql)
-    refs: list[TableRef] = []
     for m in TABLE_MACRO.finditer(sql):
-        if inside(spans, m.start()):
-            continue
-        idx = int(m.group(1)) if m.group(1) is not None else 0
-        path = m.group(2) if m.group(2) is not None else m.group(3)
-        ref = TableRef(idx, path)
-        if ref not in refs:
-            refs.append(ref)
-    return refs
+        if not inside(spans, m.start()):
+            path = m.group(2) if m.group(2) is not None else m.group(3)
+            yield m, TableRef(int(m.group(1) or 0), path)
+
+
+def extract_table_refs(sql: str) -> list[TableRef]:
+    """The tables the `{...}` macros of ``sql`` name, dedup'd, in order."""
+    return list(dict.fromkeys(ref for _, ref in _table_macros(sql)))
 
 
 def _sub_table_macros(sql: str) -> str:
-    """Whole-statement `{...}` → view-name substitution (span-aware, same
-    rule as extract_table_refs). Runs BEFORE chunk rewriting so a
-    single-quoted path operand is consumed with its macro."""
-    spans = opaque_spans(sql)
-
-    def repl(m: re.Match) -> str:
-        if inside(spans, m.start()):
-            return m.group(0)
-        idx = int(m.group(1)) if m.group(1) is not None else 0
-        path = m.group(2) if m.group(2) is not None else m.group(3)
-        return TableRef(idx, path).view_name
-
-    return TABLE_MACRO.sub(repl, sql)
+    """Each `{...}` macro → its table's view name."""
+    out, pos = [], 0
+    for m, ref in _table_macros(sql):
+        out += [sql[pos:m.start()], ref.view_name]
+        pos = m.end()
+    out.append(sql[pos:])
+    return "".join(out)
 
 
 # SQLite collation names → Spark 4 collations.  NOCASE folds ASCII only in
@@ -347,6 +349,12 @@ _AGG_NAMES = frozenset((
     "last"))
 _PERCENTILE_N = re.compile(r"percentile_\d+")
 
+
+def _is_agg(name: str | None) -> bool:
+    """Whether a call of ``name`` (sqllex.call_name) is an aggregate."""
+    return name is not None and (
+        name in _AGG_NAMES or _PERCENTILE_N.fullmatch(name) is not None)
+
 # Words that are never a column reference to wrap, even where the schema
 # has a column of that name.
 _BARE_KEYWORDS = frozenset((
@@ -442,24 +450,22 @@ def _skip_subquery(toks: list[Tok], ix: int, hi: int) -> int | None:
 
 
 def _agg_calls(toks: list[Tok], lo: int, hi: int) -> list[tuple[int, int]]:
-    """(name index, closing-paren index) of every aggregate call in
-    toks[lo:hi], nested ones included: a word of _AGG_NAMES not after a
-    `.`, followed by `(`.  An aggregate inside a `( SELECT … )` belongs
-    to that subquery and is skipped; min/max count with one argument
-    only (the 2-argument form is the scalar one)."""
+    """(name index, closing-paren index, else ``hi``) of every aggregate
+    call in toks[lo:hi], nested ones included: a call (sqllex.call_name)
+    that _is_agg.  An aggregate inside a `( SELECT … )` belongs to that
+    subquery and is skipped; min/max count with one argument only (the
+    2-argument form is the scalar one)."""
     out, ix = [], lo
     while ix < hi:
         past = _skip_subquery(toks, ix, hi)
         if past is not None:
             ix = past
             continue
-        t = toks[ix]
-        if (t.kind == "word" and ix + 1 < hi and toks[ix + 1].text == "("
-                and (t.low in _AGG_NAMES or _PERCENTILE_N.fullmatch(t.low))
-                and not (ix and toks[ix - 1].text == ".")):
+        name = call_name(toks, ix)
+        if ix + 1 < hi and _is_agg(name):
             close = match_paren(toks, ix + 1, hi)
             close = hi if close is None else close
-            if t.low not in ("min", "max") or \
+            if name not in ("min", "max") or \
                     len(split_items(toks, ix + 2, close)) == 1:
                 out.append((ix, close))
         ix += 1
@@ -696,155 +702,120 @@ def _select_lists(sql: str, schema: dict[str, str] | None = None) -> str:
     return _splice(sql, 0, len(sql), edits) if edits else sql
 
 
-def _fold_filter_over(sql: str) -> str:
-    """Fold `agg(args) FILTER (WHERE pred) OVER ...` into
-    `agg(CASE WHEN pred THEN arg END) OVER ...`.
+def _sub_calls(sql: str, toks: list[Tok], lo: int, hi: int, names,
+               edit) -> str:
+    """The text between toks[lo - 1] and toks[hi] (the whole of ``sql``
+    for the whole token list) with its calls edited innermost first.
+    Each call of ``names`` (sqllex.calls) goes to ``edit(name, ix, close,
+    sub)``, which returns the call's new text and the index of the last
+    token that text replaces, or None to keep the call as written.
+    ``sub(a, b)`` is this same edit of the text between toks[a - 1] and
+    toks[b]: an argument's item range gives the argument's text."""
+    def sub(a: int, b: int) -> str:
+        return _sub_calls(sql, toks, a, b, names, edit)
 
-    SQLite 3.30+ allows FILTER on windowed aggregates
-    (window-functions.html §aggwinfunc); Spark rejects the combination
-    outright ("Window aggregate function with filter predicate is not
-    supported yet").  Every SQLite aggregate ignores NULL inputs, so
-    NULLing the filtered-out rows' argument is exact: count(*) counts a
-    constant 1 under the predicate, multi-argument aggregates
-    (group_concat's separator) NULL only the value argument.  Plain
-    FILTER (no OVER) stays native — Spark supports it on aggregates.
-    Runs BEFORE alias expansion so total()/group_concat() windowed
-    FILTER forms reach AGG_ALIASES_OVER already folded."""
-    pat = re.compile(r"(?is)\bFILTER\s*\(")
-    while True:
-        spans = opaque_spans(sql)
-        for m in pat.finditer(sql):
-            if inside(spans, m.start()):
-                continue
-            k = close_paren(sql, m.end() - 1)
-            if k is None:
-                continue
-            k += 1
-            body = sql[m.end():k - 1].strip()
-            wm = re.match(r"(?is)^WHERE\b(.*)$", body, re.DOTALL)
-            if not wm:
-                continue
-            has_over = re.match(r"(?is)^\s*OVER\b", sql[k:]) is not None
-            pred = wm.group(1).strip()
-            # the preceding call: ...name ( args )  FILTER
-            pre = sql[:m.start()].rstrip()
-            if not pre.endswith(")"):
-                continue
-            d2, k2 = 0, len(pre) - 1
-            while k2 >= 0:
-                if inside(spans, k2):
-                    k2 -= 1
-                    continue
-                if pre[k2] == ")":
-                    d2 += 1
-                elif pre[k2] == "(":
-                    d2 -= 1
-                    if d2 == 0:
-                        break
-                k2 -= 1
-            if k2 < 0:
-                continue
-            nm = re.search(r"([A-Za-z_]\w*)\s*$", pre[:k2])
-            if not nm:
-                continue
-            fname = nm.group(1)
-            # Without OVER the fold applies only where the native FILTER
-            # is wrong or unplannable: total()/group_concat()/
-            # json_group_*'s expansions WRAP the aggregate (FILTER would
-            # land on coalesce/array_join — FUNCTION_WITH_UNSUPPORTED_
-            # SYNTAX), and sum()/avg() need SQLite's numeric-prefix
-            # coercion, which the quad path only builds over a plain
-            # argument.  Every other aggregate keeps Spark's native
-            # FILTER clause (same plan, one less rewrite).
-            if not has_over and fname.lower() not in (
-                    "sum", "avg", "total", "group_concat",
-                    "json_group_array", "json_group_object"):
-                continue
-            args = pre[k2 + 1:len(pre) - 1]
-            if fname.lower() == "count" and args.strip() == "*":
-                newargs = f"CASE WHEN {pred} THEN 1 END"
-            else:
-                parts = split_top(args)
-                first = parts[0].strip()
-                dm = re.match(r"(?is)^(DISTINCT\s+)(.*)$", first,
-                              re.DOTALL)
-                head, val = (dm.group(1), dm.group(2)) if dm \
-                    else ("", first)
-                parts[0] = f"{head}CASE WHEN {pred} THEN {val} END"
-                newargs = ", ".join(p.strip() for p in parts)
-            sql = (sql[:nm.start(1)] + f"{fname}({newargs}) " + sql[k:])
-            break  # restart: spans shifted
-        else:
-            return sql
-
-
-def _rewrite_fn_aliases(sql: str) -> str:
-    """Expand aggregate-alias calls (percentile_75(x) → percentile(x, 0.75)
-    etc. — see dsq_spark.functions.AGG_ALIASES) with balanced-paren arg
-    capture. Runs over the whole statement because an argument list may
-    itself contain string literals; call sites inside literals are skipped
-    via precomputed spans (string literals AND backticked aliases — an
-    unaliased `max(a)` output column is named `max(a)` verbatim and must
-    not be re-expanded inside its alias)."""
-    from dsq_spark.functions import AGG_ALIASES
-
-    pat = re.compile(
-        r"\b(" + "|".join(re.escape(n) for n in AGG_ALIASES) + r")\s*\(",
-        re.IGNORECASE,
-    )
-    spans = opaque_spans(sql)
-    out, i = [], 0
-    while True:
-        m = pat.search(sql, i)
-        if not m:
-            out.append(sql[i:])
-            break
-        j = None if inside(spans, m.start()) else \
-            close_paren(sql, m.end() - 1)
-        if j is None:
-            out.append(sql[i:m.end()])
-            i = m.end()
-            continue
-        out.append(sql[i:m.start()])
-        j += 1
-        name = m.group(1).lower()
-        # recurse into the arg list first so nested alias calls
-        # (e.g. date(datetime(x, '+1 day'))) are expanded too
-        args = _rewrite_fn_aliases(sql[m.end():j - 1])
-        # a trailing OVER clause on an aggregate-WRAPPING alias must
-        # thread onto the inner aggregate (functions.AGG_ALIASES_OVER);
-        # left outside the expansion it lands on coalesce()/array_join()
-        # — a hard MISSING_GROUP_BY / FUNCTION_WITH_UNSUPPORTED_SYNTAX
-        # error (r8 judge).  FILTER-before-OVER was already folded into
-        # a CASE argument by _fold_filter_over.
-        from dsq_spark.functions import AGG_ALIASES_OVER
-
-        if name in AGG_ALIASES_OVER:
-            ov_m = re.match(r"(?is)\s*OVER\s*", sql[j:])
-            if ov_m:
-                k0 = j + ov_m.end()
-                ov_end = None
-                if k0 < len(sql) and sql[k0] == "(":
-                    k1 = close_paren(sql, k0)
-                    ov_end = len(sql) if k1 is None else k1 + 1
-                else:
-                    wm = re.match(r"`[^`]+`|[A-Za-z_]\w*", sql[k0:])
-                    if wm:
-                        ov_end = k0 + wm.end()
-                if ov_end is not None:
-                    over = "OVER " + sql[k0:ov_end].strip() if \
-                        sql[k0:k0 + 1] == "(" else "OVER " + sql[k0:ov_end]
-                    out.append(AGG_ALIASES_OVER[name](
-                        split_top(args), over))
-                    i = ov_end
-                    continue
-        tpl = AGG_ALIASES[m.group(1).lower()]
-        if callable(tpl):
-            out.append(tpl(split_top(args)))
-        else:
-            out.append(tpl.format(args=args))
-        i = j
+    out, pos, nxt = [], toks[lo - 1].end if lo else 0, lo
+    for name, ix, close in calls(toks, lo, hi, names):
+        if ix < nxt:
+            continue  # inside a call already rewritten
+        got = edit(name, ix, close, sub)
+        if got is not None:
+            text, last = got
+            out += [sql[pos:toks[ix].start], text]
+            pos, nxt = toks[last].end, last + 1
+    out.append(sql[pos:toks[hi].start if hi < len(toks) else len(sql)])
     return "".join(out)
+
+
+# Aggregates whose FILTER clause is folded even without OVER: their
+# expansions WRAP the aggregate (FILTER would land on coalesce/array_join
+# — FUNCTION_WITH_UNSUPPORTED_SYNTAX), and sum()/avg() need SQLite's
+# numeric-prefix coercion, which the dialect compiler builds over a plain
+# argument only.  Every other aggregate keeps Spark's native FILTER
+# clause (same plan, one less rewrite).
+_FOLD_ALWAYS = frozenset(("sum", "avg", "total", "group_concat",
+                          "json_group_array", "json_group_object"))
+
+
+def _rewrite_calls(sql: str) -> str:
+    """SQLite's call-site forms → Spark SQL, in one pass over
+    sqllex.tokenize(sql); the text between tokens is copied as it stands,
+    and arguments are rewritten before the call that holds them.
+
+      * FILTER fold: `agg(args) FILTER (WHERE p)` → `agg(CASE WHEN p THEN
+        arg END)`.  SQLite 3.30+ allows FILTER on windowed aggregates
+        (window-functions.html §aggwinfunc); Spark rejects the pair
+        ("Window aggregate function with filter predicate is not
+        supported yet").  Every SQLite aggregate ignores NULL inputs, so
+        NULLing the filtered-out rows' argument is exact: count(*)
+        counts a constant 1 under the predicate, a leading DISTINCT stays
+        in front of the CASE, and multi-argument aggregates
+        (group_concat's separator) NULL only the value argument.  With a
+        following OVER every call folds; without, only _FOLD_ALWAYS.
+      * the function aliases of dsq_spark.functions.AGG_ALIASES
+        (`percentile_75(x)` → `percentile(x, 0.75D)`, `group_concat`,
+        the datetime family, …): a template gets the argument text, a
+        callable the argument list.  An AGG_ALIASES_OVER name takes the
+        `OVER (…)` / `OVER name` that follows it, since its expansion
+        wraps the aggregate in scalar scaffolding that the window cannot
+        follow (a hard MISSING_GROUP_BY otherwise).
+
+    Comments may sit between any two of these tokens, as in SQLite."""
+    from dsq_spark.functions import AGG_ALIASES, AGG_ALIASES_OVER
+
+    toks = tokenize(sql)
+    n = len(toks)
+
+    def edit(name, ix, close, sub):
+        items = split_items(toks, ix + 2, close)
+        f, fold = close + 1, None
+        if f + 2 < n and toks[f].low == "filter" and \
+                toks[f + 1].text == "(" and toks[f + 2].low == "where":
+            fold = match_paren(toks, f + 1, n)
+            if fold is not None and name not in _FOLD_ALWAYS and not (
+                    fold + 1 < n and toks[fold + 1].low == "over"):
+                fold = None
+        if fold is None and name not in AGG_ALIASES:
+            return None
+        parts = [sub(a, b) for a, b in items]
+        last, tail = close, ""
+        if fold is not None:
+            pred = sub(f + 3, fold).strip()
+            a, b = items[0]
+            if name == "count" and len(items) == 1 and b == a + 1 and \
+                    toks[a].text == "*":
+                parts = [f"CASE WHEN {pred} THEN 1 END"]
+            else:
+                val, head = parts[0].strip(), ""
+                if toks[a].low == "distinct" and b > a + 1:
+                    head = sql[toks[a].start:toks[a + 1].start]
+                    val = val[len(head):]
+                    head += "" if head[-1].isspace() else " "
+                parts = [f"{head}CASE WHEN {pred} THEN {val} END"] + \
+                    [" " + p.strip() for p in parts[1:]]
+            last, tail = fold, " "
+        o = last + 1
+        if name in AGG_ALIASES_OVER and o + 1 < n and toks[o].low == "over":
+            w = toks[o + 1]
+            if w.text == "(":
+                end = match_paren(toks, o + 1, n)
+                end = n - 1 if end is None else end
+                return (AGG_ALIASES_OVER[name](
+                    parts, "OVER " + sql[w.start:toks[end].end]), end)
+            if _is_name(w):
+                return AGG_ALIASES_OVER[name](parts, "OVER " + w.text), o + 1
+        tpl = AGG_ALIASES.get(name)
+        if tpl is None:
+            text = f"{toks[ix].text}({','.join(parts)})"
+        elif callable(tpl):
+            text = tpl(parts)
+        else:
+            text = tpl.format(args=",".join(parts))
+        return text + tail, last
+
+    filters = any(t.low == "filter" for t in toks)
+    return _sub_calls(sql, toks, 0, n, None if filters else AGG_ALIASES,
+                      edit)
 
 
 _JSON_EACH = re.compile(
@@ -866,7 +837,7 @@ def _wants_rich_json_each(sql: str, alias: str) -> bool:
     return any(not inside(spans, m.start()) for m in pat.finditer(sql))
 
 
-def _rewrite_json_each(sql: str) -> str:
+def _rewrite_json_each(sql: str, strict_json: bool = False) -> str:
     """SQLite's json_each / json_tree table-valued functions → LATERAL VIEW.
 
     `FROM t, json_each(t.c) j` becomes `FROM t LATERAL VIEW
@@ -899,8 +870,6 @@ def _rewrite_json_each(sql: str) -> str:
     pass the path to the walker, which mirrors SQLite's start-node
     quirks). Documented deltas vs SQLite: keys surface as TEXT (SQLite
     uses integers for arrays), and values surface as TEXT."""
-    from dsq_spark.functions import strict_json_mode
-
     spans = opaque_spans(sql)
     out, i = [], 0
     while True:
@@ -933,7 +902,7 @@ def _rewrite_json_each(sql: str) -> str:
                 f"{alias or 'json_tree'} "
                 f"AS key, value, type, atom, id, parent, fullkey, path")
         elif (path or _wants_rich_json_each(sql, alias or "json_each")
-                or strict_json_mode()):
+                or strict_json):
             # (strict mode routes ALL json_each through the walker so a
             # malformed document RAISES like SQLite instead of yielding
             # zero rows — the walker's closures carry the strict flag)
@@ -996,89 +965,31 @@ def _rewrite_json_each(sql: str) -> str:
     return "".join(out)
 
 
-_AGG_CALL = re.compile(
-    r"(?<![\w.`$])(?:sum|avg|count|min|max|percentile|percentile_approx|"
-    r"median|mode|stddev_samp|stddev_pop|var_samp|var_pop|listagg|"
-    r"string_agg|collect_list|collect_set|bool_and|bool_or|"
-    r"approx_count_distinct|group_concat|any_value|min_by|max_by|"
-    r"first|last)\s*\(",
-    re.IGNORECASE)
-
-
-def _inline_calls(sql: str, name: str, ptypes, body: str) -> str:
-    """Textually inline every top-level call to one SQL UDF: arguments
-    keep the UDF's declared-type casts, the body is the exact CREATE
-    FUNCTION body (functions.INLINE_UDFS — single source)."""
-    if name.lower() not in sql.lower():
-        return sql
-    pat = re.compile(r"(?<![\w.`$])" + name + r"\s*\(", re.IGNORECASE)
-    spans, pos = opaque_spans(sql), 0
-    while True:
-        m = next((m0 for m0 in pat.finditer(sql, pos)
-                  if not inside(spans, m0.start())), None)
-        if m is None:
-            return sql
-        j = close_paren(sql, m.end() - 1)
-        if j is None:
-            return sql  # imbalance: leave untouched
-        args = split_top(sql[m.end():j])
-        if len(args) != len(ptypes):
-            pos = m.end()
-            continue
-        casted = [f"CAST(({a.strip()}) AS {t})" if t
-                  else f"({a.strip()})"
-                  for a, t in zip(args, ptypes)]
-        repl = "(" + body.format(*casted) + ")"
-        sql = sql[:m.start()] + repl + sql[j + 1:]
-        pos = m.start() + len(repl)
-        # the scan resumes after the inlined call, so only the spans
-        # behind it matter: shift them instead of re-lexing the text
-        shift = pos - (j + 1)
-        spans = [(a + shift, b + shift) for a, b in spans if a > j]
-
-
-def _sort_needs_inline(sql: str) -> bool:
-    """True when a SQL temporary function sits inside an ORDER BY
-    clause (top-level, subquery or window OVER — Spark 4.1 rejects SQL
-    UDFs in Sort outright: UNSUPPORTED_SQL_UDF_USAGE "Using SQL
-    function `dsq_real_text` in Sort is not supported", found by the r8
-    ORDER BY probe: `… ORDER BY date(col)` died).  The same inlining
-    that makes aggregate-mixed statements analyzable fixes Sort, so
-    this only widens the trigger; statements whose ORDER BY keys are
-    UDF-free keep their exact bytes (the swap to pandas twins is a
-    measured slowdown on datetime-heavy projections — r6 BENCH_NOTES)."""
-    if not re.search(r"(?i)\bORDER\s+BY\b", sql):
-        return False
-    from dsq_spark.functions import INLINE_UDFS
-
-    names = list(INLINE_UDFS) + ["dsq_real_text", "glob_regex",
-                                 "dsq_like_regex"]
-    rx = re.compile(r"(?<![\w.`$])(?:" +
-                    "|".join(re.escape(n) for n in names) + r")\s*\(",
-                    re.IGNORECASE)
-    spans = opaque_spans(sql)
-    for m in re.finditer(r"(?i)\bORDER\s+BY\b", sql):
-        if inside(spans, m.start()):
-            continue
-        i, depth, n = m.end(), 0, len(sql)
-        while i < n:
-            if inside(spans, i):
-                i += 1
-                continue
-            ch = sql[i]
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                if depth == 0:
-                    break  # closes the enclosing subquery / OVER
-                depth -= 1
-            elif (depth == 0 and ch in "LlWw"
-                  and not (sql[i - 1].isalnum() or sql[i - 1] == "_")
-                  and re.match(r"(?i)(LIMIT|WINDOW)\b", sql[i:])):
-                break
-            i += 1
-        if rx.search(sql[m.end():i]):
-            return True
+def _sort_needs_inline(toks: list[Tok], names) -> bool:
+    """True when a call of ``names`` sits in an ORDER BY clause
+    (top-level, subquery or window OVER): Spark 4.1 rejects SQL functions
+    in Sort outright (UNSUPPORTED_SQL_UDF_USAGE "Using SQL function
+    `dsq_real_text` in Sort is not supported", found by the r8 ORDER BY
+    probe: `… ORDER BY date(col)` died).  The same inlining that makes
+    aggregate-mixed statements analyzable fixes Sort, so this only widens
+    the trigger; statements whose ORDER BY keys are UDF-free keep their
+    exact bytes (the swap to pandas twins is a measured slowdown on
+    datetime-heavy projections — r6 BENCH_NOTES).  A clause ends at a
+    LIMIT or WINDOW of its own depth or at the `)` around it."""
+    n, opens = len(toks), []
+    for ix, t in enumerate(toks):
+        if t.text == "(":
+            opens.append(ix)
+        elif t.text == ")":
+            if opens:
+                opens.pop()
+        elif t.low == "order" and ix + 1 < n and toks[ix + 1].low == "by":
+            end = match_paren(toks, opens[-1], n) if opens else None
+            end = n if end is None else end
+            stop = scan_words(toks, ix + 2, end, ("limit", "window"))
+            if any(call_name(toks, k) in names
+                   for k in range(ix + 2, stop[0] if stop else end)):
+                return True
     return False
 
 
@@ -1086,9 +997,63 @@ def _sort_needs_inline(sql: str) -> bool:
 _AGG_TWINS = {"dsq_real_text": "dsq_real_text_agg",
               "glob_regex": "dsq_glob_regex_agg",
               "dsq_like_regex": "dsq_like_regex_agg"}
+# Text that the lower-cased text of every aggregate call (_is_agg) holds
+_AGG_TEXT = _AGG_NAMES | {"percentile_"}
 
 
-def _inline_agg_safe(sql: str) -> str:
+def _inline_calls(sql: str, toks: list[Tok], strict_json: bool) -> str:
+    """_inline_agg_safe's call rewrites in one pass over ``toks``, the
+    tokens of ``sql``: each call of an inlined function with its arity
+    becomes its body (_inline_body) with the arguments cast to the
+    declared types, each call of _AGG_TWINS its twin, and a glob_regex of
+    a literal pattern the compiled regex literal.  In strict JSON mode
+    json() and json_extract() keep their raising registrations."""
+    from dsq_spark.functions import INLINE_UDFS, glob_regex_py
+    from dsq_spark.sqlexpr import _like_decode_lit
+
+    def edit(name, ix, close, sub):
+        items = split_items(toks, ix + 2, close)
+        lit = toks[ix + 2]
+        if name == "glob_regex" and close == ix + 3 and lit.kind == "str" \
+                and len(lit.text) > 1 and lit.text[-1] == "'" and \
+                (dec := _like_decode_lit(lit.text)) is not None:
+            rx = glob_regex_py("".join(dec)).replace("\\", "\\\\")
+            return "'" + rx.replace("'", "''") + "'", close
+        if name in _AGG_TWINS:
+            return (_AGG_TWINS[name] + sql[toks[ix].end:toks[ix + 1].end]
+                    + ",".join(sub(a, b) for a, b in items) + ")"), close
+        ptypes, body = _inline_body(name, strict_json)
+        if len(items) != len(ptypes):
+            return None
+        args = [sub(a, b).strip() for a, b in items]
+        text = "(" + body.format(*(f"CAST(({a}) AS {t})" if t else f"({a})"
+                                   for a, t in zip(args, ptypes))) + ")"
+        if len(text) > _MAX_EMISSION_CHARS:
+            _check_emission_size(text)
+        return text, close
+
+    names = INLINE_UDFS.keys() | {"nullif"} | _AGG_TWINS.keys()
+    if strict_json:
+        names -= {"json", "json_extract"}
+    return _sub_calls(sql, toks, 0, len(toks), names, edit)
+
+
+@functools.cache
+def _inline_body(name: str, strict_json: bool) -> tuple[tuple[str, ...],
+                                                         str]:
+    """(parameter types, body) of a function _inline_agg_safe inlines:
+    one of functions.INLINE_UDFS (the CREATE FUNCTION body — one source)
+    with the calls in its body already rewritten (datetime wrappers call
+    best_effort_ts, dsq_json_unbox dsq_real_text), or nullif."""
+    from dsq_spark.functions import INLINE_UDFS
+
+    if name == "nullif":
+        return ("", ""), "(CASE WHEN ({0}) = ({1}) THEN NULL ELSE ({0}) END)"
+    ptypes, _ret, body = INLINE_UDFS[name]
+    return ptypes, _inline_calls(body, tokenize(body), strict_json)
+
+
+def _inline_agg_safe(sql: str, strict_json: bool = False) -> str:
     """Make an AGGREGATE-containing statement safe for Spark 4.1's SQL
     analyzer: the SQL-function extraction rewrites a projection that
     mixes ANY SQL temporary function with an aggregate by replacing
@@ -1097,86 +1062,68 @@ def _inline_agg_safe(sql: str) -> str:
     attribute references, which then fail analysis
     (CREATE_NAMED_STRUCT_WITHOUT_FOLDABLE_STRING / NON_FOLDABLE_INPUT;
     probed: SELECT named_struct('a', f(1.0)), sum(1) dies for any SQL-
-    defined f, even across select items).  So when a statement contains
-    an aggregate call: dsq_real_text swaps to its pandas twin (Python
-    UDFs ride a tolerant planning path; the %!.15g body is too
-    self-repeating to inline), and the simple expression-bodied UDFs
-    (functions.INLINE_UDFS — datetime family, url_*, string/hash
-    spellings) inline textually, transitively (datetime wrappers call
-    best_effort_ts), with a size cap as a runaway guard.  Statements
-    with no aggregate keep their exact bytes and plans."""
-    if not _AGG_CALL.search(sql) and not _sort_needs_inline(sql):
+    defined f, even across select items).  So when a statement calls an
+    aggregate (_AGG_NAMES), or a SQL function in an ORDER BY
+    (_sort_needs_inline), its calls are rewritten in one pass over
+    sqllex tokens, innermost first (_inline_calls):
+
+      * the simple expression-bodied UDFs (functions.INLINE_UDFS —
+        datetime family, url_*, string/hash spellings) inline textually
+        with their declared-type casts (_inline_body);
+      * dsq_real_text, glob_regex and dsq_like_regex swap to their pandas
+        twins (Python UDFs ride a tolerant planning path; the %!.15g body
+        is too self-repeating to inline), except that a glob_regex of a
+        LITERAL pattern folds to its compiled regex (the Python mirror of
+        the glob_regex machine);
+      * nullif(a, b) → its CASE definition: Spark's native nullif
+        desugars through a With/common-expression wrapper whose refs leak
+        un-rewritten into codegen when the same statement carries an
+        aggregate and a (non-inlinable) SQL UDF — INTERNAL_ERROR "Cannot
+        generate code for commonexpressionref" (probed on 4.1.2:
+        nullif(x GLOB computed, sum(...))).
+
+    Statements with neither keep their exact bytes and plans.  A call
+    holds its name, so a statement whose text holds no aggregate name,
+    and no "order" with a SQL function's name, has neither and is not
+    tokenized."""
+    from dsq_spark.functions import INLINE_UDFS
+
+    low, sql_fns = sql.lower(), INLINE_UDFS.keys() | _AGG_TWINS.keys()
+    if not any(w in low for w in _AGG_TEXT) and not (
+            "order" in low and any(w in low for w in sql_fns)):
         return sql
-    from dsq_spark.functions import INLINE_UDFS, strict_json_mode
-
-    skip = {"json", "json_extract"} if strict_json_mode() else set()
-    out = sql
-    # transitive: wrappers → best_effort_ts; runs before the swaps below
-    # because an inlined body may call dsq_real_text (dsq_json_unbox)
-    for _ in range(6):
-        new = out
-        for name, (ptypes, _ret, body) in INLINE_UDFS.items():
-            if name in skip:
-                continue
-            new = _inline_calls(new, name, ptypes, body)
-        if new == out or len(new) > 400_000:
-            out = new
-            break
-        out = new
-    # glob patterns: LITERAL ones fold to their compiled regex (the
-    # Python mirror of the glob_regex machine), computed ones ride the
-    # pandas twin — either way the SQL UDF is gone.  Dynamic LIKE-ESCAPE
-    # patterns take the same SQL-UDF → pandas-twin swap (literal forms
-    # already folded at rewrite time and never emit the UDF).
-    from dsq_spark.functions import glob_regex_py
-    from dsq_spark.sqlexpr import _like_decode_lit
-
-    spans = opaque_spans(out)
-
-    def swap(m: re.Match) -> str:
-        if inside(spans, m.start()):
-            return m.group(0)
-        lit, name = m.group(1), m.group(2)
-        if lit is not None:
-            dec = _like_decode_lit("'" + lit + "'")
-            if dec is not None:
-                rx = glob_regex_py("".join(dec))
-                return "'" + rx.replace("\\", "\\\\").replace("'", "''") + "'"
-            name = "glob_regex"
-        return _AGG_TWINS[name] + m.group(0)[len(name):]
-
-    out = re.sub(r"(?<![\w.`$])(?:"
-                 r"glob_regex\(\s*'((?:[^'\\]|\\.|'')*)'\s*\)"
-                 r"|(dsq_real_text|glob_regex|dsq_like_regex)\()", swap, out)
-    # Spark's native nullif desugars through a With/common-expression
-    # wrapper whose refs leak un-rewritten into codegen when the same
-    # statement carries an aggregate and a (non-inlinable) SQL UDF —
-    # INTERNAL_ERROR "Cannot generate code for commonexpressionref"
-    # (probed on 4.1.2: nullif(x GLOB computed, sum(...))).  The CASE
-    # spelling is nullif's own definition, so swap it whenever an
-    # aggregate is present.
-    out = _inline_calls(out, "nullif", ("", ""),
-                        "(CASE WHEN ({0}) = ({1}) THEN NULL "
-                        "ELSE ({0}) END)")
-    return out
+    toks = tokenize(sql)
+    if not any(_is_agg(call_name(toks, ix)) for ix in range(len(toks))) \
+            and not _sort_needs_inline(toks, sql_fns):
+        return sql
+    return _inline_calls(sql, toks, strict_json)
 
 
 _FROM_TABLE = re.compile(r"\s*(`[^`]+`|[A-Za-z_]\w*(?:\s*\.\s*[A-Za-z_]\w*)?)")
 _INNER_STAR = re.compile(r"(?is)^\(\s*SELECT\s+\*")
 _TAIL_KW = re.compile(r"(?is)^\s*(WHERE|ORDER|LIMIT|OFFSET)\b|^\s*$")
-# a hoist candidate must be a pure per-row scalar over FROM columns:
-# moving an aggregate/window/subquery into the FROM projection would
-# change (or break) its meaning, so any such token disqualifies it
-_HOIST_UNSAFE = re.compile(
-    r"(?i)\b(?:sum|avg|count|min|max|total|first|last|collect_list|"
-    r"collect_set|group_concat|string_agg|percentile\w*|stddev\w*|"
-    r"median|mode|row_number|rank|dense_rank|ntile|lead|lag|nth_value|"
-    r"first_value|last_value|any_value|min_by|max_by)\s*\(|\bover\s*\(|"
-    r"\(\s*select\b")
+# SQLite's window functions, and `over (`, which reads as a call
+_WINDOW_CALLS = frozenset((
+    "row_number", "rank", "dense_rank", "percent_rank", "cume_dist",
+    "ntile", "lag", "lead", "first_value", "last_value", "nth_value",
+    "over"))
 
 
-def _PER_ROW_SAFE(c: str) -> bool:
-    return _HOIST_UNSAFE.search(c) is None
+def _per_row_safe(c: str) -> bool:
+    """Whether hoist candidate ``c`` is a pure per-row scalar over FROM
+    columns: moving an aggregate, a window or a subquery into the FROM
+    projection would change (or break) its meaning.  A call holds its
+    name and a subquery its SELECT, so a candidate whose text holds none
+    of them is not tokenized."""
+    low = c.lower()
+    if not any(w in low for w in _AGG_TEXT | _WINDOW_CALLS | {"select"}):
+        return True
+    toks = tokenize(c)
+    return not any(
+        _is_agg(name := call_name(toks, ix)) or name in _WINDOW_CALLS
+        or t.text == "(" and ix + 1 < len(toks)
+        and toks[ix + 1].low == "select"
+        for ix, t in enumerate(toks))
 
 
 _TAIL_KW_NOWHERE = re.compile(r"(?is)^\s*(ORDER|LIMIT|OFFSET)\b|^\s*$")
@@ -1270,7 +1217,7 @@ def _hoist_per_row(sql: str, cands: list[str]) -> str:
     turn into a correlated outer reference).  Every guard fails open to
     the unhoisted SQL, which is what ran before this pass existed."""
     cands = [c for c in dict.fromkeys(cands)
-             if len(c) >= 80 and _PER_ROW_SAFE(c)]
+             if len(c) >= 80 and _per_row_safe(c)]
     if not cands or "__dsq_h" in sql:
         return sql
     lead = len(sql) - len(sql.lstrip())
@@ -1365,7 +1312,8 @@ def _hoist_per_row(sql: str, cands: list[str]) -> str:
     return pre + src + post
 
 
-def rewrite_query(sql: str, schema: dict[str, str] | None = None) -> str:
+def rewrite_query(sql: str, schema: dict[str, str] | None = None,
+                  strict_json: bool = False) -> str:
     """Full dsq-dialect → Spark SQL rewrite (string literals untouched).
 
     ``schema`` optionally maps lower-cased column names to SQLite storage
@@ -1373,8 +1321,11 @@ def rewrite_query(sql: str, schema: dict[str, str] | None = None) -> str:
     inference in dsq_spark.sqlexpr (integer division, CAST prefix-parse,
     truthiness).  The CLI builds it from the registered views
     (sqlexpr.spark_schema_kinds); omitting it just makes those rewrites
-    fall back to their typeof()-dispatched dynamic forms."""
-    return rewrite_query_tracked(sql, schema)[0]
+    fall back to their typeof()-dispatched dynamic forms.
+    ``strict_json`` is the CLI's --strict-json: json_each takes the
+    raising walker, and the aggregate inliner keeps json() and
+    json_extract() as calls to their raising registrations."""
+    return rewrite_query_tracked(sql, schema, strict_json)[0]
 
 
 # Hard circuit breaker on the rewritten-SQL emission (r9 VERDICT #7 /
@@ -1415,6 +1366,7 @@ def _check_emission_size(out: str) -> None:
 
 def rewrite_query_tracked(
         sql: str, schema: dict[str, str] | None = None,
+        strict_json: bool = False,
 ) -> tuple[str, frozenset[str]]:
     """Like rewrite_query, also returning the set of identifier names that
     came from double-quoted tokens — the CLI retries those as string
@@ -1424,11 +1376,12 @@ def rewrite_query_tracked(
     sql = re.sub(r"^(\s*)EXPLAIN\s+QUERY\s+PLAN\b", r"\1EXPLAIN",
                  sql, count=1, flags=re.IGNORECASE)
     # SQLite's result-column names and bare columns in aggregate queries
-    sql = _select_lists(_rewrite_json_each(_sub_table_macros(sql)), schema)
+    sql = _select_lists(
+        _rewrite_json_each(_sub_table_macros(sql), strict_json), schema)
     # token-level forms, then the call-site rewrites over settled tokens
     # (alias templates emit Spark's final spellings, e.g. 0.25D)
     out, dquoted = _rewrite_tokens(sql)
-    out = _rewrite_fn_aliases(_fold_filter_over(out))
+    out = _rewrite_calls(out)
     # SQLite arithmetic/affinity semantics (integer division, CAST
     # numeric-prefix parse, truthiness) run LAST, over settled literal
     # typing.
@@ -1443,6 +1396,6 @@ def rewrite_query_tracked(
     # _inline_agg_safe); runs after sqlexpr so every alias/compiler
     # emission is covered, and leaves aggregate-free statements
     # byte-identical.
-    out = _inline_agg_safe(out)
+    out = _inline_agg_safe(out, strict_json)
     _check_emission_size(out)
     return out, dquoted

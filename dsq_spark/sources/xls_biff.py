@@ -323,14 +323,3 @@ def parse_xls(data: bytes, sheet: str | None = None) -> list[dict[int, str]]:
     for (r, c), v in cells.items():
         grid[r][c] = v
     return grid
-
-
-def sheet_names(data: bytes) -> list[str]:
-    stream = _ole_stream(data, ("workbook", "book"))
-    names = []
-    for op, payload, _pos in _records(stream):
-        if op == _BOUNDSHEET:
-            names.append(_short_unistr(payload, 6))
-        elif op == _EOF:
-            break
-    return names

@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import re
 from bisect import bisect_right
+from collections.abc import Iterator
 from dataclasses import dataclass, field
 
 _OPAQUE = (r"'[^']*(?:''[^']*)*'?"
@@ -109,7 +110,7 @@ _TOKEN_RE = re.compile(
     r"|(?P<op><=>|->>|\|\||<<|>>|<=|>=|<>|!=|==|->|.)")
 
 
-@dataclass
+@dataclass(slots=True)
 class Tok:
     kind: str  # 'str' | 'dq' | 'bt' | 'hex' | 'num' | 'word' | 'op'
     text: str
@@ -142,9 +143,9 @@ def tokenize(sql: str) -> list[Tok]:
 
 
 # ---------------------------------------------------------------------------
-# Structure over tokens: parentheses, depth-0 words, depth-0 commas.  A
-# parenthesis or comma inside a literal, a quoted name or a comment is no
-# token of its own, so none of these can miscount it.
+# Structure over tokens: parentheses, depth-0 words, depth-0 commas and
+# function calls.  A parenthesis or comma inside a literal, a quoted name
+# or a comment is no token of its own, so none of these can miscount it.
 # ---------------------------------------------------------------------------
 
 def scan_words(toks: list[Tok], lo: int, hi: int, words) -> list[int]:
@@ -194,3 +195,34 @@ def split_items(toks: list[Tok], lo: int, hi: int) -> list[tuple[int, int]]:
             start = ix + 1
     out.append((start, hi))
     return out
+
+
+def call_name(toks: list[Tok], i: int) -> str | None:
+    """The function that toks[i] calls, lower-cased and unquoted, or None
+    when it starts no call.  The one rule for a call: a word or a closed
+    backticked name, not after a `.` (`t.f(x)` is no call), whose next
+    token is `(`.  A comment between the name and the `(` is whitespace,
+    as between any two SQLite tokens: `total /* c */ (a)` is a call."""
+    if i + 1 >= len(toks) or toks[i + 1].text != "(" or \
+            (i and toks[i - 1].text == "."):
+        return None
+    t = toks[i]
+    if t.kind == "word":
+        return t.low
+    if t.kind == "bt" and len(t.text) > 2 and t.text[-1] == "`":
+        return t.text[1:-1].lower()
+    return None
+
+
+def calls(toks: list[Tok], lo: int, hi: int,
+          names=None) -> Iterator[tuple[str, int, int]]:
+    """(name, name index, closing-paren index) of each call (call_name)
+    in toks[lo:hi], nested ones included, in order; with ``names``, only
+    the calls of those names.  A call whose `(` is not closed before
+    ``hi`` is skipped."""
+    for ix in range(lo, hi):
+        name = call_name(toks, ix)
+        if name is not None and (names is None or name in names):
+            close = match_paren(toks, ix + 1, hi)
+            if close is not None:
+                yield name, ix, close

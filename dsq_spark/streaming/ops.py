@@ -147,60 +147,3 @@ def run_stream_to_memory(sdf: DataFrame, query_name: str,
         return q
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prior)
-
-
-def stream_dedup(events: DataFrame, watermark: str = "30 minutes") -> DataFrame:
-    """Exactly-once event dedup on `event_id` within a watermark horizon —
-    the standard at-least-once → exactly-once repair step in front of a
-    training-data ingest (duplicate deliveries from retries/replays).
-
-    Streaming mode uses dropDuplicatesWithinWatermark: state holds one key
-    per event_id seen inside the horizon and is EVICTED once the watermark
-    passes it — bounded state at any throughput, unlike a plain
-    dropDuplicates whose state grows forever. Batch mode degrades to exact
-    dropDuplicates on the same key, which is how the semantics are
-    unit-tested against the batch oracle.
-    """
-    if events.isStreaming:
-        return (
-            events.withWatermark("ts", watermark)
-            .dropDuplicatesWithinWatermark(["event_id"])
-        )
-    return events.dropDuplicates(["event_id"])
-
-
-def stream_attribution_join(views: DataFrame, purchases: DataFrame,
-                            horizon: str = "1 hour",
-                            watermark: str = "30 minutes") -> DataFrame:
-    """Stream-stream inner join: attribute each purchase to the same user's
-    views in the preceding `horizon` (the canonical ad-attribution shape).
-
-    In streaming mode both sides carry watermarks AND the join condition
-    bounds event-time distance — together these let Spark compute how long
-    a buffered row can still match and EVICT join state past that horizon
-    (unbounded state otherwise: stream-stream joins buffer both sides).
-    Batch mode runs the identical join condition, which is how the
-    semantics are tested (stream output ⊆-equal to the batch join).
-    """
-    if views.isStreaming:
-        views = views.withWatermark("ts", watermark)
-        purchases = purchases.withWatermark("ts", watermark)
-    v = views.select(
-        F.col("user_id").alias("v_user"),
-        F.col("event_id").alias("view_id"),
-        F.col("ts").alias("view_ts"),
-    )
-    p = purchases.select(
-        "user_id",
-        F.col("event_id").alias("purchase_id"),
-        F.col("ts").alias("purchase_ts"),
-        "value",
-    )
-    cond = (
-        (p["user_id"] == v["v_user"])
-        & (v["view_ts"] <= p["purchase_ts"])
-        & (v["view_ts"] >= p["purchase_ts"] - F.expr(f"INTERVAL {horizon}"))
-    )
-    return p.join(v, cond, "inner").select(
-        "user_id", "purchase_id", "purchase_ts", "view_id", "view_ts", "value"
-    )

@@ -103,29 +103,6 @@ def test_cache_file_flag(spark, tmp_path, monkeypatch):
     assert "dsq-cache-" in first  # cache path printed (reference -D)
 
 
-def test_write_parquet_dataset_layout(spark, tmp_path):
-    from dsq_spark.io_out import write_parquet_dataset
-
-    df = spark.createDataFrame(
-        [(i, "en" if i % 3 else "fr", f"doc {i}") for i in range(30)],
-        ["doc_id", "lang", "text"],
-    )
-    out = tmp_path / "ds"
-    write_parquet_dataset(df, str(out), partition_by=("lang",),
-                          max_records_per_file=7)
-    dirs = sorted(p.name for p in out.iterdir() if p.is_dir())
-    assert dirs == ["lang=en", "lang=fr"]
-    back = spark.read.parquet(str(out))
-    assert back.count() == 30
-    # partition pruning: a lang filter must prune to the one directory
-    import io
-    from contextlib import redirect_stdout
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        back.filter(back.lang == "fr").explain("formatted")
-    assert "lang=fr" in buf.getvalue() or "PartitionFilters" in buf.getvalue()
-
-
 def test_cli_with_recursive_routes(spark, tmp_path, capsys):
     """WITH RECURSIVE through the CLI entry runs the iterative evaluator."""
     import json as _json
@@ -427,35 +404,6 @@ def test_arrow_binds_like_concat(spark, token_forms):
             [None if v is None else str(v) for v, in want], sql
 
 
-def test_compact_dataset(spark, tmp_path):
-    from dsq_spark.io_out import compact_dataset
-
-    src = tmp_path / "frag"
-    # 40 tiny files
-    spark.range(4000).selectExpr("id", "id % 5 AS k").repartition(40) \
-        .write.parquet(str(src))
-    import os
-    before = sum(f.endswith(".parquet") for _, _, fs in os.walk(src) for f in fs)
-    assert before >= 40
-    after = compact_dataset(spark, str(src))
-    assert after < before
-    back = spark.read.parquet(str(src))
-    assert back.count() == 4000 and set(back.columns) == {"id", "k"}
-
-
-def test_compact_dataset_uri_scheme(spark, tmp_path):
-    # all FS ops resolve from the path's own scheme (Hadoop FileSystem API),
-    # so an explicit file:// URI must work the same as a bare local path —
-    # the shape object-store paths (s3a://...) take.
-    from dsq_spark.io_out import compact_dataset
-
-    src = tmp_path / "frag_uri"
-    spark.range(500).selectExpr("id").repartition(10).write.parquet(str(src))
-    after = compact_dataset(spark, "file://" + str(src))
-    assert after >= 1
-    assert spark.read.parquet(str(src)).count() == 500
-
-
 def test_cache_miss_stderr_message(spark, tmp_path, capsys):
     """Cold/invalidated cache announces re-import on stderr exactly like the
     reference ('Cache invalid, re-import required.'); a warm hit stays
@@ -478,91 +426,6 @@ def test_cache_miss_stderr_message(spark, tmp_path, capsys):
         assert "Cache invalid, re-import required." in capsys.readouterr().err
     finally:
         del os.environ["DSQ_SPARK_CACHE_DIR"]
-
-
-def test_write_clustered_dataset_enables_skipping(spark, tmp_path, sf_dir):
-    """Range clustering must yield (near-)disjoint per-file min/max key
-    ranges, so a range predicate overlaps only a small fraction of files —
-    the data-skipping contract at 100 TB."""
-    import glob as _glob
-
-    import pyarrow.parquet as pq
-
-    from dsq_spark.io_out import write_clustered_dataset
-
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    out = tmp_path / "clustered"
-    write_clustered_dataset(orders, str(out), cluster_by=("o_orderdate",),
-                            num_files=8)
-    ranges = []
-    for f in _glob.glob(str(out / "*.parquet")):
-        md = pq.read_metadata(f)
-        mins, maxs = [], []
-        for rg in range(md.num_row_groups):
-            col = next(md.row_group(rg).column(i)
-                       for i in range(md.num_columns)
-                       if md.row_group(rg).column(i).path_in_schema == "o_orderdate")
-            mins.append(col.statistics.min)
-            maxs.append(col.statistics.max)
-        ranges.append((min(mins), max(maxs)))
-    assert len(ranges) >= 4
-    ranges.sort()
-    # consecutive file ranges must not interleave (boundary overlap of one
-    # key value is fine — repartitionByRange splits on key boundaries)
-    overlaps = sum(1 for (a, b), (c, d) in zip(ranges, ranges[1:]) if c < b)
-    assert overlaps <= 1, ranges
-    # a 30-day predicate overlaps only a small fraction of the files
-    lo = ranges[0][0]
-    import datetime as _dt
-
-    hi = lo + _dt.timedelta(days=30)
-    touched = sum(1 for a, b in ranges if a <= hi and b >= lo)
-    assert touched <= max(2, len(ranges) // 2), (touched, len(ranges))
-
-
-def test_write_zordered_dataset_skips_on_both_columns(spark, tmp_path, sf_dir):
-    """Z-order clustering must give every file a bounding box that is
-    narrow in BOTH interleaved dimensions: a band predicate on EITHER
-    column overlaps only a fraction of the files (single-key range
-    clustering can only do this for one column)."""
-    import glob as _glob
-
-    import pyarrow.parquet as pq
-
-    from dsq_spark.io_out import write_zordered_dataset
-
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    out = tmp_path / "zordered"
-    write_zordered_dataset(orders, str(out),
-                           zorder_by=("o_custkey", "o_totalprice"),
-                           num_files=16)
-
-    stats = {"o_custkey": [], "o_totalprice": []}
-    for f in _glob.glob(str(out / "*.parquet")):
-        md = pq.read_metadata(f)
-        for cname in stats:
-            mins, maxs = [], []
-            for rg in range(md.num_row_groups):
-                col = next(md.row_group(rg).column(i)
-                           for i in range(md.num_columns)
-                           if md.row_group(rg).column(i).path_in_schema == cname)
-                mins.append(col.statistics.min)
-                maxs.append(col.statistics.max)
-            stats[cname].append((min(mins), max(maxs)))
-    n_files = len(stats["o_custkey"])
-    assert n_files >= 8
-    for cname, ranges in stats.items():
-        glo = min(a for a, _ in ranges)
-        ghi = max(b for _, b in ranges)
-        span = ghi - glo
-        # every file's bounding box is narrow in this dimension on average
-        mean_span = sum(b - a for a, b in ranges) / n_files
-        assert mean_span <= 0.75 * span, (cname, mean_span, span)
-        # a 10%-of-range band predicate touches a minority of files
-        lo = glo + 0.45 * span
-        hi = glo + 0.55 * span
-        touched = sum(1 for a, b in ranges if a <= hi and b >= lo)
-        assert touched <= max(2, (2 * n_files) // 3), (cname, touched, n_files)
 
 
 def test_pretty_table_streams_without_collect(spark, monkeypatch):
@@ -635,23 +498,38 @@ def test_cli_default_json_is_quiet(spark, tmp_path):
                                {"id": "2", "a": None}]
 
 
-def test_strict_json_flag_sets_env():
-    """--strict-json reaches both consumers (function registration and the
-    rewrite-time json_each lowering) through DSQ_STRICT_JSON."""
-    import os
+def test_strict_json_reaches_args_and_both_consumers(monkeypatch):
+    """--strict-json, or DSQ_STRICT_JSON read once by parse_args, sets
+    Args.strict_json; _prepare hands it to the rewrite (json_each takes
+    the raising walker) and to register_all, and nothing is written to
+    the environment."""
+    import dsq_spark.cli as cli
+    import dsq_spark.functions as functions
 
-    os.environ.pop("DSQ_STRICT_JSON", None)
-    try:
-        a = parse_args(["--strict-json", "f.csv", "SELECT 1 FROM {}"])
-        assert a is not None and a.files == ["f.csv"]
-        assert os.environ.get("DSQ_STRICT_JSON") == "1"
-    finally:
-        os.environ.pop("DSQ_STRICT_JSON", None)
+    monkeypatch.delenv("DSQ_STRICT_JSON", raising=False)
+    a = parse_args(["--strict-json", "f.csv", "SELECT 1 FROM {}"])
+    assert a is not None and a.files == ["f.csv"] and a.strict_json
+    assert "DSQ_STRICT_JSON" not in os.environ
+    assert not parse_args(["f.csv", "SELECT 1 FROM {}"]).strict_json
+    monkeypatch.setenv("DSQ_STRICT_JSON", "1")
+    assert parse_args(["f.csv", "SELECT 1 FROM {}"]).strict_json
+
+    seen = {}
+    monkeypatch.setattr(functions, "register_all",
+                        lambda spark, sql, strict_json: seen.update(
+                            sql=sql, strict_json=strict_json) or [])
+    sql = "SELECT key FROM json_each(j)"
+    for strict in (False, True):
+        a.strict_json = strict
+        out, _ = cli._prepare(None, a, sql, {})
+        assert ("dsq_json_each" in out) is strict
+        assert seen == {"sql": out, "strict_json": strict}
 
 
 def test_strict_json_lasts_for_its_own_call(spark):
     """A --strict-json call leaves the next call in the same session soft:
-    `run` restores DSQ_STRICT_JSON when it returns."""
+    the mode lives in the call's Args, and the environment is left as it
+    was."""
     one = os.path.join(FIX, "cli_users.csv")
     sql = "SELECT json_extract('{bad', '$.a') AS a FROM {} LIMIT 1"
     session = spark.newSession()

@@ -116,6 +116,24 @@ def test_calls_library():
     assert calls_library("SELECT x FROM t WHERE s RLIKE glob_regex('a*')")
     assert not calls_library(TAXI_SQL)
     assert not calls_library("SELECT glob, globx(s), my_glob(s) FROM t")
+    # a comment before the `(` is whitespace; a literal, a comment or a
+    # name after `.` calls nothing
+    assert calls_library("SELECT proper /* c */ (s) FROM t")
+    assert calls_library("SELECT sha256 -- h\n(s) FROM t")
+    assert not calls_library(
+        "SELECT 'proper(s)', t.proper(s) /* sha256(s) */ FROM t")
+
+
+@pytest.mark.parametrize("split, plain", [
+    ("proper /* c */ (s)", "proper(s)"),
+    ("sha256 -- h\n(s)", "sha256(s)"),
+])
+def test_comment_split_call_registers(spark, eager, one_row, split, plain):
+    """A library call split by a comment registers the library on a fresh
+    session and prints what the plain call prints."""
+    assert _run([one_row, f"SELECT {split} AS v FROM {{}}"],
+                spark.newSession()) == \
+        _run([one_row, f"SELECT {plain} AS v FROM {{}}"], eager)
 
 
 @pytest.mark.parametrize("name", sorted(set(library_names())))
@@ -153,7 +171,7 @@ def test_strict_json_on_fresh_session_raises(spark, one_row, monkeypatch):
     """--strict-json sets the mode before the statement is rewritten, so
     the aggregate inliner keeps the raising json() registration instead
     of inlining the soft body."""
-    monkeypatch.setenv("DSQ_STRICT_JSON", "")  # restored after the flag
+    monkeypatch.setenv("DSQ_STRICT_JSON", "")  # the mode comes from the flag
     with pytest.raises(Exception, match="malformed JSON"):
         _run(["--strict-json", one_row,
               "SELECT json('{bad') AS v, COUNT(*) AS c FROM {}"],

@@ -259,8 +259,6 @@ def test_strict_json_mode(spark):
     (closure-baked flag — a module global would reset in the Python
     workers), the Catalyst json()/json_extract() guards (raise_error),
     and json_each (routed through the raising walker by the rewriter)."""
-    import os
-
     import pytest
 
     from dsq_spark.functions import register_all
@@ -279,26 +277,25 @@ def test_strict_json_mode(spark):
         json_set_text("{}", ["$.", "1"], True)
 
     register_all(spark, strict_json=True)
-    os.environ["DSQ_STRICT_JSON"] = "1"
     try:
         for q in ("SELECT json('{bad') AS v",
                   "SELECT json_extract('{bad', '$.a') AS v",
                   "SELECT json_set('{bad', '$.a', 1) AS v",
                   "SELECT key FROM json_each('{bad')"):
             with pytest.raises(Exception):
-                spark.sql(rewrite_query(q)).collect()
+                spark.sql(rewrite_query(q, strict_json=True)).collect()
         # valid documents still work identically in strict mode
         assert spark.sql(rewrite_query(
-            "SELECT json_set('{}', '$.a', 1) AS v")).collect()[0]["v"] \
-            == '{"a":1}'
+            "SELECT json_set('{}', '$.a', 1) AS v", strict_json=True)
+        ).collect()[0]["v"] == '{"a":1}'
         assert spark.sql(rewrite_query(
-            "SELECT count(*) AS n FROM json_each('[1,2,3]')")) \
-            .collect()[0]["n"] == 3
+            "SELECT count(*) AS n FROM json_each('[1,2,3]')",
+            strict_json=True)).collect()[0]["n"] == 3
         # NULL input stays SQL NULL (SQLite: json_set(NULL, ...) is NULL)
         assert spark.sql(rewrite_query(
-            "SELECT json_set(NULL, '$.a', 1) AS v")).collect()[0]["v"] is None
+            "SELECT json_set(NULL, '$.a', 1) AS v", strict_json=True)
+        ).collect()[0]["v"] is None
     finally:
-        os.environ.pop("DSQ_STRICT_JSON", None)
         register_all(spark)  # restore the default (soft) registrations
 
 

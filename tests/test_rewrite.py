@@ -129,6 +129,50 @@ def test_match_paren_and_split_items():
     assert match_paren(toks, 1, close) is None
 
 
+def _calls_of(sql: str) -> list[tuple[str, str]]:
+    """(name, call text) of each call sqllex finds in ``sql``."""
+    from dsq_spark.sqllex import calls, tokenize
+
+    toks = tokenize(sql)
+    return [(name, sql[toks[ix].start:toks[close].end])
+            for name, ix, close in calls(toks, 0, len(toks))]
+
+
+@pytest.mark.parametrize("sql, want", [
+    # a comment between the name and its `(` is whitespace
+    ("total /* c */ (a)", [("total", "total /* c */ (a)")]),
+    ("total -- c\n(a)", [("total", "total -- c\n(a)")]),
+    # a name after `.` is a column or a method, no call
+    ("t.f(x) + g (y)", [("g", "g (y)")]),
+    ("t . f(x)", []),
+    # a closed backticked name calls the function it names
+    ("`F`(x), `g`", [("f", "`F`(x)")]),
+    ("`g(x)` + 'h(y)' + \"k\"(z)", []),
+    # a `(` inside a literal or a comment is no paren
+    ("f(')', /* ( */ x)", [("f", "f(')', /* ( */ x)")]),
+    ("f /* ) */ (x)", [("f", "f /* ) */ (x)")]),
+    # nested calls, outer first
+    ("f(g(x), h(1, k()))",
+     [("f", "f(g(x), h(1, k()))"), ("g", "g(x)"), ("h", "h(1, k())"),
+      ("k", "k()")]),
+    # an unbalanced call is skipped; a balanced one inside it is found
+    ("f(g(x)", [("g", "g(x)")]),
+])
+def test_call_finder(sql, want):
+    assert _calls_of(sql) == want
+
+
+def test_call_finder_names_and_range():
+    from dsq_spark.sqllex import calls, tokenize
+
+    sql = "f(a) + g(b) + f(c)"
+    toks = tokenize(sql)
+    assert [toks[ix].start for _, ix, _ in calls(toks, 0, len(toks), {"f"})] \
+        == [0, sql.rindex("f")]
+    # a call whose `)` lies past the range is not closed in it
+    assert list(calls(toks, 0, 3)) == []
+
+
 @pytest.mark.parametrize("sql, want", [
     # a bare column is named by itself: a comment after it is no part of
     # its name (sqlite3 3.40.1 names each of these `a`)
@@ -227,6 +271,61 @@ def test_group_concat_forms():
     # DISTINCT form → collect_set
     out = rewrite_query("SELECT group_concat(DISTINCT x) FROM {}")
     assert "array_join(collect_set(CAST(x AS STRING)), ',')" in out
+
+
+@pytest.fixture(scope="module")
+def split_calls(spark):
+    """t(a, c) in Spark and in sqlite3, for the comment-split calls below;
+    one partition, so group_concat's order is the rows' order."""
+    import sqlite3
+
+    from dsq_spark.functions import register_all
+
+    rows = [(1, "x b"), (2, "ab"), (3, "c")]
+    register_all(spark)
+    spark.createDataFrame(rows, "a long, c string").coalesce(1) \
+        .createOrReplaceTempView("t_split")
+    con = sqlite3.connect(":memory:")
+    con.execute("CREATE TABLE t_split(a INTEGER, c TEXT)")
+    con.executemany("INSERT INTO t_split VALUES (?, ?)", rows)
+    yield spark, con
+    con.close()
+
+
+_SPLIT_SCHEMA = {"a": "int", "c": "text"}
+
+
+@pytest.mark.parametrize("q", [
+    "SELECT count(*) /* c */ FILTER (WHERE a > 1) OVER () AS v FROM t_split",
+    "SELECT count(*) FILTER /* c */ (WHERE a > 1) OVER () AS v FROM t_split",
+    "SELECT sum(a) -- c\nFILTER (WHERE a > 1) OVER () AS v FROM t_split",
+    "SELECT group_concat /* c */ (a, ',') AS v FROM t_split",
+    "SELECT total -- x\n(a) AS v FROM t_split",
+    "SELECT total(a) /* c */ OVER (ORDER BY a) AS v FROM t_split",
+])
+def test_comment_split_calls_match_sqlite(split_calls, q):
+    """SQLite reads a comment as whitespace between any two tokens, so a
+    comment between a call's name, its `(`, FILTER and OVER changes
+    nothing: the FILTER fold, the aliases and the OVER threading see
+    these calls as sqlite3 does."""
+    spark, con = split_calls
+    got = sorted(r["v"] for r in
+                 spark.sql(rewrite_query(q, _SPLIT_SCHEMA)).collect())
+    assert got == sorted(v for v, in con.execute(q).fetchall()), q
+
+
+@pytest.mark.parametrize("split, plain", [
+    ("SELECT a FROM t_split ORDER /* c */ BY proper(c)",
+     "SELECT a FROM t_split ORDER BY proper(c)"),
+    ("SELECT a FROM t_split GROUP BY a, c ORDER BY strpos /* c */ (c, 'b')",
+     "SELECT a FROM t_split GROUP BY a, c ORDER BY strpos(c, 'b')"),
+])
+def test_comment_split_sort_keys_inline(split_calls, split, plain):
+    """A SQL function in ORDER BY is inlined (Spark rejects it in Sort)
+    however a comment splits the clause or the call."""
+    spark, _ = split_calls
+    assert spark.sql(rewrite_query(split, _SPLIT_SCHEMA)).collect() == \
+        spark.sql(rewrite_query(plain, _SPLIT_SCHEMA)).collect()
 
 
 def test_view_name_dedup():
@@ -537,7 +636,7 @@ def test_emission_size_circuit_breaker(monkeypatch):
     # the two sizes
     q = "SELECT count(*), unicode(t), unicode(u) FROM tw"
     sent = len(rw.rewrite_query(q))
-    monkeypatch.setattr(rw, "_inline_agg_safe", lambda s: s)
+    monkeypatch.setattr(rw, "_inline_agg_safe", lambda s, strict_json: s)
     before_inline = len(rw.rewrite_query(q))
     monkeypatch.undo()
     assert 2 * before_inline < sent

@@ -12,7 +12,9 @@ the known-defect probes and the taxi group-by), then the statements of
 test_cli.py's quoted-name, COLLATE-naming, literal-GLOB and `->>` operand
 tests, each with the column kinds the CLI derives for its input file, then
 the select items around comments of test_rewrite.py and the quoted
-collation names and `||`-chained arrow operands of test_cli.py.  Each
+collation names and `||`-chained arrow operands of test_cli.py, and last
+the calls split by a comment of test_rewrite.py (FILTER, OVER, aliases,
+ORDER BY keys) and test_demand_registration.py (library calls).  Each
 line records what the rewrite returned for it — `out` and the sorted
 `dquoted` names — or the `error` it raised ("Type: message").  The rewrite keeps no state between
 calls, so the corpus replays in file order in one process, and replays

@@ -144,3 +144,61 @@ def test_unaliased_naming_matches_sqlite(spark):
         want = [d[0] for d in con.execute(q).description]
         got = spark.sql(rewrite_query(q)).columns
         assert got == want, q
+
+
+def test_comments_between_call_tokens_change_nothing():
+    """SQLite reads a comment as whitespace between any two tokens.  For
+    each golden-corpus input with a FILTER clause or an AGG_ALIASES call,
+    a `/* c */` after every call name and before every FILTER and OVER
+    leaves the rewrite's output as it was, once the inserted comments are
+    taken out of it again (an unaliased item's name holds them, as its
+    SQLite name does).  Reserved words before a `(` (`IN (`, `SELECT (`)
+    are no call names.  json_each/json_tree are left as written: their
+    lowering still scans text, and a comment there is an open defect."""
+    import gzip
+    import json
+    import os
+
+    from dsq_spark.functions import AGG_ALIASES
+    from dsq_spark.rewrite import rewrite_query_tracked
+    from dsq_spark.sqlexpr import _RESERVED
+    from dsq_spark.sqllex import call_name, tokenize
+
+    note = "/* c */"
+
+    def commented(sql: str) -> str | None:
+        toks = tokenize(sql)
+        cuts, calls_alias = [], False
+        for ix, t in enumerate(toks):
+            name = call_name(toks, ix)
+            if t.low in ("filter", "over"):
+                cuts.append(t.start)
+                calls_alias |= t.low == "filter"
+            elif name is not None and name not in _RESERVED and \
+                    name not in ("json_each", "json_tree"):
+                cuts.append(t.end)
+                calls_alias |= name in AGG_ALIASES
+        if not calls_alias:
+            return None
+        return "".join(sql[a:b] + note for a, b in
+                       zip([0] + cuts, cuts)) + sql[cuts[-1]:]
+
+    def rewrite(sql: str, schema) -> str:
+        try:
+            return rewrite_query_tracked(sql, schema)[0]
+        except Exception as e:  # an error must stay the same error
+            return f"{type(e).__name__}: {e}"
+
+    corpus = os.path.join(os.path.dirname(__file__), "fixtures",
+                          "rewrite_corpus.jsonl.gz")
+    with gzip.open(corpus, "rt", encoding="utf-8") as fh:
+        recs = [json.loads(line) for line in fh]
+    checked = 0
+    for rec in recs:
+        q = commented(rec["sql"])
+        if q is None or note in rec["sql"]:
+            continue
+        checked += 1
+        assert rewrite(q, rec["schema"]).replace(note, "") == \
+            rewrite(rec["sql"], rec["schema"]), q
+    assert checked > 1000

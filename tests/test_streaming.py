@@ -135,71 +135,3 @@ def test_stateful_running_totals(spark, events, tmp_path):
     q.stop()
     got = {r["user_id"]: (r["n"], r["tv"]) for r in emitted}
     assert got == want
-
-
-def test_stream_dedup_end_to_end(spark, events, tmp_path):
-    """Duplicated deliveries collapse to one row per event_id; batch mode
-    equals exact dropDuplicates (same operator, same key)."""
-    import json as _json
-
-    from dsq_spark.streaming.ops import read_events_stream, run_stream_to_memory, stream_dedup
-
-    sample = [r.asDict() for r in events.limit(50).collect()]
-    srcdir = tmp_path / "in"
-    srcdir.mkdir()
-    # write each event twice (simulated redelivery), split over two files
-    for fname, rows in (("a.jsonl", sample), ("b.jsonl", sample)):
-        with open(srcdir / fname, "w") as f:
-            for r in rows:
-                r = dict(r)
-                r["ts"] = r["ts"].isoformat(sep=" ")
-                f.write(_json.dumps(r) + "\n")
-    deduped = stream_dedup(read_events_stream(spark, str(srcdir)))
-    q = run_stream_to_memory(deduped, "dedup_test", output_mode="append")
-    ids = [r.event_id for r in spark.sql("SELECT * FROM dedup_test").collect()]
-    q.stop()
-    assert sorted(ids) == sorted({r["event_id"] for r in sample})
-    # batch path: same operator, exact semantics
-    doubled = events.limit(50).union(events.limit(50))
-    assert stream_dedup(doubled).count() == 50
-
-
-def test_stream_attribution_join_end_to_end(spark, events, tmp_path):
-    """Watermarked stream-stream join (views ⋈ purchases within 1h) matches
-    the identical batch join on the same data."""
-    import json as _json
-
-    from dsq_spark.streaming.ops import (
-        read_events_stream,
-        run_stream_to_memory,
-        stream_attribution_join,
-    )
-
-    sample = events.orderBy("ts").limit(400)
-    rows = [r.asDict() for r in sample.collect()]
-    srcdir = tmp_path / "in"
-    srcdir.mkdir()
-    half = len(rows) // 2
-    for fname, chunk in (("a.jsonl", rows[:half]), ("b.jsonl", rows[half:])):
-        with open(srcdir / fname, "w") as f:
-            for r in chunk:
-                r = dict(r)
-                r["ts"] = r["ts"].isoformat(sep=" ")
-                f.write(_json.dumps(r) + "\n")
-
-    def split(df):
-        return (df.filter(F.col("event_type") == "view"),
-                df.filter(F.col("event_type") == "purchase"))
-
-    sdf = read_events_stream(spark, str(srcdir))
-    joined = stream_attribution_join(*split(sdf))
-    q = run_stream_to_memory(joined, "attr_test", output_mode="append")
-    got = sorted(
-        (r.purchase_id, r.view_id)
-        for r in spark.sql("SELECT * FROM attr_test").collect()
-    )
-    q.stop()
-
-    batch = stream_attribution_join(*split(sample))
-    want = sorted((r.purchase_id, r.view_id) for r in batch.collect())
-    assert got == want and len(want) > 0
